@@ -9,7 +9,7 @@ element type (float32 storage, float64 math — the usual contract).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -131,17 +131,31 @@ def lit_strings(vals: "list[str]") -> Column:
     is one round trip; the elements are already literals, so the
     parsed tree IS the array literal.  Escaping is exact: backslash
     and quote are the only characters special inside a single-quoted
-    Spark SQL literal (the session keeps the default C-style escape
-    parsing), so every UTF-8 string round-trips byte-identically —
-    pinned against ``F.lit`` in tests including quotes, backslashes,
-    newlines, tabs and non-ASCII.
+    Spark SQL literal under the default C-style escape parsing, so
+    every UTF-8 string round-trips byte-identically — pinned against
+    ``F.lit`` in tests including quotes, backslashes, newlines, tabs
+    and non-ASCII.  A session with
+    ``spark.sql.parser.escapedStringLiterals=true`` would read the
+    escapes literally, so it is refused.  ``None`` elements become
+    ``CAST(NULL AS STRING)``, as in ``F.lit``.
     """
-    vs = [str(v) for v in vals]
+    vs = list(vals)
     if not vs:
         return F.expr("CAST(array() AS array<string>)")
+    spark = SparkSession.getActiveSession()
+    if spark is not None and (
+        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower()
+        == "true"
+    ):
+        raise ValueError(
+            "lit_strings escapes for spark.sql.parser.escapedStringLiterals="
+            "false; the active session sets it to true"
+        )
 
-    def esc(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    def esc(v) -> str:
+        if v is None:
+            return "CAST(NULL AS STRING)"
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
     return F.expr("array(" + ",".join(esc(v) for v in vs) + ")")
 

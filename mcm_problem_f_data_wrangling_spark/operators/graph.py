@@ -43,7 +43,8 @@ phase and its recompute tree grew ~3^phases: flat ~1 s/round through
 round 17, then 2.2 s, 4 s, 9 s, 22 s, 57 s).  Two grounding media,
 picked by ``state``:
 
-- ``'local'`` (default): ``localCheckpoint(eager=True)`` — an eager
+- ``'local'`` (default without a ``work_dir``):
+  ``localCheckpoint(eager=True)`` — an eager
   executor-memory barrier whose result plan is a bare ``LogicalRDD``
   (``assert_materialized`` proves exactly this), so truncation is
   structural, not best-effort.  No FS write, no parquet encode/decode,
@@ -52,10 +53,11 @@ picked by ``state``:
   checkpoint blocks are executor-LOCAL — an executor loss kills the
   job (truncated lineage cannot recompute).  Single-node / bench
   profile.
-- ``'parquet'``: per-round write+read of ``work_dir`` — durable,
-  fault-tolerant rounds.  At cluster scale pass ``state='parquet'``
-  with ``work_dir`` on a distributed FS — the same pattern GraphX
-  uses for iterative state.
+- ``'parquet'`` (default with a ``work_dir``): per-round write+read
+  of ``work_dir`` — durable, fault-tolerant rounds.  At cluster scale
+  pass ``work_dir`` on a distributed FS — the same pattern GraphX
+  uses for iterative state.  A ``work_dir`` with ``state='local'`` is
+  refused: it would silently keep no durable state.
 """
 
 from __future__ import annotations
@@ -93,6 +95,18 @@ def symmetrize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
     )
 
 
+def _check_state(state: str, work_dir: str | None) -> None:
+    """Refuse an unknown grounding medium, and ``'local'`` rounds with a
+    ``work_dir``: they would silently keep no durable state."""
+    if state not in ("local", "parquet"):
+        raise ValueError(f"unknown state medium {state!r}")
+    if state == "local" and work_dir is not None:
+        raise ValueError(
+            "state='local' keeps no durable state, so it cannot use "
+            f"work_dir={work_dir!r}; pass state='parquet' or drop work_dir"
+        )
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -102,7 +116,7 @@ def connected_components(
     max_iter: int = 60,
     work_dir: str | None = None,
     on_round=None,
-    state: str = "local",
+    state: str | None = None,
 ) -> DataFrame:
     """Connected components of an undirected graph → (node, component).
 
@@ -112,10 +126,12 @@ def connected_components(
     from the edges.
 
     ``state`` picks the per-round grounding medium (module docstring):
-    ``'local'`` (default) = eager localCheckpoint rounds — fastest,
+    ``'local'`` = eager localCheckpoint rounds — fastest,
     executor-local, the single-node profile; ``'parquet'`` = durable
     rounds in ``work_dir`` — the fault-tolerant cluster profile.
-    Labels are identical either way (pinned in tests).
+    ``None`` (default) means ``'parquet'`` when a ``work_dir`` is given
+    and ``'local'`` otherwise; ``'local'`` with a ``work_dir`` raises
+    ``ValueError``.  Labels are identical either way (pinned in tests).
 
     ``work_dir`` holds parquet state when used (see module docstring);
     default is a local temp dir, removed afterwards — on a cluster
@@ -126,8 +142,9 @@ def connected_components(
     write — the observability seam the scale smoke uses to sample
     per-iteration shuffle volume from the UI REST API.
     """
-    if state not in ("local", "parquet"):
-        raise ValueError(f"unknown state medium {state!r}")
+    if state is None:
+        state = "local" if work_dir is None else "parquet"
+    _check_state(state, work_dir)
     spark = edges.sparkSession
     base = work_dir or tempfile.mkdtemp(prefix="cc_state_")
     own_dir = work_dir is None
@@ -627,12 +644,13 @@ def k_core(
     eager-checkpoint job bypasses AQE partition coalescing that the
     write path gets), while CC's 2-5 contraction rounds measured ~30%
     FASTER on 'local'.  The grounding medium never changes results
-    (pinned in tests).
+    (pinned in tests).  As in CC, ``state='local'`` with a
+    ``work_dir`` raises ``ValueError`` instead of dropping the durable
+    state the directory asks for.
     """
     from pyspark.sql import Observation
 
-    if state not in ("local", "parquet"):
-        raise ValueError(f"unknown state medium {state!r}")
+    _check_state(state, work_dir)
     spark = edges.sparkSession
     base = work_dir or tempfile.mkdtemp(prefix="kcore_state_")
     own_dir = work_dir is None

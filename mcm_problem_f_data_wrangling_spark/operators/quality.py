@@ -27,8 +27,8 @@ from ..functions.textfn import tokens
 _LAST_SEG: DataFrame | None = None
 # previous call's corpus-sized segment checkpoint (r13, advisor item):
 # unlike the small _LAST_SEG table this holds the full tokenized+
-# segmented corpus, so repeated invocations (parity sweeps, pytest
-# loops) must not accumulate executor-local blocks until GC
+# segmented corpus.  Its unpersist() does not free the blocks on
+# Spark 4.1.2 (see boilerplate_removal; ROADMAP item 3)
 _LAST_SEGGED: DataFrame | None = None
 
 
@@ -221,9 +221,13 @@ def boilerplate_removal(
     # ~7 s -> ~2 s).  Same in-query-lifetime discipline as the
     # dup-ngram gram table; on a cluster persist to DFS instead of
     # executor-local storage.  The handle is tracked module-wide and
-    # each call drops the PREVIOUS call's blocks (the _LAST_SEG
-    # pattern below) — this one is corpus-sized, so accumulation
-    # across sweep/pytest invocations is real memory, not noise.
+    # each call calls unpersist() on the PREVIOUS call's frame (the
+    # _LAST_SEG pattern below), but on Spark 4.1.2 that frees nothing:
+    # DataFrame.unpersist() of a localCheckpoint leaves its RDD in
+    # getPersistentRDDs(), and only an RDD-level unpersist releases
+    # the blocks.  So the corpus-sized blocks of every call stay until
+    # the session stops — ROADMAP item 3 (one materialization
+    # primitive that releases at RDD level) is the fix.
     global _LAST_SEGGED
     if _LAST_SEGGED is not None:
         try:

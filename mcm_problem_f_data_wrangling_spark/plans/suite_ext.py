@@ -4303,7 +4303,9 @@ def _outer_interval_join_gate(
         write_ordered_replay(
             base, "ts", replay, n_files=3, sentinel_df=sentinel, n_sentinels=2
         )
-        schema = spark.read.parquet(replay).schema
+        # the written frame's own schema: reading it back from the
+        # replay dir would cost a schema-inference job
+        schema = base.schema
 
         def stream(et: str, cols):
             return (
@@ -4560,13 +4562,12 @@ def s37_streaming_checkpoint_resume(
         "n_chars",
         F.timestamp_micros(F.col("doc_id") + off).alias("ts"),
     )
+    replay = shard.unionByName(dups)
     work = tempfile.mkdtemp(prefix="s37_resume_")
     src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
     os.makedirs(src)
     try:
-        files = write_ordered_replay(
-            shard.unionByName(dups), "ts", f"{work}/replay", n_files=4
-        )
+        files = write_ordered_replay(replay, "ts", f"{work}/replay", n_files=4)
 
         def drain(visible: list) -> set:
             for f in visible:
@@ -4574,9 +4575,7 @@ def s37_streaming_checkpoint_resume(
                 if not os.path.exists(dst):
                     shutil.copy2(f, dst)  # copy2 keeps the mtime order
             stream = (
-                spark.readStream.schema(
-                    spark.read.parquet(f"{work}/replay").schema
-                )
+                spark.readStream.schema(replay.schema)
                 # two files per batch: each phase drains in ONE
                 # micro-batch — the restart (and its state recovery)
                 # is what this gate tests, not the batch count
@@ -4614,8 +4613,10 @@ def s37_streaming_checkpoint_resume(
                 f"phase1={sorted(first)} phase2={sorted(second)}"
             )
         kept = (
-            spark.read.parquet(f"{sink}/epoch=*")
-            .select("doc_id", "n_chars")
+            # the sink holds the stream's (doc_id, n_chars) columns: an
+            # explicit schema spares the read a schema-inference job
+            spark.read.schema(replay.select("doc_id", "n_chars").schema)
+            .parquet(f"{sink}/epoch=*")
             # off the sink dir before the finally removes it
             .localCheckpoint(eager=True)
         )
@@ -4748,11 +4749,11 @@ def s39_streaming_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
     os.makedirs(src)
     try:
+        phase_a = base.where(F.col("ts") <= F.lit(mid)).unionByName(
+            clicks_planted
+        )
         files_a = write_ordered_replay(
-            base.where(F.col("ts") <= F.lit(mid)).unionByName(clicks_planted),
-            "ts",
-            f"{work}/replay_a",
-            n_files=2,
+            phase_a, "ts", f"{work}/replay_a", n_files=2
         )
         files_b = write_ordered_replay(
             base.where(F.col("ts") > F.lit(mid)).unionByName(purch_planted),
@@ -4765,7 +4766,7 @@ def s39_streaming_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one strictly-increasing past-mtime sequence ACROSS both
         # replay dirs (each write stamped only its own files)
         ordered = restamp_replay_sequence(files_a + files_b)
-        schema = spark.read.parquet(f"{work}/replay_a").schema
+        schema = phase_a.schema
 
         def drain(visible: list):
             for f in visible:
@@ -4930,9 +4931,7 @@ def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if not os.path.exists(dst):
                     shutil.copy2(f, dst)
             stream = (
-                spark.readStream.schema(
-                    spark.read.parquet(f"{work}/replay").schema
-                )
+                spark.readStream.schema(shard.schema)
                 # two files per batch: each phase drains in ONE
                 # micro-batch — the restart is what this gate tests
                 .option("maxFilesPerTrigger", "2")
@@ -5125,7 +5124,7 @@ def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordered = restamp_replay_sequence(
             files_data + [s1_f, late_f, s2_f]
         )
-        schema = spark.read.parquet(f"{work}/data").schema
+        schema = base.schema
         src_dir = f"{work}/src"
         os.makedirs(src_dir)
         for f in ordered:
@@ -5433,7 +5432,7 @@ def s43_streaming_session_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordered = restamp_replay_sequence(
             files_a + [d3, d4, s1, s2, late_f, s3]
         )
-        schema = spark.read.parquet(f"{work}/a").schema
+        schema = phase_a.schema
 
         def drain(visible: list):
             for f in visible:
@@ -5662,7 +5661,7 @@ def s44_streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # watermark jumps far-future) -> [s3] (every real window
         # finalizes in a REAL batch; the sentinel window stays open)
         ordered = restamp_replay_sequence(files_a + files_b)
-        schema = spark.read.parquet(f"{work}/a").schema
+        schema = phase_a.schema
 
         def drain(visible: list):
             for f in visible:

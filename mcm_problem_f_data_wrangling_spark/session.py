@@ -13,6 +13,19 @@ remaining correct on ``local[32]``:
 - ``spark.sql.shuffle.partitions`` defaults to the local core count;
   on a real cluster this is expected to be overridden (or left to AQE
   with a high initial partition number).
+- On a local master, streaming checkpoints go through Spark's
+  ``FileSystemBasedCheckpointFileManager`` instead of the FileContext
+  default.  Without libhadoop, Hadoop's local FileContext forks a
+  ``readlink`` process for every checkpoint-file rename — hundreds of
+  short-lived processes per streaming gate.  The FileSystem manager
+  renames through ``File.renameTo``, with no process.  (Both still
+  fork ``chmod`` when Hadoop creates a file; only libhadoop avoids
+  that.)  What the FileContext manager adds is rename-without-
+  overwrite, which catches two writers racing on one checkpoint on
+  shared storage.  On a local disk ``rename(2)`` is atomic, and a
+  session already refuses two active queries on one checkpoint, so
+  the default is only changed when the master is local; cluster
+  masters keep FileContext.  An ``extra_conf`` value still wins.
 """
 
 from __future__ import annotations
@@ -24,6 +37,10 @@ import zipfile
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "mcm_problem_f_data_wrangling_spark"
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _shipped_apps: set[str] = set()
@@ -76,9 +93,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults."""
     cores = default_parallelism()
+    master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -96,6 +114,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # no forked readlink per checkpoint rename (module docstring)
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            LOCAL_CHECKPOINT_FILE_MANAGER,
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

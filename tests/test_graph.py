@@ -280,6 +280,53 @@ def test_cc_state_media_label_identical(spark):
     assert loc == pq and len(loc) == n
 
 
+def _count_local_checkpoints(monkeypatch, df) -> list:
+    calls: list = []
+    orig = type(df).localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", counting)
+    return calls
+
+
+def test_cc_default_state_without_work_dir_is_local(spark, monkeypatch):
+    edges_df = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "src bigint, dst bigint"
+    )
+    calls = _count_local_checkpoints(monkeypatch, edges_df)
+    rows = connected_components(edges_df).collect()
+    assert {r["component"] for r in rows} == {0} and len(rows) == 8
+    # every round grounds through localCheckpoint, plus the result
+    assert len(calls) > 1
+
+
+def test_cc_default_state_with_work_dir_is_parquet(spark, monkeypatch, tmp_path):
+    edges_df = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "src bigint, dst bigint"
+    )
+    calls = _count_local_checkpoints(monkeypatch, edges_df)
+    work = str(tmp_path / "cc")
+    rows = connected_components(edges_df, work_dir=work).collect()
+    assert {r["component"] for r in rows} == {0} and len(rows) == 8
+    # rounds are durable parquet in the caller's directory; only the
+    # result itself is checkpointed
+    assert len(calls) == 1
+    assert spark.read.parquet(f"{work}/edges_0").count() == 7
+
+
+def test_local_state_with_work_dir_raises(spark, tmp_path):
+    from mcm_problem_f_data_wrangling_spark.operators.graph import k_core
+
+    edges_df = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    with pytest.raises(ValueError, match="durable"):
+        connected_components(edges_df, work_dir=str(tmp_path), state="local")
+    with pytest.raises(ValueError, match="durable"):
+        k_core(edges_df, k=1, work_dir=str(tmp_path), state="local")
+
+
 def test_k_core_state_media_identical(spark):
     from mcm_problem_f_data_wrangling_spark.operators.graph import k_core
 

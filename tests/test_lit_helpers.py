@@ -168,3 +168,32 @@ def test_lit_strings_empty_and_folded(spark):
     )
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "array(" not in plan.lower(), plan
+
+
+def test_lit_strings_none_is_null_like_f_lit(spark):
+    from mcm_problem_f_data_wrangling_spark.functions.vectors import lit_strings
+
+    vals = ["a", None, "None", "it's"]
+    row = spark.range(1).select(
+        F.lit(vals).alias("ref"),
+        lit_strings(vals).alias("got"),
+    ).first()
+    assert list(row["got"]) == list(row["ref"]) == ["a", None, "None", "it's"]
+
+
+def test_lit_strings_refuses_escaped_string_literals(spark):
+    import pytest
+
+    from mcm_problem_f_data_wrangling_spark.functions.vectors import lit_strings
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            lit_strings(["a\\b"])
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

@@ -704,18 +704,34 @@ def test_interval_join_rejects_bad_how_and_direction(spark):
         )
 
 
+def _checkpoint_tmp_files(ckpt: str) -> list:
+    import os
+
+    return [
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(ckpt)
+        for f in files
+        if f.endswith(".tmp")
+    ]
+
+
 def test_checkpoint_resume_recovers_dedup_state(spark, tmp_path_factory):
     """The s37 gate's load-bearing mechanism, proven both ways: a
     restart FROM the checkpoint drops a duplicate of a pre-restart
     row (state recovered), while a restart with a FRESH checkpoint
     passes it into the sink (state lost) — so the gate genuinely
-    fails if recovery breaks."""
+    fails if recovery breaks.  Runs under the session's local
+    checkpoint-file manager, and a cleanly stopped resumed query
+    leaves no temp file in its checkpoint."""
     import datetime
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
+    from mcm_problem_f_data_wrangling_spark.session import (
+        LOCAL_CHECKPOINT_FILE_MANAGER,
+    )
     from mcm_problem_f_data_wrangling_spark.streaming.dedup import (
         dedup_stream,
         foreach_batch_idempotent_parquet,
@@ -724,6 +740,10 @@ def test_checkpoint_resume_recovers_dedup_state(spark, tmp_path_factory):
         write_ordered_replay,
     )
 
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == LOCAL_CHECKPOINT_FILE_MANAGER
+    )
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
         (i, f"text {i}", t0 + datetime.timedelta(minutes=i)) for i in range(8)
@@ -761,6 +781,7 @@ def test_checkpoint_resume_recovers_dedup_state(spark, tmp_path_factory):
     run(files, f"{base}/sink_a", f"{base}/ckpt_a")
     kept = {r["doc_id"] for r in spark.read.parquet(f"{base}/sink_a/epoch=*").collect()}
     assert kept == set(range(8))
+    assert _checkpoint_tmp_files(f"{base}/ckpt_a") == []
 
     # counterfactual: the twins WITHOUT the originals' state (twin
     # file only, fresh checkpoint) all pass into the sink — the drop
@@ -929,13 +950,18 @@ def test_join_state_checkpoint_resume_both_ways(spark, tmp_path_factory):
     a click buffered BEFORE a restart matches its purchase arriving
     AFTER the restart only when the new query resumes from the same
     checkpoint; with a fresh checkpoint the purchase orphans and the
-    click never emits at all (its file is never re-read)."""
+    click never emits at all (its file is never re-read).  Runs under
+    the session's local checkpoint-file manager, and a cleanly
+    stopped resumed query leaves no temp file in its checkpoint."""
     import datetime
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
+    from mcm_problem_f_data_wrangling_spark.session import (
+        LOCAL_CHECKPOINT_FILE_MANAGER,
+    )
     from mcm_problem_f_data_wrangling_spark.streaming.dedup import (
         foreach_batch_idempotent_parquet,
         stream_stream_interval_join,
@@ -944,6 +970,10 @@ def test_join_state_checkpoint_resume_both_ways(spark, tmp_path_factory):
         write_ordered_replay,
     )
 
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == LOCAL_CHECKPOINT_FILE_MANAGER
+    )
     t0 = datetime.datetime(2024, 1, 1)
     schema = "event_id long, user_id long, event_type string, ts timestamp"
     part_a = spark.createDataFrame(
@@ -1011,6 +1041,7 @@ def test_join_state_checkpoint_resume_both_ways(spark, tmp_path_factory):
     run(files_a, "a", f"{base}/ckpt_a")
     got = run(ordered, "a", f"{base}/ckpt_a")
     assert got == {(1, 2)}
+    assert _checkpoint_tmp_files(f"{base}/ckpt_a") == []
 
     # fresh checkpoint over the post-restart files only: the purchase
     # orphans (left_outer emits nothing for it) and the click never
