@@ -3706,7 +3706,7 @@ def s11_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle.  The count is order-free and the sum is decimal-exact "
     "(associative), so the result is bit-identical however the "
     "micro-batch planner splits the files — the convergence law the "
-    "gate pins.  Same awaitTermination timeout guard as s30.",
+    "gate pins.  Same drain timeout guard as s30.",
     f"""
 SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
        CAST(COUNT(*) AS BIGINT) AS n, {DSUM('value')} AS total
@@ -3715,9 +3715,8 @@ FROM events GROUP BY 1, 2
     tags=("M2", "streaming"),
 )
 def s08_tumbling_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..streaming.rollup import run_to_memory_sink, tumbling_rollup_agg
+    from ..streaming.replay import memory_sink_rows
+    from ..streaming.rollup import tumbling_rollup_agg
 
     # schema discovery via the tolerant batch reader (events.ts has
     # shipped as TIMESTAMP(NANOS) and as NTZ-micros across testdata
@@ -3738,12 +3737,9 @@ def s08_tumbling_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete mode needs no watermark, so skip it there
     wm = "2 days" if dict(stream.dtypes).get("ts") == "timestamp" else None
     agg = tumbling_rollup_agg(stream, "ts", "event_type", "1 day", wm)
-    sink = f"s08_rollup_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(agg, sink)
     # complete-mode memory sink holds the full final snapshot —
     # O(#days x #event_types) rows, a driver-literal pull
-    rows = spark.sql(f"SELECT day, event_type, n, total FROM {sink}").collect()
-    spark.catalog.dropTempView(sink)
+    rows = memory_sink_rows(agg, "s08", "complete")
     return spark.createDataFrame(
         rows, "day date, event_type string, n bigint, total double"
     )
@@ -3786,9 +3782,7 @@ FROM sids GROUP BY key, sid
     tags=("M2", "streaming"),
 )
 def s31_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..streaming.rollup import run_to_memory_sink
+    from ..streaming.replay import memory_sink_rows
 
     # schema discovery via the tolerant batch reader; the stream
     # applies the same nanos fix-up (s08 precedent — events.ts has
@@ -3815,12 +3809,7 @@ def s31_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
             "total_value",
         )
     )
-    sink = f"s31_sessions_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(agg, sink)
-    rows = spark.sql(
-        f"SELECT key, session_start, n_events, total_value FROM {sink}"
-    ).collect()
-    spark.catalog.dropTempView(sink)
+    rows = memory_sink_rows(agg, "s31", "complete")
     # schema follows the stream's ts flavor (NTZ-micros today, tz'd
     # timestamp under the nanos layout) — reuse the agg's own schema
     return spark.createDataFrame(rows, agg.schema)
@@ -3840,7 +3829,7 @@ def s31_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     "content stays load-bearing for the value hash (a one-byte "
     "divergence in any copy fails it) while the driver pull stays "
     "O(rows), not O(corpus bytes).  availableNow + append-mode "
-    "memory sink; same awaitTermination timeout guard as s30/s31.",
+    "memory sink; same drain timeout guard as s30/s31.",
     """
 SELECT DISTINCT doc_id, md5(text) AS text_md5, lang, source,
        CAST(n_chars AS BIGINT) AS n_chars
@@ -3849,7 +3838,7 @@ FROM documents
     tags=("M2", "streaming", "dedup"),
 )
 def s32_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming.replay import memory_sink_rows
 
     schema = table(spark, sf_dir, "documents").schema
     # glob form: flat FILE in driver testdata, Spark directory in
@@ -3871,28 +3860,9 @@ def s32_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.col("n_chars").cast("long").alias("n_chars"),
     )
-    sink = f"s32_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "s32 streaming query did not drain within 300 s — "
-                "a partial sink would under-count the distinct set"
-            )
-    finally:
-        q.stop()
-    rows = spark.sql(
-        f"SELECT doc_id, text_md5, lang, source, n_chars FROM {sink}"
-    ).collect()
-    spark.catalog.dropTempView(sink)
     return spark.createDataFrame(
-        rows, "doc_id long, text_md5 string, lang string, source string, "
+        memory_sink_rows(deduped, "s32"),
+        "doc_id long, text_md5 string, lang string, source string, "
         "n_chars long"
     )
 
@@ -3914,7 +3884,7 @@ def s32_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the stream length (the final state still depends on the ENTIRE "
     "path), fixing the O(rows)-through-the-driver nit the s32 gate "
     "carries.  mu0 = 50.00 per key (the baseline-known-upfront "
-    "online contract), h = 1000.00; same awaitTermination timeout "
+    "online contract), h = 1000.00; same drain timeout "
     "guard as s30-s32.",
     """
 WITH src AS (
@@ -3947,9 +3917,8 @@ FROM fin
     tags=("M2", "streaming", "stateful"),
 )
 def s33_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..streaming.drift import cusum_stream
+    from ..streaming.replay import memory_sink_rows
 
     # schema discovery via the tolerant batch reader (s31 precedent);
     # the synthetic event-id clock below sidesteps the ts nanos seam
@@ -3988,39 +3957,21 @@ def s33_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         value_col="cents",
         emit="final",
+    ).select(
+        # unix_micros inverts the synthetic clock exactly (TimestampType
+        # is an instant; no session-zone term)
+        "key", F.unix_micros("ts").alias("eid"), "s_plus", "s_minus", "alarm"
     )
-    sink = f"s33_cusum_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "s33 streaming query did not drain within 300 s — "
-                "partial state would corrupt the CUSUM accumulators"
-            )
-    finally:
-        q.stop()
     # one row per key per micro-batch; the converged state is the row
     # with MAX event-time per key (a later batch's final row always
     # carries a later synthetic clock), selected explicitly — memory-
     # sink collect order across batches is not a guaranteed contract.
-    # O(#keys x #batches) driver pull.  unix_micros inverts the
-    # synthetic clock exactly (TimestampType is an instant; no
-    # session-zone term).
+    # O(#keys x #batches) driver pull.
     last: dict = {}
-    for r in spark.sql(
-        f"SELECT key, unix_micros(ts) AS eid, s_plus, s_minus, alarm "
-        f"FROM {sink}"
-    ).collect():
+    for r in memory_sink_rows(out, "s33"):
         cur = last.get(r["key"])
         if cur is None or r["eid"] > cur["eid"]:
             last[r["key"]] = r
-    spark.catalog.dropTempView(sink)
     return spark.createDataFrame(
         [
             (r["key"], int(r["eid"]), int(r["s_plus"]), int(r["s_minus"]),
@@ -4049,7 +4000,7 @@ def s33_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "making the drained append-mode sink EXACTLY the batch interval "
     "join the DuckDB oracle computes.  In production the delay is "
     "the correctness/latency knob and state is O(rows in the "
-    "horizon) per side.  availableNow + awaitTermination guard "
+    "horizon) per side.  availableNow + drain timeout guard "
     "(s30-s33 pattern); driver pull is the O(pairs) join result "
     "itself.",
     """
@@ -4064,9 +4015,8 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
     tags=("M2", "streaming", "joins"),
 )
 def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..streaming.dedup import stream_stream_interval_join
+    from ..streaming.replay import memory_sink_rows
 
     # schema discovery via the RAW reader + the s08/s31/s33 nanos
     # fix-up — NOT table()'s post-fixup schema: under the
@@ -4124,22 +4074,6 @@ def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.round("p_value", 6).alias("p_value"),
     )
-    sink = f"s34_ivj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "s34 streaming query did not drain within 300 s — "
-                "a partial sink would drop matched pairs"
-            )
-    finally:
-        q.stop()
     # no-eviction proof (the 90-day delay out-spans the replay): the
     # symmetric join state must hold EXACTLY every click and purchase
     # row — measured 399,470 at sf1 (SCALE.md) — so a state-explosion
@@ -4151,18 +4085,17 @@ def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type").isin("click", "purchase"))
         .count()
     )
-    state_rows = _final_state_rows(q)
-    if state_rows != expected_state:
-        raise AssertionError(
-            f"s34 final join state must hold every click+purchase row "
-            f"({expected_state}), got {state_rows}"
-        )
-    rows = spark.sql(
-        f"SELECT click_id, purchase_id, user_id, p_value FROM {sink}"
-    ).collect()
-    spark.catalog.dropTempView(sink)
+
+    def check(q) -> None:
+        state_rows = _final_state_rows(q)
+        if state_rows != expected_state:
+            raise AssertionError(
+                f"s34 final join state must hold every click+purchase row "
+                f"({expected_state}), got {state_rows}"
+            )
+
     return spark.createDataFrame(
-        rows,
+        memory_sink_rows(joined, "s34", check=check),
         "click_id long, purchase_id long, user_id long, p_value double",
     )
 
@@ -4193,10 +4126,8 @@ GROUP BY 1
     tags=("M2", "streaming", "joins"),
 )
 def s35_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..streaming.enrich import decontaminate_stream, enrich_stream
-    from ..streaming.rollup import run_to_memory_sink
+    from ..streaming.replay import memory_sink_rows
 
     # RAW reader schema (s08/s31/s33/s34 pattern), not table()'s
     # post-fixup schema: ts is pruned before the scan today, but a
@@ -4221,14 +4152,9 @@ def s35_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("total_cents"),
     )
-    sink = f"s35_enrich_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(rollup, sink)
-    rows = spark.sql(
-        f"SELECT segment, n_events, total_cents FROM {sink}"
-    ).collect()
-    spark.catalog.dropTempView(sink)
     return spark.createDataFrame(
-        rows, "segment string, n_events long, total_cents long"
+        memory_sink_rows(rollup, "s35", "complete"),
+        "segment string, n_events long, total_cents long",
     )
 
 
@@ -4239,32 +4165,82 @@ def _final_state_rows(q) -> int | None:
     FAIL the gate instead of silently shifting a metric).  Returns
     None when no stateful progress was reported (defensive: the gate
     should treat that as its own failure, not skip the check)."""
-    import json as _json
+    from ..streaming.replay import state_operators
 
-    for p in reversed(q.recentProgress):
-        d = _json.loads(p.json) if hasattr(p, "json") else p
-        ops = d.get("stateOperators") or []
+    for ops in reversed(state_operators(q)):
         if ops:
             return sum(int(op.get("numRowsTotal", 0)) for op in ops)
     return None
 
 
+def _dropped_by_watermark(q) -> int:
+    """Input rows the state operators dropped as late, over all of
+    ``q``'s progress reports (numRowsDroppedByWatermark)."""
+    from ..streaming.replay import state_operators
+
+    return sum(
+        int(op.get("numRowsDroppedByWatermark", 0))
+        for ops in state_operators(q)
+        for op in ops
+    )
+
+
+def _click_purchase_join(stream: DataFrame, how: str) -> DataFrame:
+    """The s36/s38/s39 interval join over one click+purchase replay
+    stream: each click against the purchases by the same user within
+    30 minutes AFTER it, 1-hour watermarks on both sides, projected
+    to (click_id, purchase_id, user_id, p_value)."""
+    from ..streaming.dedup import stream_stream_interval_join
+
+    clicks = stream.where(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), "user_id", "ts"
+    )
+    purchases = stream.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("value").alias("p_value"),
+    )
+    joined = stream_stream_interval_join(
+        clicks,
+        purchases,
+        on=[("user_id", "p_user")],
+        left_ts="ts",
+        right_ts="p_ts",
+        lookback_seconds=1800.0,
+        watermark="1 hour",
+        how=how,
+        direction="lookforward",
+    )
+    # NO sentinel filter inside the streaming query: a post-join
+    # predicate on left columns (click_id >= 0) pushes down
+    # through the watermark node into the parquet scan, PRUNES
+    # the sentinel row group (event_id = -1 stats), and the
+    # click-side watermark then never advances — the exact
+    # failure the sentinels exist to prevent.  The coalesce is a
+    # no-op under left_outer (the left side is always present)
+    # and supplies the purchase-side user id for full_outer's
+    # unmatched-right rows.
+    return joined.select(
+        "click_id",
+        "purchase_id",
+        F.coalesce("user_id", "p_user").alias("user_id"),
+        F.round("p_value", 6).alias("p_value"),
+    )
+
 
 def _outer_interval_join_gate(
     spark: SparkSession, sf_dir: str, shard_residue: int, how: str,
-    prefix: str,
+    gate: str,
 ) -> DataFrame:
     """Shared harness for the s36/s38 outer stream-stream interval
     join gates: identical replay ladder, join shape, and assertions —
     the gates differ only in join type and the (disjoint) 1/4 user
     shard, so the semantics under test stay the only variable."""
     import datetime
-    import shutil
     import tempfile
-    import uuid
 
-    from ..streaming.dedup import stream_stream_interval_join
-    from ..streaming.replay import write_ordered_replay
+    from ..streaming.replay import memory_sink_rows, write_ordered_replay
 
     # NTZ -> instant cast (s34 precedent): watermarks demand
     # TimestampType and only RELATIVE time matters — the join window,
@@ -4298,117 +4274,56 @@ def _outer_interval_join_gate(
         [(-1, -1, "click", s_ts, 0.0), (-1, -1, "purchase", s_ts, 0.0)],
         base.schema,
     )
-    replay = tempfile.mkdtemp(prefix=f"{prefix}_replay_")
-    try:
-        write_ordered_replay(
-            base, "ts", replay, n_files=3, sentinel_df=sentinel, n_sentinels=2
-        )
-        # the written frame's own schema: reading it back from the
-        # replay dir would cost a schema-inference job
-        schema = base.schema
 
-        def stream(et: str, cols):
-            return (
-                spark.readStream.schema(schema)
-                # the watermark only advances BETWEEN batches, so the
-                # ladder is: batch 1 = [all 3 data files + sentinel 1]
-                # (the watermark at its END jumps past every real
-                # click's window — sentinel rows joining alongside
-                # data is harmless, the driver filter drops them),
-                # batch 2 = [sentinel 2] — a REAL batch that performs
-                # the eviction, so the null-padding does NOT depend on
-                # the trailing no-data micro-batch
-                # (spark.sql.streaming.noDataMicroBatches.enabled):
-                # with mFPT=3 both sentinels landed in one final batch
-                # and only the no-data batch evicted (r10 advisor).
-                # Two state-store rounds instead of three is also the
-                # cheapest correct ladder — each join-state round
-                # costs ~10 s at sf1 regardless of volume
-                .option("maxFilesPerTrigger", "4")
-                .parquet(replay)
-                .where(F.col("event_type") == et)
-                .select(*cols)
-            )
-
-        clicks = stream(
-            "click",
-            [F.col("event_id").alias("click_id"), "user_id", "ts"],
-        )
-        purchases = stream(
-            "purchase",
-            [
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("value").alias("p_value"),
-            ],
-        )
-        joined = stream_stream_interval_join(
-            clicks,
-            purchases,
-            on=[("user_id", "p_user")],
-            left_ts="ts",
-            right_ts="p_ts",
-            lookback_seconds=window_s,
-            watermark="1 hour",
-            how=how,
-            direction="lookforward",
-        )
-        # NO sentinel filter inside the streaming query: a post-join
-        # predicate on left columns (click_id >= 0) pushes down
-        # through the watermark node into the parquet scan, PRUNES
-        # the sentinel row group (event_id = -1 stats), and the
-        # click-side watermark then never advances — the exact
-        # failure the sentinels exist to prevent.  The coalesce is a
-        # no-op under left_outer (the left side is always present)
-        # and supplies the purchase-side user id for full_outer's
-        # unmatched-right rows.
-        out = joined.select(
-            "click_id",
-            "purchase_id",
-            F.coalesce("user_id", "p_user").alias("user_id"),
-            F.round("p_value", 6).alias("p_value"),
-        )
-        sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    f"{prefix} streaming query did not drain within 300 s "
-                    "— a partial sink would drop null-padded rows"
-                )
-        finally:
-            q.stop()
+    def check(q) -> None:
         # eviction proof: after the sentinel batches only the 4
         # sentinel rows may remain buffered — anything more means the
         # watermark ladder broke and unmatched rows never emitted
         state_rows = _final_state_rows(q)
         if state_rows is None or state_rows > 4:
             raise AssertionError(
-                f"{prefix} final join state must be the <= 4 sentinel "
+                f"{gate} final join state must be the <= 4 sentinel "
                 f"rows, got {state_rows}"
             )
-        # driver-side defense-in-depth: sentinel rows that reached the
-        # sink (far-future sentinel clicks matching sentinel purchases)
-        # are dropped here (post-collect; cannot perturb the
-        # watermark); real null-padded rows keep their NULL side
-        rows = [
-            r
-            for r in spark.sql(
-                f"SELECT click_id, purchase_id, user_id, p_value FROM {sink}"
-            ).collect()
-            if (r["click_id"] is None or r["click_id"] >= 0)
-            and (r["purchase_id"] is None or r["purchase_id"] >= 0)
-        ]
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
+
+    with tempfile.TemporaryDirectory(
+        prefix=f"{gate}_replay_", ignore_cleanup_errors=True
+    ) as replay:
+        write_ordered_replay(
+            base, "ts", replay, n_files=3, sentinel_df=sentinel, n_sentinels=2
+        )
+        # the written frame's own schema: reading it back from the
+        # replay dir would cost a schema-inference job
+        stream = (
+            spark.readStream.schema(base.schema)
+            # the watermark only advances BETWEEN batches, so the
+            # ladder is: batch 1 = [all 3 data files + sentinel 1]
+            # (the watermark at its END jumps past every real
+            # click's window — sentinel rows joining alongside
+            # data is harmless, the driver filter drops them),
+            # batch 2 = [sentinel 2] — a REAL batch that performs
+            # the eviction, so the null-padding does NOT depend on
+            # the trailing no-data micro-batch
+            # (spark.sql.streaming.noDataMicroBatches.enabled):
+            # with mFPT=3 both sentinels landed in one final batch
+            # and only the no-data batch evicted (r10 advisor).
+            # Two state-store rounds instead of three is also the
+            # cheapest correct ladder — each join-state round
+            # costs ~10 s at sf1 regardless of volume
+            .option("maxFilesPerTrigger", "4")
+            .parquet(replay)
+        )
+        out = memory_sink_rows(_click_purchase_join(stream, how), gate, check=check)
+    # driver-side defense-in-depth: sentinel rows that reached the
+    # sink (far-future sentinel clicks matching sentinel purchases)
+    # are dropped here (post-collect; cannot perturb the
+    # watermark); real null-padded rows keep their NULL side
+    rows = [
+        r
+        for r in out
+        if (r["click_id"] is None or r["click_id"] >= 0)
+        and (r["purchase_id"] is None or r["purchase_id"] >= 0)
+    ]
     return spark.createDataFrame(
         rows,
         "click_id long, purchase_id long, user_id long, p_value double",
@@ -4449,7 +4364,7 @@ WHERE c.event_type = 'click' AND c.user_id % 4 = 0
 def s36_streaming_outer_interval_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _outer_interval_join_gate(spark, sf_dir, 0, "left_outer", "s36_oivj")
+    return _outer_interval_join_gate(spark, sf_dir, 0, "left_outer", "s36")
 
 
 @_q(
@@ -4492,7 +4407,7 @@ FROM c FULL JOIN p
 def s38_streaming_full_outer_interval_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _outer_interval_join_gate(spark, sf_dir, 1, "full_outer", "s38_foivj")
+    return _outer_interval_join_gate(spark, sf_dir, 1, "full_outer", "s38")
 
 
 @_q(
@@ -4525,16 +4440,9 @@ WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 16 =
 def s37_streaming_checkpoint_resume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from ..functions.textfn import portable_hash64
-    from ..streaming.dedup import (
-        dedup_stream,
-        foreach_batch_idempotent_parquet,
-    )
-    from ..streaming.replay import write_ordered_replay
+    from ..streaming.dedup import dedup_stream
+    from ..streaming.replay import restart_drain, write_ordered_replay
 
     shard = (
         table(spark, sf_dir, "documents")
@@ -4563,66 +4471,28 @@ def s37_streaming_checkpoint_resume(
         F.timestamp_micros(F.col("doc_id") + off).alias("ts"),
     )
     replay = shard.unionByName(dups)
-    work = tempfile.mkdtemp(prefix="s37_resume_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    os.makedirs(src)
-    try:
-        files = write_ordered_replay(replay, "ts", f"{work}/replay", n_files=4)
 
-        def drain(visible: list) -> set:
-            for f in visible:
-                dst = os.path.join(src, os.path.basename(f))
-                if not os.path.exists(dst):
-                    shutil.copy2(f, dst)  # copy2 keeps the mtime order
-            stream = (
-                spark.readStream.schema(replay.schema)
-                # two files per batch: each phase drains in ONE
-                # micro-batch — the restart (and its state recovery)
-                # is what this gate tests, not the batch count
-                .option("maxFilesPerTrigger", "2")
-                .parquet(src)
-            )
-            # 3650-day delay out-spans the replay: dedup state never
-            # expires, so every twin must hit its original's state row
-            out = dedup_stream(
-                stream, text_col="text", ts_col="ts", watermark="3650 days"
-            ).select("doc_id", "n_chars")
-            q = (
-                foreach_batch_idempotent_parquet(out, sink, ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "s37 streaming query did not drain within 300 s"
-                    )
-            finally:
-                q.stop()
-            return {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(sink)
-                if d.startswith("epoch=")
-            }
+    def write(path: str):
+        files = write_ordered_replay(replay, "ts", path, n_files=4)
+        return files[:2], files
 
-        first = drain(files[:2])
-        second = drain(files)
-        if not first or min(second - first or {-1}) <= max(first):
-            raise AssertionError(
-                f"s37 restart must EXTEND phase-1 batches, got "
-                f"phase1={sorted(first)} phase2={sorted(second)}"
-            )
-        kept = (
-            # the sink holds the stream's (doc_id, n_chars) columns: an
-            # explicit schema spares the read a schema-inference job
-            spark.read.schema(replay.select("doc_id", "n_chars").schema)
-            .parquet(f"{sink}/epoch=*")
-            # off the sink dir before the finally removes it
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return kept
+    kept = restart_drain(
+        spark,
+        "s37",
+        replay.schema,
+        # two files per batch: each phase drains in ONE micro-batch —
+        # the restart (and its state recovery) is what this gate
+        # tests, not the batch count
+        2,
+        "append",
+        write,
+        # 3650-day delay out-spans the replay: dedup state never
+        # expires, so every twin must hit its original's state row
+        lambda stream: dedup_stream(
+            stream, text_col="text", ts_col="ts", watermark="3650 days"
+        ).select("doc_id", "n_chars"),
+    )[0]
+    return kept.select("doc_id", "n_chars")
 
 
 _KNUTH_SQL = 2654435761  # sources/pyds.py _KNUTH, mirrored in SQL
@@ -4675,16 +4545,10 @@ SELECT * FROM (
 )
 def s39_streaming_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import os
-    import shutil
-    import tempfile
 
-    from ..streaming.dedup import (
-        foreach_batch_idempotent_parquet,
-        stream_stream_interval_join,
-    )
     from ..streaming.replay import (
         restamp_replay_sequence,
+        restart_drain,
         write_ordered_replay,
     )
 
@@ -4745,125 +4609,56 @@ def s39_streaming_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-1, -1, "click", s_ts, 0.0), (-1, -1, "purchase", s_ts, 0.0)],
         base.schema,
     )
-    work = tempfile.mkdtemp(prefix="s39_resume_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    os.makedirs(src)
-    try:
-        phase_a = base.where(F.col("ts") <= F.lit(mid)).unionByName(
-            clicks_planted
-        )
-        files_a = write_ordered_replay(
-            phase_a, "ts", f"{work}/replay_a", n_files=2
-        )
+    phase_a = base.where(F.col("ts") <= F.lit(mid)).unionByName(clicks_planted)
+
+    def write(path: str):
+        files_a = write_ordered_replay(phase_a, "ts", f"{path}/a", n_files=2)
         files_b = write_ordered_replay(
             base.where(F.col("ts") > F.lit(mid)).unionByName(purch_planted),
             "ts",
-            f"{work}/replay_b",
+            f"{path}/b",
             n_files=2,
             sentinel_df=sentinel,
             n_sentinels=2,
         )
         # one strictly-increasing past-mtime sequence ACROSS both
         # replay dirs (each write stamped only its own files)
-        ordered = restamp_replay_sequence(files_a + files_b)
-        schema = phase_a.schema
+        return files_a, restamp_replay_sequence(files_a + files_b)
 
-        def drain(visible: list):
-            for f in visible:
-                dst = os.path.join(src, os.path.basename(f))
-                if not os.path.exists(dst):
-                    shutil.copy2(f, dst)
-            stream = (
-                spark.readStream.schema(schema)
-                # phase 1's 2 files drain in one batch; phase 2's 4
-                # new files split [B0, B1, sentinel 1] + [sentinel 2]
-                # — the last sentinel evicts in a real batch (s36/s38
-                # ladder sizing)
-                .option("maxFilesPerTrigger", "3")
-                .parquet(src)
-            )
-            clicks = stream.where(F.col("event_type") == "click").select(
-                F.col("event_id").alias("click_id"), "user_id", "ts"
-            )
-            purchases = stream.where(
-                F.col("event_type") == "purchase"
-            ).select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("value").alias("p_value"),
-            )
-            joined = stream_stream_interval_join(
-                clicks,
-                purchases,
-                on=[("user_id", "p_user")],
-                left_ts="ts",
-                right_ts="p_ts",
-                lookback_seconds=window_s,
-                watermark="1 hour",
-                how="left_outer",
-                direction="lookforward",
-            )
-            out = joined.select(
-                "click_id",
-                "purchase_id",
-                "user_id",
-                F.round("p_value", 6).alias("p_value"),
-            )
-            q = (
-                foreach_batch_idempotent_parquet(out, sink, ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "s39 streaming query did not drain within 300 s"
-                    )
-            finally:
-                q.stop()
-            epochs = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(sink)
-                if d.startswith("epoch=")
-            }
-            return epochs, q
-
-        first, _ = drain(files_a)
-        second, q2 = drain(ordered)
-        if not first or min(second - first or {-1}) <= max(first):
-            raise AssertionError(
-                f"s39 restart must EXTEND phase-1 batches, got "
-                f"phase1={sorted(first)} phase2={sorted(second)}"
-            )
-        state_rows = _final_state_rows(q2)
-        if state_rows is None or state_rows > 4:
-            raise AssertionError(
-                f"s39 final join state must be the <= 4 sentinel rows, "
-                f"got {state_rows}"
-            )
-        kept = (
-            spark.read.parquet(f"{sink}/epoch=*")
-            .where(F.col("click_id") >= 0)  # drop sentinel-x-sentinel
-            .select("click_id", "purchase_id", "user_id", "p_value")
-            .localCheckpoint(eager=True)
+    frame, _, _, _, q2 = restart_drain(
+        spark,
+        "s39",
+        phase_a.schema,
+        # phase 1's 2 files drain in one batch; phase 2's 4 new files
+        # split [B0, B1, sentinel 1] + [sentinel 2] — the last sentinel
+        # evicts in a real batch (s36/s38 ladder sizing)
+        3,
+        "append",
+        write,
+        lambda stream: _click_purchase_join(stream, "left_outer"),
+    )
+    state_rows = _final_state_rows(q2)
+    if state_rows is None or state_rows > 4:
+        raise AssertionError(
+            f"s39 final join state must be the <= 4 sentinel rows, "
+            f"got {state_rows}"
         )
-        # the load-bearing recovery evidence, asserted loudly: every
-        # planted click matched its post-restart purchase
-        matched = {
-            r["click_id"]
-            for r in kept.where(
-                (F.col("click_id") >= 2**40)
-                & F.col("purchase_id").isNotNull()
-            ).collect()
-        }
-        if matched != {2**40 + j for j in range(_S39_K)}:
-            raise AssertionError(
-                f"planted pairs must match across the restart (join "
-                f"state recovered), got {sorted(matched)}"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    kept = frame.where(F.col("click_id") >= 0).select(  # drop sentinel-x-sentinel
+        "click_id", "purchase_id", "user_id", "p_value"
+    )
+    # the load-bearing recovery evidence, asserted loudly: every
+    # planted click matched its post-restart purchase
+    matched = {
+        r["click_id"]
+        for r in kept.where(
+            (F.col("click_id") >= 2**40) & F.col("purchase_id").isNotNull()
+        ).collect()
+    }
+    if matched != {2**40 + j for j in range(_S39_K)}:
+        raise AssertionError(
+            f"planted pairs must match across the restart (join "
+            f"state recovered), got {sorted(matched)}"
+        )
     return kept
 
 
@@ -4898,13 +4693,8 @@ GROUP BY 1
     tags=("M2", "streaming", "stateful"),
 )
 def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from ..functions.textfn import portable_hash64
-    from ..streaming.dedup import foreach_batch_idempotent_parquet
-    from ..streaming.replay import write_ordered_replay
+    from ..streaming.replay import restart_drain, write_ordered_replay
     from ..streaming.running import running_totals_stream
 
     shard = (
@@ -4919,109 +4709,83 @@ def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(F.col("doc_id")).alias("ts"),
         )
     )
-    work = tempfile.mkdtemp(prefix="s40_resume_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    os.makedirs(src)
-    try:
-        files = write_ordered_replay(shard, "ts", f"{work}/replay", n_files=4)
 
-        def drain(visible: list) -> set:
-            for f in visible:
-                dst = os.path.join(src, os.path.basename(f))
-                if not os.path.exists(dst):
-                    shutil.copy2(f, dst)
-            stream = (
-                spark.readStream.schema(shard.schema)
-                # two files per batch: each phase drains in ONE
-                # micro-batch — the restart is what this gate tests
-                .option("maxFilesPerTrigger", "2")
-                .parquet(src)
-            )
-            out = running_totals_stream(
-                stream, "source", "n_chars", api="gst"
-            )
-            q = (
-                foreach_batch_idempotent_parquet(
-                    out, sink, ckpt, output_mode="update"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "s40 streaming query did not drain within 300 s"
-                    )
-            finally:
-                q.stop()
-            return {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(sink)
-                if d.startswith("epoch=")
-            }
+    def write(path: str):
+        files = write_ordered_replay(shard, "ts", path, n_files=4)
+        return files[:2], files
 
-        first = drain(files[:2])
-        second = drain(files)
-        if not first or min(second - first or {-1}) <= max(first):
-            raise AssertionError(
-                f"s40 restart must EXTEND phase-1 batches, got "
-                f"phase1={sorted(first)} phase2={sorted(second)}"
-            )
-        # update-mode rows: the converged total per key is the row
-        # from its HIGHEST epoch (struct-max; epoch is unique per key
-        # per batch).  basePath keeps the epoch partition column.
-        allrows = (
-            spark.read.option("basePath", sink)
-            .parquet(f"{sink}/epoch=*")
-            .groupBy("key")
-            .agg(F.max(F.struct("epoch", "cnt", "total")).alias("m"))
-            .select(
-                "key",
-                F.col("m.cnt").alias("cnt"),
-                F.col("m.total").alias("total"),
-            )
-            .localCheckpoint(eager=True)
+    frame, first, second, _, _ = restart_drain(
+        spark,
+        "s40",
+        shard.schema,
+        # two files per batch: each phase drains in ONE micro-batch —
+        # the restart is what this gate tests
+        2,
+        "update",
+        write,
+        lambda stream: running_totals_stream(stream, "source", "n_chars", api="gst"),
+    )
+    # update-mode rows: the converged total per key is the row
+    # from its HIGHEST epoch (struct-max; epoch is unique per key
+    # per batch)
+    allrows = (
+        frame.groupBy("key")
+        .agg(F.max(F.struct("epoch", "cnt", "total")).alias("m"))
+        .select(
+            "key",
+            F.col("m.cnt").alias("cnt"),
+            F.col("m.total").alias("total"),
         )
-        # recovery evidence beyond the hash: every key RE-EMITTED in a
-        # phase-2 epoch must carry a count strictly above its phase-1
-        # row — the phase-2 batch FOLDED INTO recovered state.  Keys
-        # absent from the second half legitimately keep their phase-1
-        # row, so the check is scoped to actually-re-emitted keys, and
-        # at least one straddling key must exist for the evidence to
-        # be non-vacuous.  (O(#sources) driver pulls.)
-        # the LAST NON-EMPTY phase-1 epoch: a trailing no-data
-        # micro-batch would write an empty epoch dir, and reading
-        # only max(first) would then vacuously empty the baseline
-        p1: dict = {}
-        for e in sorted(first, reverse=True):
-            p1 = {
-                r["key"]: r["cnt"]
-                for r in spark.read.parquet(f"{sink}/epoch={e}")
-                .select("key", "cnt")
-                .collect()
-            }
-            if p1:
-                break
-        p2_keys = {
-            r["key"]
-            for e in sorted(second - first)
-            for r in spark.read.parquet(f"{sink}/epoch={e}")
-            .select("key")
-            .collect()
-        }
-        final = {r["key"]: r["cnt"] for r in allrows.collect()}
-        straddling = p2_keys & set(p1)
-        bad = {k for k in straddling if final[k] <= p1[k]}
-        if not p1 or not straddling or bad:
-            raise AssertionError(
-                f"s40 phase-2 keys must strictly extend phase-1 state "
-                f"(recovered, then incremented); phase1={p1} "
-                f"final={final} straddling={sorted(straddling)} "
-                f"violations={sorted(bad)}"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
+    # recovery evidence beyond the hash: every key RE-EMITTED in a
+    # phase-2 epoch must carry a count strictly above its phase-1
+    # row — the phase-2 batch FOLDED INTO recovered state.  Keys
+    # absent from the second half legitimately keep their phase-1
+    # row, so the check is scoped to actually-re-emitted keys, and
+    # at least one straddling key must exist for the evidence to
+    # be non-vacuous.  (O(#sources x #epochs) driver pull.)
+    by_epoch: dict = {}
+    for r in frame.select("epoch", "key", "cnt").collect():
+        by_epoch.setdefault(r["epoch"], {})[r["key"]] = r["cnt"]
+    # the LAST NON-EMPTY phase-1 epoch: a trailing no-data
+    # micro-batch would write an empty epoch dir, and reading
+    # only max(first) would then vacuously empty the baseline
+    p1 = next(
+        (by_epoch[e] for e in sorted(first, reverse=True) if by_epoch.get(e)),
+        {},
+    )
+    p2_keys = {k for e in second - first for k in by_epoch.get(e, {})}
+    final = {r["key"]: r["cnt"] for r in allrows.collect()}
+    straddling = p2_keys & set(p1)
+    bad = {k for k in straddling if final[k] <= p1[k]}
+    if not p1 or not straddling or bad:
+        raise AssertionError(
+            f"s40 phase-2 keys must strictly extend phase-1 state "
+            f"(recovered, then incremented); phase1={p1} "
+            f"final={final} straddling={sorted(straddling)} "
+            f"violations={sorted(bad)}"
+        )
     return allrows
+
+
+def _hourly_rollup(stream: DataFrame) -> DataFrame:
+    """The s41/s44 append-mode rollup: 1-hour watermark, hour x
+    event_type count and cents sum, hour buckets as epoch seconds."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("cents").alias("cents"),
+        )
+        .select(
+            F.col("window.start").cast("long").alias("hour_epoch"),
+            "event_type",
+            "n",
+            "cents",
+        )
+    )
 
 
 @_q(
@@ -5060,13 +4824,11 @@ GROUP BY 1, 2
 )
 def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import json as _json
     import os
-    import shutil
     import tempfile
-    import uuid
 
     from ..streaming.replay import (
+        memory_sink_rows,
         restamp_replay_sequence,
         write_ordered_replay,
     )
@@ -5102,8 +4864,31 @@ def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-1, -1, "click", s_ts, 0), (-1, -1, "purchase", s_ts, 0)],
         base.schema,
     )
-    work = tempfile.mkdtemp(prefix="s41_late_")
-    try:
+
+    def check(q) -> None:
+        # the refusal must be VISIBLE, not inferred: the state
+        # operator reports the late input row it dropped
+        dropped = _dropped_by_watermark(q)
+        if dropped < 1:
+            raise AssertionError(
+                "s41 expected the planted late purchase to be dropped "
+                f"by the watermark (numRowsDroppedByWatermark), got "
+                f"{dropped}"
+            )
+        # append mode + the sentinel ladder flushed every real
+        # window; only the sentinels' far-future window may remain
+        # buffered (2 rows: one per event_type... both sentinels
+        # share one window+type pair per row kind)
+        state_rows = _final_state_rows(q)
+        if state_rows is None or state_rows > 2:
+            raise AssertionError(
+                f"s41 final agg state must be the sentinel window rows "
+                f"(<= 2), got {state_rows}"
+            )
+
+    with tempfile.TemporaryDirectory(
+        prefix="s41_late_", ignore_cleanup_errors=True
+    ) as work:
         files_data = write_ordered_replay(
             base, "ts", f"{work}/data", n_files=3
         )
@@ -5124,13 +4909,13 @@ def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordered = restamp_replay_sequence(
             files_data + [s1_f, late_f, s2_f]
         )
-        schema = base.schema
+        # one source dir; a rename keeps the stamped mtimes
         src_dir = f"{work}/src"
         os.makedirs(src_dir)
         for f in ordered:
-            shutil.copy2(f, os.path.join(src_dir, os.path.basename(f)))
+            os.replace(f, os.path.join(src_dir, os.path.basename(f)))
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(base.schema)
             # mFPT=2 ladder: [d1, d2] -> [d3, s1] (committed watermark
             # jumps past every real window at this batch's end; d3's
             # events all exceed batch 0's max, range partitioning
@@ -5141,67 +4926,7 @@ def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "2")
             .parquet(src_dir)
         )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("cents").alias("cents"),
-            )
-            .select(
-                F.col("window.start").cast("long").alias("hour_epoch"),
-                "event_type",
-                "n",
-                "cents",
-            )
-        )
-        sink = f"s41_late_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    "s41 streaming query did not drain within 300 s"
-                )
-        finally:
-            q.stop()
-        # the refusal must be VISIBLE, not inferred: the state
-        # operator reports the late input row it dropped
-        dropped = 0
-        for p in q.recentProgress:
-            d = _json.loads(p.json) if hasattr(p, "json") else p
-            for op in d.get("stateOperators") or []:
-                dropped += int(op.get("numRowsDroppedByWatermark", 0))
-        if dropped < 1:
-            raise AssertionError(
-                "s41 expected the planted late purchase to be dropped "
-                f"by the watermark (numRowsDroppedByWatermark), got "
-                f"{dropped}"
-            )
-        # append mode + the sentinel ladder flushed every real
-        # window; only the sentinels' far-future window may remain
-        # buffered (2 rows: one per event_type... both sentinels
-        # share one window+type pair per row kind)
-        state_rows = _final_state_rows(q)
-        if state_rows is None or state_rows > 2:
-            raise AssertionError(
-                f"s41 final agg state must be the sentinel window rows "
-                f"(<= 2), got {state_rows}"
-            )
-        rows = [
-            r
-            for r in spark.sql(
-                f"SELECT hour_epoch, event_type, n, cents FROM {sink}"
-            ).collect()
-        ]
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        rows = memory_sink_rows(_hourly_rollup(stream), "s41", check=check)
     return spark.createDataFrame(
         rows, "hour_epoch long, event_type string, n long, cents long"
     )
@@ -5254,39 +4979,41 @@ def s42_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("total_cents"),
     )
     sink = f"s42_pyds_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-    )
     try:
-        # the source is bounded but availableNow is file-source
-        # machinery — poll the complete-mode snapshot until every
-        # generated row is aggregated, then stop
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            # a dead stream (e.g. a Python data-source error) would
-            # otherwise spin the full deadline against a stale
-            # snapshot and mask the real failure (ADVICE r11)
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            row = spark.sql(f"SELECT SUM(n) AS s FROM {sink}").first()
-            if row and row["s"] == n_events:
-                break
-            time.sleep(2)
-        else:
-            raise TimeoutError(
-                f"s42 python-source stream did not converge to "
-                f"{n_events} rows within 240 s"
-            )
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            # the source is bounded but availableNow is file-source
+            # machinery — poll the complete-mode snapshot until every
+            # generated row is aggregated, then stop
+            deadline = time.time() + 240
+            while time.time() < deadline:
+                # a dead stream (e.g. a Python data-source error) would
+                # otherwise spin the full deadline against a stale
+                # snapshot and mask the real failure (ADVICE r11)
+                exc = q.exception()
+                if exc is not None:
+                    raise exc
+                row = spark.sql(f"SELECT SUM(n) AS s FROM {sink}").first()
+                if row and row["s"] == n_events:
+                    break
+                time.sleep(2)
+            else:
+                raise TimeoutError(
+                    f"s42 python-source stream did not converge to "
+                    f"{n_events} rows within 240 s"
+                )
+        finally:
+            q.stop()
+        rows = spark.sql(
+            f"SELECT bucket, n, total_cents FROM {sink}"
+        ).collect()
     finally:
-        q.stop()
-    rows = spark.sql(
-        f"SELECT bucket, n, total_cents FROM {sink}"
-    ).collect()
-    spark.catalog.dropTempView(sink)
+        spark.catalog.dropTempView(sink)
     return spark.createDataFrame(
         rows, "bucket long, n long, total_cents long"
     )
@@ -5354,14 +5081,9 @@ FROM b
     tags=("M2", "streaming", "stateful"),
 )
 def s43_streaming_session_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.dedup import foreach_batch_idempotent_parquet
     from ..streaming.replay import (
         restamp_replay_sequence,
+        restart_drain,
         write_ordered_replay,
     )
 
@@ -5411,17 +5133,15 @@ def s43_streaming_session_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("2147000044", mn_us + 660_000_000, 125)],
         "key string, us long, cents long",
     ).select("key", F.timestamp_micros("us").alias("ts"), "cents")
-    work = tempfile.mkdtemp(prefix="s43_session_resume_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    os.makedirs(src)
-    try:
-        files_a = write_ordered_replay(phase_a, "ts", f"{work}/a", n_files=2)
+
+    def write(path: str):
+        files_a = write_ordered_replay(phase_a, "ts", f"{path}/a", n_files=2)
         files_b = write_ordered_replay(
-            phase_b, "ts", f"{work}/b", n_files=2,
+            phase_b, "ts", f"{path}/b", n_files=2,
             sentinel_df=sentinel, n_sentinels=3,
         )
         late_f = write_ordered_replay(
-            p_late, "ts", f"{work}/late", n_files=1
+            p_late, "ts", f"{path}/late", n_files=1
         )[0]
         d3, d4, s1, s2, s3 = files_b
         # one combined mtime order (s39 recipe): phase-2 batches under
@@ -5432,110 +5152,66 @@ def s43_streaming_session_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordered = restamp_replay_sequence(
             files_a + [d3, d4, s1, s2, late_f, s3]
         )
-        schema = phase_a.schema
+        return ordered[:2], ordered
 
-        def drain(visible: list):
-            for f in visible:
-                dst = os.path.join(src, os.path.basename(f))
-                if not os.path.exists(dst):
-                    shutil.copy2(f, dst)
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "2")
-                .parquet(src)
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy("key", F.session_window("ts", "6 hours").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum("cents").alias("cents"),
             )
-            agg = (
-                stream.withWatermark("ts", "1 hour")
-                .groupBy(
-                    "key", F.session_window("ts", "6 hours").alias("w")
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum("cents").alias("cents"),
-                )
-                .select(
-                    "key",
-                    F.unix_micros("w.start").alias("start_us"),
-                    F.unix_micros("w.end").alias("end_us"),
-                    "n_events",
-                    "cents",
-                )
+            .select(
+                "key",
+                F.unix_micros("w.start").alias("start_us"),
+                F.unix_micros("w.end").alias("end_us"),
+                "n_events",
+                "cents",
             )
-            q = (
-                foreach_batch_idempotent_parquet(agg, sink, ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "s43 streaming query did not drain within 300 s"
-                    )
-            finally:
-                q.stop()
-            epochs = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(sink)
-                if d.startswith("epoch=")
-            }
-            return epochs, q
-
-        first, _ = drain(ordered[:2])
-        second, q2 = drain(ordered)
-        if not first or min(second - first or {-1}) <= max(first):
-            raise AssertionError(
-                f"s43 restart must EXTEND phase-1 batches, got "
-                f"phase1={sorted(first)} phase2={sorted(second)}"
-            )
-        # the refusal must be VISIBLE, not inferred (s41 precedent)
-        dropped = 0
-        for p in q2.recentProgress:
-            d = _json.loads(p.json) if hasattr(p, "json") else p
-            for op in d.get("stateOperators") or []:
-                dropped += int(op.get("numRowsDroppedByWatermark", 0))
-        if dropped < 1:
-            raise AssertionError(
-                "s43 expected the planted late event to be dropped by "
-                f"the watermark (numRowsDroppedByWatermark), got "
-                f"{dropped}"
-            )
-        # only the sentinels' far-future session may remain buffered
-        state_rows = _final_state_rows(q2)
-        if state_rows is None or state_rows > 1:
-            raise AssertionError(
-                f"s43 final session state must be the lone sentinel "
-                f"session (<= 1), got {state_rows}"
-            )
-        allrows = (
-            spark.read.option("basePath", sink)
-            .parquet(f"{sink}/epoch=*")
-            .select("key", "start_us", "end_us", "n_events", "cents")
-            .localCheckpoint(eager=True)
         )
-        # recovery evidence beyond the hash: the straddling planted
-        # session merged into ONE 2-event row spanning the restart —
-        # a fresh phase-2 store would hold (n_events=1, the phase-1
-        # event lost) and fail here before the hash does
-        planted = [
-            (r["start_us"], r["end_us"], r["n_events"], r["cents"])
-            for r in allrows.where(F.col("key") == "2147000043").collect()
-        ]
-        expect = [
-            (
-                mid_us - 300_000_000,
-                mid_us + 300_000_000 + gap_us,
-                2,
-                250,
-            )
-        ]
-        if planted != expect:
-            raise AssertionError(
-                f"s43 straddling session must merge across the restart "
-                f"through recovered state: expected {expect}, got "
-                f"{planted}"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    frame, _, _, _, q2 = restart_drain(
+        spark, "s43", phase_a.schema, 2, "append", write, sessions
+    )
+    # the refusal must be VISIBLE, not inferred (s41 precedent)
+    dropped = _dropped_by_watermark(q2)
+    if dropped < 1:
+        raise AssertionError(
+            "s43 expected the planted late event to be dropped by "
+            f"the watermark (numRowsDroppedByWatermark), got "
+            f"{dropped}"
+        )
+    # only the sentinels' far-future session may remain buffered
+    state_rows = _final_state_rows(q2)
+    if state_rows is None or state_rows > 1:
+        raise AssertionError(
+            f"s43 final session state must be the lone sentinel "
+            f"session (<= 1), got {state_rows}"
+        )
+    allrows = frame.select("key", "start_us", "end_us", "n_events", "cents")
+    # recovery evidence beyond the hash: the straddling planted
+    # session merged into ONE 2-event row spanning the restart —
+    # a fresh phase-2 store would hold (n_events=1, the phase-1
+    # event lost) and fail here before the hash does
+    planted = [
+        (r["start_us"], r["end_us"], r["n_events"], r["cents"])
+        for r in allrows.where(F.col("key") == "2147000043").collect()
+    ]
+    expect = [
+        (
+            mid_us - 300_000_000,
+            mid_us + 300_000_000 + gap_us,
+            2,
+            250,
+        )
+    ]
+    if planted != expect:
+        raise AssertionError(
+            f"s43 straddling session must merge across the restart "
+            f"through recovered state: expected {expect}, got "
+            f"{planted}"
+        )
     return allrows
 
 
@@ -5586,14 +5262,10 @@ FROM ev GROUP BY 1, 2
     tags=("M2", "streaming", "stateful"),
 )
 def s44_streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.dedup import foreach_batch_idempotent_parquet
     from ..streaming.replay import (
         restamp_replay_sequence,
+        restart_drain,
+        state_operators,
         write_ordered_replay,
     )
 
@@ -5635,9 +5307,6 @@ def s44_streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel = spark.createDataFrame(
         [("sentinel", s_us, 0)], "event_type string, us long, cents long"
     ).select("event_type", F.timestamp_micros("us").alias("ts"), "cents")
-    work = tempfile.mkdtemp(prefix="s44_rocksdb_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    os.makedirs(src)
     conf_keys = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
@@ -5648,120 +5317,66 @@ def s44_streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # state volume, not the session's shuffle default
         "spark.sql.shuffle.partitions": "8",
     }
-    prior = {k: spark.conf.get(k, None) for k in conf_keys}
-    try:
-        for k, v in conf_keys.items():
-            spark.conf.set(k, v)
-        files_a = write_ordered_replay(phase_a, "ts", f"{work}/a", n_files=2)
+
+    def write(path: str):
+        files_a = write_ordered_replay(phase_a, "ts", f"{path}/a", n_files=2)
         files_b = write_ordered_replay(
-            phase_b, "ts", f"{work}/b", n_files=2,
+            phase_b, "ts", f"{path}/b", n_files=2,
             sentinel_df=sentinel, n_sentinels=3,
         )
         # mFPT=2 phase-2 ladder: [b1,b2] -> [s1,s2] (committed
         # watermark jumps far-future) -> [s3] (every real window
         # finalizes in a REAL batch; the sentinel window stays open)
         ordered = restamp_replay_sequence(files_a + files_b)
-        schema = phase_a.schema
+        return ordered[:2], ordered
 
-        def drain(visible: list):
-            for f in visible:
-                dst = os.path.join(src, os.path.basename(f))
-                if not os.path.exists(dst):
-                    shutil.copy2(f, dst)
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "2")
-                .parquet(src)
-            )
-            agg = (
-                stream.withWatermark("ts", "1 hour")
-                .groupBy(F.window("ts", "1 hour"), "event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("cents").alias("cents"),
-                )
-                .select(
-                    F.col("window.start").cast("long").alias("hour_epoch"),
-                    "event_type",
-                    "n",
-                    "cents",
-                )
-            )
-            q = (
-                foreach_batch_idempotent_parquet(agg, sink, ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "s44 streaming query did not drain within 300 s"
-                    )
-            finally:
-                q.stop()
-            rocks = 0
-            for p in q.recentProgress:
-                d = _json.loads(p.json) if hasattr(p, "json") else p
-                for op in d.get("stateOperators") or []:
-                    rocks += sum(
-                        1
-                        for k in (op.get("customMetrics") or {})
-                        if k.lower().startswith("rocksdb")
-                    )
-            if rocks < 1:
-                raise AssertionError(
-                    "s44 must EXECUTE on RocksDBStateStoreProvider: no "
-                    "rocksdb custom metrics in the streaming progress — "
-                    "the engine silently fell back to the default store"
-                )
-            epochs = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(sink)
-                if d.startswith("epoch=")
-            }
-            return epochs, q
-
-        first, _ = drain(ordered[:2])
-        second, q2 = drain(ordered)
-        if not first or min(second - first or {-1}) <= max(first):
-            raise AssertionError(
-                f"s44 restart must EXTEND phase-1 batches, got "
-                f"phase1={sorted(first)} phase2={sorted(second)}"
-            )
-        state_rows = _final_state_rows(q2)
-        if state_rows is None or state_rows > 1:
-            raise AssertionError(
-                f"s44 final window state must be the lone sentinel "
-                f"window (<= 1), got {state_rows}"
-            )
-        allrows = (
-            spark.read.option("basePath", sink)
-            .parquet(f"{sink}/epoch=*")
-            .select("hour_epoch", "event_type", "n", "cents")
-            .localCheckpoint(eager=True)
+    prior = {k: spark.conf.get(k, None) for k in conf_keys}
+    try:
+        for k, v in conf_keys.items():
+            spark.conf.set(k, v)
+        frame, _, _, q1, q2 = restart_drain(
+            spark, "s44", phase_a.schema, 2, "append", write, _hourly_rollup
         )
-        # recovery evidence beyond the hash: the planted pair straddles
-        # the restart inside ONE window — a fresh phase-2 RocksDB store
-        # would lose the phase-1 event and emit n=1
-        planted = [
-            (r["hour_epoch"], r["n"], r["cents"])
-            for r in allrows.where(
-                F.col("event_type") == "planted"
-            ).collect()
-        ]
-        if planted != [(h_us // 1_000_000, 2, 250)]:
-            raise AssertionError(
-                f"s44 planted window must merge across the restart "
-                f"through recovered RocksDB state: expected "
-                f"[({h_us // 1_000_000}, 2, 250)], got {planted}"
-            )
     finally:
-        shutil.rmtree(work, ignore_errors=True)
         for k, v in prior.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+    for q in (q1, q2):
+        rocks = sum(
+            1
+            for ops in state_operators(q)
+            for op in ops
+            for k in (op.get("customMetrics") or {})
+            if k.lower().startswith("rocksdb")
+        )
+        if rocks < 1:
+            raise AssertionError(
+                "s44 must EXECUTE on RocksDBStateStoreProvider: no "
+                "rocksdb custom metrics in the streaming progress — "
+                "the engine silently fell back to the default store"
+            )
+    state_rows = _final_state_rows(q2)
+    if state_rows is None or state_rows > 1:
+        raise AssertionError(
+            f"s44 final window state must be the lone sentinel "
+            f"window (<= 1), got {state_rows}"
+        )
+    allrows = frame.select("hour_epoch", "event_type", "n", "cents")
+    # recovery evidence beyond the hash: the planted pair straddles
+    # the restart inside ONE window — a fresh phase-2 RocksDB store
+    # would lose the phase-1 event and emit n=1
+    planted = [
+        (r["hour_epoch"], r["n"], r["cents"])
+        for r in allrows.where(F.col("event_type") == "planted").collect()
+    ]
+    if planted != [(h_us // 1_000_000, 2, 250)]:
+        raise AssertionError(
+            f"s44 planted window must merge across the restart "
+            f"through recovered RocksDB state: expected "
+            f"[({h_us // 1_000_000}, 2, 250)], got {planted}"
+        )
     return allrows
 
 
@@ -5786,8 +5401,7 @@ FROM documents GROUP BY 1
     tags=("M2", "streaming", "stateful"),
 )
 def s30_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
+    from ..streaming.replay import memory_sink_rows
     from ..streaming.running import running_totals_stream
 
     schema = table(spark, sf_dir, "documents").schema
@@ -5803,31 +5417,11 @@ def s30_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = running_totals_stream(
         stream, "source", "n_chars", api="gst"
     )
-    sink = f"s30_totals_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout — a timed-out run
-        # has PARTIAL running totals in the sink, which would surface
-        # as an opaque hash mismatch downstream; fail loudly instead
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "s30 streaming query did not drain within 300 s — "
-                "partial state would corrupt the running totals"
-            )
-    finally:
-        q.stop()
     # memory sink appends in micro-batch order; the LAST row per key is
     # the converged state.  Rows are O(#sources) — a driver-literal pull.
     last: dict = {}
-    for r in spark.sql(f"SELECT * FROM {sink}").collect():
+    for r in memory_sink_rows(out, "s30", "update"):
         last[r["key"]] = (r["cnt"], r["total"])
-    spark.catalog.dropTempView(sink)
     return spark.createDataFrame(
         [(k, c, t) for k, (c, t) in last.items()],
         "key string, cnt bigint, total double",

@@ -24,14 +24,32 @@ default true).  Callers should size ``maxFilesPerTrigger`` as
 ``n_files + n_sentinels - 1`` so the LAST sentinel forms its own
 batch (the s36 gate does exactly this: [data + sentinel 1] advances
 the watermark, [sentinel 2] evicts).
+
+The module also holds the harness every live streaming gate runs on:
+``drain`` (availableNow run with a timeout guard), ``memory_sink_rows``
+(drain into a throwaway memory table and collect it),
+``restart_drain`` (the two-phase checkpoint-restart recipe) and
+``state_operators`` (the state-operator entries of a query's
+progress reports).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import tempfile
+import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .dedup import foreach_batch_idempotent_parquet
+
+DRAIN_TIMEOUT_S = 300
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -111,7 +129,139 @@ def write_ordered_replay(
     # that initializes before a file's (future) mtime can latch an
     # availableNow snapshot that excludes it, and with two sources
     # initializing at different instants the streams then diverge
-    base = os.stat(ordered[-1]).st_mtime - 10.0 * len(ordered)
-    for i, f in enumerate(ordered):
-        os.utime(f, (base + 10.0 * i, base + 10.0 * i))
-    return ordered
+    return restamp_replay_sequence(ordered)
+
+
+def drain(writer: DataStreamWriter, gate: str) -> StreamingQuery:
+    """Start ``writer`` with the availableNow trigger, block until it
+    has processed all available input, and return the stopped query.
+
+    ``awaitTermination`` returns False on timeout — a timed-out run
+    leaves PARTIAL output in its sink, which would surface as an
+    opaque hash mismatch downstream; fail loudly instead.  The query
+    is stopped however the wait ends.
+    """
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"{gate} streaming query did not drain within "
+                f"{DRAIN_TIMEOUT_S} s — its sink would hold partial output"
+            )
+    finally:
+        q.stop()
+    return q
+
+
+def memory_sink_rows(
+    df: DataFrame,
+    gate: str,
+    output_mode: str = "append",
+    check: Callable[[StreamingQuery], None] | None = None,
+) -> list[Row]:
+    """Drain ``df`` into a uuid-named memory sink and collect its rows.
+
+    ``check(query)`` runs after the drain and before the collect (a
+    gate's post-drain state assertions).  The sink's view is dropped
+    however the drain, the check or the collect ends, so a failing
+    gate leaves no table in the shared session.
+    """
+    spark = df.sparkSession
+    sink = f"{gate}_{uuid.uuid4().hex[:8]}"
+    try:
+        q = drain(
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode),
+            gate,
+        )
+        if check is not None:
+            check(q)
+        return spark.table(sink).collect()
+    finally:
+        spark.catalog.dropTempView(sink)
+
+
+def restart_drain(
+    spark: SparkSession,
+    gate: str,
+    schema: StructType,
+    max_files_per_trigger: int,
+    output_mode: str,
+    replay: Callable[[str], tuple[list[str], list[str]]],
+    build: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, set[int], set[int], StreamingQuery, StreamingQuery]:
+    """Stop-and-resume a file-source stream from its checkpoint.
+
+    ``replay(dir)`` writes the replay files under ``dir`` and returns
+    (phase-1 files, all files), each in replay order.  Phase 1 copies
+    the phase-1 files into the source directory and drains
+    ``build(stream)`` into ``foreach_batch_idempotent_parquet``; phase
+    2 copies in the rest and drains a brand-new query from the same
+    checkpoint.  Asserts that phase-2 batch ids strictly EXTEND
+    phase-1's (offsets recovered, nothing reprocessed).
+
+    Returns ``(frame, first, second, q1, q2)``: the sink read back
+    with the built frame's schema plus the ``epoch`` column (no
+    schema-inference job) and local-checkpointed, since the work
+    directory is removed before returning; the epoch ids on disk
+    after each phase; and the two stopped queries.
+    """
+    work = tempfile.mkdtemp(prefix=f"{gate}_restart_")
+    src, sink, ckpt = (os.path.join(work, d) for d in ("src", "sink", "ckpt"))
+    os.makedirs(src)
+    try:
+        phase1, full = replay(os.path.join(work, "replay"))
+        epochs, queries = [], []
+        for visible in (phase1, full):
+            for f in visible:
+                dst = os.path.join(src, os.path.basename(f))
+                if not os.path.exists(dst):
+                    shutil.copy2(f, dst)  # copy2 keeps the mtime order
+            out = build(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", str(max_files_per_trigger))
+                .parquet(src)
+            )
+            queries.append(
+                drain(
+                    foreach_batch_idempotent_parquet(out, sink, ckpt, output_mode),
+                    gate,
+                )
+            )
+            epochs.append(
+                {
+                    int(d.split("=", 1)[1])
+                    for d in os.listdir(sink)
+                    if d.startswith("epoch=")
+                }
+            )
+        first, second = epochs
+        if not first or min(second - first or {-1}) <= max(first):
+            raise AssertionError(
+                f"{gate} restart must EXTEND phase-1 batches, got "
+                f"phase1={sorted(first)} phase2={sorted(second)}"
+            )
+        frame = (
+            spark.read.schema(
+                StructType(out.schema.fields + [StructField("epoch", LongType())])
+            )
+            .option("basePath", sink)
+            .parquet(f"{sink}/epoch=*")
+            # off the sink dir before the finally removes it
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return frame, first, second, queries[0], queries[1]
+
+
+def state_operators(q: StreamingQuery) -> list[list[dict]]:
+    """The ``stateOperators`` entries of each of ``q``'s recent
+    progress reports, oldest first (an empty list for a report of a
+    stateless batch)."""
+    return [
+        (json.loads(p.json) if hasattr(p, "json") else p).get("stateOperators")
+        or []
+        for p in q.recentProgress
+    ]

@@ -78,30 +78,3 @@ def tumbling_rollup_agg(
         .select(F.col("w.start").cast("date").alias("day"), key_col, "n", "total")
     )
 
-
-def run_to_memory_sink(
-    stream_df: DataFrame, query_name: str, timeout_sec: float = 300.0
-) -> None:
-    """Drain all available input into an in-memory table (batch-parity
-    execution of the stream), blocking until complete.
-
-    ``awaitTermination`` returns False on timeout — a timed-out run
-    has PARTIAL aggregates in the sink, which would surface as an
-    opaque hash mismatch downstream; fail loudly instead (same guard
-    as the s30 live gate).
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"streaming query {query_name} did not drain within "
-                f"{timeout_sec} s — partial state would corrupt the rollup"
-            )
-    finally:
-        q.stop()

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mcm_problem_f_data_wrangling_spark.streaming import streaming_tumbling_rollup
-from mcm_problem_f_data_wrangling_spark.streaming.rollup import run_to_memory_sink
+from mcm_problem_f_data_wrangling_spark.streaming.replay import drain
 
 
 @pytest.fixture(scope="module")
@@ -37,7 +37,11 @@ def test_stream_matches_batch(spark, event_dir):
     }
     stream = streaming_tumbling_rollup(spark, event_dir, batch_df.schema)
     assert stream.isStreaming
-    run_to_memory_sink(stream, "rollup_test")
+    drain(
+        stream.writeStream.format("memory")
+        .queryName("rollup_test").outputMode("complete"),
+        "rollup_test",
+    )
     got = {
         (str(r["day"]), r["event_type"]): (r["n"], r["total"])
         for r in spark.sql("SELECT * FROM rollup_test").collect()
@@ -574,9 +578,13 @@ def test_session_window_stream_merges_across_microbatches(spark, tmp_path_factor
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    from mcm_problem_f_data_wrangling_spark.streaming.rollup import run_to_memory_sink
+    from mcm_problem_f_data_wrangling_spark.streaming.replay import drain
 
-    run_to_memory_sink(sessions(stream), "session_merge_test")
+    drain(
+        sessions(stream).writeStream.format("memory")
+        .queryName("session_merge_test").outputMode("complete"),
+        "session_merge_test",
+    )
     got = {(r.user_id, str(r.start)): (r.n, r.total)
            for r in spark.sql("SELECT * FROM session_merge_test").collect()}
     spark.catalog.dropTempView("session_merge_test")
@@ -1169,3 +1177,52 @@ def test_agg_state_checkpoint_resume_both_ways(spark, tmp_path_factory):
     # fresh checkpoint over the phase-2 file only: counts restart
     got_c = run(files[1:], "c", f"{base}/ckpt_c")
     assert got_c == {"a": (4, 4.0)}
+
+
+def test_memory_sink_rows_drops_view_when_check_raises(spark, event_dir):
+    """A post-drain check that fails still drops the memory sink's view,
+    so a failing gate leaves no table in the shared session."""
+    from mcm_problem_f_data_wrangling_spark.streaming.replay import memory_sink_rows
+
+    schema = spark.read.parquet(event_dir).schema
+    stream = spark.readStream.schema(schema).parquet(event_dir)
+
+    def sink_tables():
+        return [
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("sinkleak")
+        ]
+
+    def check(q):
+        raise AssertionError("post-drain check failed")
+
+    with pytest.raises(AssertionError, match="post-drain check failed"):
+        memory_sink_rows(stream, "sinkleak", check=check)
+    assert sink_tables() == []
+    rows = memory_sink_rows(stream.select("event_id"), "sinkleak")
+    assert sorted(r["event_id"] for r in rows) == list(range(200))
+    assert sink_tables() == []
+
+
+def test_restart_drain_rejects_phase2_without_new_epoch(spark, tmp_path_factory):
+    """Handing both phases the same files means phase 2 writes no new
+    epoch: the restart helper raises and removes its work directory."""
+    import os
+
+    from mcm_problem_f_data_wrangling_spark.streaming.replay import restart_drain
+
+    df = spark.range(20).withColumn("ts", F.timestamp_micros("id"))
+    path = str(tmp_path_factory.mktemp("restart_same"))
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    files = sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+    work_dirs = []
+
+    def replay(root):
+        work_dirs.append(os.path.dirname(root))
+        return files, files
+
+    with pytest.raises(AssertionError, match="must EXTEND phase-1 batches"):
+        restart_drain(spark, "same_files", df.schema, 1, "append", replay, lambda s: s)
+    assert work_dirs and not os.path.exists(work_dirs[0])
