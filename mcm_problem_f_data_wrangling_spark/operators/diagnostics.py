@@ -79,13 +79,23 @@ def kpss_pvalue(stat: float) -> float:
 
 
 def _ols(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray, float]:
-    """OLS fit returning (beta, se(beta), sigma2)."""
+    """OLS fit returning (beta, se(beta), sigma2).
+
+    diag((XᵀX)⁺) comes from the SVD of X itself (V·S⁻²·Vᵀ) rather than
+    from inverting XᵀX, which squares the condition number: the lagged
+    ADF designs reach cond(X) ~ 5e3, so forming XᵀX costs ~1e-9 of
+    relative accuracy in the t-statistic and lets the result drift with
+    the BLAS kernel the CPU selects.
+    """
     beta, *_ = np.linalg.lstsq(x, y, rcond=None)
     resid = y - x @ beta
     dof = max(len(y) - x.shape[1], 1)
     sigma2 = float(resid @ resid) / dof
-    xtx_inv = np.linalg.pinv(x.T @ x)
-    se = np.sqrt(np.maximum(np.diag(xtx_inv) * sigma2, 0.0))
+    _, s, vt = np.linalg.svd(x, full_matrices=False)
+    # same singular-value cutoff pinv(XᵀX) applied: drop s² < 1e-15·s_max²
+    keep = s * s > 1e-15 * s[0] * s[0] if len(s) else s.astype(bool)
+    xtx_inv_diag = ((vt[keep].T / s[keep]) ** 2).sum(axis=1)
+    se = np.sqrt(np.maximum(xtx_inv_diag * sigma2, 0.0))
     return beta, se, sigma2
 
 

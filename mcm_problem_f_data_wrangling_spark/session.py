@@ -18,14 +18,33 @@ remaining correct on ``local[32]``:
   default.  Without libhadoop, Hadoop's local FileContext forks a
   ``readlink`` process for every checkpoint-file rename — hundreds of
   short-lived processes per streaming gate.  The FileSystem manager
-  renames through ``File.renameTo``, with no process.  (Both still
-  fork ``chmod`` when Hadoop creates a file; only libhadoop avoids
-  that.)  What the FileContext manager adds is rename-without-
-  overwrite, which catches two writers racing on one checkpoint on
-  shared storage.  On a local disk ``rename(2)`` is atomic, and a
-  session already refuses two active queries on one checkpoint, so
-  the default is only changed when the master is local; cluster
-  masters keep FileContext.  An ``extra_conf`` value still wins.
+  renames through ``File.renameTo``, with no process.  What the
+  FileContext manager adds is rename-without-overwrite, which catches
+  two writers racing on one checkpoint on shared storage.  On a local
+  disk ``rename(2)`` is atomic, and a session already refuses two
+  active queries on one checkpoint, so the default is only changed
+  when the master is local; cluster masters keep FileContext.  An
+  ``extra_conf`` value still wins.
+- On a local master, ``file:`` paths go through
+  ``sparkgraft.fs.NioLocalFileSystem`` (``jvm/``: its Java source and
+  the jar ``tools/build_jvm.py`` builds from it).  Without libhadoop,
+  Hadoop's local file system sets permissions by forking ``chmod``
+  for every file, ``.crc`` sidecar and directory it creates — every
+  CSV export, parquet write and streaming checkpoint commit.  The
+  class is Hadoop's checksummed ``LocalFileSystem`` over a raw layer
+  whose ``setPermission`` makes the same ``chmod(2)`` call through
+  ``java.nio``, in-process.  It falls back to the stock call when
+  libhadoop is loaded (which forks nothing) and for a sticky, setuid
+  or setgid bit, which ``java.nio`` cannot set.  Spark's bundled
+  ``hive-exec`` registers Hive's ``ProxyLocalFileSystem`` for
+  ``file:``; its one change, a ``rename`` that returns false onto an
+  existing file, is kept, so only how permissions are set differs.
+  The jar joins ``spark.driver.extraClassPath`` (after a caller's
+  entries), which only takes effect when the JVM is launched, so
+  ``spark.hadoop.fs.file.impl`` names the class only when this call
+  launches the JVM or the running JVM already loads it; a caller's
+  ``spark.hadoop.fs.file.impl`` still wins.  Cluster masters keep
+  Hadoop's default.
 """
 
 from __future__ import annotations
@@ -34,6 +53,7 @@ import os
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "mcm_problem_f_data_wrangling_spark"
@@ -43,6 +63,8 @@ LOCAL_CHECKPOINT_FILE_MANAGER = (
 )
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+LOCAL_FILE_SYSTEM = "sparkgraft.fs.NioLocalFileSystem"
+LOCAL_FILE_SYSTEM_JAR = os.path.join(_PKG_DIR, "jvm", "spark-graft-fs.jar")
 _shipped_apps: set[str] = set()
 
 
@@ -114,12 +136,32 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    conf = dict(extra_conf or {})
     if master.startswith("local"):
-        # no forked readlink per checkpoint rename (module docstring)
-        builder = builder.config(
+        # no forked readlink per checkpoint rename, no forked chmod per
+        # created file (module docstring)
+        conf.setdefault(
             "spark.sql.streaming.checkpointFileManagerClass",
             LOCAL_CHECKPOINT_FILE_MANAGER,
         )
-    for k, v in (extra_conf or {}).items():
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = (
+            f"{cp}{os.pathsep}{LOCAL_FILE_SYSTEM_JAR}" if cp else LOCAL_FILE_SYSTEM_JAR
+        )
+        if "spark.hadoop.fs.file.impl" not in conf and _jvm_loads(LOCAL_FILE_SYSTEM):
+            conf["spark.hadoop.fs.file.impl"] = LOCAL_FILE_SYSTEM
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _jvm_loads(cls: str) -> bool:
+    """Whether the driver JVM ``getOrCreate`` will run on can load
+    ``cls``: true when that call launches the JVM (with the
+    ``extraClassPath`` just set), else asked of the running JVM.  A
+    JVM launched before this process (``spark-submit``) counts as
+    unable."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    return jvm.org.apache.spark.util.Utils.classIsLoadable(cls)
