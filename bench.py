@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
 from mcm_problem_f_data_wrangling_spark.plans import REGISTRY, headline_queries
 from mcm_problem_f_data_wrangling_spark.session import get_spark
 
@@ -30,13 +31,17 @@ def main() -> None:
 
     bench_set = headline_queries()
 
-    def run(q) -> None:
+    def run(q) -> float:
         # noop sink, not count(): count() lets Catalyst prune every
         # unaggregated output column, so projection-shaped queries
         # (signatures, quality scores) would be timed WITHOUT their
         # actual compute.  The noop v2 sink executes the full plan,
-        # all columns, and discards rows executor-side.
-        q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        # all columns, and discards rows executor-side.  The query's
+        # barriers are released after the timer stops.
+        with barrier_scope():
+            t0 = time.perf_counter()
+            q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
 
     # warmup: JVM codegen + parquet footer caches (not timed).  Every
     # query runs TWICE untimed — warming only a subset leaves the rest
@@ -68,11 +73,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     for q in bench_set:
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            run(q)
-            runs.append(time.perf_counter() - t0)
+        runs = [run(q) for _ in range(n_runs)]
 
         def stats(rs: list[float]) -> tuple[float, float]:
             best = sorted(rs)[:3]
@@ -81,9 +82,7 @@ def main() -> None:
         med, spr = stats(runs)
         extra = 0
         while spr / max(med, 1e-3) > max_rel and extra < extra_cap:
-            t0 = time.perf_counter()
-            run(q)
-            runs.append(time.perf_counter() - t0)
+            runs.append(run(q))
             extra += 1
             med, spr = stats(runs)
         timings[q.name] = round(med, 3)

@@ -12,6 +12,7 @@ Layout
 ------
 - ``session``     : SparkSession factory tuned for scale (AQE, Arrow).
 - ``schemas``     : fixed StructType schemas (CES-shaped + testdata).
+- ``materialize`` : the one lineage cut and its release scope.
 - ``sources``     : readers/writers (TSV/CSV/parquet, header normalize).
 - ``functions``   : Column-expression helpers (predicates, rolling
                     windows with pandas-parity min_periods, dates,

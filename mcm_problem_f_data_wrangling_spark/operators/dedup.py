@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textfn import doc_fingerprint, portable_hash64, tokens, word_shingles
+from ..materialize import materialize
 
 MINHASH_K = 16
 # 8 bands × 2 rows: detection prob at Jaccard J is 1-(1-J²)⁸ — ≈0.999 at
@@ -224,9 +225,8 @@ def minhash_jaccard_pairs(
     # plan-verified).  The checkpointed frame is 5 integers per LSH
     # candidate (banding bounds the count by construction), so the
     # intersection runs exactly once per pair; measured 1.84 s -> 1.57 s
-    # at sf0.1, rows identical.  Same executor-local-storage caveat as
-    # ngram_jaccard_pairs' token table (persist to DFS on a cluster).
-    j = j.localCheckpoint(eager=True)
+    # at sf0.1, rows identical.
+    j = materialize(j)
     jac = F.col("n_common").cast("double") / (
         F.col("n_1") + F.col("n_2") - F.col("n_common")
     ).cast("double")
@@ -322,11 +322,10 @@ def ngram_jaccard_pairs(
     """
     from .skew import spread
 
-    # localCheckpoint: the prefix-filter core reads the token table ~5x
+    # materialize: the prefix-filter core reads the token table ~5x
     # (df counts, doc sizes, prefix window, two verify joins) and each
     # lineage replay re-runs the dominant shingle explode — the
-    # dup-ngram discipline (measured 93 s -> 54 s at sf0.1; on a
-    # cluster, persist to DISK/DFS instead of executor-local storage)
+    # dup-ngram discipline (measured 93 s -> 54 s at sf0.1)
     tok = (
         spread(df)
         .select(
@@ -335,8 +334,8 @@ def ngram_jaccard_pairs(
                 "token"
             ),
         )
-        .localCheckpoint(eager=True)
     )
+    tok = materialize(tok)
     return _prefix_filter_jaccard(tok, threshold).select(
         "doc_id_1",
         "doc_id_2",
@@ -717,7 +716,7 @@ def jaccard_join_prefix(
     """
     from .skew import spread
 
-    # localCheckpoint: same ~5x token-table reuse as ngram_jaccard_pairs
+    # materialize: same ~5x token-table reuse as ngram_jaccard_pairs
     tok = (
         spread(df)
         .select(
@@ -726,8 +725,8 @@ def jaccard_join_prefix(
                 "token"
             ),
         )
-        .localCheckpoint(eager=True)
     )
+    tok = materialize(tok)
     inter = _prefix_filter_jaccard(tok, threshold)
     jac = F.col("n_common").cast("double") / (
         F.col("n_1") + F.col("n_2") - F.col("n_common")
@@ -757,11 +756,10 @@ def _prefix_filter_jaccard(tok: DataFrame, threshold: float) -> DataFrame:
     # materialized ONCE (r13): it feeds the prefix join AND the
     # injectivity decision below, and as a checkpoint it is computed
     # exactly once per call
-    vocab = (
+    vocab = materialize(
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
         .withColumn("tkey", F.xxhash64("token"))
-        .localCheckpoint(eager=True)
     )
     # Is xxhash64 injective on this corpus's vocabulary?  (One tiny
     # aggregate over the materialized vocab; collision probability is
@@ -796,7 +794,7 @@ def _prefix_filter_jaccard(tok: DataFrame, threshold: float) -> DataFrame:
         # can only ADD a candidate pair, which the exact verify
         # rejects — results identical unconditionally
         keep_key = F.xxhash64("token").alias("tkey")
-    # localCheckpoint (same discipline as the caller's tok table): the
+    # materialize (same discipline as the caller's tok table): the
     # prefix table feeds BOTH sides of the candidate self-join, and the
     # df-join + per-doc window behind it re-run per side otherwise —
     # groupBy partial-agg exchanges don't canonicalize equal to join
@@ -804,13 +802,12 @@ def _prefix_filter_jaccard(tok: DataFrame, threshold: float) -> DataFrame:
     # x_dedup_clusters_cc 27.0 -> 14.6 s warm, x_dedup_ngram_jaccard
     # ~13 -> ~10 s; x_dedup_jaccard_prefix pays ~1-2 s for the eager
     # materialization of its larger trigram prefix — net strongly
-    # positive.  On a cluster, persist to DISK/DFS instead.)
-    prefix = (
+    # positive.)
+    prefix = materialize(
         joined.join(cnt, "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= prefix_len)
         .select("doc_id", keep_key, "n", "rn")
-        .localCheckpoint(eager=True)
     )
     # PPJoin positional filter (Xiao et al. WWW'08 §3.2): a true pair
     # with Jaccard >= t has overlap O >= alpha = ceil(t/(1+t)·(n1+n2));
@@ -1000,7 +997,7 @@ def dup_spans(
     )
     # two consumers (dup-set build + position rejoin) — materialize the
     # shingle+hash pipeline once (x_dup_ngram_fraction precedent)
-    g = g.localCheckpoint(eager=True)
+    g = materialize(g)
     dup = (
         g.select("h", "doc_id")
         .distinct()

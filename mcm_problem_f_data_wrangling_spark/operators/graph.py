@@ -43,21 +43,20 @@ phase and its recompute tree grew ~3^phases: flat ~1 s/round through
 round 17, then 2.2 s, 4 s, 9 s, 22 s, 57 s).  Two grounding media,
 picked by ``state``:
 
-- ``'local'`` (default without a ``work_dir``):
-  ``localCheckpoint(eager=True)`` — an eager
-  executor-memory barrier whose result plan is a bare ``LogicalRDD``
+- ``'local'`` (default without a ``work_dir``): ``materialize``'s
+  local medium, whose result plan is a bare ``LogicalRDD``
   (``assert_materialized`` proves exactly this), so truncation is
   structural, not best-effort.  No FS write, no parquet encode/decode,
   no listing: measured 3.0 → 2.2 s (sf1) and 3.6 → 2.2 s (sf0.1) on
-  the x_dedup_clusters_cc edge set, labels byte-identical.  CAVEAT:
-  checkpoint blocks are executor-LOCAL — an executor loss kills the
-  job (truncated lineage cannot recompute).  Single-node / bench
-  profile.
-- ``'parquet'`` (default with a ``work_dir``): per-round write+read
-  of ``work_dir`` — durable, fault-tolerant rounds.  At cluster scale
-  pass ``work_dir`` on a distributed FS — the same pattern GraphX
-  uses for iterative state.  A ``work_dir`` with ``state='local'`` is
-  refused: it would silently keep no durable state.
+  the x_dedup_clusters_cc edge set, labels byte-identical.  The round
+  blocks are executor-local (the single-node / bench profile) and live
+  as long as the caller's ``barrier_scope``.
+- ``'parquet'`` (default with a ``work_dir``): ``materialize``'s
+  parquet medium, one write+read of ``work_dir`` per round — durable,
+  fault-tolerant rounds.  At cluster scale pass ``work_dir`` on a
+  distributed FS — the same pattern GraphX uses for iterative state.
+  A ``work_dir`` with ``state='local'`` is refused: it would silently
+  keep no durable state.
 """
 
 from __future__ import annotations
@@ -68,6 +67,7 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .dedup import ngram_jaccard_pairs
 
 
@@ -107,6 +107,11 @@ def _check_state(state: str, work_dir: str | None) -> None:
         )
 
 
+def _round_path(base: str | None, name: str) -> str | None:
+    """One round's ``materialize`` path (None = the local medium)."""
+    return None if base is None else f"{base}/{name}"
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -126,7 +131,7 @@ def connected_components(
     from the edges.
 
     ``state`` picks the per-round grounding medium (module docstring):
-    ``'local'`` = eager localCheckpoint rounds — fastest,
+    ``'local'`` = local-checkpoint rounds — fastest,
     executor-local, the single-node profile; ``'parquet'`` = durable
     rounds in ``work_dir`` — the fault-tolerant cluster profile.
     ``None`` (default) means ``'parquet'`` when a ``work_dir`` is given
@@ -145,18 +150,8 @@ def connected_components(
     if state is None:
         state = "local" if work_dir is None else "parquet"
     _check_state(state, work_dir)
-    spark = edges.sparkSession
-    base = work_dir or tempfile.mkdtemp(prefix="cc_state_")
-    own_dir = work_dir is None
-
-    def ground(df: DataFrame, path: str) -> DataFrame:
-        # one materialization job either way; 'local' skips the FS
-        # round-trip (see module docstring for the tradeoff)
-        if state == "parquet":
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
-
+    # parquet rounds live in work_dir or a temp dir removed afterwards
+    base = None if state == "local" else work_dir or tempfile.mkdtemp(prefix="cc_state_")
     try:
         # canonical undirected edge set (u < v), deduped ONCE; the
         # (possibly expensive) input edge plan executes exactly once
@@ -169,7 +164,7 @@ def connected_components(
             .where(F.col("u") != F.col("v"))
             .dropDuplicates()
         )
-        cur = ground(e0, f"{base}/edges_0")
+        cur = materialize(e0, _round_path(base, "edges_0"))
         # no vertex-set materialization: both star phases provably
         # preserve every endpoint (a node always reappears as a leaf or
         # a center of the rewired edges), so the final stars cover
@@ -223,14 +218,14 @@ def connected_components(
             # the intermediate edge set feeds small_star's groupBy AND
             # join branches — ground it (the state discipline) so
             # neither branch recomputes large_star
-            ls = ground(ls, f"{base}/edges_{i + 1}L")
+            ls = materialize(ls, _round_path(base, f"edges_{i + 1}L"))
             ss = small_star(ls)
             # convergence checksum folded into the state-grounding job
             # via an Observation — ONE job per iteration.  The edge set
             # is exactly stable at the star fixpoint; (count, Σu, Σv,
             # Σxxhash64(u,v)) pins it without a second scan.
             obs = Observation(f"cc_iter_{i}")
-            cur = ground(
+            cur = materialize(
                 ss.observe(
                     obs,
                     F.count(F.lit(1)).alias("n"),
@@ -238,7 +233,7 @@ def connected_components(
                     F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
                     F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
                 ),
-                f"{base}/edges_{i + 1}",
+                _round_path(base, f"edges_{i + 1}"),
             )
             if on_round is not None:
                 on_round(i)
@@ -272,20 +267,20 @@ def connected_components(
                     labeled = labeled.unionByName(singles)
                 # materialize the result off the state dir before it
                 # is deleted
-                return labeled.localCheckpoint(eager=True)
+                return materialize(labeled)
             prev_sig = sig
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations"
         )
     finally:
-        if own_dir:
+        if base is not None and work_dir is None:
             shutil.rmtree(base, ignore_errors=True)
 
 
 def assert_materialized(df: DataFrame, context: str = "") -> DataFrame:
     """Assert ``df`` is a checkpoint barrier (its analyzed plan is a
-    single ``LogicalRDD`` — what ``localCheckpoint(eager=True)``
-    returns), i.e. no upstream scan can re-execute.
+    single ``LogicalRDD`` — what ``materialize`` returns for its local
+    medium), i.e. no upstream scan can re-execute.
 
     Callers that delete a grounding directory a result was computed
     FROM must pass the result through this first: the coupling between
@@ -354,7 +349,6 @@ def duplicate_clusters(
 
     from ..functions.textfn import doc_fingerprint
 
-    spark = docs.sparkSession
     # ground the (id, text) projection ONCE in parquet: the two
     # evidence branches plus the node set would otherwise each re-scan
     # and re-evaluate the caller's input plan (the gate's md5 shard
@@ -365,10 +359,7 @@ def duplicate_clusters(
     # same jaccard over a parquet re-read (33.7 s vs 17.7 s).
     base_dir = tempfile.mkdtemp(prefix="dupc_base_")
     try:
-        docs.select(F.col(id_col), F.col(text_col)).write.mode(
-            "overwrite"
-        ).parquet(base_dir)
-        base = spark.read.parquet(base_dir)
+        base = materialize(docs.select(F.col(id_col), F.col(text_col)), base_dir)
         doc_fp = base.select(
             F.col(id_col), doc_fingerprint(text_col).alias("fingerprint")
         )
@@ -524,11 +515,11 @@ def triangle_counts(
     per-corner explode feeds a partial-agg directly.
 
     The oriented edge list feeds THREE plan branches (the adjacency
-    build and both join probes), so it is persisted
-    (MEMORY_AND_DISK) — without that, each branch re-derives the
-    distinct + degree joins from the raw edges and the plan triples
-    its shuffles.  16 bytes/row, the same materialize-the-frontier
-    call GraphX's TriangleCount makes.
+    build and both join probes), so it is materialized — without
+    that, each branch re-derives the distinct + degree joins from the
+    raw edges and the plan triples its shuffles.  Two longs per row,
+    the same materialize-the-frontier call GraphX's TriangleCount
+    makes.
 
     The curation use: triangle density / clustering coefficient as a
     graph-quality signal over co-occurrence graphs (same family as
@@ -559,9 +550,7 @@ def triangle_counts(
             F.least("ku", "kv").alias("a"), F.greatest("ku", "kv").alias("b")
         )
     )
-    from pyspark import StorageLevel
-
-    oriented = oriented.persist(StorageLevel.MEMORY_AND_DISK)
+    oriented = materialize(oriented)
     # sorted out-neighborhood per apex; orientation bounds |N+| at
     # O(sqrt(m)) so no array exceeds that (the celebrity-node guard)
     adj = oriented.groupBy("a").agg(F.sort_array(F.collect_list("b")).alias("nb"))
@@ -651,18 +640,11 @@ def k_core(
     from pyspark.sql import Observation
 
     _check_state(state, work_dir)
-    spark = edges.sparkSession
-    base = work_dir or tempfile.mkdtemp(prefix="kcore_state_")
-    own_dir = work_dir is None
-
-    def ground(df: DataFrame, path: str) -> DataFrame:
-        if state == "parquet":
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
-
+    base = None if state == "local" else work_dir or tempfile.mkdtemp(prefix="kcore_state_")
     try:
-        cur = ground(symmetrize_edges(edges, src, dst), f"{base}/edges_0")
+        cur = materialize(
+            symmetrize_edges(edges, src, dst), _round_path(base, "edges_0")
+        )
         prev_edges = None
         for i in range(max_iter):
             deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
@@ -671,9 +653,9 @@ def k_core(
                 keep.select(F.col("a").alias("b")), "b", "left_semi"
             )
             obs = Observation(f"kcore_round_{i}")
-            cur = ground(
+            cur = materialize(
                 nxt.select("a", "b").observe(obs, F.count(F.lit(1)).alias("n")),
-                f"{base}/edges_{i + 1}",
+                _round_path(base, f"edges_{i + 1}"),
             )
             if on_round is not None:
                 on_round(i)
@@ -683,12 +665,7 @@ def k_core(
             prev_edges = n_edges
         else:
             raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
-        out = (
-            cur.select(F.col("a").alias(node_col))
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
-        return out
+        return materialize(cur.select(F.col("a").alias(node_col)).dropDuplicates())
     finally:
-        if own_dir:
+        if base is not None and work_dir is None:
             shutil.rmtree(base, ignore_errors=True)

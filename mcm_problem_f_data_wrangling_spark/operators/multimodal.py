@@ -52,6 +52,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..materialize import materialize
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -986,14 +988,12 @@ def video_phash_neardup(
     n_bands = max_hamming + 1
     width = 64 // n_bands
     mask = (1 << width) - 1
-    # localCheckpoint: the frame-hash table feeds three branches (the
+    # materialize: the frame-hash table feeds three branches (the
     # band explode plus both sides of the alignment join) and Spark's
     # ReuseExchange cannot unify a join exchange with an explode input,
     # so without this the whole demux+JPEG-decode Arrow stage runs 3x
     # (same discipline as dedup.py's PPJoin prefix table).
-    frames = video_phash_frames(df, payload_col, id_col).localCheckpoint(
-        eager=True
-    )
+    frames = materialize(video_phash_frames(df, payload_col, id_col))
     first = frames.where(F.col("frame_idx") == 0).select(
         "media_id",
         F.posexplode(
@@ -1082,9 +1082,7 @@ def video_clip_containment(
     width = 64 // n_bands
     mask = (1 << width) - 1
     # one decode, three consumers (same discipline as video_phash_neardup)
-    frames = video_phash_frames(df, payload_col, id_col).localCheckpoint(
-        eager=True
-    )
+    frames = materialize(video_phash_frames(df, payload_col, id_col))
     banded = frames.select(
         "media_id",
         "frame_idx",

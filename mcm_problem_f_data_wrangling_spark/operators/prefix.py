@@ -15,7 +15,7 @@ instead:
    by the partition COUNT, never by data size) stitches partitions
    together.
 
-The bucketed frame is ``localCheckpoint(eager=True)``-materialized so
+The bucketed frame goes through ``materialize`` (local medium) so
 both passes structurally share ONE partition-id assignment (range
 sampling is seeded-deterministic, but two lineage copies agreeing is
 an accident, not a contract) and the second pass doesn't recompute
@@ -28,12 +28,11 @@ the input.
      query through these helpers runs a Spark job to materialize the
      bucketed input — callers composing plans lazily (e.g. registry
      imports, ``.explain()`` tooling) pay that job before any action.
-   - **executor-local blocks are unrecoverable.**  ``localCheckpoint``
+   - **executor-local blocks are unrecoverable.**  The local medium
      stores blocks on executors; on a real cluster an executor loss
-     makes downstream stages unrecomputable.  For production cluster
-     runs, swap in a reliable checkpoint (``sc.setCheckpointDir`` on
-     DFS + ``.checkpoint()``) or persist to ``DISK_ONLY`` with
-     replication — the stitch logic is storage-agnostic.
+     makes downstream stages unrecomputable.  The medium is chosen in
+     one place, ``materialize.py``; the stitch logic reads the
+     ``_PID`` column, not the partitioning, so it is medium-agnostic.
 
 Callers pass order columns that form a TOTAL order (add a unique
 tie-break key); with ties the assignment of equal rows to ranks is
@@ -58,6 +57,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 _PID = "__prefix_pid"
 
 
@@ -66,10 +67,10 @@ def _bucketize(
 ) -> DataFrame:
     if n_buckets is None:
         n_buckets = 2 * df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.repartitionByRange(n_buckets, *order_by)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    return materialize(
+        df.repartitionByRange(n_buckets, *order_by).withColumn(
+            _PID, F.spark_partition_id()
+        )
     )
 
 

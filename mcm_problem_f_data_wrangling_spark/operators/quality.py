@@ -20,16 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textfn import tokens
-
-# boilerplate_removal('auto')'s checkpointed segment table from the
-# most recent call — unpersisted by the next call so repeated sweeps
-# cache at most one (the semantic_dedup _LAST_ASSIGNED pattern).
-_LAST_SEG: DataFrame | None = None
-# previous call's corpus-sized segment checkpoint (r13, advisor item):
-# unlike the small _LAST_SEG table this holds the full tokenized+
-# segmented corpus.  Its unpersist() does not free the blocks on
-# Spark 4.1.2 (see boilerplate_removal; ROADMAP item 3)
-_LAST_SEGGED: DataFrame | None = None
+from ..materialize import materialize
 
 
 def word_ngrams_strict(toks: Column, n: int) -> Column:
@@ -218,25 +209,8 @@ def boilerplate_removal(
     # the explode's Generate otherwise re-derives tokenize+segment
     # in-line (measured: explode over the lazy projection 2.4 s vs
     # 0.12 s over the materialized one at sf0.1; whole operator
-    # ~7 s -> ~2 s).  Same in-query-lifetime discipline as the
-    # dup-ngram gram table; on a cluster persist to DFS instead of
-    # executor-local storage.  The handle is tracked module-wide and
-    # each call calls unpersist() on the PREVIOUS call's frame (the
-    # _LAST_SEG pattern below), but on Spark 4.1.2 that frees nothing:
-    # DataFrame.unpersist() of a localCheckpoint leaves its RDD in
-    # getPersistentRDDs(), and only an RDD-level unpersist releases
-    # the blocks.  So the corpus-sized blocks of every call stay until
-    # the session stops — ROADMAP item 3 (one materialization
-    # primitive that releases at RDD level) is the fix.
-    global _LAST_SEGGED
-    if _LAST_SEGGED is not None:
-        try:
-            _LAST_SEGGED.unpersist()
-        except Exception:
-            # handle may belong to an already-stopped SparkSession
-            pass
-    segged = segged.localCheckpoint(eager=True)
-    _LAST_SEGGED = segged
+    # ~7 s -> ~2 s).  The caller's barrier_scope frees it.
+    segged = materialize(segged)
     seg_df = (
         segged.select(F.col(id_col), F.explode("__segs").alias("seg"))
         .groupBy("seg")
@@ -251,20 +225,8 @@ def boilerplate_removal(
         # by construction (df > max_df survivors only), so the
         # executor-local blocks are cheap; both paths below read the
         # checkpointed result, so exactly one segment aggregation runs
-        # per call (asserted in tests/test_quality.py).  The handle is
-        # tracked module-wide and each call unpersists the PREVIOUS
-        # call's blocks (the semantic_dedup _LAST_ASSIGNED pattern), so
-        # repeated invocations — full parity sweeps, pytest loops —
-        # hold at most one segment table instead of accumulating.
-        global _LAST_SEG
-        if _LAST_SEG is not None:
-            try:
-                _LAST_SEG.unpersist()
-            except Exception:
-                # handle may belong to an already-stopped SparkSession
-                pass
-        seg_df = seg_df.localCheckpoint(eager=True)
-        _LAST_SEG = seg_df
+        # per call (asserted in tests/test_quality.py).
+        seg_df = materialize(seg_df)
         strategy = (
             "broadcast" if seg_df.count() <= max_boiler_set else "anti_join"
         )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 # valid date_trunc grains, finest → coarsest (subset that cascades cleanly)
 GRAIN_ORDER = ("minute", "hour", "day", "week", "month", "quarter", "year")
 
@@ -60,7 +62,7 @@ def rollup_cascade(
     )
     levels: list[tuple[str, DataFrame]] = [(grains[0], cur)]
     for g in grains[1:]:
-        prev = levels[-1][1].persist()  # scanned twice: as output and as input below
+        prev = materialize(levels[-1][1])  # scanned twice: as output and as input below
         nxt = (
             prev.groupBy(F.date_trunc(g, F.col("bucket")).alias("bucket"), *keys)
             .agg(F.sum("n").alias("n"), F.sum("_dtotal").alias("_dtotal"))

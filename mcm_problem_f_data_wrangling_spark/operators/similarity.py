@@ -21,10 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.vectors import cosine_similarity, lit_double_matrix, lit_doubles
-
-# semantic_dedup's persisted cell assignment from the most recent call —
-# unpersisted by the next call so repeated sweeps cache at most one.
-_LAST_ASSIGNED: DataFrame | None = None
+from ..materialize import materialize
 
 
 def brute_force_topk(
@@ -339,12 +336,8 @@ def _semantic_dedup_sql(
     all-pairs comparison never appears; at 100 TB the cell join is the
     same shape as the LSH-band join in ``operators.dedup``.
 
-    Caching: the cell assignment is persisted so the pair join and the
-    final anti-join share one computation, and the handle is tracked
-    module-wide — each call unpersists the PREVIOUS call's assignment,
-    so repeated invocations (full parity sweeps, pytest, scale smoke)
-    hold at most one assignment's blocks instead of accumulating until
-    LRU eviction.
+    The cell assignment is materialized, so the pair join and the
+    final anti-join share one computation.
 
     ``cell_cap`` is the hot-cell skew guard (same mechanism as
     :func:`ivf_knn_join`'s): a cell larger than the cap sub-shards its
@@ -356,17 +349,7 @@ def _semantic_dedup_sql(
     """
     from ..functions.vectors import dot_unrolled, l2_norm
 
-    global _LAST_ASSIGNED
-    if _LAST_ASSIGNED is not None:
-        try:
-            _LAST_ASSIGNED.unpersist()
-        except Exception:
-            # the handle may belong to an already-stopped SparkSession
-            # (per-test-session lifecycles); a dead handle has nothing
-            # cached, so dropping it is correct
-            pass
-    assigned = assign_cells(df, centroids, vec_col).persist()
-    _LAST_ASSIGNED = assigned
+    assigned = materialize(assign_cells(df, centroids, vec_col))
     # normalize ONCE per vector before the pair join: each of the
     # O(cell²) pair comparisons then costs a dot product alone instead
     # of dot + two norms (~3× less per-pair arithmetic; cos(a,b) ≡

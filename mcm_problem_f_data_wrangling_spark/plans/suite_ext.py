@@ -59,6 +59,7 @@ from ..operators.similarity import (
     query_vector_of,
 )
 from .base import DSUM, MONTH_OF, MONTHLY_CTE, Query, dsum, monthly_lineitem, spread, table
+from ..materialize import barrier_scope, materialize
 from ..functions.rolling import ewma_sql
 
 QUERIES: list[Query] = []
@@ -942,7 +943,7 @@ def x5_monte_carlo_fan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees over the SAME tiny monthly aggregate — checkpoint it so
     # the 100 TB lineitem scan happens once, not four times (same
     # pattern as x_dup_ngram_fraction's shared token table)
-    m = monthly_lineitem(spark, sf_dir).localCheckpoint()
+    m = materialize(monthly_lineitem(spark, sf_dir))
     fan = monte_carlo_forecast(
         m, "flag", "month", "revenue", sims=100, steps=6, seed=7, tail_window=24
     )
@@ -4728,7 +4729,7 @@ def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # update-mode rows: the converged total per key is the row
     # from its HIGHEST epoch (struct-max; epoch is unique per key
     # per batch)
-    allrows = (
+    allrows = materialize(
         frame.groupBy("key")
         .agg(F.max(F.struct("epoch", "cnt", "total")).alias("m"))
         .select(
@@ -4736,7 +4737,6 @@ def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.cnt").alias("cnt"),
             F.col("m.total").alias("total"),
         )
-        .localCheckpoint(eager=True)
     )
     # recovery evidence beyond the hash: every key RE-EMITTED in a
     # phase-2 epoch must carry a count strictly above its phase-1
@@ -5709,15 +5709,14 @@ def x_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq,
     )
 
-    # spread before cache: the single-row-group scan would otherwise
-    # serialize every downstream map on one task
-    emb = spread(table(spark, sf_dir, "embeddings"))
-    emb.cache().count()
-    cb = train_pq(emb, m=8, k=16, iters=2)
-    codes = encode_pq(emb, cb).select("vec_id", "pq_code").persist()
     qids = (0, 1, 2)
     out = []
-    try:
+    with barrier_scope():
+        # spread before materializing: the single-row-group scan would
+        # otherwise serialize every downstream map on one task
+        emb = materialize(spread(table(spark, sf_dir, "embeddings")))
+        cb = train_pq(emb, m=8, k=16, iters=2)
+        codes = materialize(encode_pq(emb, cb).select("vec_id", "pq_code"))
         qs = query_vectors_of(emb, qids)
 
         # ONE job per comparison family (_union_topk_sets): the
@@ -5738,9 +5737,6 @@ def x_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             r_adc = len(exact[qid] & adc[qid]) / 10.0
             r_rr = len(exact[qid] & rerank[qid]) / 10.0
             out.append((qid, 10, r_rr >= 0.2, r_rr >= r_adc))
-    finally:
-        codes.unpersist()
-        emb.unpersist()
     return spark.createDataFrame(
         out, "qid bigint, k int, rerank_recall_ok boolean, rerank_ge_adc_ok boolean"
     )
@@ -5801,16 +5797,14 @@ def x_sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_vectors_of,
     )
 
-    emb = spread(table(spark, sf_dir, "embeddings"))
-    emb.cache().count()
-    shard = portable_hash64(F.col("vec_id").cast("string")) % 4
-    base, delta = emb.filter(shard != 0), emb.filter(shard == 0)
-    merged = None
-    try:
+    with barrier_scope():
+        emb = materialize(spread(table(spark, sf_dir, "embeddings")))
+        shard = portable_hash64(F.col("vec_id").cast("string")) % 4
+        base, delta = emb.filter(shard != 0), emb.filter(shard == 0)
         codes_base, cb, cents = ivfpq_build(base, k_cells=10, m=8, k_codes=16, iters=2)
-        merged = codes_base.unionByName(
-            ivfpq_encode(delta, cb, cents)
-        ).localCheckpoint(eager=True)
+        merged = materialize(
+            codes_base.unionByName(ivfpq_encode(delta, cb, cents))
+        )
         full = ivfpq_encode(emb, cb, cents)
         # law (a): merged == full re-encode, row for row (one collect of
         # 3 O(1) scalars — the gate-query driver-literal pattern)
@@ -5828,7 +5822,7 @@ def x_sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .first()
         )
-        # shard counts from the CACHED emb (cheap filters), never a
+        # shard counts from the materialized emb (cheap filters), never a
         # second assign+encode pass over the base shard
         n_total = emb.count()
         n_delta = delta.count()
@@ -5842,10 +5836,6 @@ def x_sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, merged, cb, cents, qv, k=1, n_probe=10, shortlist=50
         ).first()
         searchable = bool(top is not None and top["vec_id"] == probe_id)
-    finally:
-        if merged is not None:
-            merged.unpersist()
-        emb.unpersist()
     return spark.createDataFrame(
         [(n_base, n_delta, n_total, identical, searchable)],
         "n_base bigint, n_delta bigint, n_total bigint, "
@@ -5888,15 +5878,14 @@ def x_sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_vectors_of,
     )
 
-    # spread before cache: the single-row-group scan would otherwise
-    # serialize every downstream map on one task
-    emb = spread(table(spark, sf_dir, "embeddings"))
-    emb.cache().count()
-    codes, cb, cents = ivfpq_build(emb, k_cells=10, m=8, k_codes=16, iters=2)
-    codes = codes.persist()
     qids = (0, 1, 2)
     out = []
-    try:
+    with barrier_scope():
+        # spread before materializing: the single-row-group scan would
+        # otherwise serialize every downstream map on one task
+        emb = materialize(spread(table(spark, sf_dir, "embeddings")))
+        codes, cb, cents = ivfpq_build(emb, k_cells=10, m=8, k_codes=16, iters=2)
+        codes = materialize(codes)
         qs = query_vectors_of(emb, qids)
         # batch the 3 exact baselines into ONE job and the 6
         # qid x n_probe searches into ONE job (_union_topk_sets)
@@ -5925,9 +5914,6 @@ def x_sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             for n_probe in (1, 2):
                 hits = exact[qid] & got.get((qid, n_probe), set())
                 out.append((qid, n_probe, 10, len(hits) / 10.0 >= 0.3))
-    finally:
-        codes.unpersist()
-        emb.unpersist()
     return spark.createDataFrame(
         out, "qid bigint, n_probe int, k int, recall_ok boolean"
     )
@@ -7176,11 +7162,11 @@ def x_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    assigned, _ = train_ivf_cells(emb, k=10, iters=3)
-    assigned = assigned.persist()
     envelopes = {1: 0.5, 2: 0.6}
     out = []
-    try:
+    with barrier_scope():
+        assigned, _ = train_ivf_cells(emb, k=10, iters=3)
+        assigned = materialize(assigned)
         # driver-job fusion (r13, guide §5: 13 sequential jobs → 11,
         # and the expensive one runs once): the 3 query vectors fetch
         # in ONE IN-filter job instead of 3 head() jobs, and the
@@ -7190,9 +7176,7 @@ def x_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exploded corpus per call (was ~4 s of this gate's 6 s wall
         # at sf0.1).  Values, and therefore recalls, are unchanged.
         qs = query_vectors_of(emb, (0, 1, 2))
-        cents = centroids_by_cell(
-            assigned, cell_col="cell"
-        ).localCheckpoint()
+        cents = materialize(centroids_by_cell(assigned, cell_col="cell"))
         for qid in (0, 1, 2):
             q = qs[qid]
             exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
@@ -7209,8 +7193,6 @@ def x_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             monotone = recalls[2] >= recalls[1]
             for n_probe, floor in envelopes.items():
                 out.append((qid, n_probe, 10, recalls[n_probe] >= floor, monotone))
-    finally:
-        assigned.unpersist()
     return spark.createDataFrame(
         out, "qid bigint, n_probe int, k int, recall_ok boolean, monotone_ok boolean"
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.textfn import tokens
+from ..materialize import materialize
 from ..operators.chunking import chunk_documents
 from ..operators.grid import force_complete_month_grid, interpolate_linear
 from ..operators.index import inverted_index
@@ -329,15 +330,11 @@ def x_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical across the two calls and cos>0.6 ⇒ cos>0.5 gives
     # subset monotonicity regardless of BLAS-vs-HOF summation order.
     # Measured at sf1: 16.8 s → 3.1 s per call, identical kept count.
-    kept_lo = (
-        semantic_dedup(emb, cents, threshold=0.5, engine="blas")
-        .select("vec_id")
-        .localCheckpoint()
+    kept_lo = materialize(
+        semantic_dedup(emb, cents, threshold=0.5, engine="blas").select("vec_id")
     )
-    kept_hi = (
-        semantic_dedup(emb, cents, threshold=0.6, engine="blas")
-        .select("vec_id")
-        .localCheckpoint()
+    kept_hi = materialize(
+        semantic_dedup(emb, cents, threshold=0.6, engine="blas").select("vec_id")
     )
     n_lo = kept_lo.count()
     n_hi = kept_hi.count()

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.textfn import portable_hash64, strict_word_shingles, tokens
+from ..materialize import materialize
 from .base import Query, spread, table
 
 QUERIES: list[Query] = []
@@ -293,9 +294,8 @@ def x_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the gram table ONCE (the shingle+hash pipeline is
     # the dominant cost and has two consumers below — count + re-join;
     # lazy evaluation would recompute it; the CC-operator precedent
-    # for in-query materialization).  Non-reliable executor storage is
-    # fine for single-query lifetime.
-    grams = grams.localCheckpoint(eager=True)
+    # for in-query materialization).
+    grams = materialize(grams)
     cnt = grams.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     dup = F.sum((F.col("n_docs") > 1).cast("int")).cast("long")
     return (

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..materialize import materialize
 from .dedup import foreach_batch_idempotent_parquet
 
 DRAIN_TIMEOUT_S = 300
@@ -242,14 +243,13 @@ def restart_drain(
                 f"{gate} restart must EXTEND phase-1 batches, got "
                 f"phase1={sorted(first)} phase2={sorted(second)}"
             )
-        frame = (
+        # off the sink dir before the finally removes it
+        frame = materialize(
             spark.read.schema(
                 StructType(out.schema.fields + [StructField("epoch", LongType())])
             )
             .option("basePath", sink)
             .parquet(f"{sink}/epoch=*")
-            # off the sink dir before the finally removes it
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)

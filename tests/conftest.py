@@ -13,3 +13,8 @@ def spark():
     s = get_spark("pytest", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def persisted_rdds(spark) -> set:
+    """Ids of the RDDs the SparkContext holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

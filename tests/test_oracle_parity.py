@@ -9,10 +9,11 @@ import math
 import duckdb
 import pytest
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
 from mcm_problem_f_data_wrangling_spark.plans import REGISTRY
 from mcm_problem_f_data_wrangling_spark.schemas import TESTDATA_TABLES
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, persisted_rdds
 
 
 @pytest.fixture(scope="module")
@@ -41,9 +42,14 @@ def _canon(rows, cols):
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(name, spark, duck):
     q = REGISTRY[name]
-    sdf = q.spark(spark, SF_SMOKE)
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
+    before = persisted_rdds(spark)
+    with barrier_scope():
+        sdf = q.spark(spark, SF_SMOKE)
+        s_cols = [c.lower() for c in sdf.columns]
+        s_rows = [tuple(r) for r in sdf.collect()]
+    # a set difference: the ContextCleaner may free older RDDs meanwhile
+    leaked = persisted_rdds(spark) - before
+    assert not leaked, f"{name}: persisted RDDs {sorted(leaked)} outlive the query"
     if q.sql is None:
         assert len(s_rows) > 0, f"{name}: rows-only query returned no rows"
         return

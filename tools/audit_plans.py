@@ -37,6 +37,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope  # noqa: E402
 from mcm_problem_f_data_wrangling_spark.plans import REGISTRY  # noqa: E402
 from mcm_problem_f_data_wrangling_spark.session import get_spark  # noqa: E402
 
@@ -90,7 +91,8 @@ def main() -> int:
     failures = []
     counts: dict[str, int] = {}
     for name, q in REGISTRY.items():
-        plan = q.spark(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        with barrier_scope():
+            plan = q.spark(spark, sf)._jdf.queryExecution().executedPlan().toString()
         n_ex = plan.count("Exchange")
         counts[name] = n_ex
         n_py = (

@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
 from mcm_problem_f_data_wrangling_spark.plans import REGISTRY
 from mcm_problem_f_data_wrangling_spark.schemas import TESTDATA_TABLES
 from mcm_problem_f_data_wrangling_spark.session import get_spark
@@ -67,9 +68,10 @@ def main() -> int:
         q = REGISTRY[name]
         t0 = time.time()
         try:
-            sdf = q.spark(spark, sf_dir)
-            s_cols = [c.lower() for c in sdf.columns]
-            s_rows = [tuple(r) for r in sdf.collect()]
+            with barrier_scope():
+                sdf = q.spark(spark, sf_dir)
+                s_cols = [c.lower() for c in sdf.columns]
+                s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error: {exc}")

@@ -16,6 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
 from mcm_problem_f_data_wrangling_spark.plans import headline_queries
 from mcm_problem_f_data_wrangling_spark.session import get_spark
 
@@ -49,8 +50,9 @@ def main() -> None:
         "`Exchange`s sit.\n",
     ]
     for q in headline_queries():
-        df = q.spark(spark, sf_dir)
-        parts.append(f"\n## {q.name}\n\n```\n{formatted_plan(df)}\n```\n")
+        with barrier_scope():
+            plan = formatted_plan(q.spark(spark, sf_dir))
+        parts.append(f"\n## {q.name}\n\n```\n{plan}\n```\n")
     with open(OUT, "w") as f:
         f.write("\n".join(parts))
     print(f"wrote {OUT} ({len(headline_queries())} plans)")

@@ -18,6 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
 from mcm_problem_f_data_wrangling_spark.plans import REGISTRY
 from mcm_problem_f_data_wrangling_spark.session import get_spark
 
@@ -35,11 +36,12 @@ def main() -> None:
     spark = get_spark("plan_query")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = REGISTRY[name].spark(spark, sf_dir)
+        with barrier_scope():
+            plan = formatted_plan(REGISTRY[name].spark(spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} — explain('formatted') at {sf_dir} ({suffix})\n\n")
-            f.write(formatted_plan(df))
+            f.write(plan)
         print(f"wrote {path}")
     spark.stop()
 
