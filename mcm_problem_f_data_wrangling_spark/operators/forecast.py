@@ -167,30 +167,6 @@ def monte_carlo_forecast(
     return quantile_fan_summary(paths)
 
 
-def drift_equation_block(fit_df: DataFrame) -> dict[str, str]:
-    """X6: symbolic equation exporter — one formatted block per group.
-
-    Parity: ``sarimax_equation_block`` (``EDA.ipynb cell 29``) renders
-    the fitted model's equation with its estimated coefficients as a
-    human-readable string, driver-side (not a dataflow op — the fit
-    output is one tiny row per group).  For the RW-with-drift family
-    the h-step equation and its normal forecast interval are closed
-    form.
-    """
-    rows = (
-        fit_df.select("group", "mu", "sigma").dropDuplicates(["group"]).collect()
-    )
-    blocks = {}
-    for r in sorted(rows, key=lambda r: r["group"]):
-        blocks[r["group"]] = (
-            f"career: {r['group']}\n"
-            f"model: random walk with drift\n"
-            f"  y_(T+h) = y_T + h*mu,  mu = {r['mu']:.4f}, sigma = {r['sigma']:.4f}\n"
-            f"  80% interval: y_T + h*mu +/- 1.2816*sigma*sqrt(h)"
-        )
-    return blocks
-
-
 # ---------------------------------------------------------------------------
 # X3 (full parity path): SARIMAX AIC grid over the reference's five
 # candidate orders.
@@ -968,48 +944,6 @@ def sarimax_exog_fan(
         (F.col("det") + F.col("beta") * F.col("x_sim")).alias("y"),
     )
     return quantile_fan_summary(paths, qs=qs)
-
-
-def arma_equation_block(fit_df: DataFrame, exog_name: str = "x") -> dict[str, str]:
-    """X6 full parity path: SARIMAX equation exporter
-    (``sarimax_equation_block``, ``EDA.ipynb cell 29``).
-
-    Renders, per group, the regression-with-ARMA-errors equation with
-    the fitted coefficients::
-
-        y_t = beta*x_t + u_t
-        (1 - phi B)(1 - Phi B^12)(1-B)(1-B^12)(u_t - c) =
-            (1 + theta B)(1 + Theta B^12) eps_t
-
-    Driver-side on the O(groups) fit output (one tiny collect), like
-    the reference's print-loop over ``model_info_all``.
-    """
-    rows = (
-        fit_df.select(
-            "group", "order", "aic", "beta", "c", "phi", "theta", "phi_s", "theta_s"
-        )
-        .dropDuplicates(["group"])
-        .collect()
-    )
-    blocks: dict[str, str] = {}
-    for r in sorted(rows, key=lambda r: r["group"]):
-        if r["order"] == "rw_drift":
-            blocks[r["group"]] = (
-                f"group: {r['group']}\nmodel: random walk with drift (fallback)\n"
-                f"  y_(T+h) = y_T + h*mu"
-            )
-            continue
-        ar = "1" if abs(r["phi"]) < 1e-12 else f"1 - {r['phi']:.4f} B"
-        sar = "1" if abs(r["phi_s"]) < 1e-12 else f"1 - {r['phi_s']:.4f} B^12"
-        ma = "1" if abs(r["theta"]) < 1e-12 else f"1 + {r['theta']:.4f} B"
-        sma = "1" if abs(r["theta_s"]) < 1e-12 else f"1 + {r['theta_s']:.4f} B^12"
-        blocks[r["group"]] = (
-            f"group: {r['group']}\n"
-            f"model: SARIMAX {r['order']} + exog  (AIC {r['aic']:.2f})\n"
-            f"  y_t = {r['beta']:.6f}*{exog_name}_t + u_t\n"
-            f"  ({ar})({sar})(1-B)(1-B^12)(u_t - {r['c']:.4f}) = ({ma})({sma}) eps_t"
-        )
-    return blocks
 
 
 # ---------------------------------------------------------------------------

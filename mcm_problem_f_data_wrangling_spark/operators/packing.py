@@ -52,24 +52,3 @@ def pack_sequences(
         )
         .drop("__excl")
     )
-
-
-def packing_summary(packed: DataFrame, tokens_col: str, capacity: int = 4096,
-                    partition_col: str = "source") -> DataFrame:
-    """Per-partition fill-rate report: bins used, tokens, mean fill.
-
-    ``fill`` is tokens / (n_bins * capacity) — the fraction of the
-    training-sequence budget actually carrying data (overflow tokens
-    push it past 1.0 at most marginally).
-    """
-    return (
-        packed.groupBy(partition_col)
-        .agg(
-            F.countDistinct("bin_id").alias("n_bins"),
-            F.sum(tokens_col).cast("long").alias("n_tokens"),
-        )
-        .withColumn(
-            "fill",
-            F.round(F.col("n_tokens") / (F.col("n_bins") * F.lit(float(capacity))), 6),
-        )
-    )

@@ -305,43 +305,3 @@ def boilerplate_removal(
             9,
         ).alias("removed_frac"),
     )
-
-
-def observed_filter_funnel(
-    df: DataFrame, stages: list[tuple[str, Column]]
-) -> tuple[DataFrame, "Observation"]:
-    """Filter chain with per-stage survivor counts attached to the
-    SAME job as whatever action consumes the result — zero extra
-    scans (vs :func:`filter_funnel`, which is itself one dedicated
-    scan; at 100 TB even that one pass is worth folding away when a
-    write happens anyway).
-
-    Returns ``(filtered_df, observation)``; after the FIRST action on
-    ``filtered_df`` completes, ``observation.get`` holds ``n_in`` and
-    one ``kept_<stage>`` cumulative-survivor count per stage, computed
-    by the executors while they stream rows to the sink.
-
-    Implementation: the stage flags are computed BEFORE the filter (an
-    ``Observation`` only sees rows that reach its node, so observing
-    after the filter would lose the funnel), then the filter applies
-    the final cumulative flag and drops the helper columns.
-    """
-    from pyspark.sql import Observation
-
-    if not stages:
-        raise ValueError("stages must be non-empty")
-    flags = []
-    cum = F.lit(True)
-    for name, cond in stages:
-        cum = cum & F.coalesce(cond, F.lit(False))  # NULL = drop (SQL WHERE)
-        flags.append(cum.alias(f"__kept_{name}"))
-    flagged = df.select("*", *flags)
-    obs = Observation("filter_funnel")
-    metrics = [F.count(F.lit(1)).alias("n_in")] + [
-        F.sum(F.col(f"__kept_{name}").cast("bigint")).alias(f"kept_{name}")
-        for name, _ in stages
-    ]
-    observed = flagged.observe(obs, *metrics)
-    last = f"__kept_{stages[-1][0]}"  # stages checked non-empty above
-    out = observed.filter(F.col(last)).drop(*[f"__kept_{n}" for n, _ in stages])
-    return out, obs

@@ -3,8 +3,8 @@
 The reference never meets skew (single-process pandas), but the
 SURVEY.md §6 north star does: a handful of hot keys (one giant
 industry, one dominant language) can pin a full shuffle partition on
-one executor.  Two standard remedies, expressed declaratively so
-Catalyst still optimizes around them:
+one executor.  The remedy here is expressed declaratively so Catalyst
+still optimizes around it:
 
 - **Salted two-stage aggregation**: map-side salt the group key into
   ``n_salts`` shards, partially aggregate on (key, salt), then finish
@@ -12,13 +12,9 @@ Catalyst still optimizes around them:
   reducers; the second shuffle moves only ``n_salts`` rows per key.
   Works for any algebraic aggregate (sum/count/min/max — anything
   with a partial form).
-- **Salt-replicated join** (for when a broadcast is impossible and AQE
-  skew-split isn't available): salt the fact side, explode the
-  dimension side ``n_salts``×, join on (key, salt).  Dimension rows
-  multiply by ``n_salts`` — use only when dim ≪ fact.
 
 AQE's ``skewJoin`` (enabled in session.py) covers sort-merge join skew
-at runtime; these helpers cover aggregation skew and pre-AQE plans.
+at runtime; these helpers cover aggregation skew.
 """
 
 from __future__ import annotations
@@ -47,27 +43,6 @@ def salted_group_agg(
     return partial.groupBy(*keys).agg(
         *[F.sum(f"_p_{name}").alias(name) for name in aggs]
     )
-
-
-def salt_replicated_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "left",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt fact, replicate dim ``n_salts``×.
-
-    The hot fact key spreads across ``n_salts`` shuffle partitions;
-    each dim row is duplicated per salt so every shard still finds its
-    match.  Only sensible when the dim side is small relative to the
-    fact but too large (or disallowed) to broadcast.
-    """
-    salted_fact = fact.withColumn("_salt", (F.rand(seed=7) * n_salts).cast("int"))
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return salted_fact.join(replicated_dim, [key, "_salt"], how).drop("_salt")
 
 
 def key_skew_profile(df: DataFrame, key_cols: list[str], top_k: int = 5) -> DataFrame:

@@ -1,7 +1,5 @@
 from .registry import (  # noqa: F401
-    DRIVER_WINDOW,
     REGISTRY,
     Query,
-    get_query,
     headline_queries,
 )

@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -44,6 +45,32 @@ class Query:
     tags: tuple[str, ...] = field(default=())
 
 
+QUERIES: list[Query] = []
+"""Every registered query, in registration (suite-import) order."""
+
+
+def query(
+    name: str,
+    doc: str,
+    sql: str | None = None,
+    headline: bool = False,
+    tags: tuple[str, ...] = (),
+):
+    """Register the decorated ``fn(spark, sf_dir)`` as a :class:`Query`."""
+
+    def wrap(fn):
+        if any(q.name == name for q in QUERIES):
+            raise ValueError(f"duplicate query name {name!r}")
+        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
+        return fn
+
+    return wrap
+
+
+# DuckDB whitespace tokenizer shared by the text oracles
+TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')"
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -52,6 +79,33 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         return read_nanos_timestamp_parquet(spark, path)
     return spark.read.parquet(path)
+
+
+def stream_table(
+    spark: SparkSession, sf_dir: str, name: str, schema: StructType | None = None
+) -> DataFrame:
+    """Replay a testdata table as a file stream.
+
+    ``<name>.parquet`` is a flat FILE in the driver's testdata but a
+    Spark-written DIRECTORY in ``benchdata/sf1``; the streaming file
+    source needs a directory base path, so the glob plus recursive
+    lookup reads both layouts.  ``schema`` defaults to the table's
+    on-disk schema, read with ``nanosAsLong`` on (a TimestampType
+    ``ts`` in the read schema would make the scan throw on the
+    TIMESTAMP(NANOS) layout); ``ts`` then gets the same nanos fix-up
+    as :func:`sources.readers.read_nanos_timestamp_parquet`.
+    """
+    from ..sources.readers import micros_from_nanos
+
+    if schema is None:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        schema = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(os.path.join(sf_dir, f"{name}.parquet*"))
+    )
+    return micros_from_nanos(stream)
 
 
 def spread(df: DataFrame, min_rows: int = 0) -> DataFrame:

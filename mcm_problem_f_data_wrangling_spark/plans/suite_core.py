@@ -27,18 +27,7 @@ from ..functions.rolling import (
     tail_slice_flag,
 )
 from ..operators.grid import force_complete_month_grid
-from .base import DSUM, MONTH_OF, MONTHLY_CTE, Query, dsum, month_of, monthly_lineitem, spread, table
-
-QUERIES: list[Query] = []
-
-
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
-
-    return wrap
-
+from .base import DSUM, MONTH_OF, MONTHLY_CTE, dsum, month_of, monthly_lineitem, query, spread, table
 
 # --------------------------------------------------------------------------
 # Flagship: the collapse_career pipeline re-expressed over the fixtures
@@ -70,7 +59,7 @@ ORDER BY month
 """.strip()
 
 
-@_q(
+@query(
     "flagship_career_collapse",
     "collapse_career re-expressed over lineitem/part: regex filter (P5) + "
     "exact-or-prefix dim predicate (P8) + broadcast fact⨝dim (J3) + "
@@ -123,7 +112,7 @@ def flagship_career_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "p05_monthly_regex_filter",
     "P5: regex row filter keeping only M01-M03 synthesized period codes. "
     "Parity: bls_ces/load_CES_pandas.py:168 (monthly M01-M12 regex).",
@@ -146,7 +135,7 @@ def p05_monthly_regex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p06_in_list_filter",
     "P6: IN-list measure filter (datatype_text.isin). "
     "Parity: bls_ces/prep_CES_pandas.py:165.",
@@ -166,7 +155,7 @@ def p06_in_list_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p07_seasonal_equality",
     "P7: optional equality filter (seasonal == 'S'). "
     "Parity: bls_ces/load_CES_pandas.py:183-184.",
@@ -186,7 +175,7 @@ def p07_seasonal_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p08_exact_or_prefix_codes",
     "P8: exact-OR-prefix code predicate with NaN→'' safety. "
     "Parity: code_matches, bls_ces/load_CES_pandas.py:237-241.",
@@ -209,7 +198,7 @@ def p08_exact_or_prefix_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p09_naics_mask",
     "P9: NAICS-style mask — strip, exact-IN (NA→False) OR prefix-any (NA→False). "
     "Parity: naics_mask, bls_ces/prep_CES_pandas.py:57-66.",
@@ -232,7 +221,7 @@ def p09_naics_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p10_ci_contains_search",
     "P10: case-insensitive substring metadata search, NA→False. "
     "Parity: bls_ces/load_CES_pandas.py:216-219.",
@@ -253,7 +242,7 @@ def p10_ci_contains_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p11_distinct_pairs",
     "P11: drop_duplicates on code/name pairs. "
     "Parity: bls_ces/prep_CES_pandas.py:141,149,178.",
@@ -264,7 +253,7 @@ def p11_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "part").select("p_brand", "p_type").dropDuplicates()
 
 
-@_q(
+@query(
     "p12_null_fill_join",
     "P12: left-join NULL region + fillna(0) — customers with no orders. "
     "Parity: fillna/dropna idioms, EDA.ipynb cells 23/27.",
@@ -292,7 +281,7 @@ def p12_null_fill_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "f07_cast_coerce_null",
     "F7: to_numeric(errors='coerce') — garbage casts to NULL, not error. "
     "Parity: bls_ces/load_CES_pandas.py:171.",
@@ -330,7 +319,7 @@ def f07_cast_coerce_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "j01_dictionary_bridge_join",
     "J1+J2: dimension bridge chain (series→industry→datatype analogue: "
     "customer→nation→region), both joins broadcast. "
@@ -357,7 +346,7 @@ def j01_dictionary_bridge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "j03_fact_dict_broadcast",
     "J3: the workhorse big⨝small fact⨝dictionary broadcast join. "
     "Parity: bls_ces/prep_CES_pandas.py:158.",
@@ -382,7 +371,7 @@ def j03_fact_dict_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "j05_two_aggregate_join",
     "J5: join of two independently-aggregated monthly frames on date. "
     "Parity: bls_ces/prep_CES_pandas.py:97.",
@@ -410,7 +399,7 @@ def j05_two_aggregate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "j04_weight_attach",
     "J4: composite-key (month, code) left join attaching renamed weights "
     "to an observation frame — earnings rows get emp_weight_thousands "
@@ -448,7 +437,7 @@ def j04_weight_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     return earn.join(emp, ["month", "code"], "left")
 
 
-@_q(
+@query(
     "j06_exog_month_end_join",
     "J6: exogenous-series merge — both sides normalized to month-END "
     "(last_day ≡ to_period('M').to_timestamp('M')) then left-joined; "
@@ -493,7 +482,7 @@ def j06_exog_month_end_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "a01_group_sum",
     "A1: group-sum by key (employment by month analogue). "
     "Parity: bls_ces/prep_CES_pandas.py:74-77.",
@@ -511,7 +500,7 @@ def a01_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a02_weighted_mean",
     "A2: employment-weighted mean decomposed to sum/sum — no UDAF. "
     "Parity: bls_ces/prep_CES_pandas.py:88-94 (groupby.apply lambda X2).",
@@ -530,7 +519,7 @@ def a02_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag").agg((num / den).alias("qty_weighted_price"))
 
 
-@_q(
+@query(
     "a03_value_counts",
     "A3: value_counts — group-count, sort desc, head. "
     "Parity: bls_ces/prep_CES_pandas.py:169.",
@@ -550,7 +539,7 @@ def a03_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a04_dedupe_collapse",
     "A4: duplicate-month collapse under all three dedupe rules in ONE "
     "single-scan conditional aggregate — mean (exact sum/count), sum "
@@ -583,7 +572,7 @@ def a04_dedupe_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a05_minmax_summary",
     "A5: min/max/count output sanity summary. "
     "Parity: bls_ces/check_ces_outputs.py:31-41.",
@@ -608,7 +597,7 @@ def a05_minmax_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a06_quantile_summary",
     "A6: exact percentile fan summary (p05/p10/p50/p90/p95 + moments). "
     "Parity: np.quantile over MC paths, EDA.ipynb cells 27/28/32.",
@@ -663,7 +652,7 @@ def a06_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a07_first_nonnull",
     "A7: first non-null value per series in time order. "
     "Parity: .dropna().iloc[0], EDA.ipynb cell 5 (add_features index base).",
@@ -702,7 +691,7 @@ def _w():
     return Window.partitionBy("flag").orderBy("month")
 
 
-@_q(
+@query(
     "w01_pct_change",
     "W1: lag-k percent change — MoM (k=1) and YoY (k=12) × 100. "
     "Parity: pct_change, EDA.ipynb cell 5.",
@@ -726,7 +715,7 @@ def w01_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w02_rolling_mean",
     "W2: rolling mean w∈{6,12} with pandas min_periods=w NULL guard. "
     "Parity: rolling(w).mean(), EDA.ipynb cell 5.",
@@ -754,7 +743,7 @@ def w02_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w03_rolling_std",
     "W3: rolling sample std of MoM % change, w∈{6,12}, min_periods guard. "
     "Parity: rolling(w).std(), EDA.ipynb cells 5/17/20.",
@@ -788,7 +777,7 @@ def w03_rolling_std(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w04_rolling_corr",
     "W4: 12-month rolling correlation of two metrics, pairwise min_periods. "
     "Parity: emp.rolling(12).corr(wage), EDA.ipynb cell 17.",
@@ -811,7 +800,7 @@ def w04_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w05_rolling_median",
     "W5: rolling median w=13, min_periods=6 (outlier-repair window). "
     "Parity: fix_last_outlier_with_rolling_median, EDA.ipynb cell 28.",
@@ -834,7 +823,7 @@ def w05_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w06_differences",
     "W6: first difference and seasonal (12) difference. "
     "Parity: diff/seasonal shift, EDA.ipynb cell 25.",
@@ -858,7 +847,7 @@ def w06_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w07_index_rebase",
     "W7: rebase to first non-null = 100. "
     "Parity: x / x.iloc[0] * 100, EDA.ipynb cell 5.",
@@ -877,7 +866,7 @@ def w07_index_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("flag", "month", index_rebase("revenue", _w()).alias("rev_index"))
 
 
-@_q(
+@query(
     "w08_cumulative_sum",
     "W8: running cumulative sum (decimal-exact across engines). "
     "Parity: np.cumsum path building, EDA.ipynb cell 27.",
@@ -897,7 +886,7 @@ def w08_cumulative_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("flag", "month", cum.alias("cum_revenue"))
 
 
-@_q(
+@query(
     "w09_tail_window",
     "W9: last-12-months tail slice then aggregate (drift-fit window). "
     "Parity: s.iloc[-window:], fit_rw_drift_params, EDA.ipynb cell 27.",
@@ -929,7 +918,7 @@ def w09_tail_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w10_multikey_sort_projection",
     "W10+P1: canonical projection with 3-key global sort (bounded by limit). "
     "Parity: sort_values + 10-col projection, bls_ces/load_CES_pandas.py:190-198.",
@@ -958,7 +947,7 @@ def w10_multikey_sort_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w11_top_n",
     "W11: top-n peek with deterministic tiebreak. "
     "Parity: .head(n), bls_ces/prep_CES_pandas.py:169.",
@@ -979,7 +968,7 @@ def w11_top_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w12_month_grid_gapfill",
     "W12: complete monthly grid reindex — NULL rows inserted for gaps. "
     "Parity: force_complete_month_grid, EDA.ipynb cell 25.",
@@ -1007,7 +996,7 @@ def w12_month_grid_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return force_complete_month_grid(m, keys=["p_partkey"], month_col="month")
 
 
-@_q(
+@query(
     "w13_future_month_index",
     "W13: future month index generation (forecast horizon scaffold). "
     "Parity: future_month_index, EDA.ipynb cells 27-28.",
@@ -1039,7 +1028,7 @@ def w13_future_month_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "u01_union_long_format",
     "U1: union-all stacking per-metric long tables. "
     "Parity: pd.concat(export_long_rows), EDA.ipynb cell 32.",
@@ -1071,7 +1060,7 @@ def u01_union_long_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rev.unionByName(qty)
 
 
-@_q(
+@query(
     "u02_intersect_active_users",
     "U-ext: INTERSECT — users active in both the first and last week of "
     "the events range. Engine extension per SURVEY.md §2.6 (no "
@@ -1090,7 +1079,7 @@ def u02_intersect_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first.select("user_id").intersect(last.select("user_id"))
 
 
-@_q(
+@query(
     "u03_except_all_multiset",
     "U-ext: EXCEPT ALL — multiset difference of per-event-type user "
     "occurrences (duplicates preserved: a user with 5 clicks and 3 "
@@ -1109,7 +1098,7 @@ def u03_except_all_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clicks.exceptAll(views)
 
 
-@_q(
+@query(
     "f01_06_date_synthesis",
     "F1-F6: CES date synthesis round-trip — strip 'M', zfill, concat, "
     "to_date, month-end. Parity: bls_ces/load_CES_pandas.py:149-154.",
@@ -1141,7 +1130,7 @@ def f01_06_date_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).dropDuplicates()
 
 
-@_q(
+@query(
     "f09_14_scalar_math",
     "F9-F14: log, clip (greatest), arithmetic over grouped rows. "
     "Parity: np.log / np.maximum, EDA.ipynb cells 5/27.",
@@ -1165,7 +1154,7 @@ def f09_14_scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "u04_rollup_hierarchy",
     "ROLLUP grouping sets over (returnflag, linestatus): subtotals and "
     "grand total in ONE partial/final hash-agg pass — no grouping sets "
@@ -1195,7 +1184,7 @@ def u04_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "u05_cube_order_matrix",
     "CUBE over (orderstatus, orderpriority): all 4 grouping sets from "
     "one shuffle (engine extension — SURVEY.md §2.4 note).",
@@ -1225,7 +1214,7 @@ def u05_cube_order_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w14_pivot_event_matrix",
     "Pivot day × event_type value sums (engine extension: the reference "
     "splits-then-aggregates instead of pivoting, SURVEY.md §2 hard-parts "
@@ -1260,7 +1249,7 @@ def w14_pivot_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "p14_json_props_extract",
     "Semi-structured extraction (engine extension): parse the events "
     "JSON props column with an EXPLICIT from_json schema (schema "
@@ -1291,7 +1280,7 @@ def p14_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "j08_semi_anti_join",
     "LEFT SEMI / LEFT ANTI joins (J-ext): orders with vs without "
     "lineitems, summarized per status.  Semi/anti ship only the LEFT "
@@ -1337,7 +1326,7 @@ def j08_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w15_ntile_price_quartiles",
     "NTILE bucketing (W-ext): per-returnflag price quartiles — the "
     "windowed bucketing used for percentile-band features.  One "
@@ -1376,7 +1365,7 @@ def w15_ntile_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a08_nested_array_agg",
     "Nested-result aggregation (A-ext): per-status sorted array of "
     "distinct priorities + its cardinality.  collect_list/list() order "

@@ -33,7 +33,6 @@ from ..functions.textfn import (
     tokens,
 )
 from ..operators.dedup import (
-    edit_distance_pairs,
     embedding_neardup_pairs,
     exact_dedup_groups,
     lsh_candidate_pairs,
@@ -56,26 +55,23 @@ from ..operators.similarity import (
     brute_force_topk,
     ivf_knn_join,
     ivf_topk,
-    query_vector_of,
 )
-from .base import DSUM, MONTH_OF, MONTHLY_CTE, Query, dsum, monthly_lineitem, spread, table
+from .base import (
+    DSUM,
+    MONTH_OF,
+    MONTHLY_CTE,
+    TOKS,
+    dsum,
+    monthly_lineitem,
+    query,
+    spread,
+    stream_table,
+    table,
+)
 from ..materialize import barrier_scope, materialize
 from ..functions.rolling import ewma_sql
 
-QUERIES: list[Query] = []
-
-
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
-
-    return wrap
-
-
 # --- shared SQL fragments --------------------------------------------------
-
-_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')"
 
 
 def _H60(expr: str) -> str:
@@ -110,7 +106,7 @@ def _sig_cte(src: str = "documents") -> str:
     """MinHash-signature CTE chain over ``src`` (a table or an
     earlier CTE — the sharded gates pass their sample CTE)."""
     return f"""
-toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM {src}),
+toks_t AS (SELECT doc_id, {TOKS} AS toks FROM {src}),
 sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM toks_t),
 m5_t AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS m5 FROM sh),
 sig AS (
@@ -129,7 +125,7 @@ _SIG_CTE = _sig_cte()
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "x_dedup_exact_fingerprint",
     "Exact dedup: whitespace-normalized 60-bit content fingerprint → "
     "hash-groupBy → keep min doc_id (engine extension; generalizes P11).",
@@ -137,7 +133,7 @@ _SIG_CTE = _sig_cte()
 SELECT fingerprint, CAST(COUNT(*) AS BIGINT) AS n_docs, MIN(doc_id) AS keep_doc_id
 FROM (
   SELECT doc_id,
-         {_H60(f"array_to_string({_TOKS}, ' ')")} AS fingerprint
+         {_H60(f"array_to_string({TOKS}, ' ')")} AS fingerprint
   FROM documents
 )
 GROUP BY fingerprint
@@ -148,7 +144,7 @@ def x_dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup_groups(table(spark, sf_dir, "documents"))
 
 
-@_q(
+@query(
     "x_minhash_signatures",
     "MinHash: 16 Kirsch–Mitzenmacher min-hashes (min(h1 + i*h2) from one "
     "md5 per 3-word shingle) per doc — the signature stage of MinHash-LSH "
@@ -167,7 +163,7 @@ _BANDED_SQL = "\nUNION ALL\n".join(
 )
 
 
-@_q(
+@query(
     "x_dedup_minhash_lsh_pairs",
     "MinHash-LSH candidate pairs: 8 bands × 2 rows, banded equi-self-join "
     "on (band_idx, band_key) — never a cross join.",
@@ -188,7 +184,7 @@ def x_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(minhash_signatures(docs))
 
 
-@_q(
+@query(
     "x_dedup_lsh_verified_pairs",
     "LSH-banded candidates + EXACT Jaccard verify in one operator "
     "(operators/dedup.py minhash_jaccard_pairs) — the sub-threshold "
@@ -238,11 +234,11 @@ def x_dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_simhash",
     "SimHash: 16-bit majority-vote fingerprint over md5 token hashes.",
     f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 h AS (
   SELECT doc_id, len(toks) AS n,
          list_transform(toks, t -> {_H16('t')}) AS th
@@ -264,7 +260,7 @@ def x_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash16_frame(docs)
 
 
-@_q(
+@query(
     "x_dedup_ngram_jaccard",
     "n-gram (bigram-shingle-set) Jaccard near-dup pairs — EXACT via "
     "AllPairs prefix filtering (round-2: replaces length-bucket "
@@ -291,7 +287,7 @@ WITH dsamp AS (
   SELECT * FROM documents
   WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0
 ),
-t AS (SELECT doc_id, {_TOKS} AS toks FROM dsamp),
+t AS (SELECT doc_id, {TOKS} AS toks FROM dsamp),
 d AS (
   SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 2
     THEN list_transform(generate_series(1, len(toks) - 1),
@@ -330,7 +326,7 @@ _SRP_HP_VALUES = ",\n  ".join(
 )
 
 
-@_q(
+@query(
     "x_embed_neardup_pairs",
     "Embedding-cosine near-dup: top-3 pairs per LSH band by cosine.  "
     "Round-2: bands are sign-random-projection keys (Charikar SRP — "
@@ -395,7 +391,7 @@ e AS (
 """.strip()
 
 
-@_q(
+@query(
     "x_sim_search_bruteforce",
     "Brute-force cosine top-10 against the min-vec_id query vector — "
     "the exactness baseline for ANN.",
@@ -436,7 +432,7 @@ def x_sim_search_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb.filter(F.col("vec_id") != qid), qvec, k=10)
 
 
-@_q(
+@query(
     "x_sim_search_ivf",
     "IVF top-5: probe only the nearest coarse cell (label centroid) — "
     "the scale path cutting the scanned fraction to 1/n_cells.",
@@ -480,7 +476,7 @@ def x_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, qvec, k=5)
 
 
-@_q(
+@query(
     "x_sim_knn_join",
     "kNN JOIN (operators/similarity.py ivf_knn_join): top-3 cosine "
     "neighbors for EVERY vector at once — candidates from an equi-join "
@@ -526,12 +522,12 @@ def x_sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "x_text_quality",
     "Per-doc quality metrics: token counts (ws + BPE-ish), punctuation "
     "ratio, stopword ratio, composite quality score.",
     f"""
-WITH d AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
+WITH d AS (SELECT doc_id, text, {TOKS} AS toks FROM documents)
 SELECT doc_id,
        CAST(len(toks) AS BIGINT) AS n_tokens,
        CAST(len(regexp_extract_all(text, '{BPEISH_TOKEN_RE}')) AS BIGINT) AS n_tokens_bpeish,
@@ -578,7 +574,7 @@ def _lang_sql() -> str:
     return f"""
 WITH d AS (
   SELECT doc_id, lang,
-         list_transform({_TOKS}, t -> lower(t)) AS ltoks
+         list_transform({TOKS}, t -> lower(t)) AS ltoks
   FROM documents
 ),
 scored AS (SELECT doc_id, lang, {best} AS best, ltoks FROM d)
@@ -588,7 +584,7 @@ FROM scored GROUP BY 1, 2
 """.strip()
 
 
-@_q(
+@query(
     "x_lang_id",
     "Heuristic language ID (marker-stopword argmax) cross-tabbed against "
     "the labeled lang column.",
@@ -604,12 +600,12 @@ def x_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_token_corpus_stats",
     "Corpus token statistics per source (the token-counting op at corpus "
     "grain).",
     f"""
-WITH d AS (SELECT source, n_chars, len({_TOKS}) AS n_toks FROM documents)
+WITH d AS (SELECT source, n_chars, len({TOKS}) AS n_toks FROM documents)
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -630,7 +626,7 @@ def x_token_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_metadata",
     "Multimodal binary-column plumbing: opaque payload → JVM-side "
     "metadata (byte length, content md5, magic-byte prefix). The decode "
@@ -658,7 +654,7 @@ def x_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "x3_drift_fit_forecast",
     "X3: per-group model fit via applyInPandas (RW-with-drift standing in "
     "for SARIMAX; statsmodels absent) + 6-step point forecast. "
@@ -701,7 +697,7 @@ def x3_drift_fit_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x3_aic_grid_fit",
     "X3 (full parity path): per-group SARIMAX AIC grid — the "
     "reference's five candidate (p,1,q)x(P,1,Q,12) orders "
@@ -750,7 +746,7 @@ _X3_GOLDEN = {
 }
 
 
-@_q(
+@query(
     "x3_aic_gate",
     "Driver-checkable X3 core (the x4_diagnostics_gate pattern): "
     "fit_best_arma_forecast — the SAME applyInPandas exact-ML AIC-grid "
@@ -818,7 +814,7 @@ def x3_aic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x4_diagnostics",
     "X4: per-group stationarity/seasonality diagnostics via applyInPandas "
     "— ADF + KPSS statistics, Yeo-Johnson λ, periodogram seasonal period, "
@@ -852,7 +848,7 @@ _X4_GOLDEN = {
 }
 
 
-@_q(
+@query(
     "x4_diagnostics_gate",
     "Driver-checkable X4 core (VERDICT r5 task 8): run_diagnostics — "
     "the SAME applyInPandas operator x4_diagnostics uses — over three "
@@ -913,7 +909,7 @@ def x4_diagnostics_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x5_monte_carlo_fan",
     "X5: Monte-Carlo fan forecast — native seeded path simulation "
     "(F14+W8+F10) + exact quantile fan (A6) — hash-gated on the "
@@ -987,7 +983,7 @@ def x5_monte_carlo_fan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x5_sarimax_exog_fan",
     "X5 (full parity path): SARIMAX-with-exogenous-regressor Monte-Carlo "
     "fan (EDA.ipynb cell 32 end-to-end) — per-group regression-with-"
@@ -1038,7 +1034,7 @@ def x5_sarimax_exog_fan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_decode",
     "REAL media decode under the full-value hash gate: 120 planted "
     "payloads — PNG (8-bit gray and RGB, scanline filters cycling "
@@ -1128,7 +1124,7 @@ def x_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_jpeg",
     "REAL baseline-JPEG decode under the full-value hash gate "
     "(operators/jpeg.py — pure stdlib+numpy Huffman entropy decode, "
@@ -1199,7 +1195,7 @@ def x_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_mjpeg_decode",
     "REAL video SAMPLE decode under the full-value hash gate — the "
     "MJPEG-in-MP4 path (operators/mp4.py parse_mp4_samples walking "
@@ -1277,7 +1273,7 @@ def x_multimodal_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_video_phash_neardup",
     "Video-level perceptual near-dup under the full-value hash gate "
     "(operators/multimodal.py video_phash_frames → "
@@ -1363,7 +1359,7 @@ def x_video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_video_clip_containment",
     "Trimmed-CLIP video containment under the full-value hash gate "
     "(operators/multimodal.py video_clip_containment): the cut that "
@@ -1451,7 +1447,7 @@ def x_video_clip_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_phash",
     "REAL DCT perceptual hash under the driver hash gate "
     "(operators/multimodal.py phash64_png → compute_phash → "
@@ -1504,7 +1500,7 @@ def x_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_mp4_metadata",
     "REAL MP4 container-metadata parse under the full-value hash "
     "gate (operators/mp4.py — pure-stdlib ISO BMFF box walk: "
@@ -1547,7 +1543,7 @@ def x_multimodal_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_mp4_metadata(media)
 
 
-@_q(
+@query(
     "x_audio_spectral_fingerprint",
     "REAL audio spectral analysis under the full-value hash gate "
     "(operators/audio.py spectral_frames): 40 planted WAV payloads, "
@@ -1601,7 +1597,7 @@ def x_audio_spectral_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_audio_fingerprint_match",
     "Audio near-duplicate pairs by spectral fingerprint "
     "(operators/audio.py audio_fingerprint → audio_neardup_pairs): "
@@ -1714,7 +1710,7 @@ def _av_fixture_path(spark: SparkSession) -> str:
 
 
 
-@_q(
+@query(
     "x_video_audio_fingerprint",
     "Cross-container video↔audio dedup (operators/mp4.py "
     "demux_mp4_audio → operators/audio.py audio_neardup_pairs): 16 "
@@ -1747,7 +1743,7 @@ def x_video_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_neardup_pairs(demux_mp4_audio(media))
 
 
-@_q(
+@query(
     "x_audio_rate_invariant_match",
     "Sample-rate-invariant audio near-dup (operators/audio.py "
     "canonical_rate resampling inside the Arrow FFT stage): 8 "
@@ -1827,7 +1823,7 @@ def x_audio_rate_invariant_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_neardup_pairs(media, canonical_rate=canonical)
 
 
-@_q(
+@query(
     "x_video_frame_sample",
     "REAL MP4 metadata driving the frame-sampling plan: planted "
     "spec-shaped MP4s flow through decode_media (the ISO BMFF box "
@@ -1866,7 +1862,7 @@ def x_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_audio_shift_neardup",
     "SHIFT-TOLERANT audio near-dup (operators/audio.py "
     "audio_shifted_neardup): content starting at a different stream "
@@ -1918,7 +1914,7 @@ def x_audio_shift_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_audio_quality_stats",
     "Audio quality signals for corpus filtering (operators/audio.py "
     "audio_quality_stats — the audio twin of x_text_quality): "
@@ -1973,7 +1969,7 @@ def x_audio_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_quality_stats(media)
 
 
-@_q(
+@query(
     "x_audio_chunk_plan",
     "Audio chunking plan (operators/audio.py audio_chunk_plan — the "
     "ASR-pipeline twin of doc_chunking): fixed 30 s windows with 25 s "
@@ -2017,7 +2013,7 @@ def x_audio_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_chunk_plan(meta, chunk_s=30.0, hop_s=25.0)
 
 
-@_q(
+@query(
     "x_media_dedup_clusters",
     "End-to-end MULTIMODAL dedup: image pHash near-dup pairs "
     "(decode → DCT pHash → Manku banding → Hamming ≤ 3) and audio "
@@ -2152,7 +2148,7 @@ def x_media_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_multimodal_feature_extract",
     "Multimodal feature-extract stage: payload → fixed-dim embedding "
     "via Arrow-batched mapInPandas (stub encoder — byte histogram; "
@@ -2219,7 +2215,7 @@ def _mix_rate_sql() -> str:
     return f"CASE {whens} ELSE 1.0 END"
 
 
-@_q(
+@query(
     "x_top_terms_corpus",
     "Corpus heavy-hitters: top-50 terms by document frequency — the "
     "canonical explode→count→top-k shape.  Map-side combine collapses "
@@ -2228,7 +2224,7 @@ def _mix_rate_sql() -> str:
     "ties break lexicographically so the result set is deterministic.",
     f"""
 WITH t AS (
-  SELECT unnest(list_distinct({_TOKS})) AS term FROM documents
+  SELECT unnest(list_distinct({TOKS})) AS term FROM documents
 )
 SELECT term, CAST(COUNT(*) AS BIGINT) AS doc_freq
 FROM t GROUP BY term
@@ -2248,7 +2244,7 @@ def x_top_terms_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_tfidf_top_terms_per_doc",
     "TF-IDF featurization: top-3 terms per document by tf·idf "
     "(ln(N/df) idf, raw-count tf).  Two map-side-combinable counts "
@@ -2258,7 +2254,7 @@ def x_top_terms_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline runs after cleaning.",
     f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({TOKS}) AS term FROM documents
 ),
 tf AS (
   SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -2307,7 +2303,7 @@ _FUNNEL_SW = (
 )
 
 
-@_q(
+@query(
     "x_pack_sequences",
     "Sequence packing (operators/packing.py): contiguous assignment of "
     "docs to 512-token training bins per source — bin = floor("
@@ -2317,7 +2313,7 @@ _FUNNEL_SW = (
     "given (source, doc_id).",
     f"""
 WITH d AS (
-  SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n_tokens FROM documents
+  SELECT doc_id, source, CAST(len({TOKS}) AS BIGINT) AS n_tokens FROM documents
 ),
 c AS (
   SELECT *, COALESCE(SUM(n_tokens) OVER (
@@ -2341,7 +2337,7 @@ def x_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(docs, "n_tokens", capacity=512)
 
 
-@_q(
+@query(
     "x_e2e_training_corpus",
     "END-TO-END training-corpus build, composed entirely from the "
     "suite's operators with ONE oracle over the whole pipeline: "
@@ -2353,7 +2349,7 @@ def x_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bins) → per-source corpus stats (docs, tokens, bins).",
     f"""
 WITH tok AS (
-  SELECT doc_id, source, lang, n_chars, {_TOKS} AS toks FROM documents
+  SELECT doc_id, source, lang, n_chars, {TOKS} AS toks FROM documents
 ),
 filt AS (
   SELECT * FROM tok WHERE lang = 'en' AND len(toks) >= 20 AND n_chars <= 300
@@ -2458,7 +2454,7 @@ def x_e2e_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_quality_filter_funnel",
     "One-scan quality filter funnel (operators/quality.py "
     "filter_funnel): per-stage kept/dropped report for a 4-stage "
@@ -2468,7 +2464,7 @@ def x_e2e_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one 1-row shuffle, reshape by posexplode.  The C4/Gopher-paper "
     "pipeline-table shape.",
     f"""
-WITH d AS (SELECT lang, n_chars, {_TOKS} AS toks FROM documents),
+WITH d AS (SELECT lang, n_chars, {TOKS} AS toks FROM documents),
 m AS (
   SELECT COALESCE(lang = 'en', false) AS c1,
          COALESCE(len(toks) >= 20, false) AS c2,
@@ -2509,7 +2505,7 @@ def x_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_decontaminate_ngram_overlap",
     "Train/eval decontamination (operators/decontam.py): flag training "
     "docs sharing any 8-word shingle with the eval holdout (doc_id %% "
@@ -2519,7 +2515,7 @@ def x_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "than 8 tokens contribute no shingles (strict — no whole-text "
     "fallback).",
     f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(CASE WHEN len(toks) >= 8
@@ -2548,7 +2544,7 @@ def x_decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     return ngram_decontaminate(tr, ev, k=8)
 
 
-@_q(
+@query(
     "x_decontam_bloom_prefilter",
     "Bloom-PRUNED decontamination with EXACT output "
     "(operators/decontam.py bloom_decontaminate): the scale path for "
@@ -2565,7 +2561,7 @@ def x_decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     "in pytest.  No train-side shuffle exists before the verify "
     "join's already-pruned input.",
     f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(CASE WHEN len(toks) >= 8
@@ -2594,7 +2590,7 @@ def x_decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_decontaminate(tr, ev, k=8)
 
 
-@_q(
+@query(
     "x_dedup_clusters_cc",
     "Duplicate-CLUSTER resolution: exact-fingerprint star edges + "
     "prefix-filtered exact bigram-shingle Jaccard pairs (round-2: "
@@ -2620,7 +2616,7 @@ dsamp AS (
   WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0
 ),
 fpt AS (
-  SELECT doc_id, {_H60(f"array_to_string({_TOKS}, ' ')")} AS fingerprint
+  SELECT doc_id, {_H60(f"array_to_string({TOKS}, ' ')")} AS fingerprint
   FROM dsamp
 ),
 fpg AS (SELECT fingerprint, MIN(doc_id) AS keep FROM fpt GROUP BY 1),
@@ -2629,7 +2625,7 @@ star AS (
   FROM fpt f JOIN fpg g USING (fingerprint)
   WHERE f.doc_id != g.keep
 ),
-jt AS (SELECT doc_id, {_TOKS} AS toks FROM dsamp),
+jt AS (SELECT doc_id, {TOKS} AS toks FROM dsamp),
 jd AS (
   SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 2
     THEN list_transform(generate_series(1, len(toks) - 1),
@@ -2668,7 +2664,7 @@ def x_dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_clusters(shard)
 
 
-@_q(
+@query(
     "x_dedup_clusters_lsh",
     "The LSH-banded dedup path run END-TO-END — candidates → exact "
     "verify → connected components → survivor — the way "
@@ -2747,7 +2743,7 @@ def x_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_clusters(shard, jaccard_threshold=0.3, pair_method="lsh")
 
 
-@_q(
+@query(
     "x_fuzzy_name_match",
     "Banded edit-distance fuzzy matching (operators/dedup.py "
     "edit_distance_pair_counts): candidates via a p_type-band "
@@ -2780,7 +2776,7 @@ def x_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_type", F.col("dist").cast("int").alias("dist"), "n_pairs")
 
 
-@_q(
+@query(
     "x_curation_hash_split",
     "Deterministic train/val/test split (operators/curation.py): "
     "hash-bucket assignment from the portable content hash — "
@@ -2812,12 +2808,12 @@ _QUALITY_SQL = f"""(
   (CASE WHEN length(text) BETWEEN 50 AND 20000 THEN 1.0 ELSE 0.3 END)
   + (1.0 - least(CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
                  / greatest(length(text), 1) * 4, 1.0))
-  + least(CAST(len(list_filter({_TOKS}, t -> list_contains({LANG_MARKERS['en']}, lower(t)))) AS DOUBLE)
-          / greatest(len({_TOKS}), 1) * 5, 1.0)
+  + least(CAST(len(list_filter({TOKS}, t -> list_contains({LANG_MARKERS['en']}, lower(t)))) AS DOUBLE)
+          / greatest(len({TOKS}), 1) * 5, 1.0)
 ) / 3.0"""
 
 
-@_q(
+@query(
     "x_curation_weighted_sample",
     "Per-row weighted sampling (operators/curation.py weighted_sample): "
     "keep probability = the doc's quality score, decided by the "
@@ -2840,7 +2836,7 @@ def x_curation_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample(docs, quality_score("text")).select("doc_id", "source")
 
 
-@_q(
+@query(
     "x_curation_stratified_mix",
     "Corpus mixing + stratified cap (operators/curation.py): "
     "down-sample sources to target rates (hash-threshold filter, no "
@@ -2879,7 +2875,7 @@ def x_curation_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_asof_attribution_join",
     "As-of join (operators/asof.py): attribute every click to the "
     "user's latest view at-or-before it.  Spark has no native as-of; "
@@ -2903,7 +2899,7 @@ def x_asof_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asof_join(clicks, views, on=["user_id"], attach=("event_id", "value"))
 
 
-@_q(
+@query(
     "x_range_join_purchase_window",
     "Bounded range join (operators/range_join.py): purchases within 1h "
     "after each error event, per user — binned equi-join (left exploded "
@@ -2941,7 +2937,7 @@ def x_range_join_purchase_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_bpe_token_stats",
     "Trained BPE tokenizer (functions/bpe.py): distributed word-count "
     "pass → driver-side merge learning on the O(vocab) frequency table "
@@ -2995,7 +2991,7 @@ def x_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_sketch_approx_stats",
     "Sketch aggregates (operators/sketch.py): per-group HyperLogLog++ "
     "distinct counts + Greenwald-Khanna approximate percentiles "
@@ -3052,7 +3048,7 @@ def x_sketch_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_sketch_accuracy_gate",
     "Driver-checkable sketch accuracy: per group, the EXACT distinct "
     "count and median plus in-query booleans asserting that the three "
@@ -3153,7 +3149,7 @@ def _pii_sql() -> str:
     )
 
 
-@_q(
+@query(
     "x_text_pii_redact",
     "PII redaction pass (functions/textfn.py redact_pii): emails / "
     "phones / IPv4s → <TYPE> placeholders, plus per-type match counts. "
@@ -3190,14 +3186,14 @@ def x_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_quality_repetition_signals",
     "Gopher-style repetition filters (operators/quality.py): per-doc "
     "top-n-gram fraction and duplicate-n-gram fraction for n in (2,3), "
     "long format.  One explode + two map-side-combinable groupBys; the "
     "shuffle carries one row per distinct gram per doc.",
     f"""
-WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH d AS (SELECT doc_id, {TOKS} AS t FROM documents),
 g AS (
   SELECT doc_id, 2 AS n,
          unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))]) AS gram
@@ -3220,7 +3216,7 @@ def x_quality_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(table(spark, sf_dir, "documents"))
 
 
-@_q(
+@query(
     "x_multimodal_frame_pipeline",
     "End-to-end multimodal pipeline: decode (stubbed codec, real "
     "Arrow-batched plumbing) → resize geometry (JVM) → frame-sample "
@@ -3282,7 +3278,7 @@ def x_multimodal_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_skew_salted_group_sum",
     "Skew-resistant two-stage aggregation (operators/skew.py): map-side "
     "salt into 16 shards → partial agg on (key, salt) → final agg on "
@@ -3319,7 +3315,7 @@ def x_skew_salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "s09_sessionize_batch",
     "Gap-based sessionization (batch mirror of the stateful streaming "
     "operator streaming/sessionize.sessionize_stream): lag → gap flag → "
@@ -3353,7 +3349,7 @@ def s09_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_batch(ev, "user_id", "ts", "value", gap_seconds=21600)
 
 
-@_q(
+@query(
     "sql_flagship_via_spark_sql",
     "The flagship pipeline through the spark.sql() entrypoint (temp "
     "views + one SQL string) instead of the DataFrame builder — same "
@@ -3413,7 +3409,7 @@ FROM per_brand GROUP BY month
     )
 
 
-@_q(
+@query(
     "s10_session_window_native",
     "Native session_window sessionization — the built-in alternative to "
     "the lag→cumsum formulation (s09) and the stateful streaming "
@@ -3485,7 +3481,7 @@ def _corr_oracle_sql(cols: list[str], scale: int = 6) -> str:
 _CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
-@_q(
+@query(
     "x_corr_matrix_one_scan",
     "Pairwise Pearson correlation matrix over four lineitem measures "
     "in ONE scan (operators/corrmatrix.py): every correlation derives "
@@ -3502,7 +3498,7 @@ def x_corr_matrix_one_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corr_matrix(table(spark, sf_dir, "lineitem"), _CORR_COLS)
 
 
-@_q(
+@query(
     "s15_scd2_history",
     "SCD type-2 dimension history (operators/scd.py): change events → "
     "versioned [valid_from, valid_to) intervals per user with no-op "
@@ -3542,7 +3538,7 @@ def s15_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s14_rolling_wau",
     "Exact rolling 7-day distinct actives (operators/sketch.py "
     "rolling_distinct_exact): rolling COUNT(DISTINCT) can't compose "
@@ -3572,7 +3568,7 @@ def s14_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_distinct_exact(table(spark, sf_dir, "events"))
 
 
-@_q(
+@query(
     "s13_retention_cohorts",
     "Weekly cohort retention triangle (operators/retention.py): users "
     "cohorted by first-active week; n_active per (cohort, week "
@@ -3604,7 +3600,7 @@ def s13_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention_cohorts(table(spark, sf_dir, "events"))
 
 
-@_q(
+@query(
     "s12_event_funnel",
     "Ordered event funnel (operators/funnel.py): users completing "
     "view, then click strictly after their first view (within 1 day), "
@@ -3658,7 +3654,7 @@ def s12_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s11_rollup_cascade",
     "Hypertable-style rollup cascade (operators/rollup_cascade.py): "
     "hour from raw, day from hour, week from day — the raw table is "
@@ -3696,7 +3692,7 @@ def s11_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rollup_cascade(table(spark, sf_dir, "events"))
 
 
-@_q(
+@query(
     "s08_tumbling_window_rollup",
     "LIVE Structured Streaming execution #2 under the driver hash "
     "gate (streaming/rollup.py; SURVEY.md §2.8 extension): the events "
@@ -3719,20 +3715,9 @@ def s08_tumbling_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.replay import memory_sink_rows
     from ..streaming.rollup import tumbling_rollup_agg
 
-    # schema discovery via the tolerant batch reader (events.ts has
-    # shipped as TIMESTAMP(NANOS) and as NTZ-micros across testdata
-    # regenerations); the stream applies the same nanos fix-up
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # glob form handles both the driver's flat-file layout and the
-    # Spark-written directory layout in benchdata/sf1 (s30 precedent)
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/events.parquet*")
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    # events.ts has shipped as TIMESTAMP(NANOS) and as NTZ-micros
+    # across testdata regenerations; stream_table reads both
+    stream = stream_table(spark, sf_dir, "events")
     # NTZ timestamps window on the wall clock (matches the oracle's
     # date_trunc under any session tz) but reject withWatermark —
     # complete mode needs no watermark, so skip it there
@@ -3746,7 +3731,7 @@ def s08_tumbling_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s31_streaming_session_windows",
     "LIVE Structured Streaming execution #3 under the driver hash "
     "gate: native session_window sessionization on the REAL "
@@ -3785,18 +3770,7 @@ FROM sids GROUP BY key, sid
 def s31_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.replay import memory_sink_rows
 
-    # schema discovery via the tolerant batch reader; the stream
-    # applies the same nanos fix-up (s08 precedent — events.ts has
-    # shipped as TIMESTAMP(NANOS) and as NTZ-micros)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/events.parquet*")
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    stream = stream_table(spark, sf_dir, "events")
     agg = (
         stream.groupBy(
             F.col("user_id").cast("string").alias("key"),
@@ -3816,7 +3790,7 @@ def s31_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.createDataFrame(rows, agg.schema)
 
 
-@_q(
+@query(
     "s32_streaming_dedup_ingest",
     "LIVE Structured Streaming execution #4: dedup-at-ingest on the "
     "REAL streaming engine.  The documents parquet replays as a "
@@ -3842,16 +3816,9 @@ def s32_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.replay import memory_sink_rows
 
     schema = table(spark, sf_dir, "documents").schema
-    # glob form: flat FILE in driver testdata, Spark directory in
-    # benchdata/sf1 (s30 precedent)
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{sf_dir}/documents.parquet*")
-        )
-
-    doubled = stream().unionByName(stream())
+    doubled = stream_table(spark, sf_dir, "documents", schema).unionByName(
+        stream_table(spark, sf_dir, "documents", schema)
+    )
     # project AFTER dropDuplicates: the state store keys on the FULL
     # row (text included), the sink holds only the md5 digest
     deduped = doubled.dropDuplicates().select(
@@ -3868,7 +3835,7 @@ def s32_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s33_streaming_cusum_drift",
     "LIVE Structured Streaming execution #5: online CUSUM drift "
     "detection on the REAL streaming engine (streaming/drift.py "
@@ -3921,30 +3888,21 @@ def s33_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.drift import cusum_stream
     from ..streaming.replay import memory_sink_rows
 
-    # schema discovery via the tolerant batch reader (s31 precedent);
-    # the synthetic event-id clock below sidesteps the ts nanos seam
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # two-pass baseline (the batch twin's contract): mu0 is fixed
     # BEFORE monitoring starts — one O(#keys) driver literal
     keys = [
         r[0]
-        for r in spark.read.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/events.parquet*")
+        for r in table(spark, sf_dir, "events")
         .where(F.col("event_type").isNotNull())
         .select("event_type")
         .distinct()
         .collect()
     ]
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        # single micro-batch => cross-batch arrival order can't differ
-        # from the in-batch event-time sort (availableNow honors this)
-        .option("maxFilesPerTrigger", "100000")
-        .parquet(f"{sf_dir}/events.parquet*")
-    )
+    # no maxFilesPerTrigger: the file source reads every available
+    # file in ONE micro-batch, so cross-batch arrival order can't
+    # differ from the in-batch event-time sort.  The synthetic
+    # event-id clock below sidesteps the ts nanos seam
+    stream = stream_table(spark, sf_dir, "events")
     feed = stream.where(F.col("event_type").isNotNull()).select(
         "event_type",
         F.timestamp_micros(F.col("event_id")).alias("ts"),
@@ -3984,7 +3942,7 @@ def s33_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s34_streaming_interval_join",
     "LIVE Structured Streaming execution #6 — the TWO-stream operator "
     "class (streaming/dedup.py stream_stream_interval_join, until now "
@@ -4019,22 +3977,8 @@ def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dedup import stream_stream_interval_join
     from ..streaming.replay import memory_sink_rows
 
-    # schema discovery via the RAW reader + the s08/s31/s33 nanos
-    # fix-up — NOT table()'s post-fixup schema: under the
-    # TIMESTAMP(NANOS) events layout the physical column is
-    # INT64-nanos and requesting TimestampType in the user schema
-    # makes the parquet scan throw
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def stream(et: str, cols):
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{sf_dir}/events.parquet*")
-        )
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        s = stream_table(spark, sf_dir, "events")
         return s.where(F.col("event_type") == et).select(*cols)
 
     # NTZ -> instant cast: watermarks demand TimestampType, and the
@@ -4080,9 +4024,7 @@ def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row — measured 399,470 at sf1 (SCALE.md) — so a state-explosion
     # OR an unexpected eviction (which would drop pairs) fails loudly
     expected_state = (
-        spark.read.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/events.parquet*")
+        table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
         .count()
     )
@@ -4101,7 +4043,7 @@ def s34_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s35_streaming_static_enrich",
     "LIVE Structured Streaming execution #7 — the STREAM-STATIC "
     "class (streaming/enrich.py, until now drain-tested only): the "
@@ -4130,22 +4072,12 @@ def s35_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.enrich import decontaminate_stream, enrich_stream
     from ..streaming.replay import memory_sink_rows
 
-    # RAW reader schema (s08/s31/s33/s34 pattern), not table()'s
-    # post-fixup schema: ts is pruned before the scan today, but a
-    # post-fixup TimestampType ts in the user schema would throw on
-    # the INT64-nanos parquet layout the moment any future edit
-    # references it — keep the live gates uniform
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     customer = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     blocklist = customer.filter(F.col("user_id") % 50 == 0).select("user_id")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/events.parquet*")
-        .select("user_id", F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"))
+    stream = stream_table(spark, sf_dir, "events").select(
+        "user_id", F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents")
     )
     clean = decontaminate_stream(stream, blocklist, on=["user_id"])
     enriched = enrich_stream(clean, customer, on=["user_id"], how="inner")
@@ -4331,7 +4263,7 @@ def _outer_interval_join_gate(
     )
 
 
-@_q(
+@query(
     "s36_streaming_outer_interval_join",
     "LIVE Structured Streaming execution #8 — the OUTER half of the "
     "stream-stream operator class (the attribution staple: every "
@@ -4368,7 +4300,7 @@ def s36_streaming_outer_interval_join(
     return _outer_interval_join_gate(spark, sf_dir, 0, "left_outer", "s36")
 
 
-@_q(
+@query(
     "s38_streaming_full_outer_interval_join",
     "LIVE Structured Streaming execution #10 — the FULL-OUTER half "
     "of the stream-stream operator class: every click AND every "
@@ -4411,7 +4343,7 @@ def s38_streaming_full_outer_interval_join(
     return _outer_interval_join_gate(spark, sf_dir, 1, "full_outer", "s38")
 
 
-@_q(
+@query(
     "s37_streaming_checkpoint_resume",
     "LIVE Structured Streaming execution #9 — EXACTLY-ONCE RESUME "
     "FROM CHECKPOINT, the recovery guarantee every other live gate "
@@ -4506,7 +4438,7 @@ _S39_PLANTED_SQL = ",\n         ".join(
 )
 
 
-@_q(
+@query(
     "s39_streaming_join_resume",
     "LIVE Structured Streaming execution #11 — CHECKPOINT RESUME FOR "
     "SYMMETRIC JOIN STATE, closing the recovery story s37 opened for "
@@ -4663,7 +4595,7 @@ def s39_streaming_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept
 
 
-@_q(
+@query(
     "s40_streaming_agg_resume",
     "LIVE Structured Streaming execution #12 — CHECKPOINT RESUME FOR "
     "ARBITRARY STATEFUL AGGREGATION (applyInPandasWithState / "
@@ -4788,7 +4720,7 @@ def _hourly_rollup(stream: DataFrame) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s41_streaming_late_data_drop",
     "LIVE Structured Streaming execution #13 — the LATE-DATA DROP "
     "contract made an external hash signal: every watermark gate so "
@@ -4932,7 +4864,7 @@ def s41_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s42_streaming_python_source",
     "LIVE Structured Streaming execution #14 — the PROGRAMMABLE "
     "SOURCE surface on the streaming engine (Python Data Source API, "
@@ -5019,7 +4951,7 @@ def s42_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s43_streaming_session_resume",
     "LIVE Structured Streaming execution #15 — CHECKPOINT RESUME FOR "
     "SESSION WINDOWS, the fourth and last stateful operator class "
@@ -5215,7 +5147,7 @@ def s43_streaming_session_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return allrows
 
 
-@_q(
+@query(
     "s44_streaming_rocksdb_state",
     "LIVE Structured Streaming execution #16 — the DISK-BACKED STATE "
     "BACKEND the 100 TB deployment actually runs: the same hour x "
@@ -5380,7 +5312,7 @@ def s44_streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return allrows
 
 
-@_q(
+@query(
     "s30_streaming_running_totals",
     "LIVE Structured Streaming execution under the driver hash gate "
     "(streaming/running.py running_totals_stream, GroupState engine): "
@@ -5404,16 +5336,7 @@ def s30_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.replay import memory_sink_rows
     from ..streaming.running import running_totals_stream
 
-    schema = table(spark, sf_dir, "documents").schema
-    # glob, not a bare path: the streaming file source requires a
-    # directory basePath, and documents.parquet is a flat FILE in the
-    # driver's testdata but a Spark-written DIRECTORY in benchdata/sf1
-    # — the glob form handles both layouts
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{sf_dir}/documents.parquet*")
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     out = running_totals_stream(
         stream, "source", "n_chars", api="gst"
     )
@@ -5428,7 +5351,7 @@ def s30_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s16_cdc_apply",
     "CDC change-log apply (operators/cdc.py): row-level upserts + "
     "tombstones collapse to the final snapshot via max(struct(order, "
@@ -5479,7 +5402,7 @@ def s16_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s17_interval_merge",
     "Gaps-and-islands interval merge (operators/intervals.py): each "
     "event opens a 30-minute validity window; overlapping/touching "
@@ -5522,7 +5445,7 @@ def s17_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_intervals(iv, ["user_id"], "s", "e")
 
 
-@_q(
+@query(
     "w16_time_range_rolling",
     "Time-based rolling aggregate (W2 extension): 7-day trailing sum/"
     "count per user via a RANGE frame over event time — row-count "
@@ -5560,7 +5483,7 @@ def w16_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_histogram_equi_width",
     "Equi-width histogram of order totals: 20 fixed $25k buckets with "
     "per-bucket count + decimal-exact revenue.  The bucket id is pure "
@@ -5601,7 +5524,7 @@ def x_histogram_equi_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_chunks",
     "Sub-document exact dedup at 8-word-chunk granularity (operators/"
     "dedup.py chunk_dedup, C4/RefinedWeb-style boilerplate removal): "
@@ -5612,7 +5535,7 @@ def x_histogram_equi_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order restored by array_sort.  Fully-duplicate docs vanish.  The "
     "oracle replays the exact surviving text.",
     f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 ch AS (
   SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
          array_to_string(toks[(i-1)*8+1:(i-1)*8+8], ' ') AS chunk
@@ -5634,7 +5557,7 @@ def x_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_dedup(table(spark, sf_dir, "documents"))
 
 
-@_q(
+@query(
     "x_curation_temperature_mix",
     "Temperature-based source rebalancing (operators/curation.py "
     "temperature_mix; XLM-R/mT5-style sampling mass ∝ chars^0.5): "
@@ -5671,7 +5594,7 @@ def x_curation_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "n_chars")
 
 
-@_q(
+@query(
     "x_sim_search_pq",
     "Product-quantization ANN (operators/similarity.py, Jegou et al. "
     "TPAMI'11): per-subspace k-means codebooks compress each vector "
@@ -5759,7 +5682,7 @@ def _union_topk_sets(legs: "list[DataFrame]", n_tags: int) -> dict:
     return got
 
 
-@_q(
+@query(
     "x_sim_ivfpq_incremental",
     "Incremental IVF-PQ index maintenance (operators/similarity.py "
     "ivfpq_encode): a 1/4 hash shard plays the daily embedding delta "
@@ -5843,7 +5766,7 @@ def x_sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_sim_search_ivfpq",
     "IVF-PQ ANN (operators/similarity.py ivfpq_build/ivfpq_topk — the "
     "FAISS IVFx,PQy layout, Jegou et al. TPAMI'11 §V): coarse k-means "
@@ -5956,7 +5879,7 @@ FROM pr_{iters}
     )
 
 
-@_q(
+@query(
     "x_graph_pagerank",
     "Fixed-iteration PageRank (operators/graph.py pagerank, Page et "
     "al. 1999) over the supplier→part purchase graph (duplicate edge "
@@ -5980,7 +5903,7 @@ def x_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(edges, iters=3, damping=0.85)
 
 
-@_q(
+@query(
     "w17_ewma_smooth",
     "EWMA trend smoothing per series (functions/rolling.py ewma; "
     "pandas ewm(adjust=True) semantics, decay 0.5/step truncated at "
@@ -6010,7 +5933,7 @@ def w17_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "u06_unpivot_melt",
     "Wide→long unpivot (pd.melt analogue, §2.6 family): native "
     "DataFrame.unpivot (Spark's UNPIVOT plan node — a zero-shuffle "
@@ -6035,7 +5958,7 @@ def u06_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w18_rank_family",
     "Ranking-function family over one window (rank / dense_rank / "
     "percent_rank / cume_dist per customer by order date): all four "
@@ -6070,7 +5993,7 @@ def w18_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s18_incremental_rollup",
     "Incremental aggregate maintenance (operators/incremental.py): "
     "history (shipdate < 1997) reduces to a mergeable state table "
@@ -6111,7 +6034,7 @@ def s18_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize(merged, keys, measures)
 
 
-@_q(
+@query(
     "x_incremental_histogram",
     "Incremental QUANTILE maintenance (operators/incremental.py "
     "histogram_state / merge_histogram_states / "
@@ -6176,7 +6099,7 @@ def x_incremental_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantiles_from_histogram(merged, keys, lo, hi, n_bins, [0.5, 0.95])
 
 
-@_q(
+@query(
     "x_incremental_quantile_sketch",
     "DOMAIN-FREE incremental quantiles (operators/incremental.py "
     "quantile_sketch_state / merge_quantile_sketch_states / "
@@ -6268,7 +6191,7 @@ def x_incremental_quantile_sketch(
     )
 
 
-@_q(
+@query(
     "x_incremental_distinct_sketch",
     "Mergeable DISTINCT-COUNT maintenance (operators/incremental.py "
     "distinct_sketch_state / merge_distinct_sketch_states / "
@@ -6377,7 +6300,7 @@ _KMV_K = 64
 _KMV_RSE_BOUND = 3.0 / math.sqrt(float(_KMV_K - 2))
 
 
-@_q(
+@query(
     "x_kmv_accuracy_gate",
     "KMV estimator ACCURACY audit across merge groupings (the "
     "x_lsh_recall_gate pattern applied to the distinct sketch): the "
@@ -6505,7 +6428,7 @@ def x_kmv_accuracy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w19_outlier_zscore",
     "Per-series z-score outlier flags over the monthly grain: mean "
     "and sample-variance derive from EXACT decimal Σx/Σx² window "
@@ -6592,7 +6515,7 @@ _PROFILE_KINDS = [
 ]
 
 
-@_q(
+@query(
     "x_profile_dataset",
     "One-scan dataset profiler (operators/profile.py): per-column "
     "n / null-count / typed bounds (numeric→double, string→string, "
@@ -6629,7 +6552,7 @@ def _check_sql(name: str, vexpr: str, table_sql: str = "orders") -> str:
     )
 
 
-@_q(
+@query(
     "x_expectations_report",
     "Declarative data-quality gate (operators/expectations.py): "
     "not-null / range / set-membership checks compile into ONE "
@@ -6674,7 +6597,7 @@ def x_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s19_snapshot_diff",
     "Snapshot diff (operators/cdc.py snapshot_diff — the inverse of "
     "s16_cdc_apply): old/new table states derived deterministically "
@@ -6721,7 +6644,7 @@ def s19_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(old, new, ["o_orderkey"], ["o_totalprice"])
 
 
-@_q(
+@query(
     "s20_event_transitions",
     "First-order Markov transition matrix over per-user event "
     "sequences: lag(event_type) over (user, ts, event_id) — the "
@@ -6769,7 +6692,7 @@ def s20_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_key_skew_profile",
     "Shuffle-key skew diagnostic (operators/skew.py "
     "key_skew_profile): per-key counts in one partial-agg shuffle, "
@@ -6807,7 +6730,7 @@ def x_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_skew_profile(table(spark, sf_dir, "orders"), ["o_custkey"], top_k=5)
 
 
-@_q(
+@query(
     "w20_mad_outliers",
     "Robust (median/MAD) outlier flags per series — the w19 z-score's "
     "breakdown-resistant sibling: exact interpolated percentile(0.5) "
@@ -6878,7 +6801,7 @@ _OLS_DEN = f"({_OLS_ND} * sxx - sx * sx)"
 _OLS_SSY = f"({_OLS_ND} * syy - sy * sy)"
 
 
-@_q(
+@query(
     "w22_ols_trend",
     "Per-series OLS trend fit (operators/trend.py): slope/intercept/R² "
     "per flag from {n, Σx, Σx², Σy, Σy², Σxy} — all map-side-"
@@ -6922,7 +6845,7 @@ def w22_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ols_trend(m, ["flag"], x, F.col("qty"))
 
 
-@_q(
+@query(
     "w21_sliding_window_rollup",
     "Sliding-window rollup (6h window / 3h slide) via native "
     "F.window — the overlapping-window generalization of "
@@ -6984,7 +6907,7 @@ FROM dims GROUP BY 1
 """
 
 
-@_q(
+@query(
     "x_zorder_locality",
     "Z-order (Morton) multi-dimensional clustering key "
     "(functions/zorder.py): interleave customer-key and order-day "
@@ -7052,7 +6975,7 @@ FROM corners GROUP BY 1
 """
 
 
-@_q(
+@query(
     "x_graph_triangles",
     "Per-node triangle counts (operators/graph.py triangle_counts) "
     "over the parts-co-purchased-in-one-order graph: degree-ordered "
@@ -7083,7 +7006,7 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _JPREFIX_ORACLE = f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM toks_t),
 tok AS (SELECT doc_id, unnest(list_distinct(shingles)) AS token FROM sh),
 cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
@@ -7103,7 +7026,7 @@ WHERE CAST(n_common AS DOUBLE) / CAST(ca.n + cb.n - n_common AS DOUBLE) >= 0.3
 """
 
 
-@_q(
+@query(
     "x_dedup_jaccard_prefix",
     "EXACT all-pairs shingle-Jaccard join >= 0.3 via prefix filtering "
     "(operators/dedup.py jaccard_join_prefix; AllPairs/PPJoin).  "
@@ -7125,7 +7048,7 @@ def x_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_join_prefix(table(spark, sf_dir, "documents"))
 
 
-@_q(
+@query(
     "x_ann_recall_gate",
     "Driver-checkable ANN accuracy (the similarity-search analogue of "
     "x_sketch_accuracy_gate): train the spherical-k-means IVF "
@@ -7237,7 +7160,7 @@ ORDER BY 1
 """
 
 
-@_q(
+@query(
     "x_lsh_recall_gate",
     "Driver-checkable MinHash-LSH recall/precision audit (the dedup "
     "analogue of x_ann_recall_gate, but FULLY deterministic — every "
@@ -7387,7 +7310,7 @@ FROM best CROSS JOIN (SELECT unnest(generate_series(1, 6)) AS h) steps
 """.strip()
 
 
-@_q(
+@query(
     "x3_holt_winters",
     "Per-series additive Holt-Winters (triple exponential smoothing) "
     "fit + 6-step forecast — the standard non-ARIMA forecasting "

@@ -27,16 +27,14 @@ from .base import (
     DSUM,
     MONTH_OF,
     MONTHLY_CTE,
-    Query,
+    TOKS,
     dsum,
     month_of,
     monthly_lineitem,
+    query,
     spread,
     table,
 )
-
-QUERIES: list[Query] = []
-
 
 def _round2(c):
     """Portable 2dp rounding: FLOOR(x*100+0.5)/100 — rounds halves
@@ -53,18 +51,8 @@ def _round2(c):
     return F.floor(c * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
 
 
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
 
-    return wrap
-
-
-_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')"
-
-
-@_q(
+@query(
     "w23_interpolate_linear",
     "Per-series linear interpolation of grid gaps (pandas "
     "interpolate(method='index') analogue; companion to W12): monthly "
@@ -124,7 +112,7 @@ def w23_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_inverted_index",
     "Search-engine inverted index over the corpus: term → document "
     "frequency, total term frequency, and a capped ascending posting "
@@ -136,7 +124,7 @@ def w23_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keep the value portable across engines.",
     f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({TOKS}) AS term FROM documents
 ), td AS (
   SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
 )
@@ -153,7 +141,7 @@ def x_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inverted_index(docs, tokens("text"), "doc_id", min_df=5, postings_cap=20)
 
 
-@_q(
+@query(
     "x_histogram_equi_depth",
     "Equi-depth (decile) histogram of order totals: exact NTILE(10) "
     "semantics over a UNIQUE total order (price, orderkey — ties on "
@@ -213,7 +201,7 @@ def x_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_text_rarity_score",
     "Corpus-frequency rarity scoring per document (OCR-garbage / "
     "gibberish detector): global token counts joined back to "
@@ -225,7 +213,7 @@ def x_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast; the occurrence table never shuffles twice.",
     f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({TOKS}) AS term FROM documents
 ), vocab AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY 1
 )
@@ -256,7 +244,7 @@ def x_text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_events_json_extract",
     "Semi-structured field extraction (S-family extension): pull a "
     "typed value out of the events JSON props column "
@@ -289,7 +277,7 @@ def x_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_embed_semdedup",
     "SemDeDup semantic deduplication: coarse k-means cells bound the "
     "pair space, a vector is dropped when an earlier (lower-id) "
@@ -360,7 +348,7 @@ def x_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_doc_chunking",
     "Overlapping token-window chunking (RAG context prep / T5-style "
     "span windowing): 64-token chunks at stride 48 — every token "
@@ -370,7 +358,7 @@ def x_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup/packing for free at 100 TB.",
     f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
+  SELECT doc_id, {TOKS} AS toks FROM documents
 ), s AS (
   SELECT doc_id, toks, len(toks) AS n,
          unnest(generate_series(0, len(toks) - 1, 48)) AS start
@@ -395,7 +383,7 @@ def x_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(docs, "doc_id", "text", chunk_tokens=64, stride=48)
 
 
-@_q(
+@query(
     "x_bigram_lm",
     "Bigram language-model table (MLE conditional probabilities): "
     "adjacent-token pairs via row-local array zip (no self-join on "
@@ -407,7 +395,7 @@ def x_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     "divide.  min-count 3 bounds the emitted vocabulary.",
     f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
+  SELECT doc_id, {TOKS} AS toks FROM documents
 ), bg AS (
   SELECT toks[i] AS w1, toks[i + 1] AS w2
   FROM toks, unnest(generate_series(1, len(toks) - 1)) AS t(i)
@@ -457,7 +445,7 @@ def x_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q05_star_join_revenue",
     "TPC-H Q5-shape star join (the multi-join scale benchmark the "
     "2-dim bridge J1/J2 builds toward): lineitem ⨝ orders (date-"
@@ -512,7 +500,7 @@ def q05_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w24_cusum_drift",
     "CUSUM drift statistic per series (change-point detection prep, "
     "Page 1954 — the classic mean-shift detector): per-flag monthly "
@@ -556,7 +544,7 @@ def w24_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a10_group_mode",
     "Per-group mode (most frequent value) with deterministic ties: "
     "count per (group, value), then argmax via lexicographic struct "
@@ -592,7 +580,7 @@ def a10_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w25_topk_per_group",
     "Top-k per group (the grouped-LIMIT every catalog query needs): "
     "5 longest documents per source via row_number over a UNIQUE "
@@ -623,7 +611,7 @@ def w25_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w26_seasonal_adjust",
     "Seasonal adjustment by calendar-month means (the notebook's "
     "seasonal-difference W6 sibling, closer to CES's own X-13 intent): "
@@ -661,7 +649,7 @@ def w26_seasonal_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s21_id_gap_detection",
     "Sequence-gap detection over event ids (data-quality / loss "
     "audit): lag over the UNIQUE id order finds every hole; one gap "
@@ -709,7 +697,7 @@ def s21_id_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s22_rapid_duplicate_events",
     "Near-duplicate event flagging (double-click / retry artifacts): "
     "an event is a rapid duplicate when the SAME user+type fired "
@@ -749,7 +737,7 @@ def s22_rapid_duplicate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s23_new_vs_returning",
     "Daily new-vs-returning user split (growth accounting): per-user "
     "first-seen day via a window min, then per-day counts of users "
@@ -798,7 +786,7 @@ def s23_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w27_acf_lags",
     "Autocorrelation function per series at lags 1..6 (the notebook's "
     "ACF/PACF diagnostic X4, here as pure SQL instead of statsmodels): "
@@ -861,7 +849,7 @@ def w27_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w28_minmax_scale",
     "Per-group min-max feature scaling (ML prep: normalize each "
     "series into [0,1]): group min/max as window aggregates over the "
@@ -894,7 +882,7 @@ def w28_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w29_winsorize",
     "Per-group winsorization at p05/p95 (outlier clipping before "
     "model fits — the robust sibling of the notebook's rolling-median "
@@ -943,7 +931,7 @@ def w29_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q01_pricing_summary",
     "TPC-H Q1 pricing summary (the canonical scan-heavy aggregate): "
     "one lineitem scan, date-filtered at the parquet reader, eight "
@@ -993,7 +981,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q03_shipping_priority",
     "TPC-H Q3 shipping priority (filter-join-aggregate-topN): orders "
     "date-filtered both sides of the join, revenue per (orderkey, "
@@ -1033,7 +1021,7 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a09_share_of_total",
     "Percent-contribution analysis (share of corpus-wide total per "
     "group): the grand total is ONE scalar, so it is aggregated "
@@ -1079,7 +1067,7 @@ def a09_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s24_peak_hour_profile",
     "Hour-of-day × event-type activity profile (the ops-dashboard "
     "heatmap): hour extraction is row-local, the aggregate map-side-"
@@ -1116,7 +1104,7 @@ def s24_peak_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_embed_class_stats",
     "Per-class embedding statistics in ONE scan (clustering-quality / "
     "label-noise signal): posexplode to (label, pos, v), decimal-"
@@ -1168,7 +1156,7 @@ def x_embed_class_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s25_event_cooccurrence",
     "Event-type co-occurrence matrix (market-basket shape): which "
     "event types the SAME user performs.  Distinct (user, type) "
@@ -1207,7 +1195,7 @@ def s25_event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s26_data_freshness",
     "Per-partition data-freshness lag (the pipeline-health monitor "
     "every ingest needs): latest event per type vs the corpus-wide "
@@ -1272,7 +1260,7 @@ JOIN sig s2 ON s2.doc_id = p.doc_id_2
 """
 
 
-@_q(
+@query(
     "x_dedup_minhash_estimate",
     "MinHash Jaccard ESTIMATION for LSH candidates — the verification "
     "step between candidate generation (banding) and expensive exact "
@@ -1317,7 +1305,7 @@ def x_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w30_seasonal_anomaly",
     "Seasonal anomaly flags (W26 ∘ W20 composition — library operators "
     "composing into a detector): deviation from the calendar-month "
@@ -1380,7 +1368,7 @@ def w30_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s27_cusum_alarm",
     "Floored one-sided CUSUM with alarm flags (Page 1954 — the "
     "PROPER online change detector; w24 ships the raw unfloored "
@@ -1453,7 +1441,7 @@ def s27_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w31_theil_sen_trend",
     "Theil-Sen robust trend per series (the median-of-pairwise-slopes "
     "estimator — up to 29% outlier breakdown vs OLS's zero; "
@@ -1522,7 +1510,7 @@ def w31_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s28_conversion_latency",
     "First-touch→first-conversion latency distribution (the funnel "
     "companion answering HOW FAST, where s12 answers HOW MANY): per "
@@ -1629,7 +1617,7 @@ ksym AS MATERIALIZED (SELECT src AS a, dst AS b FROM kdedup UNION SELECT dst, sr
 )
 
 
-@_q(
+@query(
     "x_graph_kcore",
     "k-core of the co-purchase graph (parts sharing an order; the "
     "graph-curation prune dropping low-connectivity tails before "
@@ -1658,7 +1646,7 @@ def x_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_core(edges, k=4).orderBy("node")
 
 
-@_q(
+@query(
     "w32_seasonal_strength",
     "Seasonal-strength diagnostic per series (Hyndman's F_s = "
     "max(0, 1 - var(remainder)/var(detrended)) — the model-selection "
@@ -1741,7 +1729,7 @@ def w32_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a11_basket_lift",
     "Market-basket affinity (lift) over co-purchased part pairs — the "
     "recommender-adjacent classic on the triangle-count edge build: "
@@ -1817,7 +1805,7 @@ def a11_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "a12_abc_pareto",
     "ABC/Pareto classification of parts by revenue (the inventory-"
     "analytics classic: A = first 70% of cumulative revenue share, "
@@ -1886,7 +1874,7 @@ def a12_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "u07_grouping_sets",
     "Explicit GROUPING SETS with grouping_id (completing the "
     "grouping-family literally alongside u04 ROLLUP / u05 CUBE): "
@@ -1920,7 +1908,7 @@ def u07_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "s29_event_trigrams",
     "Top event-path trigrams (the length-3 extension of s20's "
     "first-order transitions — the path-analysis query behind "
@@ -1970,7 +1958,7 @@ def s29_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w33_detected_period",
     "Seasonal-period detection via ACF argmax over lags 2..13 (the "
     "DECISION step on top of w27's diagnostic, mirroring the "
@@ -2064,7 +2052,7 @@ def w33_detected_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w34_max_drawdown",
     "Maximum drawdown per series (the risk/robustness classic: "
     "largest peak-to-trough fall of the monthly revenue index): "
@@ -2106,7 +2094,7 @@ def w34_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w35_backtest_drift",
     "Rolling-origin backtest of the RW-with-drift forecaster (the "
     "standard forecast-evaluation protocol; the model mirrors the "
@@ -2216,7 +2204,7 @@ def w35_backtest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w36_stl_decompose",
     "STL-lite classical decomposition of the monthly revenue series "
     "per flag: trend = centered 2x12 moving average (the standard "
@@ -2347,7 +2335,7 @@ def w36_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "w37_changepoint_detect",
     "Mean-shift changepoint detection per event_type "
     "(streaming/drift.py changepoint_mean_shift — the classic CUSUM "

@@ -24,20 +24,7 @@ from pyspark.sql.functions import broadcast
 
 from ..functions.textfn import portable_hash64, strict_word_shingles, tokens
 from ..materialize import materialize
-from .base import Query, spread, table
-
-QUERIES: list[Query] = []
-
-
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
-
-    return wrap
-
-
-_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')"
+from .base import QUERIES, TOKS, query, spread, table
 
 # single source of truth for the oracle's stopword literal — mirrors
 # functions.textfn.LANG_MARKERS['en'] (what the Spark side resolves)
@@ -54,7 +41,7 @@ _K1, _B = 1.2, 0.75
 _BM25_TERMS = ("spark", "window", "join")
 
 
-@_q(
+@query(
     "x_bm25_topk",
     "BM25 top-k retrieval (Okapi k1=1.2 b=0.75) for a fixed 3-term "
     "query over the documents corpus.  Per-(doc,term) tf is one "
@@ -67,7 +54,7 @@ _BM25_TERMS = ("spark", "window", "join")
     "pins the (score, doc_id) ordering cross-engine, and the top-20 "
     "runs as TakeOrderedAndProject — never a global sort.",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM toks),
 stats AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -139,7 +126,7 @@ def x_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_bigram_perplexity",
     "Per-document perplexity under a Laplace-smoothed bigram LM "
     "trained on the corpus itself (the CCNet-style model-based "
@@ -153,7 +140,7 @@ def x_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dependent; it is rounded 6 decimals, ~7 orders above the "
     "worst-case float drift of a few-hundred-term sum.",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 vocab AS (
   SELECT CAST(COUNT(DISTINCT term) AS BIGINT) AS v
   FROM (SELECT unnest(toks) AS term FROM toks)
@@ -231,7 +218,7 @@ def x_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dup_ngram_fraction",
     "Cross-document duplicate 8-gram fraction (the Dolma/RedPajama "
     "inter-document repetition signal; intra-document repetition "
@@ -249,7 +236,7 @@ def x_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tokens have no shingles and are excluded (strict shingling — a "
     "whole-text fallback would fabricate cross-doc matches).",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 g AS (
   SELECT doc_id, unnest(list_distinct(
     CASE WHEN len(toks) >= 8
@@ -314,7 +301,7 @@ def x_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "x_embed_pca_project",
     "Distributed PCA projection of the embedding table onto its top-2 "
     "principal components (OPQ-style rotation prep / SemDeDup "
@@ -385,7 +372,7 @@ def x_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_sim_hard_negatives",
     "Hard-negative mining for contrastive training (DPR/SimCSE prep): "
     "for each of the 5 lowest-id probe vectors, the top-3 most-"
@@ -459,7 +446,7 @@ def x_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_source_overlap_matrix",
     "Cross-source content-overlap matrix (corpus-level contamination "
     "report — which ingest sources copy from each other; the corpus-"
@@ -472,7 +459,7 @@ def x_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     "document-count-shaped); per-source totals are a ≤|sources|-row "
     "broadcast.  All counts exact integers, one IEEE divide.",
     f"""
-WITH toks AS (SELECT source, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT source, {TOKS} AS toks FROM documents),
 g AS (
   SELECT DISTINCT source,
          unnest(CASE WHEN len(toks) >= 8
@@ -547,7 +534,7 @@ _CMS_D, _CMS_W = 4, 256
 _CMS_PROBES = ("spark", "table", "window", "the", "data")
 
 
-@_q(
+@query(
     "x_countmin_estimate",
     "Count-Min Sketch frequency estimation (Cormode & Muthukrishnan "
     "2005) built natively: d=4 seeded md5 hash rows × w=256 buckets.  "
@@ -560,7 +547,7 @@ _CMS_PROBES = ("spark", "table", "window", "the", "data")
     "against the exact count (CMS guarantees estimate ≥ exact; "
     "both BIGINT-exact, so the oracle match is bitwise).",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 term AS (SELECT unnest(toks) AS term FROM toks),
 cells AS (
   SELECT j, CAST('0x' || substr(md5(CAST(j AS VARCHAR) || '|' || term), 1, 15) AS BIGINT) % {_CMS_W} AS bucket,
@@ -656,7 +643,7 @@ def x_countmin_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_source_quality_report",
     "Per-source quality dashboard (the curation triage report deciding "
     "which ingest sources need re-crawling/filters): document count, "
@@ -669,7 +656,7 @@ def x_countmin_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "divides two exact counts.",
     f"""
 WITH d AS (
-  SELECT source, text, {_TOKS} AS toks FROM documents
+  SELECT source, text, {TOKS} AS toks FROM documents
 ), q AS (
   SELECT source,
          (
@@ -707,7 +694,7 @@ def x_source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_curation_topk_weighted",
     "EXACTLY-k weighted sample without replacement (Efraimidis-"
     "Spirakis 2006 A-Res; operators/curation.py topk_weighted_sample): "
@@ -720,7 +707,7 @@ def x_source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "last-ulp ln() drift cannot move the cut.",
     f"""
 WITH d AS (
-  SELECT doc_id, source, text, {_TOKS} AS toks FROM documents
+  SELECT doc_id, source, text, {TOKS} AS toks FROM documents
 ), q AS (
   SELECT doc_id, source,
          (
@@ -753,7 +740,7 @@ def x_curation_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_token_entropy",
     "Per-document unigram token entropy in bits (the repetitiveness/"
     "spam signal complementing x_quality_repetition_signals: low "
@@ -765,7 +752,7 @@ def x_curation_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "converted to bits by /ln(2).  Counts are exact integers; the "
     "order-dependent Σ c·ln(c) rounds at 6 per the base contract.",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 tc AS (
   SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c
   FROM (SELECT doc_id, unnest(toks) AS term FROM toks)
@@ -797,7 +784,7 @@ def x_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_incremental",
     "Incremental LSH dedup (operators/dedup.py incremental_lsh_dedup "
     "— the daily-ingest path): docs with id < 400 play the EXISTING "
@@ -848,7 +835,7 @@ def x_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("doc_id", "source")
 
 
-@_q(
+@query(
     "x_curation_eval_holdout",
     "Deterministic exact-k-per-stratum eval holdout (the held-out set "
     "every training pipeline carves before dedup/decontam — which "
@@ -888,7 +875,7 @@ def x_curation_eval_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_embed_centroid_eval",
     "Nearest-centroid classification eval over the embedding table "
     "(the label-coherence check curation runs before trusting labels "
@@ -973,7 +960,7 @@ def x_embed_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_corpus_drift_kl",
     "Corpus drift monitor (the train/serve distribution-shift check "
     "run between ingest snapshots): Laplace-smoothed KL(P‖Q), "
@@ -987,7 +974,7 @@ def x_embed_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab-length sum is order-dependent → rounded 6.",
     f"""
 WITH toks AS (
-  SELECT doc_id < 250 AS is_ref, unnest({_TOKS}) AS term FROM documents
+  SELECT doc_id < 250 AS is_ref, unnest({TOKS}) AS term FROM documents
 ),
 cnt AS (
   SELECT term,
@@ -1045,7 +1032,7 @@ _LR_W = (-3.2, 2.1, 0.35, 1.4)
 _LR_B = -1.1
 
 
-@_q(
+@query(
     "x_quality_lr_score",
     "Model inference fused into the scan (the 'ML inference in pure "
     "SQL' pattern — ICDE'25 operator-fusion line of work): an "
@@ -1058,7 +1045,7 @@ _LR_B = -1.1
     "is IEEE-identical cross-engine, the probability rounds at 6.",
     f"""
 WITH d AS (
-  SELECT doc_id, text, {_TOKS} AS toks FROM documents
+  SELECT doc_id, text, {TOKS} AS toks FROM documents
 ), feat AS (
   SELECT doc_id,
          CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
@@ -1106,7 +1093,7 @@ def x_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_containment",
     "Asymmetric containment detection over LSH candidates (the "
     "quote/near-superset case symmetric Jaccard MISSES: a short doc "
@@ -1188,7 +1175,7 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_curation_dsir_score",
     "DSIR-lite importance scoring (Xie et al. 2023, 'Data Selection "
     "for Language Models via Importance Resampling', unigram "
@@ -1207,7 +1194,7 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks AS (
   SELECT doc_id, source LIKE 'src_' AND substr(source, 4, 1) IN ('0','1','2','3','4')
            AND length(source) = 4 AS is_target,
-         unnest({_TOKS}) AS term
+         unnest({TOKS}) AS term
   FROM documents
 ),
 cnt AS (
@@ -1223,7 +1210,7 @@ w AS (
 ),
 per_doc AS (
   SELECT d.doc_id, d.term, CAST(COUNT(*) AS BIGINT) AS m
-  FROM (SELECT doc_id, unnest({_TOKS}) AS term FROM documents) d
+  FROM (SELECT doc_id, unnest({TOKS}) AS term FROM documents) d
   GROUP BY 1, 2
 )
 SELECT p.doc_id,
@@ -1272,7 +1259,7 @@ def x_curation_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_rate_by_source",
     "Exact-duplicate rate per source (the per-feed dedup dashboard "
     "row: which ingest feeds ship copies): canonical = the min doc_id "
@@ -1285,7 +1272,7 @@ def x_curation_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH fp AS (
   SELECT doc_id, source,
-         CAST('0x' || substr(md5(array_to_string({_TOKS}, ' ')), 1, 15) AS BIGINT) AS fingerprint
+         CAST('0x' || substr(md5(array_to_string({TOKS}, ' ')), 1, 15) AS BIGINT) AS fingerprint
   FROM documents
 ),
 keep AS (SELECT fingerprint, MIN(doc_id) AS canonical FROM fp GROUP BY 1)
@@ -1316,7 +1303,7 @@ def x_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dup_span_detection",
     "Maximal cross-document duplicated SPANS per doc (the span-level "
     "signal behind suffix-array dedup, Lee et al. 2022 'Deduplicating "
@@ -1335,7 +1322,7 @@ def x_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token indices; span_end is inclusive of the final gram's 8th "
     "token.",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 g AS (
   SELECT doc_id, u.pos, u.h FROM (
     SELECT doc_id,
@@ -1372,7 +1359,7 @@ def x_dup_span_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_spans(spread(table(spark, sf_dir, "documents")), k=8, min_run=3)
 
 
-@_q(
+@query(
     "x_corpus_shuffle_shards",
     "Deterministic global corpus shuffle into training shards (the "
     "pre-training data-order op: a reproducible whole-corpus shuffle "
@@ -1420,7 +1407,7 @@ def x_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_dedup_canonical_pick",
     "Canonical-variant selection within duplicate groups (the 'which "
     "copy survives' policy applied after grouping — FineWeb/CCNet "
@@ -1498,7 +1485,7 @@ def x_dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "x_boilerplate_lines",
     "CCNet-style corpus-level boilerplate removal (CCNet §3.1, "
     "Wenzek et al. 2020): a 3-token segment (the pseudo-'line' of "
@@ -1513,7 +1500,7 @@ def x_dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Spark array_join of [] = ''; DuckDB array_to_string of [] is "
     "NULL — COALESCEd to match).",
     f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 segs AS (
   SELECT doc_id,
          CASE WHEN len(t) <= 0 THEN []
@@ -1544,7 +1531,7 @@ def x_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return boilerplate_removal(docs, seg_tokens=3, max_df=4)
 
 
-@_q(
+@query(
     "x_dedup_simhash_hamming",
     "SimHash near-dup pairs under Hamming distance <= 1 — EXACT via "
     "Manku et al. (WWW'07) pigeonhole banding: the 16-bit fingerprint "
@@ -1558,7 +1545,7 @@ def x_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     "production setting; the band value space must stay large "
     "relative to n.)",
     f"""
-WITH toks_t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 h AS (
   SELECT doc_id, len(toks) AS n,
          list_transform(toks, t -> {_H16('t')}) AS th
@@ -1586,7 +1573,31 @@ def x_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hamming_neardup_pairs(sh, "simhash", "doc_id", bits=16, max_hamming=1)
 
 
-@_q(
+def _rrf_oracle_sql() -> str:
+    """The RRF oracle composes the two legs' committed oracle SQL as
+    subqueries (DuckDB supports WITH inside a derived table), so the
+    fusion oracle can never drift from the leg oracles."""
+    sql = {q.name: q.sql for q in QUERIES}
+    return f"""
+WITH bmr AS (
+  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS bm25_rank
+  FROM ({sql["x_bm25_topk"]}) bm_leg
+),
+cosr AS (
+  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS cos_rank
+  FROM ({sql["x_sim_search_bruteforce"]}) cos_leg
+)
+SELECT COALESCE(bmr.doc_id, cosr.vec_id) AS doc_id,
+       CAST(bm25_rank AS INT) AS bm25_rank,
+       CAST(cos_rank AS INT) AS cos_rank,
+       ROUND(COALESCE(1.0 / (60 + bm25_rank), 0.0)
+             + COALESCE(1.0 / (60 + cos_rank), 0.0), 9) AS rrf_score
+FROM bmr FULL OUTER JOIN cosr ON bmr.doc_id = cosr.vec_id
+ORDER BY rrf_score DESC, doc_id LIMIT 20
+"""
+
+
+@query(
     "x_hybrid_rrf_fusion",
     "Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009, "
     "k=60) of the BM25 lexical top-20 and the cosine dense top-10 "
@@ -1599,7 +1610,7 @@ def x_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join of two <=20-row lists: driver-side-free, broadcastable, "
     "and independent of corpus size — all heavy lifting stays in "
     "the legs, which scan once each.",
-    None,  # filled in below: composes the two legs' oracle SQL verbatim
+    _rrf_oracle_sql(),
     tags=("llm", "search"),
 )
 def x_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,42 +1660,7 @@ def x_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fused.orderBy(F.desc("rrf_score"), "doc_id").limit(20)
 
 
-def _install_rrf_oracle() -> None:
-    """The RRF oracle composes the two legs' committed oracle SQL as
-    subqueries (DuckDB supports WITH inside a derived table), so the
-    fusion oracle can never drift from the leg oracles."""
-    from .suite_ext import QUERIES as _EXT_QUERIES
-
-    by_name = {q.name: q for q in (*QUERIES, *_EXT_QUERIES)}
-    bm_sql = by_name["x_bm25_topk"].sql
-    cos_sql = by_name["x_sim_search_bruteforce"].sql
-    from dataclasses import replace
-
-    rrf = by_name["x_hybrid_rrf_fusion"]
-    sql = f"""
-WITH bmr AS (
-  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS bm25_rank
-  FROM ({bm_sql}) bm_leg
-),
-cosr AS (
-  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS cos_rank
-  FROM ({cos_sql}) cos_leg
-)
-SELECT COALESCE(bmr.doc_id, cosr.vec_id) AS doc_id,
-       CAST(bm25_rank AS INT) AS bm25_rank,
-       CAST(cos_rank AS INT) AS cos_rank,
-       ROUND(COALESCE(1.0 / (60 + bm25_rank), 0.0)
-             + COALESCE(1.0 / (60 + cos_rank), 0.0), 9) AS rrf_score
-FROM bmr FULL OUTER JOIN cosr ON bmr.doc_id = cosr.vec_id
-ORDER BY rrf_score DESC, doc_id LIMIT 20
-"""
-    QUERIES[QUERIES.index(rrf)] = replace(rrf, sql=sql)
-
-
-_install_rrf_oracle()
-
-
-@_q(
+@query(
     "x_quality_mad_outliers",
     "Robust per-source length-outlier detection: a doc whose |n_chars "
     "- source median| exceeds 3x the source MAD (median absolute "
@@ -1802,10 +1778,10 @@ FROM canon GROUP BY 1
 """
 
 
-@_q(
+@query(
     "x_url_canonical_dedup",
     _URL_QUERY_DOC,
-    None,  # sql injected below (needs the shared regex constants)
+    _url_oracle_sql(),
     tags=("N1", "dedup", "curation"),
 )
 def x_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1871,12 +1847,3 @@ def x_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("keep_doc_id"),
         )
     )
-
-
-# inject the oracle (the decorator already registered the Query object;
-# rebuild it with sql= the generated mirror)
-from dataclasses import replace as _dc_replace  # noqa: E402
-
-for _i, _qq in enumerate(QUERIES):
-    if _qq.name == "x_url_canonical_dedup":
-        QUERIES[_i] = _dc_replace(_qq, sql=_url_oracle_sql())

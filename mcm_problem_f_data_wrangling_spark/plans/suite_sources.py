@@ -27,18 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import Query, table
-
-QUERIES: list[Query] = []
-
-
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
-
-    return wrap
-
+from .base import query, table
 
 def _tmpdir(tag: str, sf_dir: str) -> str:
     key = os.path.basename(sf_dir.rstrip("/")) or "sf"
@@ -47,7 +36,7 @@ def _tmpdir(tag: str, sf_dir: str) -> str:
     return d
 
 
-@_q(
+@query(
     "src01_tsv_ingest_normalize",
     "S3+P2+P3+P4+S5 end-to-end: the region dim is exported through "
     "the engine's single-file CSV sink as a TAB-separated file with "
@@ -94,7 +83,7 @@ def src01_tsv_ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "src02_csv_date_parse_scan",
     "S4 CSV-with-date-parse roundtrip: one order per priority class "
     "(deterministic min_by sample) exported to CSV, re-ingested with "
@@ -158,7 +147,7 @@ def src02_csv_date_parse_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "src03_whitespace_tsv_scan",
     "S2 whitespace-delimited scan (regex-sep read the reference "
     "implements with pandas engine='python'): nation keys + names "
@@ -192,7 +181,7 @@ def src03_whitespace_tsv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "src04_orc_roundtrip",
     "S-ext ORC interchange roundtrip: the nation dim is written "
     "through the engine's ORC sink PARTITIONED by n_regionkey "
@@ -235,7 +224,7 @@ def src04_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "src05_jsonl_quarantine",
     "S-ext JSONL ingest with corrupt-record quarantine (the "
     "crawl-corpus ingest path: LLM training data arrives as JSONL "
@@ -309,7 +298,7 @@ def src05_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "src06_schema_evolution",
     "S-ext evolving-parquet scan (a long-lived corpus accretes "
     "columns; per-file footers disagree): generation 1 of the nation "

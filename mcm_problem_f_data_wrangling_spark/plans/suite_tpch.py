@@ -27,24 +27,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .base import DSUM, Query, dsum, table
-
-QUERIES: list[Query] = []
-
-
-def _q(name: str, doc: str, sql: str | None = None, headline: bool = False, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        QUERIES.append(Query(name, doc, fn, sql, headline, tags))
-        return fn
-
-    return wrap
-
+from .base import DSUM, dsum, query, table
 
 def _ts(lit: str):
     return F.lit(lit).cast("timestamp_ntz")
 
 
-@_q(
+@query(
     "q04_order_priority",
     "TPC-H Q4 order-priority checking (EXISTS semi-join with a "
     "non-equi residual).  Adapted: the reference predicate "
@@ -86,7 +75,7 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q06_revenue_delta",
     "TPC-H Q6 forecasting-revenue-change (the pure pushdown "
     "benchmark): one lineitem scan, three range predicates that ALL "
@@ -120,7 +109,7 @@ def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q07_volume_shipping",
     "TPC-H Q7 volume shipping between two nations: lineitem joined "
     "through supplier AND through orders→customer to nation on both "
@@ -181,7 +170,7 @@ def q07_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(dsum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).alias("revenue"))
 
 
-@_q(
+@query(
     "q08_market_share",
     "TPC-H Q8 national market share: of all 'PROMO'-type part revenue "
     "sold to ASIA-region customers per year, what fraction came from "
@@ -255,7 +244,7 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q10_returned_items",
     "TPC-H Q10 returned-item reporting: revenue lost to returns "
     "(l_returnflag='R') per customer over one quarter, top 20.  The "
@@ -304,7 +293,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q13_customer_distribution",
     "TPC-H Q13 customer order-count distribution: LEFT join customer→"
     "orders (keeping order-less customers as count 0) with a join-"
@@ -345,7 +334,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q14_promo_effect",
     "TPC-H Q14 promotion effect: share of one month's revenue from "
     "PROMO-type parts.  Part is the only dimension and broadcasts; "
@@ -383,7 +372,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q15_top_supplier",
     "TPC-H Q15 top supplier: quarterly revenue per supplier, return "
     "the max-revenue supplier(s) — ties kept via equality against the "
@@ -426,7 +415,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q17_small_quantity_revenue",
     "TPC-H Q17 small-quantity-order revenue: average yearly revenue "
     "lost if small orders (below 20% of the part's average quantity) "
@@ -471,7 +460,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q18_large_volume_customers",
     "TPC-H Q18 large-volume customers: orders whose line quantities "
     "sum above 300, with customer attribution, top 100 by order "
@@ -517,7 +506,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q19_disjunctive_predicates",
     "TPC-H Q19 discounted revenue under OR-of-ANDs (the disjunctive-"
     "predicate benchmark): three brand × size-range × quantity-range "
@@ -556,7 +545,7 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q22_dormant_accounts",
     "TPC-H Q22 global-sales-opportunity shape: well-funded customers "
     "(balance above the positive-balance average) with NO recent "
@@ -613,7 +602,7 @@ def q22_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q09_product_profit",
     "TPC-H Q9-shape product-type profit by supplier nation and year.  "
     "Adapted: partsupp (and ps_supplycost) doesn't exist in this "
@@ -669,7 +658,7 @@ def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q12_priority_shipping_mix",
     "TPC-H Q12-shape shipping-mode priority mix.  Adapted: no "
     "l_shipmode column, so l_linestatus plays the mode and 'late' is "
@@ -714,7 +703,7 @@ def q12_priority_shipping_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q16_supplier_part_mix",
     "TPC-H Q16-shape parts/supplier relationship count.  Adapted: no "
     "partsupp table, so the part↔supplier links derive from observed "
@@ -754,7 +743,7 @@ def q16_supplier_part_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q21_waiting_orders",
     "TPC-H Q21-shape suppliers-who-kept-orders-waiting (the double-"
     "correlated EXISTS/NOT-EXISTS classic).  Adapted: 'late' is the "
@@ -893,7 +882,7 @@ def synth_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q02_min_cost_supplier",
     "TPC-H Q2 minimum-cost supplier (correlated-MIN classic, the last "
     "unreachable form now closed by the synthesized partsupp).  For "
@@ -970,7 +959,7 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q11_important_stock",
     "TPC-H Q11 important-stock identification (HAVING-over-scalar-"
     "subquery classic).  Inventory value per part across two nations' "
@@ -1035,7 +1024,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q20_potential_promo_suppliers",
     "TPC-H Q20 potential-part-promotion (nested semi-join chain).  "
     "Suppliers in one nation holding excess stock (availqty > half the "

@@ -138,9 +138,14 @@ def read_nanos_timestamp_parquet(
     double-precision divide would lose exactness above 2^53 nanos).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    return micros_from_nanos(spark.read.parquet(path), ts_cols)
+
+
+def micros_from_nanos(df: DataFrame, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
+    """Turn the raw-nanos (bigint) ``ts_cols`` of a ``nanosAsLong`` read
+    into microsecond timestamps; other columns pass through."""
     for c in ts_cols:
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
+        if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 

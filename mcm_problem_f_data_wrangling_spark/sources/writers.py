@@ -226,22 +226,6 @@ def write_bucketed_table(
     writer.saveAsTable(table_name)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """JSON-lines sink (engine extension): one JSON object per line,
-    one file per task — the interchange format training pipelines
-    expect.  ``partition_by`` gives hive-style ``key=value`` dirs so a
-    downstream ``read_jsonl`` prunes partitions from the path alone."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
 def compact_parquet(
     spark,
     path: str,

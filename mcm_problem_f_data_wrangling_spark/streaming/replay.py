@@ -243,13 +243,13 @@ def restart_drain(
                 f"{gate} restart must EXTEND phase-1 batches, got "
                 f"phase1={sorted(first)} phase2={sorted(second)}"
             )
-        # off the sink dir before the finally removes it
+        # off the sink dir before the finally removes it; partition
+        # discovery reads epoch=<id> (a glob path would make the
+        # FileStreamSink metadata probe throw and log a stack trace)
         frame = materialize(
             spark.read.schema(
                 StructType(out.schema.fields + [StructField("epoch", LongType())])
-            )
-            .option("basePath", sink)
-            .parquet(f"{sink}/epoch=*")
+            ).parquet(sink)
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)

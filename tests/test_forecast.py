@@ -73,21 +73,6 @@ def test_fan_summary_exact_quantiles(spark):
     assert r["p95"] == pytest.approx(np.quantile(np.arange(1.0, 101.0), 0.95))
 
 
-def test_equation_block_formats_fit(spark):
-    from mcm_problem_f_data_wrangling_spark.operators.forecast import (
-        drift_equation_block,
-        fit_rw_drift_forecast,
-    )
-
-    rows = [("a", i, 100.0 + 2.0 * i) for i in range(30)]
-    df = spark.createDataFrame(rows, ["g", "t", "v"])
-    fit = fit_rw_drift_forecast(df, "g", "t", "v", steps=1)
-    blocks = drift_equation_block(fit)
-    assert set(blocks) == {"a"}
-    assert "random walk with drift" in blocks["a"]
-    assert "mu = 2.0000" in blocks["a"]  # exact linear trend → mu = slope
-
-
 # ---------------------------------------------------------------------------
 # X3 SARIMAX-lite AIC grid (fit_best_sarimax parity, EDA.ipynb cell 27)
 # ---------------------------------------------------------------------------
@@ -267,23 +252,6 @@ def test_exog_fan_fallback_matches_rw_drift(spark):
     for h, r in zip(range(1, 5), fan.itertuples()):
         assert r.p50 == pytest.approx(-118.0 - 2.0 * h)
         assert r.p05 == pytest.approx(r.p95)
-
-
-def test_arma_equation_block_renders(spark):
-    from mcm_problem_f_data_wrangling_spark.operators.forecast import (
-        arma_equation_block,
-        fit_arma_exog_params,
-    )
-
-    x, y = _sim_exog_pair()
-    rows = [("g", t, float(y[t]), float(x[t])) for t in range(len(y))]
-    rows += [("s", t, 10.0 + t, 1.0 * t) for t in range(8)]
-    df = spark.createDataFrame(rows, ["career", "t", "y", "x"])
-    fit = fit_arma_exog_params(df, "career", "t", "y", "x", steps=2)
-    blocks = arma_equation_block(fit, exog_name="qty")
-    assert set(blocks) == {"g", "s"}
-    assert "qty_t + u_t" in blocks["g"] and "eps_t" in blocks["g"]
-    assert "random walk with drift" in blocks["s"]
 
 
 class TestHoltWinters:

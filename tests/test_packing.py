@@ -1,11 +1,8 @@
-"""Sequence packing: bin boundaries, overflow rule, fill accounting."""
+"""Sequence packing: bin boundaries and the overflow rule."""
 
 from __future__ import annotations
 
-from mcm_problem_f_data_wrangling_spark.operators.packing import (
-    pack_sequences,
-    packing_summary,
-)
+from mcm_problem_f_data_wrangling_spark.operators.packing import pack_sequences
 
 
 def _docs(spark, rows):
@@ -41,12 +38,3 @@ def test_oversized_doc_gets_own_bins(spark):
            pack_sequences(docs, "n_tokens", capacity=100).collect()}
     assert out[1] == (0, 0)
     assert out[2] == (2, 50)  # resumes at cumsum 250 -> bin 2
-
-
-def test_packing_summary_fill(spark):
-    # excl cumsums 0, 150 -> bins 0 and 1; 180 tokens over 2x100 budget
-    docs = _docs(spark, [(1, "s", 150), (2, "s", 30)])
-    packed = pack_sequences(docs, "n_tokens", capacity=100)
-    row = packing_summary(packed, "n_tokens", capacity=100).collect()[0]
-    assert row["n_bins"] == 2 and row["n_tokens"] == 180
-    assert abs(row["fill"] - 0.9) < 1e-9

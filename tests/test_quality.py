@@ -257,31 +257,6 @@ class TestBoilerplateRemoval:
             boilerplate_removal(df, strategy="bogus")
 
 
-def test_observed_filter_funnel_counts_without_second_scan(spark, tmp_path):
-    from mcm_problem_f_data_wrangling_spark.operators.quality import (
-        filter_funnel,
-        observed_filter_funnel,
-    )
-
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 10).alias("m")
-    )
-    stages = [
-        ("nonzero", F.col("m") != 0),
-        ("small", F.col("m") < 5),
-    ]
-    out, obs = observed_filter_funnel(df, stages)
-    # ONE action drives both the result and the metrics
-    rows = out.collect()
-    assert len(rows) == 40 and all(r["m"] in (1, 2, 3, 4) for r in rows)
-    assert set(out.columns) == {"id", "m"}
-    got = obs.get
-    assert got["n_in"] == 100 and got["kept_nonzero"] == 90 and got["kept_small"] == 40
-    # agrees with the dedicated-scan reporter
-    report = {r["stage"]: r["n_kept"] for r in filter_funnel(df, stages).collect()}
-    assert report == {"nonzero": 90, "small": 40}
-
-
 def test_read_parquet_evolving_merges_schemas(spark, tmp_path):
     from mcm_problem_f_data_wrangling_spark.sources.readers import (
         read_parquet_evolving,

@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mcm_problem_f_data_wrangling_spark.operators.skew import (
-    salt_replicated_join,
-    salted_group_agg,
-)
+from mcm_problem_f_data_wrangling_spark.operators.skew import salted_group_agg
 
 
 @pytest.fixture(scope="module")
@@ -43,25 +40,6 @@ def test_salted_agg_two_exchanges(skewed):
         skewed, ["key"], {"n": F.count(F.lit(1))}, n_salts=8
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") >= 2  # (key,salt) shuffle then key shuffle
-
-
-def test_salt_replicated_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("hot", "HOT"), ("k1", "K1"), ("k2", "K2")], ["key", "label"]
-    )
-    plain = (
-        skewed.join(dim, "key", "left")
-        .groupBy("label")
-        .count()
-        .collect()
-    )
-    salted = (
-        salt_replicated_join(skewed, dim, "key", n_salts=8, how="left")
-        .groupBy("label")
-        .count()
-        .collect()
-    )
-    assert {tuple(r) for r in plain} == {tuple(r) for r in salted}
 
 
 def test_bucketed_join_is_shuffle_free(spark, skewed):

