@@ -2,42 +2,33 @@
 
 The driver canonicalizes results via ``toPandas().sort_values()`` —
 complex-typed output columns (array/map/struct) crash it with
-``unhashable type`` (round-1 a08 failure).  Every query in the gate
-window must therefore emit scalar columns only; nested results are
-serialized with ``to_json(sort_array(...))`` by convention.
+``unhashable type`` (round-1 a08 failure).  The driver's window is the
+front of the computed REGISTRY order, which moves as queries are
+verified, so every query must emit scalar columns only; nested results
+are serialized with ``to_json(sort_array(...))`` by convention.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
-from mcm_problem_f_data_wrangling_spark.plans import DRIVER_WINDOW, REGISTRY
+from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
+from mcm_problem_f_data_wrangling_spark.plans import REGISTRY
 
-# smallest SF is plenty: only the *schema* is inspected, never rows.
-# Derived from the same env var bench.py honors so an alternate
-# testdata root flows through automatically; fall back to the default
-# location when the alternate root has no sf0.001 sibling (ADVICE r3).
-_SF_DIR = os.path.join(
-    os.path.dirname(
-        os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip("/")
-    ),
-    "sf0.001",
-)
-if not os.path.isdir(_SF_DIR):
-    _SF_DIR = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE
 
 
-@pytest.mark.parametrize("name", list(REGISTRY)[:DRIVER_WINDOW])
+# only the *schema* is inspected, never rows, so the smallest SF does
+@pytest.mark.parametrize("name", list(REGISTRY))
 def test_window_query_schema_is_canonicalizer_safe(spark, name):
-    df = REGISTRY[name].spark(spark, _SF_DIR)
-    complex_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType, BinaryType))
-    ]
+    with barrier_scope():
+        df = REGISTRY[name].spark(spark, SF_SMOKE)
+        complex_cols = [
+            f.name
+            for f in df.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType, BinaryType))
+        ]
     assert not complex_cols, (
         f"{name} emits complex-typed columns {complex_cols}; the driver's "
         "pandas canonicalizer cannot hash them — serialize with "
