@@ -14,12 +14,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
-from mcm_problem_f_data_wrangling_spark.plans import REGISTRY, headline_queries
+from mcm_problem_f_data_wrangling_spark.plans import REGISTRY, headline_queries, run_noop
 from mcm_problem_f_data_wrangling_spark.session import get_spark
 
 
@@ -31,18 +29,6 @@ def main() -> None:
 
     bench_set = headline_queries()
 
-    def run(q) -> float:
-        # noop sink, not count(): count() lets Catalyst prune every
-        # unaggregated output column, so projection-shaped queries
-        # (signatures, quality scores) would be timed WITHOUT their
-        # actual compute.  The noop v2 sink executes the full plan,
-        # all columns, and discards rows executor-side.  The query's
-        # barriers are released after the timer stops.
-        with barrier_scope():
-            t0 = time.perf_counter()
-            q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
     # warmup: JVM codegen + parquet footer caches (not timed).  Every
     # query runs TWICE untimed — warming only a subset leaves the rest
     # paying first-run codegen inside their timed run, and one pass
@@ -50,7 +36,7 @@ def main() -> None:
     # observed on the heavy aggregates); two passes reach steady state.
     for _ in range(2):
         for q in bench_set:
-            run(q)
+            run_noop(spark, q, sf_dir)
 
     # median of 3 timed runs per query (override with
     # $SPARK_GRAFT_BENCH_RUNS, e.g. 5 for the sf1 tier): single-run
@@ -73,7 +59,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     for q in bench_set:
-        runs = [run(q) for _ in range(n_runs)]
+        runs = [run_noop(spark, q, sf_dir) for _ in range(n_runs)]
 
         def stats(rs: list[float]) -> tuple[float, float]:
             best = sorted(rs)[:3]
@@ -82,7 +68,7 @@ def main() -> None:
         med, spr = stats(runs)
         extra = 0
         while spr / max(med, 1e-3) > max_rel and extra < extra_cap:
-            runs.append(run(q))
+            runs.append(run_noop(spark, q, sf_dir))
             extra += 1
             med, spr = stats(runs)
         timings[q.name] = round(med, 3)

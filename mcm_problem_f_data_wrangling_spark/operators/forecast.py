@@ -175,17 +175,16 @@ def monte_carlo_forecast(
 # reference tries CANDIDATE_ORDERS = five (p,1,q)×(P,1,Q,12) models with
 # p,q,P,Q ≤ 1 and keeps the lowest AIC, fitting by statsmodels'
 # state-space maximum likelihood.  statsmodels is absent from this
-# environment, so BOTH estimators are pure numpy:
+# environment, so the estimator is pure numpy:
 #
-# - ``fit_arma_ml`` (the default) — EXACT Gaussian ML via the Kalman
-#   filter below (Harvey form, stationary init, concentrated σ²),
+# - ``fit_arma_ml`` — EXACT Gaussian ML via the Kalman filter below
+#   (Harvey form, stationary init, concentrated σ²),
 #   AIC = -2·loglik + 2k: the same estimator statsmodels runs, modulo
 #   the documented simple-differencing convention (see the Kalman
 #   section note).
 # - ``fit_arma_css`` — conditional-sum-of-squares (Box-Jenkins CSS:
 #   minimize one-step residual SSE of the multiplicative recursion),
-#   AIC = n·ln(SSE/n) + 2k; retained as the ML fit's starting point
-#   and as the cheap estimator for the exog fan's per-group fit.
+#   AIC = n·ln(SSE/n) + 2k; the ML fits' starting point.
 # ---------------------------------------------------------------------------
 
 # mirrors EDA.ipynb cell 27 CANDIDATE_ORDERS with d=D=1, s=12
@@ -562,52 +561,6 @@ def _sarma_kalman_forecast(y, params, steps, s=12):
     return out
 
 
-def _arma_forecast(y, params, p, q, P, Q, steps, s=12):
-    """h-step point forecast: run the CSS recursion forward with zero
-    future innovations on the d=1,D=1 differenced series, then invert
-    the differencing (dy_t = z_t + dy_{t-s}; y_t = y_{t-1} + dy_t)."""
-    import numpy as np
-
-    y = np.asarray(y, dtype=float)
-    dy = np.diff(y)
-    z = dy[s:] - dy[:-s]
-    e = _css_residuals(
-        z, params["c"], params["phi"], params["Phi"], params["theta"], params["Theta"], s=s
-    )
-    zc = list(z - params["c"])
-    e = list(e)
-    m = s + 1
-
-    def back(seq, lag):
-        return seq[-lag] if len(seq) >= lag else 0.0
-
-    z_fut = []
-    for _ in range(steps):
-        val = (
-            params["phi"] * back(zc, 1)
-            + params["Phi"] * back(zc, s)
-            - params["phi"] * params["Phi"] * back(zc, m)
-            + params["theta"] * back(e, 1)
-            + params["Theta"] * back(e, s)
-            + params["theta"] * params["Theta"] * back(e, m)
-        )
-        zc.append(val)
-        e.append(0.0)
-        z_fut.append(val + params["c"])
-    dy_hist = list(dy)
-    y_hist = list(y)
-    out = []
-    for h in range(steps):
-        dy_next = z_fut[h] + (
-            dy_hist[-s] if len(dy_hist) >= s else (dy_hist[0] if dy_hist else 0.0)
-        )
-        y_next = y_hist[-1] + dy_next
-        dy_hist.append(dy_next)
-        y_hist.append(y_next)
-        out.append(y_next)
-    return out
-
-
 def fit_best_arma_forecast(
     df: DataFrame,
     group_col: str,
@@ -616,13 +569,11 @@ def fit_best_arma_forecast(
     steps: int = 6,
     season: int = 12,
     candidates=ARMA_CANDIDATES,
-    method: str = "ml",
 ) -> DataFrame:
     """X3 parity path: per-group AIC grid over the reference's five
     candidate orders (``fit_best_sarimax``, ``EDA.ipynb cell 27``),
-    exact-ML-estimated via the pure-numpy Kalman filter (default;
-    ``method='css'`` keeps the conditional-sum-of-squares estimator),
-    one ``applyInPandas`` crossing.
+    exact-ML-estimated via the pure-numpy Kalman filter, one
+    ``applyInPandas`` crossing.
 
     Output: one row per (group, step) carrying the WINNING candidate's
     order string and AIC.  Groups shorter than 2·season+2 observations
@@ -643,8 +594,6 @@ def fit_best_arma_forecast(
     provide the parallelism while the fan-out would 5× the series
     shuffle.  The sequential per-group grid stands.
     """
-    if method not in ("ml", "css"):
-        raise ValueError(f"method must be 'ml' or 'css', got {method!r}")
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -677,10 +626,9 @@ def fit_best_arma_forecast(
             return rw_fallback()
         dy = np.diff(y)
         z = dy[season:] - dy[:-season]
-        estimator = fit_arma_ml if method == "ml" else fit_arma_css
         best = None
         for (p, d_, q), (P, D_, Q, s) in candidates:
-            aic, params = estimator(z, p, q, P, Q, s=s)
+            aic, params = fit_arma_ml(z, p, q, P, Q, s=s)
             if np.isfinite(aic) and (best is None or aic < best[0]):
                 best = (aic, (p, d_, q), (P, D_, Q, s), params)
         if best is None:
@@ -688,14 +636,9 @@ def fit_best_arma_forecast(
             # failure) — degrade, don't crash the whole stage
             return rw_fallback()
         aic, order, seas, params = best
-        if method == "ml":
-            fc = _sarma_kalman_forecast(y, params, steps, s=seas[3])
-            if fc is None:  # degenerate surface at the winner — degrade
-                return rw_fallback()
-        else:
-            fc = _arma_forecast(
-                y, params, order[0], order[2], seas[0], seas[2], steps, s=seas[3]
-            )
+        fc = _sarma_kalman_forecast(y, params, steps, s=seas[3])
+        if fc is None:  # degenerate surface at the winner — degrade
+            return rw_fallback()
         label = f"({order[0]},{order[1]},{order[2]})x({seas[0]},{seas[1]},{seas[2]},{seas[3]})"
         return pd.DataFrame(
             {
@@ -761,21 +704,18 @@ def fit_arma_exog_params(
     season: int = 12,
     exog_fit_window: int = 60,
     candidates=ARMA_CANDIDATES,
-    method: str = "ml",
 ) -> DataFrame:
     """X3+exog: per-group regression-with-ARMA-errors fit (one
     ``applyInPandas`` crossing).
 
-    Default estimation (``method='ml'``) is the JOINT exact-ML fit
-    statsmodels runs for ``SARIMAX(y, exog=x, ...)``: β and the ARMA
-    coefficients maximize the Kalman likelihood together
-    (:func:`fit_arma_exog_ml`), warm-started from the two-step
-    solution.  ``method='css'`` keeps the classic two-step
-    (Cochrane-Orcutt family, public method): β by OLS on the
-    doubly-differenced scale — differencing kills the intercept and
-    any unit roots, so plain OLS is consistent — then the reference's
-    five-candidate CSS-AIC grid (:func:`fit_arma_css`) on the residual
-    series u = y − β·x.  The exog's own future law is RW+drift over
+    Estimation is the JOINT exact-ML fit statsmodels runs for
+    ``SARIMAX(y, exog=x, ...)``: β and the ARMA coefficients maximize
+    the Kalman likelihood together (:func:`fit_arma_exog_ml`),
+    warm-started from the two-step solution — β by OLS on the
+    doubly-differenced scale (differencing kills the intercept and any
+    unit roots, so plain OLS is consistent), then a CSS fit
+    (:func:`fit_arma_css`) of the residual series u = y − β·x.  The
+    exog's own future law is RW+drift over
     its last ``exog_fit_window`` first differences
     (``fit_rw_drift_params``, ``EDA.ipynb cell 32``).
 
@@ -787,8 +727,6 @@ def fit_arma_exog_params(
     and the exog law re-pointed at y's own diffs so the downstream fan
     reproduces the plain RW-drift fan.
     """
-    if method not in ("ml", "css"):
-        raise ValueError(f"method must be 'ml' or 'css', got {method!r}")
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -834,31 +772,18 @@ def fit_arma_exog_params(
         beta_ols = float(np.dot(zx, zy) / sxx) if sxx > 1e-12 else 0.0
 
         best = None
-        if method == "ml":
-            for (p, d_, q), (P, D_, Q, s) in candidates:
-                aic, b, params = fit_arma_exog_ml(
-                    zy, zx, p, q, P, Q, s=s, beta0=beta_ols
-                )
-                if np.isfinite(aic) and (best is None or aic < best[0]):
-                    best = (aic, (p, d_, q), (P, D_, Q, s), params, b)
-        else:
-            zu = ddiff(y - beta_ols * x)
-            for (p, d_, q), (P, D_, Q, s) in candidates:
-                aic, params = fit_arma_css(zu, p, q, P, Q, s=s)
-                if np.isfinite(aic) and (best is None or aic < best[0]):
-                    best = (aic, (p, d_, q), (P, D_, Q, s), params, beta_ols)
+        for (p, d_, q), (P, D_, Q, s) in candidates:
+            aic, b, params = fit_arma_exog_ml(
+                zy, zx, p, q, P, Q, s=s, beta0=beta_ols
+            )
+            if np.isfinite(aic) and (best is None or aic < best[0]):
+                best = (aic, (p, d_, q), (P, D_, Q, s), params, b)
         if best is None:
             return rw_fallback()
         aic, order, seas, params, beta = best
-        u = y - beta * x
-        if method == "ml":
-            det = _sarma_kalman_forecast(u, params, steps, s=seas[3])
-            if det is None:
-                return rw_fallback()
-        else:
-            det = _arma_forecast(
-                u, params, order[0], order[2], seas[0], seas[2], steps, s=seas[3]
-            )
+        det = _sarma_kalman_forecast(y - beta * x, params, steps, s=seas[3])
+        if det is None:
+            return rw_fallback()
 
         # exog RW+drift law (fit_rw_drift_params, cell 32: last-window diffs)
         dx = pd.Series(x).diff().dropna().tail(exog_fit_window)

@@ -150,7 +150,6 @@ def boilerplate_removal(
     seg_tokens: int = 3,
     max_df: int = 4,
     max_boiler_set: int = 10_000,
-    strategy: str = "auto",
 ) -> DataFrame:
     """CCNet-style corpus-level boilerplate ("line") removal.
 
@@ -177,26 +176,18 @@ def boilerplate_removal(
     per-segment O(|boiler|) membership scan make broadcasting the
     wrong tool.
 
-    ``strategy`` picks the removal engine:
-
-    - ``'broadcast'`` — the heavy-tail fast path above; raises when
-      the set exceeds ``max_boiler_set``.
-    - ``'anti_join'`` — the unbounded-set path: posexplode segments,
-      LEFT ANTI join against the boilerplate table (one shuffle keyed
-      on the segment), re-aggregate per doc in position order (one
-      doc-keyed shuffle).  Two more full-corpus shuffles than
-      broadcast, but no driver collect and no set-size ceiling.
-    - ``'auto'`` (default) — one O(1) count of the boilerplate table
-      decides: broadcast when it fits ``max_boiler_set``, anti-join
-      when it does not.  Both paths produce IDENTICAL rows (the r5
-      sf1 sweep found the renamed-vocabulary tier pushing the set to
-      10x the cap — the guard raised exactly as documented, and this
-      formulation is the documented answer).
+    One O(1) count of the boilerplate table picks the removal path:
+    the broadcast path above when the set fits ``max_boiler_set``,
+    else the unbounded-set anti-join path — posexplode segments, LEFT
+    ANTI join against the boilerplate table (one shuffle keyed on the
+    segment), re-aggregate per doc in position order (one doc-keyed
+    shuffle): two more full-corpus shuffles, but no driver collect and
+    no set-size ceiling.  Both paths produce IDENTICAL rows (the r5
+    sf1 sweep found the renamed-vocabulary tier pushing the set to
+    10x the cap).
     """
     from .skew import spread
 
-    if strategy not in ("auto", "broadcast", "anti_join"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     # spread: tokenization + segmentation is the dominant per-row cost
     # and runs at scan width — a single-row-group testdata scan
     # serializes it on one task (measured 8.6 s -> 1.0 s at sf0.1;
@@ -217,21 +208,16 @@ def boilerplate_removal(
         .agg(F.count_distinct(F.col(id_col)).alias("df"))
         .filter(F.col("df") > max_df)
     )
-    if strategy == "auto":
-        # Materialize the boilerplate table ONCE before the decision
-        # count — without this the count() action re-runs the full
-        # explode+groupBy that the chosen removal path then recomputes,
-        # doubling the dominant shuffle at 100 TB.  The table is small
-        # by construction (df > max_df survivors only), so the
-        # executor-local blocks are cheap; both paths below read the
-        # checkpointed result, so exactly one segment aggregation runs
-        # per call (asserted in tests/test_quality.py).
-        seg_df = materialize(seg_df)
-        strategy = (
-            "broadcast" if seg_df.count() <= max_boiler_set else "anti_join"
-        )
-
-    if strategy == "anti_join":
+    # Materialize the boilerplate table ONCE before the decision count
+    # — without this the count() action re-runs the full
+    # explode+groupBy that the chosen removal path then recomputes,
+    # doubling the dominant shuffle at 100 TB.  The table is small by
+    # construction (df > max_df survivors only), so the executor-local
+    # blocks are cheap; both paths below read the checkpointed result,
+    # so exactly one segment aggregation runs per call (asserted in
+    # tests/test_quality.py).
+    seg_df = materialize(seg_df)
+    if seg_df.count() > max_boiler_set:
         pos = segged.select(
             F.col(id_col), F.posexplode("__segs").alias("__pos", "seg")
         )
@@ -264,12 +250,7 @@ def boilerplate_removal(
             )
         )
 
-    boiler = [r["seg"] for r in seg_df.select("seg").limit(max_boiler_set + 1).collect()]
-    if len(boiler) > max_boiler_set:
-        raise ValueError(
-            f"boilerplate set exceeds max_boiler_set={max_boiler_set}; "
-            "raise the cap or use strategy='anti_join'"
-        )
+    boiler = [r["seg"] for r in seg_df.select("seg").collect()]
     # The boilerplate set crosses to the JVM as ONE py4j call via
     # lit_strings (r13 — generalizes the r12 newline-join+split hack,
     # which needed a separator-collision guard): pyspark's lit() on a

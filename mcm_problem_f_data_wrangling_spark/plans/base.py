@@ -71,6 +71,58 @@ def query(
 TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')"
 
 
+def H16(expr: str) -> str:
+    """DuckDB 16-bit token hash: the first 4 hex digits of md5."""
+    return f"CAST('0x' || substr(md5({expr}), 1, 4) AS BIGINT)"
+
+
+# DuckDB 3-word shingles of ``toks`` (a doc's short tail is one shingle)
+SHINGLES = (
+    "CASE WHEN len(toks) >= 3 "
+    "THEN list_transform(generate_series(1, len(toks) - 2), "
+    "i -> array_to_string(toks[i:i+2], ' ')) "
+    "ELSE [array_to_string(toks, ' ')] END"
+)
+
+
+def _sig_col_sql(i: int) -> str:
+    # Kirsch–Mitzenmacher two-hash scheme, mirroring
+    # operators/dedup.py minhash_hashpair_col / minhash_signature_cols:
+    # ONE md5 per shingle, split into two 56-bit halves (h1, h2), then
+    # s_i = min over shingles of (h1 + i*h2).
+    h1 = "CAST('0x' || substr(m, 1, 14) AS BIGINT)"
+    h2 = "CAST('0x' || substr(m, 15, 14) AS BIGINT)"
+    body = h1 if i == 0 else f"{h1} + {i} * {h2}"
+    return f"list_min(list_transform(m5, m -> {body})) AS s{i}"
+
+
+_SIG_COLS_SQL = ",\n       ".join(_sig_col_sql(i) for i in range(16))
+
+
+def sig_cte(src: str = "documents") -> str:
+    """MinHash-signature CTE chain over ``src`` (a table or an
+    earlier CTE — the sharded gates pass their sample CTE)."""
+    return f"""
+toks_t AS (SELECT doc_id, {TOKS} AS toks FROM {src}),
+sh AS (SELECT doc_id, {SHINGLES} AS shingles FROM toks_t),
+m5_t AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS m5 FROM sh),
+sig AS (
+  SELECT doc_id,
+       {_SIG_COLS_SQL}
+  FROM m5_t
+)
+""".strip()
+
+
+# the 16-signature MinHash CTE over ``documents``, and its LSH banding
+# (8 bands × 2 rows) over the ``sig`` CTE
+SIG_CTE = sig_cte()
+BANDED_SQL = "\nUNION ALL\n".join(
+    f"SELECT doc_id, {b} AS band_idx, concat_ws('|', s{b * 2}, s{b * 2 + 1}) AS band_key FROM sig"
+    for b in range(8)
+)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":

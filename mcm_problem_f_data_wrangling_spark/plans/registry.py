@@ -17,9 +17,11 @@ import glob
 import json
 import os
 import re
+import time
 
 # importing a suite registers its queries: this import order is the suite order
 from . import suite_core, suite_ext, suite_more, suite_tpch, suite_nlp, suite_sources  # noqa: F401
+from ..materialize import barrier_scope
 from .base import QUERIES, Query
 
 FLAGSHIP = "flagship_career_collapse"
@@ -61,3 +63,19 @@ REGISTRY: dict[str, Query] = {q.name: q for q in _order(QUERIES, last_verified_r
 def headline_queries() -> list[Query]:
     """The bench.py subset — one per major operator family."""
     return [q for q in QUERIES if q.headline]
+
+
+def run_noop(spark, q: Query, sf_dir: str) -> float:
+    """Wall seconds of one full run of ``q`` through the noop sink.
+
+    Noop, not ``count()``: ``count()`` lets Catalyst prune every
+    unaggregated output column, so projection-shaped queries
+    (signatures, quality scores) would be timed WITHOUT their actual
+    compute.  The noop v2 sink executes the full plan, all columns,
+    and discards rows executor-side.  The query's barriers are
+    released after the timer stops.
+    """
+    with barrier_scope():
+        t0 = time.perf_counter()
+        q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0

@@ -57,13 +57,18 @@ from ..operators.similarity import (
     ivf_topk,
 )
 from .base import (
+    BANDED_SQL,
     DSUM,
+    H16,
     MONTH_OF,
     MONTHLY_CTE,
+    SHINGLES,
+    SIG_CTE,
     TOKS,
     dsum,
     monthly_lineitem,
     query,
+    sig_cte,
     spread,
     stream_table,
     table,
@@ -76,48 +81,6 @@ from ..functions.rolling import ewma_sql
 
 def _H60(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def _H16(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 4) AS BIGINT)"
-
-
-_SHINGLES = (
-    "CASE WHEN len(toks) >= 3 "
-    "THEN list_transform(generate_series(1, len(toks) - 2), "
-    "i -> array_to_string(toks[i:i+2], ' ')) "
-    "ELSE [array_to_string(toks, ' ')] END"
-)
-
-def _sig_col_sql(i: int) -> str:
-    # Kirsch–Mitzenmacher two-hash scheme, mirroring
-    # operators/dedup.py minhash_hashpair_col / minhash_signature_cols:
-    # ONE md5 per shingle, split into two 56-bit halves (h1, h2), then
-    # s_i = min over shingles of (h1 + i*h2).
-    h1 = "CAST('0x' || substr(m, 1, 14) AS BIGINT)"
-    h2 = "CAST('0x' || substr(m, 15, 14) AS BIGINT)"
-    body = h1 if i == 0 else f"{h1} + {i} * {h2}"
-    return f"list_min(list_transform(m5, m -> {body})) AS s{i}"
-
-
-_SIG_COLS_SQL = ",\n       ".join(_sig_col_sql(i) for i in range(16))
-
-def _sig_cte(src: str = "documents") -> str:
-    """MinHash-signature CTE chain over ``src`` (a table or an
-    earlier CTE — the sharded gates pass their sample CTE)."""
-    return f"""
-toks_t AS (SELECT doc_id, {TOKS} AS toks FROM {src}),
-sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM toks_t),
-m5_t AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS m5 FROM sh),
-sig AS (
-  SELECT doc_id,
-       {_SIG_COLS_SQL}
-  FROM m5_t
-)
-""".strip()
-
-
-_SIG_CTE = _sig_cte()
 
 
 # --------------------------------------------------------------------------
@@ -149,7 +112,7 @@ def x_dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "MinHash: 16 Kirsch–Mitzenmacher min-hashes (min(h1 + i*h2) from one "
     "md5 per 3-word shingle) per doc — the signature stage of MinHash-LSH "
     "dedup.",
-    f"WITH {_SIG_CTE}\nSELECT * FROM sig",
+    f"WITH {SIG_CTE}\nSELECT * FROM sig",
     headline=True,
     tags=("M4", "dedup"),
 )
@@ -157,20 +120,14 @@ def x_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures(table(spark, sf_dir, "documents"))
 
 
-_BANDED_SQL = "\nUNION ALL\n".join(
-    f"SELECT doc_id, {b} AS band_idx, concat_ws('|', s{b * 2}, s{b * 2 + 1}) AS band_key FROM sig"
-    for b in range(8)
-)
-
-
 @query(
     "x_dedup_minhash_lsh_pairs",
     "MinHash-LSH candidate pairs: 8 bands × 2 rows, banded equi-self-join "
     "on (band_idx, band_key) — never a cross join.",
     f"""
-WITH {_SIG_CTE},
+WITH {SIG_CTE},
 banded AS (
-{_BANDED_SQL}
+{BANDED_SQL}
 )
 SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
 FROM banded a
@@ -200,9 +157,9 @@ def x_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "itself, not just the verify — the hash pins candidates AND "
     "values.",
     f"""
-WITH {_SIG_CTE},
+WITH {SIG_CTE},
 banded AS (
-{_BANDED_SQL}
+{BANDED_SQL}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
@@ -241,7 +198,7 @@ def x_dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 h AS (
   SELECT doc_id, len(toks) AS n,
-         list_transform(toks, t -> {_H16('t')}) AS th
+         list_transform(toks, t -> {H16('t')}) AS th
   FROM toks_t
 )
 SELECT doc_id,
@@ -2689,9 +2646,9 @@ dsamp AS (
   SELECT * FROM documents
   WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0
 ),
-{_sig_cte("dsamp")},
+{sig_cte("dsamp")},
 banded AS (
-{_BANDED_SQL}
+{BANDED_SQL}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
@@ -4656,7 +4613,7 @@ def s40_streaming_agg_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         2,
         "update",
         write,
-        lambda stream: running_totals_stream(stream, "source", "n_chars", api="gst"),
+        lambda stream: running_totals_stream(stream, "source", "n_chars"),
     )
     # update-mode rows: the converged total per key is the row
     # from its HIGHEST epoch (struct-max; epoch is unique per key
@@ -5337,9 +5294,7 @@ def s30_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.running import running_totals_stream
 
     stream = stream_table(spark, sf_dir, "documents")
-    out = running_totals_stream(
-        stream, "source", "n_chars", api="gst"
-    )
+    out = running_totals_stream(stream, "source", "n_chars")
     # memory sink appends in micro-batch order; the LAST row per key is
     # the converged state.  Rows are O(#sources) — a driver-literal pull.
     last: dict = {}
@@ -7007,7 +6962,7 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JPREFIX_ORACLE = f"""
 WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM toks_t),
+sh AS (SELECT doc_id, {SHINGLES} AS shingles FROM toks_t),
 tok AS (SELECT doc_id, unnest(list_distinct(shingles)) AS token FROM sh),
 cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
 inter AS (
@@ -7122,8 +7077,8 @@ def x_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LSH_RECALL_ORACLE = f"""
-WITH {_SIG_CTE},
-banded AS ({_BANDED_SQL}),
+WITH {SIG_CTE},
+banded AS ({BANDED_SQL}),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
   FROM banded a JOIN banded b

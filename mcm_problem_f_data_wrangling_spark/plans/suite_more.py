@@ -24,9 +24,11 @@ from ..operators.grid import force_complete_month_grid, interpolate_linear
 from ..operators.index import inverted_index
 from ..operators.similarity import semantic_dedup, train_ivf_cells
 from .base import (
+    BANDED_SQL,
     DSUM,
     MONTH_OF,
     MONTHLY_CTE,
+    SIG_CTE,
     TOKS,
     dsum,
     month_of,
@@ -311,18 +313,16 @@ def x_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each kept set is computed ONCE and checkpointed — the cell pair
     # join is the expensive part and three invariants consume each set
     n_total = emb.count()
-    # engine="blas" is pinned (not "auto" — no stats job, fully
-    # deterministic plan) and hash-safe here: kept IDs stay OUT of
-    # the hash, and every gated LAW is engine-independent — both
-    # thresholds run on the SAME engine, so per-pair cosines are
-    # identical across the two calls and cos>0.6 ⇒ cos>0.5 gives
-    # subset monotonicity regardless of BLAS-vs-HOF summation order.
-    # Measured at sf1: 16.8 s → 3.1 s per call, identical kept count.
+    # the BLAS Gram pass is hash-safe here: kept IDs stay OUT of the
+    # hash, and every gated LAW is summation-order-independent — both
+    # thresholds see identical per-pair cosines, so cos>0.6 ⇒ cos>0.5
+    # gives subset monotonicity.  Measured at sf1 against the HOF-join
+    # pair pass: 16.8 s → 3.1 s per call, identical kept count.
     kept_lo = materialize(
-        semantic_dedup(emb, cents, threshold=0.5, engine="blas").select("vec_id")
+        semantic_dedup(emb, cents, threshold=0.5).select("vec_id")
     )
     kept_hi = materialize(
-        semantic_dedup(emb, cents, threshold=0.6, engine="blas").select("vec_id")
+        semantic_dedup(emb, cents, threshold=0.6).select("vec_id")
     )
     n_lo = kept_lo.count()
     n_hi = kept_hi.count()
@@ -1235,15 +1235,13 @@ def s26_data_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_est_sql() -> str:
-    from .suite_ext import _BANDED_SQL, _SIG_CTE
-
     matches = " + ".join(
         f"(CASE WHEN s1.s{i} = s2.s{i} THEN 1 ELSE 0 END)" for i in range(16)
     )
     return f"""
-WITH {_SIG_CTE},
+WITH {SIG_CTE},
 banded AS (
-{_BANDED_SQL}
+{BANDED_SQL}
 ),
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2

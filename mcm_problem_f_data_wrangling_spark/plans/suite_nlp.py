@@ -24,17 +24,13 @@ from pyspark.sql.functions import broadcast
 
 from ..functions.textfn import portable_hash64, strict_word_shingles, tokens
 from ..materialize import materialize
-from .base import QUERIES, TOKS, query, spread, table
+from .base import BANDED_SQL, H16, QUERIES, SIG_CTE, TOKS, query, spread, table
 
 # single source of truth for the oracle's stopword literal — mirrors
 # functions.textfn.LANG_MARKERS['en'] (what the Spark side resolves)
 from ..functions.textfn import LANG_MARKERS as _LM  # noqa: E402
 
 _EN_MARKERS_SQL = "[" + ", ".join(f"'{w}'" for w in _LM["en"]) + "]"
-
-from .suite_ext import _BANDED_SQL as _BANDS_SQL  # noqa: E402 — shared LSH banding oracle fragment
-from .suite_ext import _H16  # noqa: E402 — shared 16-bit md5 token-hash oracle fragment
-from .suite_ext import _SIG_CTE as _SIG_CTE_NLP  # noqa: E402 — shared md5-seeded MinHash oracle CTE
 
 # BM25 constants (Robertson/Okapi defaults)
 _K1, _B = 1.2, 0.75
@@ -795,7 +791,7 @@ def x_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lower-id batch-mate (the order-free within-batch rule).  All "
     "hashing is seeded md5 → bit-identical oracle.",
     f"""
-WITH {_SIG_CTE_NLP},
+WITH {SIG_CTE},
 banded AS (
   SELECT doc_id, 0 AS band_idx, concat_ws('|', s0, s1) AS band_key FROM sig
   UNION ALL SELECT doc_id, 1 AS band_idx, concat_ws('|', s2, s3) AS band_key FROM sig
@@ -1105,9 +1101,9 @@ def x_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Set sizes/intersections are exact integers; each ratio is one "
     "IEEE divide.",
     f"""
-WITH {_SIG_CTE_NLP},
+WITH {SIG_CTE},
 banded AS (
-  {_BANDS_SQL}
+  {BANDED_SQL}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1548,7 +1544,7 @@ def x_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks_t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
 h AS (
   SELECT doc_id, len(toks) AS n,
-         list_transform(toks, t -> {_H16('t')}) AS th
+         list_transform(toks, t -> {H16('t')}) AS th
   FROM toks_t
 ),
 sh AS (

@@ -8,7 +8,8 @@ small normalization layer (``sources.readers.normalize_columns``) for
 the alias-resolution role ``find_col`` played.
 
 Two families:
-- CES-shaped fixtures (FIXTURES.md §1-7): the reference's own tables.
+- CES-shaped frames (FIXTURES.md §5-7): the reference's collapsed series,
+  exog and extract outputs.
 - Driver testdata (TESTDATA.md): TPC-H-ish parquet; schemas recorded
   here for documentation/validation (parquet is self-describing).
 """
@@ -33,35 +34,7 @@ def _s(*fields: tuple[str, object]) -> StructType:
     return StructType([StructField(n, t, True) for n, t in fields])
 
 
-# --- CES-shaped fixtures (FIXTURES.md; mirror bls_ces/load_CES_pandas.py:21-27) ---
-
-# fact table: one row per (series_id, year, period); all-string on load
-# exactly like the reference (load_CES_pandas.py:63 dtype="string").
-CES_DATA = _s(
-    ("series_id", StringType()),
-    ("year", StringType()),
-    ("period", StringType()),
-    ("value", StringType()),
-)
-
-# bridge dimension series_id -> (industry_code, data_type_code, seasonal)
-CES_SERIES = _s(
-    ("series_id", StringType()),
-    ("industry_code", StringType()),
-    ("data_type_code", StringType()),
-    ("seasonal", StringType()),
-)
-
-CES_INDUSTRY = _s(
-    ("industry_code", StringType()),
-    ("naics_code", StringType()),
-    ("industry_name", StringType()),
-)
-
-CES_DATATYPE = _s(
-    ("data_type_code", StringType()),
-    ("data_type_text", StringType()),
-)
+# --- CES-shaped frames (FIXTURES.md) ---
 
 # collapsed per-career monthly series (prep_CES_pandas.py:69-102 output)
 CAREER_MONTHLY = _s(

@@ -183,24 +183,6 @@ def download_file(name: str, dest_dir: str, base_url: str) -> str:
     return dest
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: "StructType | str | None" = None
-) -> DataFrame:
-    """JSON-lines scan — the lingua franca of LLM training corpora
-    (engine extension; the reference has no JSON surface).
-
-    Pass an explicit ``schema`` at scale: inference costs a full extra
-    pass over the data, and a drifting inferred schema breaks
-    downstream plans.  JSONL is splittable line-by-line, so the scan
-    parallelizes like CSV; re-encode to parquet (``write_parquet``)
-    after ingest — JSON decode is the most expensive scan Spark has.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_jsonl_permissive(
     spark: SparkSession,
     path: str,

@@ -1,7 +1,6 @@
-"""Streaming running totals via ``transformWithStateInPandas`` —
-Spark 4's arbitrary-stateful-processing API (SPARK-46815, the
-successor to ``applyInPandasWithState``: typed state variables,
-optional per-state TTL, timers).
+"""Streaming running totals via ``applyInPandasWithState`` —
+arbitrary stateful processing with a ``GroupState`` per key
+(Arrow-batched Python, the engine sessionize/drift also run on).
 
 Engine extension (the reference is pure batch, SURVEY.md §2.8); the
 pipeline use case is live ingest accounting — per-source running
@@ -9,9 +8,9 @@ document/byte totals that downstream curation mixes read without
 rescanning the corpus.
 
 Per key the state is exactly one (count, total) pair — O(1) per key
-regardless of stream length, watermark-free (totals never expire
-unless a TTL is configured).  Output mode is Update: each micro-batch
-emits one refreshed row per key seen in that batch.
+regardless of stream length, watermark-free (totals never expire).
+Output mode is Update: each micro-batch emits one refreshed row per
+key seen in that batch.
 
 Batch equivalence: on any ordered replay of the same rows, the final
 emitted row per key equals the batch ``groupBy(key).agg(count, sum)``
@@ -21,116 +20,23 @@ emitted row per key equals the batch ``groupBy(key).agg(count, sum)``
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql.streaming.stateful_processor import TimerValues
 
 _STATE_SCHEMA = "cnt LONG, total DOUBLE"
 
 
-class RunningTotalsProcessor(StatefulProcessor):
-    """count + sum per key, ValueState-backed, optional TTL."""
-
-    def __init__(self, value_col: str, ttl_ms: int | None = None) -> None:
-        self._value_col = value_col
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState(
-            "totals", _STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues: "TimerValues"
-    ) -> Iterator[pd.DataFrame]:
-        cnt, total = (
-            self._totals.get() if self._totals.exists() else (0, 0.0)
-        )
-        for pdf in rows:
-            v = pdf[self._value_col]
-            cnt += int(v.count())  # non-null, matching batch F.count(col)
-            total += float(v.sum()) if v.count() else 0.0
-        self._totals.update((cnt, total))
-        yield pd.DataFrame(
-            {"key": [key[0]], "cnt": [cnt], "total": [total]}
-        )
-
-    def close(self) -> None:  # nothing to release
-        pass
-
-
-def _has_protobuf() -> bool:
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
 def running_totals_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    value_col: str,
-    ttl_ms: int | None = None,
-    api: str = "auto",
+    stream_df: DataFrame, key_col: str, value_col: str
 ) -> DataFrame:
     """Per-key running (count, sum) over a stream.
 
     Output: (key, cnt, total), one refreshed row per key per
-    micro-batch (Update mode).  ``ttl_ms`` ages out idle keys' state
-    (RocksDB/HDFS state store hygiene for unbounded key spaces —
-    without it, per-key state lives forever by design).
-
-    ``api`` picks the stateful engine:
-
-    - ``'tws'`` — ``transformWithStateInPandas`` (Spark 4: typed state
-      variables, TTL, timers).  Its state-server protocol speaks
-      protobuf between the JVM and the Python workers; this container
-      ships PySpark without the ``protobuf`` package, so the query
-      would crash at stream start with an opaque
-      STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — fail fast with
-      a clear message instead (the openpyxl-gated Excel sink policy).
-    - ``'gst'`` — ``applyInPandasWithState`` (GroupState, Arrow-only —
-      no protobuf needed; the engine sessionize/drift already run in
-      this container).  Same state, same emitted rows; no TTL support
-      (GroupState has timeouts, not per-state TTL).
-    - ``'auto'`` (default) — ``tws`` when protobuf is importable,
-      else ``gst``; requesting ``ttl_ms`` forces ``tws``.
+    micro-batch (Update mode).  Per-key state lives forever by design
+    (``GroupState`` with no timeout).
     """
-    if api not in ("auto", "tws", "gst"):
-        raise ValueError(f"unknown api {api!r}")
-    if api == "auto":
-        api = "tws" if (_has_protobuf() or ttl_ms is not None) else "gst"
-    if api == "gst" and ttl_ms is not None:
-        raise ValueError(
-            "ttl_ms requires the transformWithState engine (api='tws'); "
-            "GroupState has no per-state TTL"
-        )
-    if api == "tws" and not _has_protobuf():
-        # only suggest the GroupState escape hatch when it can actually
-        # serve the request — with ttl_ms set, api='gst' would raise
-        # ValueError (GroupState has no per-state TTL), a dead end
-        escape = (
-            "install protobuf to enable this engine (per-state TTL has "
-            "no GroupState equivalent)"
-            if ttl_ms is not None
-            else "install protobuf to enable this engine, or use "
-            "api='gst' (applyInPandasWithState — runs here)"
-        )
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            f"(its JVM<->Python state-server protocol); {escape}. The "
-            "batch twin (running_totals_batch) is unaffected."
-        )
     if key_col == value_col:
         raise ValueError(
             f"key_col and value_col must differ (both {key_col!r})"
@@ -141,35 +47,26 @@ def running_totals_stream(
             "grouping column in the output schema)"
         )
     # declared key type must match the actual grouping column's, or
-    # the Arrow/state-server conversion crashes mid-query (an INT key
-    # emitted against a declared STRING field)
+    # the Arrow conversion crashes mid-query (an INT key emitted
+    # against a declared STRING field)
     key_sql_type = stream_df.schema[key_col].dataType.simpleString()
     # select (not rename) to a fresh 2-col frame: withColumnRenamed
     # would leave a duplicate/ambiguous 'key' if the input already
     # has one, and pruning to exactly (key, value) also keeps the
-    # state-server Arrow batches minimal
+    # Arrow batches minimal
     from pyspark.sql import functions as F
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     pruned = stream_df.select(
         F.col(key_col).alias("key"), F.col(value_col).alias(value_col)
     )
     out_schema = f"key {key_sql_type}, cnt LONG, total DOUBLE"
-    if api == "tws":
-        return pruned.groupBy("key").transformWithStateInPandas(
-            RunningTotalsProcessor(value_col, ttl_ms),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        # identical arithmetic to RunningTotalsProcessor.handleInputRows
         cnt, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             v = pdf[value_col]
-            cnt += int(v.count())
+            cnt += int(v.count())  # non-null, matching batch F.count(col)
             total += float(v.sum()) if v.count() else 0.0
         state.update((cnt, total))
         yield pd.DataFrame({"key": [key[0]], "cnt": [cnt], "total": [total]})
@@ -180,19 +77,4 @@ def running_totals_stream(
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_totals_batch(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Batch twin: the final state every key converges to."""
-    from pyspark.sql import functions as F
-
-    return (
-        df.groupBy(F.col(key_col).alias("key"))
-        .agg(
-            F.count(value_col).alias("cnt"),
-            # running totals start at 0.0, so an all-null key is 0.0
-            # here too (not SQL SUM's NULL-of-empty)
-            F.coalesce(F.sum(value_col).cast("double"), F.lit(0.0)).alias("total"),
-        )
     )

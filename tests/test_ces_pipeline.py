@@ -16,12 +16,13 @@ from mcm_problem_f_data_wrangling_spark.operators.dictionary import (
     search_industries,
 )
 from mcm_problem_f_data_wrangling_spark.operators.extract import extract_proxy_dataset
-from mcm_problem_f_data_wrangling_spark.schemas import (
-    CES_DATA,
-    CES_DATATYPE,
-    CES_INDUSTRY,
-    CES_SERIES,
-)
+
+# the reference's raw CES tables, all-string on load exactly like the
+# reference (bls_ces/load_CES_pandas.py:21-27, :63 dtype="string")
+CES_DATA = "series_id string, year string, period string, value string"
+CES_SERIES = "series_id string, industry_code string, data_type_code string, seasonal string"
+CES_INDUSTRY = "industry_code string, naics_code string, industry_name string"
+CES_DATATYPE = "data_type_code string, data_type_text string"
 
 EMP = "ALL EMPLOYEES, THOUSANDS"
 EARN = "AVERAGE HOURLY EARNINGS OF ALL EMPLOYEES"

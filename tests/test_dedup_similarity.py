@@ -246,47 +246,12 @@ def test_trainers_deterministic_under_repartition(spark):
     assert cb1 == cb2
 
 
-def test_ivf_knn_join_blas_matches_sql_engine(spark):
-    """The BLAS kNN-join engine must produce row-identical results to
-    the zero-Python SQL engine — same candidate generation (cell
-    cogroup), same (cos desc, nid asc) ranking — in both the own-cell
-    and trained-multi-probe configurations."""
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        ivf_knn_join,
-        ivf_knn_join_blas,
-        train_ivf_cells,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(map(tuple, ivf_knn_join(emb, emb, k=3).collect()))
-    b = sorted(map(tuple, ivf_knn_join_blas(emb, emb, k=3).collect()))
-    assert a == b and a
-
-    _, cents = train_ivf_cells(emb, k=5, iters=2)
-    qs = emb.limit(20)
-    a = sorted(
-        map(
-            tuple,
-            ivf_knn_join(qs, emb, k=3, centroids=cents, n_probe=2).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            ivf_knn_join_blas(qs, emb, k=3, centroids=cents, n_probe=2).collect(),
-        )
-    )
-    assert a == b and a
-
-
 def test_ivf_knn_join_blas_tie_at_k_boundary(spark):
     """Exact-duplicate embeddings (the dedup domain) create cosine
-    ties straddling the k cutoff; both engines must resolve them the
-    same way (lowest neighbor id wins) — argpartition alone picks an
-    arbitrary tied subset, so the BLAS engine widens the boundary."""
+    ties straddling the k cutoff; the (cos desc, nid asc) ranking
+    resolves them to the lowest neighbor ids."""
     from mcm_problem_f_data_wrangling_spark.operators.similarity import (
         ivf_knn_join,
-        ivf_knn_join_blas,
     )
 
     # one cell; ids 10..40 share a vector (all pairwise cos == 1.0),
@@ -294,24 +259,19 @@ def test_ivf_knn_join_blas_tie_at_k_boundary(spark):
     # boundary — the winners must be the two LOWEST other ids.
     rows = [(i, [1.0, 0.0], 0) for i in (40, 30, 20, 10)] + [(50, [0.0, 1.0], 0)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    a = sorted(map(tuple, ivf_knn_join(df, df, k=2).collect()))
-    b = sorted(map(tuple, ivf_knn_join_blas(df, df, k=2).collect()))
-    assert a == b
     by_q = {}
-    for qid, nid, _ in b:
+    for qid, nid, _ in ivf_knn_join(df, df, k=2).collect():
         by_q.setdefault(qid, []).append(nid)
     assert sorted(by_q[40]) == [10, 20]  # lowest tied ids win
+    assert sorted(by_q[10]) == [20, 30]
 
 
 def test_ivf_knn_join_zero_norm_query_both_engines_drop(spark):
-    """A zero-norm QUERY vector (failed encode / padding) must emit
-    zero rows from BOTH engines: the BLAS engine masks it out of the
-    matmul, and the SQL engine's NULL cosines are filtered before
-    ranking (_knn_topk) — without that filter the SQL engine emitted
-    k NULL-cosine rows for the query and the engines diverged."""
+    """A zero-norm vector (failed encode / padding) is never a query
+    hit and never a neighbor: its NULL unit vector is filtered before
+    the pair join, so it emits zero rows."""
     from mcm_problem_f_data_wrangling_spark.operators.similarity import (
         ivf_knn_join,
-        ivf_knn_join_blas,
     )
 
     rows = [
@@ -322,9 +282,11 @@ def test_ivf_knn_join_zero_norm_query_both_engines_drop(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
     a = sorted(map(tuple, ivf_knn_join(df, df, k=2).collect()))
-    b = sorted(map(tuple, ivf_knn_join_blas(df, df, k=2).collect()))
-    assert a == b and a
+    assert a
     assert not any(q == 3 or n == 3 for q, n, _ in a)
+    # every other query still gets its k neighbors
+    assert sorted({q for q, _, _ in a}) == [1, 2, 4]
+    assert len(a) == 6
 
 
 def test_trainer_sample_is_hash_ordered_not_id_prefix(spark):
@@ -601,15 +563,15 @@ class TestHammingNeardup:
 def test_cell_cap_row_identity_on_planted_celebrity_cell(spark):
     """Hot-cell skew cap (_apply_cell_cap): a planted celebrity cell
     (one cell holding ~90% of the corpus) sub-shards under cell_cap,
-    and the output of BOTH kNN engines and of semantic_dedup must be
-    row-identical with the cap on or off — every pair still meets
-    exactly once, just spread over ceil(size/cap) tasks."""
+    and the output of ivf_knn_join and of the HOF-join SemDeDup
+    reference must be row-identical with the cap on or off — every
+    pair still meets exactly once, just spread over ceil(size/cap)
+    tasks."""
     import numpy as np
 
     from mcm_problem_f_data_wrangling_spark.operators.similarity import (
+        _semantic_dedup_sql,
         ivf_knn_join,
-        ivf_knn_join_blas,
-        semantic_dedup,
     )
 
     rng = np.random.RandomState(7)
@@ -626,18 +588,14 @@ def test_cell_cap_row_identity_on_planted_celebrity_cell(spark):
     plain = sorted(map(tuple, ivf_knn_join(df, df, k=3).collect()))
     capped = sorted(map(tuple, ivf_knn_join(df, df, k=3, cell_cap=64).collect()))
     assert plain == capped and plain
-    capped_blas = sorted(
-        map(tuple, ivf_knn_join_blas(df, df, k=3, cell_cap=64).collect())
-    )
-    assert plain == capped_blas
 
     cents = [[1.0, 0.0], [0.0, 1.0]]
     kept_plain = sorted(
-        r["vec_id"] for r in semantic_dedup(df, cents, threshold=0.999).collect()
+        r["vec_id"] for r in _semantic_dedup_sql(df, cents, threshold=0.999).collect()
     )
     kept_capped = sorted(
         r["vec_id"]
-        for r in semantic_dedup(df, cents, threshold=0.999, cell_cap=64).collect()
+        for r in _semantic_dedup_sql(df, cents, threshold=0.999, cell_cap=64).collect()
     )
     assert kept_plain == kept_capped and 0 < len(kept_plain) < 400
 
@@ -676,42 +634,6 @@ def test_cell_cap_actually_sub_shards(spark):
         .collect()
     }
     assert reps[0] == 6.0 and reps[1] == 1.0
-
-
-def test_knn_join_auto_engine_routing(spark):
-    """engine='auto' must pick BLAS on the big-cell shape and SQL on
-    the many-small-cells shape (choose_knn_engine crossover), and the
-    routed result must be row-identical to both engines."""
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        choose_knn_engine,
-        ivf_knn_join,
-        ivf_knn_join_blas,
-        knn_join,
-    )
-
-    # pure crossover rule on the two measured shapes (SCALE.md)
-    assert choose_knn_engine(20000, 10) == "blas"   # 2k-row cells
-    assert choose_knn_engine(2000, 200) == "sql"    # 10-row cells
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    auto = sorted(map(tuple, knn_join(emb, emb, k=3).collect()))
-    assert knn_join.last_engine in ("sql", "blas")
-    assert auto == sorted(map(tuple, ivf_knn_join(emb, emb, k=3).collect()))
-    assert auto == sorted(map(tuple, ivf_knn_join_blas(emb, emb, k=3).collect()))
-
-    # big-cell shape (everything in one cell) routes to BLAS
-    one_cell = emb.withColumn("label", F.lit(0))
-    knn_join(one_cell, one_cell, k=2).collect()
-    assert knn_join.last_engine == "blas"
-    # many-small-cells shape routes to SQL
-    shredded = emb.withColumn("label", (F.col("vec_id") % 100).cast("int"))
-    knn_join(shredded, shredded, k=2).collect()
-    assert knn_join.last_engine == "sql"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown engine"):
-        knn_join(emb, emb, engine="gpu")
 
 
 def test_minhash_jaccard_pairs_subset_of_exact_with_true_values(spark):

@@ -183,7 +183,7 @@ def test_ml_grid_all_finite():
 
 
 # ---------------------------------------------------------------------------
-# Spark end-to-end (default method is now 'ml')
+# Spark end-to-end
 # ---------------------------------------------------------------------------
 
 
@@ -204,13 +204,6 @@ def test_ml_grid_spark_plan(spark):
     assert sht.sort_values("step")["forecast"].tolist() == pytest.approx(
         [118 + 2.0 * h for h in range(1, 5)]
     )
-
-
-def test_method_validation():
-    import pandas as pd  # noqa: F401
-
-    with pytest.raises(ValueError, match="method"):
-        fit_best_arma_forecast(None, "g", "t", "v", method="exact")
 
 
 # ---------------------------------------------------------------------------
@@ -263,8 +256,7 @@ def test_exog_ml_recovers_beta_jointly():
 
 
 def test_exog_fit_spark_ml_default(spark):
-    """fit_arma_exog_params defaults to the joint ML estimator and
-    keeps the rw_drift degradation for short series."""
+    """fit_arma_exog_params runs the joint ML estimator and keeps the rw_drift degradation for short series."""
     from mcm_problem_f_data_wrangling_spark.operators.forecast import (
         fit_arma_exog_params,
     )

@@ -271,57 +271,19 @@ def test_id_gap_detection_on_gapped_ids(spark, tmp_path):
 
 
 def test_semantic_dedup_blas_matches_hof(spark):
-    """The BLAS per-cell path and the HOF join path implement the SAME
-    order-free survivor rule — identical kept sets."""
+    """The BLAS per-cell path and the HOF join reference implement the
+    SAME order-free survivor rule — identical kept sets."""
     from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        semantic_dedup,
-        semantic_dedup_blas,
+        _semantic_dedup_sql,
         train_ivf_cells,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     _, cents = train_ivf_cells(emb, k=8, iters=2)
     for thr in (0.3, 0.5, 0.9):
-        a = {r["vec_id"] for r in semantic_dedup(emb, cents, threshold=thr).collect()}
-        b = {r["vec_id"] for r in semantic_dedup_blas(emb, cents, threshold=thr).collect()}
+        a = {r["vec_id"] for r in _semantic_dedup_sql(emb, cents, threshold=thr).collect()}
+        b = {r["vec_id"] for r in semantic_dedup(emb, cents, threshold=thr).collect()}
         assert a == b
-
-
-def test_semantic_dedup_auto_routes_on_cell_stats(spark):
-    """engine='auto' mirrors knn_join: avg cell below the crossover →
-    the zero-Python SQL engine; above it → the BLAS Gram engine; the
-    kept set is identical on both routes (row-identity is what makes
-    routing safe)."""
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        KNN_BLAS_MIN_AVG_CELL,
-        semantic_dedup,
-        train_ivf_cells,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    n = emb.count()
-    # many cells → tiny avg cell → SQL
-    _, cents_many = train_ivf_cells(emb, k=8, iters=2)
-    assert n / 8 < KNN_BLAS_MIN_AVG_CELL
-    kept_sql = {
-        r["vec_id"] for r in semantic_dedup(emb, cents_many, threshold=0.5).collect()
-    }
-    assert semantic_dedup.last_engine == "sql"
-    # one cell → avg cell = n ≥ crossover → BLAS
-    _, cents_one = train_ivf_cells(emb, k=1, iters=1)
-    assert n / 1 >= KNN_BLAS_MIN_AVG_CELL
-    semantic_dedup(emb, cents_one, threshold=0.5).collect()
-    assert semantic_dedup.last_engine == "blas"
-    # row-identity across the two engines on the SAME cells
-    kept_blas = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            emb, cents_many, threshold=0.5, engine="blas"
-        ).collect()
-    }
-    assert kept_sql == kept_blas
-    with pytest.raises(ValueError, match="unknown engine"):
-        semantic_dedup(emb, cents_many, engine="gpu")
 
 
 def test_theil_sen_matches_numpy_and_resists_outlier(spark, tmp_path):

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mcm_problem_f_data_wrangling_spark.operators.quality import (
@@ -170,39 +169,25 @@ class TestBoilerplateRemoval:
         assert all(r["n_boiler"] == 0 for r in out)
         assert {r["cleaned_text"] for r in out} == {"a b c d", "e f g h"}
 
-    def test_boiler_cap_raises_on_explicit_broadcast(self, spark):
-        from mcm_problem_f_data_wrangling_spark.operators.quality import (
-            boilerplate_removal,
-        )
-
-        df = spark.createDataFrame(
-            [(i, "same text here") for i in range(6)], ["doc_id", "text"]
-        )
-        with pytest.raises(ValueError, match="max_boiler_set"):
-            boilerplate_removal(
-                df, seg_tokens=3, max_df=1, max_boiler_set=0, strategy="broadcast"
-            )
-
     def test_auto_falls_back_to_anti_join_past_cap(self, spark):
-        """auto with a 0 cap must route to the anti-join path and still
-        produce the broadcast path's exact rows."""
+        """A boilerplate set larger than max_boiler_set routes to the
+        anti-join path and still produces the broadcast path's exact
+        rows; a set exactly at the cap stays on the broadcast path."""
         from mcm_problem_f_data_wrangling_spark.operators.quality import (
             boilerplate_removal,
         )
 
-        docs = self._docs(spark)
-        via_bcast = {
-            tuple(r)
-            for r in boilerplate_removal(
-                docs, seg_tokens=2, max_df=4, strategy="broadcast"
-            ).collect()
-        }
-        via_anti = {
-            tuple(r)
-            for r in boilerplate_removal(
-                docs, seg_tokens=2, max_df=4, max_boiler_set=0, strategy="auto"
-            ).collect()
-        }
+        def run(cap):
+            out = boilerplate_removal(
+                self._docs(spark), seg_tokens=2, max_df=4, max_boiler_set=cap
+            )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            return {tuple(r) for r in out.collect()}, "LeftAnti" in plan
+
+        # the set is {"hdr foot"}: one segment
+        via_bcast, bcast_anti = run(1)
+        via_anti, anti_anti = run(0)
+        assert not bcast_anti and anti_anti
         assert via_anti == via_bcast
 
     def test_anti_join_equivalence_with_pure_boiler_doc(self, spark):
@@ -218,14 +203,17 @@ class TestBoilerplateRemoval:
             map(
                 tuple,
                 boilerplate_removal(
-                    docs, seg_tokens=2, max_df=4, strategy="anti_join"
+                    docs, seg_tokens=2, max_df=4, max_boiler_set=0
                 ).collect(),
             )
         )
         assert a == b
+        # the pure-boilerplate doc survives the anti-join as an EMPTY doc
+        pure = [r for r in b if r[0] == 6]
+        assert pure == [(6, 2, 2, "", 1.0)]
 
     def test_auto_aggregates_segments_once(self, spark):
-        """'auto' must materialize the boilerplate table BEFORE the
+        """The boilerplate table must be materialized BEFORE the
         decision count — the returned plan (either path) reads the
         checkpointed table, not a second explode+groupBy.  Without the
         localCheckpoint the count() action and the removal path each
@@ -238,23 +226,12 @@ class TestBoilerplateRemoval:
         # force the anti-join route: the returned plan JOINS seg_df, so
         # a recomputed (non-checkpointed) seg_df would show up as a
         # count_distinct aggregate in the plan
-        out = boilerplate_removal(
-            docs, seg_tokens=2, max_df=4, max_boiler_set=0, strategy="auto"
-        )
+        out = boilerplate_removal(docs, seg_tokens=2, max_df=4, max_boiler_set=0)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" in plan, "anti-join side must be the checkpoint"
         assert "count(distinct" not in plan.lower().replace(" ", ""), (
             "segment df-count aggregate recomputed in the removal plan"
         )
-
-    def test_unknown_strategy_rejected(self, spark):
-        from mcm_problem_f_data_wrangling_spark.operators.quality import (
-            boilerplate_removal,
-        )
-
-        df = spark.createDataFrame([(0, "a b")], ["doc_id", "text"])
-        with pytest.raises(ValueError, match="strategy"):
-            boilerplate_removal(df, strategy="bogus")
 
 
 def test_read_parquet_evolving_merges_schemas(spark, tmp_path):

@@ -240,28 +240,6 @@ def test_media_repartition_hint_sizes_by_bytes(media):
     assert out.rdd.getNumPartitions() == -(-n_rows // 4)
 
 
-def test_jsonl_round_trip_partitioned(spark, tmp_path):
-    from mcm_problem_f_data_wrangling_spark.sources.readers import read_jsonl
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "docs_jsonl")
-    docs.write.partitionBy("lang").json(path)
-    import glob as _g
-
-    assert _g.glob(path + "/lang=*"), "expected hive-style partition dirs"
-    back = read_jsonl(spark, path, schema="doc_id long, text string, source string, n_chars long, lang string")
-    assert back.count() == docs.count()
-    a = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    b = {r["lang"]: r["n"] for r in back.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert a == b
-    # partition pruning: a lang filter reads only that directory
-    one = next(iter(a))
-    pruned = read_jsonl(
-        spark, path, schema="doc_id long, text string, source string, n_chars long, lang string"
-    ).filter(F.col("lang") == one)
-    assert pruned.count() == a[one]
-
-
 def test_compact_parquet_reduces_files(spark, tmp_path):
     from mcm_problem_f_data_wrangling_spark.sources.writers import compact_parquet
     import glob as _g

@@ -415,37 +415,15 @@ def test_decontaminate_stream_matches_batch_anti_join(spark, tmp_path_factory):
     assert all(i % 7 not in (1, 4) for i in got)
 
 
-def _has_protobuf() -> bool:
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-_HAS_PROTOBUF = _has_protobuf()
-
-
 def test_transform_with_state_running_totals_matches_batch(
     spark, tmp_path_factory
 ):
-    """Spark-4 transformWithStateInPandas: per-key running (count,sum)
-    converges to the batch aggregate; Update mode emits a refreshed
-    row per key per micro-batch, so the LAST row per key is the
-    total.  Two files force two micro-batches (maxFilesPerTrigger=1)
-    to exercise state carry-over across batches.
-
-    Env gate: the transformWithState state-server protocol needs
-    protobuf, absent from this container — in that case assert the
-    operator fails FAST with the documented message (not the opaque
-    mid-query crash) and check the processor logic + batch twin
-    directly."""
-    import pandas as pd
-
+    """Stateful per-key running (count,sum) converges to the batch
+    aggregate; Update mode emits a refreshed row per key per
+    micro-batch, so the LAST row per key is the total.  Two files
+    force two micro-batches (maxFilesPerTrigger=1) to exercise state
+    carry-over across batches."""
     from mcm_problem_f_data_wrangling_spark.streaming.running import (
-        RunningTotalsProcessor,
-        running_totals_batch,
         running_totals_stream,
     )
 
@@ -456,10 +434,17 @@ def test_transform_with_state_running_totals_matches_batch(
     spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(str(d / "f1"))
     spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(str(d / "f2"))
 
+    # the batch twin: running totals start at 0.0, so an all-null key
+    # converges to 0.0 (not SQL SUM's NULL-of-empty)
     both = spark.createDataFrame(rows1 + rows2, schema)
     want = {
-        r["key"]: (r["cnt"], r["total"])
-        for r in running_totals_batch(both, "src", "value").collect()
+        r["src"]: (r["cnt"], r["total"])
+        for r in both.groupBy("src")
+        .agg(
+            F.count("value").alias("cnt"),
+            F.coalesce(F.sum("value"), F.lit(0.0)).alias("total"),
+        )
+        .collect()
     }
     assert want["a"] == (3, 7.0) and want["b"] == (2, 40.0) and want["c"] == (0, 0.0)
 
@@ -469,72 +454,17 @@ def test_transform_with_state_running_totals_matches_batch(
         .option("recursiveFileLookup", "true")
         .parquet(str(d))
     )
-
-    # the GroupState engine runs in EVERY environment (Arrow-only, no
-    # protobuf): drive it end-to-end across two micro-batches and the
-    # last emitted row per key must equal the batch aggregate
-    gst = running_totals_stream(stream, "src", "value", api="gst")
-    assert gst.isStreaming
-    qg = (
-        gst.writeStream.format("memory")
+    out = running_totals_stream(stream, "src", "value")
+    assert out.isStreaming
+    q = (
+        out.writeStream.format("memory")
         .queryName("gst_totals")
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    qg.awaitTermination(120)
-    last = {}
-    for r in spark.sql("SELECT * FROM gst_totals").collect():
-        last[r["key"]] = (r["cnt"], r["total"])
-    assert last == want
-    # TTL is a transformWithState-only capability — explicit error
-    with pytest.raises(ValueError, match="ttl_ms"):
-        running_totals_stream(stream, "src", "value", ttl_ms=1000, api="gst")
-
-    if not _HAS_PROTOBUF:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            running_totals_stream(stream, "src", "value", api="tws")
-        # with ttl_ms the error must NOT suggest api='gst' (which would
-        # immediately ValueError — GroupState has no per-state TTL)
-        with pytest.raises(NotImplementedError) as ei:
-            running_totals_stream(stream, "src", "value", api="auto", ttl_ms=1000)
-        assert "api='gst'" not in str(ei.value)
-        with pytest.raises(NotImplementedError, match="api='gst'"):
-            running_totals_stream(stream, "src", "value", api="tws", ttl_ms=None)
-        # 'auto' without protobuf must route to the executable engine
-        assert running_totals_stream(stream, "src", "value").isStreaming
-        # drive the processor's own logic through a fake state handle:
-        # two "micro-batches" for key a must carry state across calls
-        class _FakeState:
-            def __init__(self):
-                self._v = None
-            def exists(self):
-                return self._v is not None
-            def get(self):
-                return self._v
-            def update(self, v):
-                self._v = v
-
-        proc = RunningTotalsProcessor("value")
-        proc._totals = _FakeState()
-        out1 = list(proc.handleInputRows(("a",), iter([pd.DataFrame({"value": [1.0, 2.0]})]), None))
-        out2 = list(proc.handleInputRows(("a",), iter([pd.DataFrame({"value": [4.0, None]})]), None))
-        assert out1[0].iloc[0].tolist() == ["a", 2, 3.0]
-        assert out2[0].iloc[0].tolist() == ["a", 3, 7.0]
-        return
-
-    out = running_totals_stream(stream, "src", "value")
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
     q.awaitTermination(120)
-
-    emitted = spark.sql("SELECT * FROM tws_totals").collect()
+    emitted = spark.sql("SELECT * FROM gst_totals").collect()
     assert len(emitted) >= 4
     last = {}
     for r in emitted:  # memory sink appends in batch order
@@ -1149,7 +1079,7 @@ def test_agg_state_checkpoint_resume_both_ways(spark, tmp_path_factory):
             .option("maxFilesPerTrigger", "2")
             .parquet(src)
         )
-        out = running_totals_stream(stream, "source", "v", api="gst")
+        out = running_totals_stream(stream, "source", "v")
         sink = f"{base}/sink_{tag}"
         q = (
             foreach_batch_idempotent_parquet(

@@ -14,7 +14,7 @@
 set -e
 cd "$(dirname "$0")/.."
 
-echo "== gate 1/9: driver-contract smoke (vanilla session, like the driver) =="
+echo "== gate 1/10: driver-contract smoke (vanilla session, like the driver) =="
 python - <<'EOF'
 import sys
 sys.path.insert(0, ".")
@@ -31,13 +31,13 @@ print(f"entry rows={len(rows)} queries={len(qs)} oracles={len(osql)}")
 spark.stop()
 EOF
 
-echo "== gate 2/9: physical-plan audit (red flags + shuffle snapshot) =="
+echo "== gate 2/10: physical-plan audit (red flags + shuffle snapshot) =="
 python tools/audit_plans.py
 
-echo "== gate 3/9: full oracle-parity mirror (sf0.001) =="
+echo "== gate 3/10: full oracle-parity mirror (sf0.001) =="
 python -m pytest tests/test_oracle_parity.py -q
 
-echo "== gate 4/9: bench smoke (one JSON line, no query > 3x its committed median) =="
+echo "== gate 4/10: bench smoke (one JSON line, no query > 3x its committed median) =="
 python - <<'EOF'
 import json, os, subprocess, sys
 
@@ -68,7 +68,7 @@ else:
     print(f"bench ok: wall={got['value']}s (no prior BENCH_r*.json to compare)")
 EOF
 
-echo "== gate 5/9: sf1 bench smoke (quadratic cliffs hide inside sf0.1 noise) =="
+echo "== gate 5/10: sf1 bench smoke (quadratic cliffs hide inside sf0.1 noise) =="
 python - <<'EOF'
 import json, os, subprocess, sys
 
@@ -104,7 +104,7 @@ else:
     print(f"sf1 bench ok: wall={got['value']}s (no prior BENCH_SF1_r*.json)")
 EOF
 
-echo "== gate 6/9: sf1 full-suite sweep (heavy-query regression anchor) =="
+echo "== gate 6/10: sf1 full-suite sweep (heavy-query regression anchor) =="
 python - <<'EOF'
 import glob, json, os, subprocess, sys
 
@@ -165,7 +165,7 @@ if unanchored:
 print(f"sf1 sweep ok: {len(got)} queries, no query >3x its {prior[-1]} anchor")
 EOF
 
-echo "== gate 7/9: commit-message wall numbers match shipped artifacts =="
+echo "== gate 7/10: commit-message wall numbers match shipped artifacts =="
 # This gate runs BEFORE the snapshot commit exists, so checking HEAD
 # would only ever validate the PREVIOUS commit's message (ADVICE r11).
 # If the prepared message is provided (COMMIT_MSG_FILE env var), the
@@ -181,10 +181,10 @@ else
          "re-run check_commit_wall.py HEAD after the snapshot commit)"
 fi
 
-echo "== gate 8/9: committed local-FileSystem jar matches its Java source =="
+echo "== gate 8/10: committed local-FileSystem jar matches its Java source =="
 python tools/build_jvm.py --check
 
-echo "== gate 9/9: materialize.py is the package's only checkpoint/persist site =="
+echo "== gate 9/10: materialize.py is the package's only checkpoint/persist site =="
 # every barrier goes through materialize(), whose barrier_scope frees
 # it at RDD level; a direct call elsewhere would escape that lifetime
 if grep -rnE 'localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(' \
@@ -193,5 +193,10 @@ if grep -rnE 'localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)|\.unpersi
     echo "FAIL: checkpoint/persist call outside materialize.py (above)"
     exit 1
 fi
+
+echo "== gate 10/10: no public package name is reached only by tests =="
+# a name only tests/ reference is code the program never runs; the
+# scan's allowlist holds the deliberate test seams, each with its reason
+python tools/check_test_only.py
 
 echo "GATE GREEN — safe to commit"

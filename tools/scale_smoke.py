@@ -216,7 +216,7 @@ def main() -> None:
             )
             return connected_components(chain.unionByName(longr)).count()
 
-        def knn_join():
+        def knn_join_100k():
             from mcm_problem_f_data_wrangling_spark.operators.similarity import (
                 ivf_knn_join,
             )
@@ -303,7 +303,7 @@ def main() -> None:
 
         def semdedup_100k():
             from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-                semantic_dedup_blas as semantic_dedup,
+                semantic_dedup,
             )
 
             vecs = spark.range(100_000).select(
@@ -486,7 +486,7 @@ def main() -> None:
         timed("range_join_1h_window_1m_x_1m", range_join)
         timed("repetition_signals_200k_docs", repetition)
         timed("connected_components_2m_nodes", connected_comp)
-        timed("ivf_knn_join_100k_x_1024cells", knn_join)
+        timed("ivf_knn_join_100k_x_1024cells", knn_join_100k)
         timed("chunking_200k_docs", chunking_200k)
         timed("inverted_index_200k_docs", invindex_200k)
         timed("interpolate_100k_series", interpolate_100k_series)

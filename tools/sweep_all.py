@@ -45,22 +45,12 @@ import traceback
 
 sys.path.insert(0, ".")
 
-from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope  # noqa: E402
-from mcm_problem_f_data_wrangling_spark.plans import REGISTRY  # noqa: E402
+from mcm_problem_f_data_wrangling_spark.plans import REGISTRY, run_noop  # noqa: E402
 from mcm_problem_f_data_wrangling_spark.session import get_spark  # noqa: E402
 
 # single-run walls above this are order-noise-dominated (+-25%
 # observed at sf1) — always re-measure median-of-3 in the warm session
 DOMINATOR_SECONDS = 8.0
-
-
-def run(spark, q, sf_dir: str) -> float:
-    """One noop-sink run of ``q``; its barriers are released after the
-    timer stops."""
-    with barrier_scope():
-        t0 = time.time()
-        q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
 
 
 def main() -> int:
@@ -86,7 +76,7 @@ def main() -> int:
     t_all = time.time()
     for name, q in REGISTRY.items():
         try:
-            times[name] = round(run(spark, q, sf_dir), 2)
+            times[name] = round(run_noop(spark, q, sf_dir), 2)
             print(json.dumps({"query": name, "seconds": times[name]}), flush=True)
         except Exception as ex:  # keep sweeping; report at the end
             failures.append(name)
@@ -117,7 +107,7 @@ def main() -> int:
         # failure in the artifact, and keep going (r9 advisor)
         try:
             for _ in range(2):
-                runs.append(round(run(spark, REGISTRY[name], sf_dir), 2))
+                runs.append(round(run_noop(spark, REGISTRY[name], sf_dir), 2))
             times[name] = sorted(runs)[1]
         except Exception as ex:
             runs.append(f"rerun-failed: {type(ex).__name__}: {ex}"[:200])

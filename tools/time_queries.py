@@ -15,12 +15,10 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mcm_problem_f_data_wrangling_spark.materialize import barrier_scope
-from mcm_problem_f_data_wrangling_spark.plans import REGISTRY
+from mcm_problem_f_data_wrangling_spark.plans import REGISTRY, run_noop
 from mcm_problem_f_data_wrangling_spark.session import get_spark
 
 
@@ -32,20 +30,13 @@ def main() -> None:
     spark = get_spark("time_queries")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(q) -> float:
-        # the query's barriers are released after the timer stops
-        with barrier_scope():
-            t0 = time.perf_counter()
-            q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
     for name in names:
         q = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"warmup: {name}")
         for _ in range(2):
-            run(q)
+            run_noop(spark, q, sf_dir)
         spark.sparkContext.setJobDescription(f"timed: {name}")
-        runs = sorted(run(q) for _ in range(n_runs))
+        runs = sorted(run_noop(spark, q, sf_dir) for _ in range(n_runs))
         med = statistics.median(runs)
         print(
             f"{name}: median={med:.3f}s runs={[round(r, 3) for r in runs]}",
