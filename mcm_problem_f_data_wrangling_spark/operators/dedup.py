@@ -235,43 +235,26 @@ def minhash_jaccard_pairs(
     )
 
 
-def simhash16(text_col: str = "text") -> Column:
-    """16-bit SimHash over word tokens (multiset-weighted).
-
-    bit_b of the hash is set when the majority of token-hashes have
-    bit_b set.  Token hash = 16 bits of md5 (portable to the oracle).
-    """
-    toks = tokens(text_col)
-    n = F.size(toks)
-    th = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long"))
-
-    def bit_set(bit: int):
-        # factory, not a default-arg lambda (see minhash_signature_cols)
-        return lambda h: F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1
-
-    acc = F.lit(0)
-    for b in range(16):
-        cnt = F.size(F.filter(th, bit_set(b)))
-        acc = acc + F.when(cnt * 2 > n, F.lit(1 << b)).otherwise(F.lit(0))
-    return acc.cast("long")
-
-
 def simhash16_frame(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "simhash",
 ) -> DataFrame:
-    """(id, simhash) frame — :func:`simhash16` with the token-hash
-    array projected ONCE.
+    """(id, simhash) frame: 16-bit SimHash over word tokens
+    (multiset-weighted).
 
-    The single-Column form references the md5 token-hash array in all
-    16 bit-count filters, and the tokenize+md5 transform re-evaluates
-    per reference (cross-expression CSE does not rescue interpreted
-    higher-order functions).  Projecting ``__th`` into its own column
-    first pins one evaluation — CollapseProject keeps non-cheap
-    multiply-referenced projections separate — measured 0.39 s ->
-    0.18 s on the sf0.1 corpus (r12), values identical.
+    bit_b of the hash is set when the majority of token-hashes have
+    bit_b set.  Token hash = 16 bits of md5 (portable to the oracle).
+
+    The token-hash array is projected ONCE: a single-Column form would
+    reference it in all 16 bit-count filters, and the tokenize+md5
+    transform re-evaluates per reference (cross-expression CSE does
+    not rescue interpreted higher-order functions).  Projecting
+    ``__th`` into its own column first pins one evaluation —
+    CollapseProject keeps non-cheap multiply-referenced projections
+    separate — measured 0.39 s -> 0.18 s on the sf0.1 corpus (r12),
+    values identical.
     """
     toks = tokens(text_col)
     th = F.transform(

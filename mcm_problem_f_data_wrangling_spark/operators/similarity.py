@@ -270,13 +270,16 @@ def train_ivf_cells(
     return assign_cells(df, centroids, vec_col), centroids
 
 
+# rows of a cell's Gram matrix that semantic_dedup computes at once
+_GRAM_BLOCK = 4096
+
+
 def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    block: int = 4096,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -295,9 +298,9 @@ def semantic_dedup(
     (local[32]) — this is the SemDeDup-paper shape (FAISS-style BLAS
     inside each cluster).
 
-    ``block`` bounds the Gram working set at block×cell floats, so a
-    hot cell costs memory linear in its size; pick the cell count so
-    cells fit a worker (the SemDeDup paper's own constraint).
+    ``_GRAM_BLOCK`` bounds the Gram working set at block×cell floats,
+    so a hot cell costs memory linear in its size; pick the cell count
+    so cells fit a worker (the SemDeDup paper's own constraint).
     """
     import numpy as np
     import pandas as pd
@@ -315,8 +318,8 @@ def semantic_dedup(
         norms[norms == 0] = 1.0
         U = X / norms[:, None]
         dropped = np.zeros(n, dtype=bool)
-        for lo in range(0, n, block):
-            hi = min(lo + block, n)
+        for lo in range(0, n, _GRAM_BLOCK):
+            hi = min(lo + _GRAM_BLOCK, n)
             G = U[lo:hi] @ U.T  # (hi-lo) × n
             # row i (global lo+i) vs column j: i "earlier than" j when
             # lo+i < j — mask everything else before the threshold test
@@ -335,7 +338,6 @@ def _semantic_dedup_sql(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cell_cap: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -354,14 +356,6 @@ def _semantic_dedup_sql(
 
     The cell assignment is materialized, so the pair join and the
     final anti-join share one computation.
-
-    ``cell_cap`` is the hot-cell skew guard (same mechanism as
-    :func:`ivf_knn_join`'s): a cell larger than the cap sub-shards its
-    LATER side by ``pmod(hash(id), ceil(size/cap))`` and replicates
-    the earlier side over the shards, so every (earlier, later) pair
-    of the celebrity cell still meets exactly once but over
-    ``ceil(size/cap)`` tasks.  The survivor rule is order-free, so the
-    output is row-identical with the cap on or off (pinned in tests).
     """
     from ..functions.vectors import dot_unrolled, l2_norm
 
@@ -383,40 +377,9 @@ def _semantic_dedup_sql(
         ).alias("__unit"),
     )
     a, b = unit.alias("a"), unit.alias("b")
-    if cell_cap is not None:
-        # hot-cell sub-sharding: the LATER (dropped-candidate) side
-        # carries a deterministic salt; the earlier side replicates
-        # over each cell's shard count (1 for cells within budget)
-        sizes = unit.groupBy("cell").agg(F.count(F.lit(1)).alias("__ccnt"))
-        sizes = sizes.select(
-            "cell",
-            F.greatest(
-                F.lit(1), F.ceil(F.col("__ccnt") / F.lit(float(cell_cap)))
-            ).cast("int").alias("__nsub"),
-        )
-        b = (
-            unit.join(broadcast(sizes), "cell")
-            .withColumn("__salt", F.pmod(F.hash(id_col), F.col("__nsub")))
-            .drop("__nsub")
-            .alias("b")
-        )
-        a = (
-            unit.join(broadcast(sizes), "cell")
-            .withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.col("__nsub") - 1))
-            )
-            .drop("__nsub")
-            .alias("a")
-        )
-        cond = (
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.__salt") == F.col("b.__salt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        )
-    else:
-        cond = (
-            F.col("a.cell") == F.col("b.cell")
-        ) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    cond = (F.col("a.cell") == F.col("b.cell")) & (
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
     # the O(cell²) per-pair dot, unrolled into whole-stage codegen
     # (r13): the centroid dimension is the expected vector dimension;
     # rows of any other size take the bit-identical HOF fallback

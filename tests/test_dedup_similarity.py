@@ -14,7 +14,7 @@ from mcm_problem_f_data_wrangling_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash16,
+    simhash16_frame,
 )
 from mcm_problem_f_data_wrangling_spark.operators.grid import (
     collapse_duplicate_months,
@@ -58,7 +58,7 @@ def test_minhash_lsh_finds_near_dups(corpus):
 
 
 def test_simhash_near_dups_close(corpus):
-    out = {r["doc_id"]: r["sh"] for r in corpus.select("doc_id", simhash16("text").alias("sh")).collect()}
+    out = {r["doc_id"]: r["simhash"] for r in simhash16_frame(corpus).collect()}
     assert out[1] == out[2]
     ham_near = bin(out[1] ^ out[3]).count("1")
     ham_far = bin(out[1] ^ out[4]).count("1")
@@ -563,16 +563,12 @@ class TestHammingNeardup:
 def test_cell_cap_row_identity_on_planted_celebrity_cell(spark):
     """Hot-cell skew cap (_apply_cell_cap): a planted celebrity cell
     (one cell holding ~90% of the corpus) sub-shards under cell_cap,
-    and the output of ivf_knn_join and of the HOF-join SemDeDup
-    reference must be row-identical with the cap on or off — every
-    pair still meets exactly once, just spread over ceil(size/cap)
-    tasks."""
+    and ivf_knn_join's output must be row-identical with the cap on or
+    off — every pair still meets exactly once, just spread over
+    ceil(size/cap) tasks."""
     import numpy as np
 
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        _semantic_dedup_sql,
-        ivf_knn_join,
-    )
+    from mcm_problem_f_data_wrangling_spark.operators.similarity import ivf_knn_join
 
     rng = np.random.RandomState(7)
     rows = []
@@ -588,16 +584,6 @@ def test_cell_cap_row_identity_on_planted_celebrity_cell(spark):
     plain = sorted(map(tuple, ivf_knn_join(df, df, k=3).collect()))
     capped = sorted(map(tuple, ivf_knn_join(df, df, k=3, cell_cap=64).collect()))
     assert plain == capped and plain
-
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    kept_plain = sorted(
-        r["vec_id"] for r in _semantic_dedup_sql(df, cents, threshold=0.999).collect()
-    )
-    kept_capped = sorted(
-        r["vec_id"]
-        for r in _semantic_dedup_sql(df, cents, threshold=0.999, cell_cap=64).collect()
-    )
-    assert kept_plain == kept_capped and 0 < len(kept_plain) < 400
 
 
 def test_cell_cap_actually_sub_shards(spark):

@@ -171,26 +171,25 @@ class TestBoilerplateRemoval:
 
     def test_auto_falls_back_to_anti_join_past_cap(self, spark):
         """A boilerplate set larger than max_boiler_set routes to the
-        anti-join path and still produces the broadcast path's exact
-        rows; a set exactly at the cap stays on the broadcast path."""
+        anti-join path; a set exactly at the cap stays on the broadcast
+        path.  (The two paths' rows are compared in the next test.)"""
         from mcm_problem_f_data_wrangling_spark.operators.quality import (
             boilerplate_removal,
         )
 
-        def run(cap):
+        def takes_anti_join(cap):
             out = boilerplate_removal(
                 self._docs(spark), seg_tokens=2, max_df=4, max_boiler_set=cap
             )
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            return {tuple(r) for r in out.collect()}, "LeftAnti" in plan
+            return "LeftAnti" in out._jdf.queryExecution().executedPlan().toString()
 
         # the set is {"hdr foot"}: one segment
-        via_bcast, bcast_anti = run(1)
-        via_anti, anti_anti = run(0)
-        assert not bcast_anti and anti_anti
-        assert via_anti == via_bcast
+        assert not takes_anti_join(1)
+        assert takes_anti_join(0)
 
     def test_anti_join_equivalence_with_pure_boiler_doc(self, spark):
+        """The anti-join path (cap 0) produces the default broadcast
+        path's exact rows, including the pure-boilerplate doc."""
         from mcm_problem_f_data_wrangling_spark.operators.quality import (
             boilerplate_removal,
         )

@@ -196,7 +196,7 @@ fi
 
 echo "== gate 10/10: no public package name is reached only by tests =="
 # a name only tests/ reference is code the program never runs; the
-# scan's allowlist holds the deliberate test seams, each with its reason
+# scan's allowlist holds each deliberate exception with its reason
 python tools/check_test_only.py
 
 echo "GATE GREEN — safe to commit"
