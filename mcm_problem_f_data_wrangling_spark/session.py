@@ -45,15 +45,44 @@ remaining correct on ``local[32]``:
   launches the JVM or the running JVM already loads it; a caller's
   ``spark.hadoop.fs.file.impl`` still wins.  Cluster masters keep
   Hadoop's default.
+- On a local master, a call that launches the driver JVM runs it on a
+  JDK dynamic class-data-sharing (AppCDS) archive in ``.cds/`` at the
+  checkout root.  Starting a Spark driver loads and JIT-compiles some
+  ten thousand classes; mapping them parsed and verified from the
+  archive cuts session start-up by about a third.  The archive is
+  keyed by the JDK, the launch class path (paths, sizes, mtimes) and
+  whether the driver heap is below 32 GB (compressed oops).  When the
+  key has no archive yet, the JVM records one with
+  ``-XX:ArchiveClassesAtExit`` into ``<key>.<pid>.tmp``, so it holds
+  every class the whole session loaded; at interpreter exit this
+  module closes the gateway's stdin, waits for the JVM, and renames
+  the file to ``<key>.jsa`` only if the JVM exited 0, else deletes
+  it.  Publishing is atomic because a JDK 17 JVM that maps a
+  truncated archive under ``-Xshare:auto`` dies of SIGBUS; with a
+  complete archive whose class path no longer matches it falls back
+  silently.  CDS refuses a non-empty directory on the class path,
+  and the launcher puts ``$SPARK_CONF_DIR`` there, so the launch
+  alone points it at an empty directory, and drops
+  ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` and ``SPARK_DIST_CLASSPATH``
+  -- only when each holds nothing but ``*.template`` files; otherwise,
+  and for a caller's own CDS flags, a read-only checkout, a cluster
+  master or a JVM launched elsewhere, the launch is unchanged.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 import tempfile
 import zipfile
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "mcm_problem_f_data_wrangling_spark"
@@ -65,7 +94,14 @@ LOCAL_CHECKPOINT_FILE_MANAGER = (
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 LOCAL_FILE_SYSTEM = "sparkgraft.fs.NioLocalFileSystem"
 LOCAL_FILE_SYSTEM_JAR = os.path.join(_PKG_DIR, "jvm", "spark-graft-fs.jar")
+CDS_DIR = os.path.join(os.path.dirname(_PKG_DIR), ".cds")
+# the class-path entries the launcher takes from the environment
+_LAUNCH_ENV = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 _shipped_apps: set[str] = set()
+# what the exit hook finishes: package zips to delete, and the JVM
+# recording an archive with the ``.tmp`` it writes
+_shipped_zips: set[str] = set()
+_recording: list[tuple[subprocess.Popen, str, str]] = []
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -79,7 +115,9 @@ def ship_package(spark: SparkSession) -> None:
     elsewhere — and on a real cluster the package must be shipped
     anyway.  ``addPyFile`` with a source zip is the standard deploy
     path for both cases (workers prepend SparkFiles entries to
-    ``sys.path``).  Idempotent per application.
+    ``sys.path``).  Idempotent per application.  The zip is deleted at
+    interpreter exit: the driver serves it to executors from this path
+    for as long as the SparkContext runs.
     """
     app = spark.sparkContext.applicationId
     if app in _shipped_apps:
@@ -97,6 +135,7 @@ def ship_package(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, os.path.dirname(_PKG_DIR)))
     spark.sparkContext.addPyFile(zpath)
     _shipped_apps.add(app)
+    _shipped_zips.add(zpath)
 
 
 def default_parallelism() -> int:
@@ -116,6 +155,7 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-aware defaults."""
     cores = default_parallelism()
     master = master or f"local[{cores}]"
+    memory = os.environ.get("SPARK_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -133,10 +173,11 @@ def get_spark(
         # try_cast and every nullable division uses try_divide, so the
         # suite is ANSI-neutral by construction.
         .config("spark.sql.ansi.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
     )
     conf = dict(extra_conf or {})
+    cds = None
     if master.startswith("local"):
         # no forked readlink per checkpoint rename, no forked chmod per
         # created file (module docstring)
@@ -150,9 +191,29 @@ def get_spark(
         )
         if "spark.hadoop.fs.file.impl" not in conf and _jvm_loads(LOCAL_FILE_SYSTEM):
             conf["spark.hadoop.fs.file.impl"] = LOCAL_FILE_SYSTEM
+        if _launches_jvm():
+            cds = _cds_launch(conf, conf.get("spark.driver.memory", memory))
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if cds is None:
+        return builder.getOrCreate()
+    env, archive = cds
+    saved = {k: os.environ.get(k) for k in env}
+    try:
+        _set_environ(env)
+        spark = builder.getOrCreate()
+    finally:
+        _set_environ(saved)
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if archive is not None and SparkContext._jvm is not None and proc is not None:
+        _recording.append((proc, *archive))
+    return spark
+
+
+def _launches_jvm() -> bool:
+    """Whether ``getOrCreate`` launches the driver JVM: none runs yet,
+    and none was launched before this process (``spark-submit``)."""
+    return SparkContext._jvm is None and "PYSPARK_GATEWAY_PORT" not in os.environ
 
 
 def _jvm_loads(cls: str) -> bool:
@@ -161,7 +222,142 @@ def _jvm_loads(cls: str) -> bool:
     ``extraClassPath`` just set), else asked of the running JVM.  A
     JVM launched before this process (``spark-submit``) counts as
     unable."""
+    if _launches_jvm():
+        return True
     jvm = SparkContext._jvm
-    if jvm is None:
-        return "PYSPARK_GATEWAY_PORT" not in os.environ
-    return jvm.org.apache.spark.util.Utils.classIsLoadable(cls)
+    return jvm is not None and jvm.org.apache.spark.util.Utils.classIsLoadable(cls)
+
+
+def _cds_launch(
+    conf: dict[str, str], memory: str
+) -> tuple[dict[str, str | None], tuple[str, str] | None] | None:
+    """Put a local launch on the AppCDS archive (module docstring): add
+    the JVM flags to ``conf`` and return the launch environment and,
+    when the JVM records, its ``.tmp`` and the archive to publish it
+    as; None, with ``conf`` untouched, for an unchanged launch."""
+    opts = conf.get("spark.driver.extraJavaOptions", "")
+    if re.search(r"-Xshare|SharedArchiveFile|ArchiveClassesAtExit", opts):
+        return None
+    spark_home = _find_spark_home()
+    entries = [
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf"),
+        os.environ.get("HADOOP_CONF_DIR", ""),
+        os.environ.get("YARN_CONF_DIR", ""),
+        *os.environ.get("SPARK_DIST_CLASSPATH", "").split(os.pathsep),
+    ]
+    if not all(_adds_no_class(e) for e in entries if e):
+        return None
+    empty = os.path.join(CDS_DIR, "empty")
+    try:
+        os.makedirs(empty, exist_ok=True)
+        key = _cds_key(conf.get("spark.driver.extraClassPath", ""), spark_home, memory)
+    except OSError:
+        return None
+    if key is None or not os.access(CDS_DIR, os.W_OK):
+        return None
+    env = dict.fromkeys(_LAUNCH_ENV, None) | {"SPARK_CONF_DIR": empty}
+    jsa = os.path.join(CDS_DIR, f"{key}.jsa")
+    if os.path.exists(jsa):
+        flags, archive = f"-XX:SharedArchiveFile={jsa} -Xshare:auto", None
+    elif _recording:  # this process's earlier JVM holds the recording
+        return None
+    else:
+        _remove_orphan_recordings()
+        tmp = os.path.join(CDS_DIR, f"{key}.{os.getpid()}.tmp")
+        flags, archive = f"-XX:ArchiveClassesAtExit={tmp}", (tmp, jsa)
+    conf["spark.driver.extraJavaOptions"] = f"{opts} {flags} -Xlog:cds*=off".lstrip()
+    return env, archive
+
+
+def _adds_no_class(entry: str) -> bool:
+    """Whether a launcher class-path entry is missing or a directory of
+    ``*.template`` files only (a ``dir/*`` entry stands for its jars)."""
+    path = entry.rstrip("*")
+    if not os.path.exists(path):
+        return True
+    return os.path.isdir(path) and all(n.endswith(".template") for n in os.listdir(path))
+
+
+def _cds_key(extra_class_path: str, spark_home: str, memory: str) -> str | None:
+    """A digest of the JDK, the launch class path and the heap's
+    compressed-oops class; None without a ``java`` to launch."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java:
+        return None
+    java = os.path.realpath(java)
+    jdk = os.path.dirname(os.path.dirname(java))
+    jars = os.path.join(spark_home, "jars")
+    paths = [
+        java,
+        os.path.join(jdk, "lib", "modules"),
+        os.path.join(jdk, "lib", "server", "libjvm.so"),
+        *extra_class_path.split(os.pathsep),
+        *(os.path.join(jars, n) for n in sorted(os.listdir(jars))),
+    ]
+    stamps = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+            stamps.append((p, st.st_size, st.st_mtime_ns))
+        except OSError:
+            stamps.append((p,))
+    return hashlib.sha256(repr((stamps, _heap_class(memory))).encode()).hexdigest()[:16]
+
+
+def _heap_class(memory: str) -> str:
+    """``coops`` for a heap below 32 GB, where the JVM compresses object
+    pointers and so maps a different base archive, else ``wide``."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", memory.strip().lower())
+    if m is None:
+        return memory
+    # a bare number is MiB, as Spark reads spark.driver.memory
+    mib = int(m[1]) * {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024**2}[m[2]]
+    return "coops" if mib < 32 * 1024 else "wide"
+
+
+def _set_environ(env: dict[str, str | None]) -> None:
+    for k, v in env.items():
+        if v is None:
+            os.environ.pop(k, None)
+        else:
+            os.environ[k] = v
+
+
+def _remove_orphan_recordings() -> None:
+    """Delete ``<key>.<pid>.tmp`` files whose process is gone (killed
+    before its exit hook ran)."""
+    for name in os.listdir(CDS_DIR):
+        parts = name.split(".")
+        if len(parts) == 3 and parts[2] == "tmp" and parts[1].isdigit():
+            try:
+                os.kill(int(parts[1]), 0)
+            except ProcessLookupError:
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(CDS_DIR, name))
+            except OSError:
+                pass
+
+
+def _publish(proc: subprocess.Popen, tmp: str, jsa: str) -> None:
+    """End the recording JVM (it exits on stdin EOF, dumping the archive
+    on the way) and publish its archive only after a clean exit."""
+    if proc.poll() is None:
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(120)
+    if proc.returncode == 0 and os.path.exists(tmp):
+        os.replace(tmp, jsa)
+    else:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+
+
+@atexit.register
+def _at_exit() -> None:
+    for proc, tmp, jsa in _recording:
+        _publish(proc, tmp, jsa)
+    for z in _shipped_zips:
+        with contextlib.suppress(OSError):
+            os.remove(z)
