@@ -18,17 +18,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def make_month_date(year: Column | str, month: Column | str) -> Column:
-    """First-of-month date from numeric year/month — no string round-trip.
-
-    Scale-preferred form of the reference's
-    ``year + "-" + month.zfill(2) + "-01"`` concat
-    (``bls_ces/load_CES_pandas.py:150-153``): ``make_date`` avoids
-    string allocation per row.
-    """
-    return F.make_date(_c(year).cast("int"), _c(month).cast("int"), F.lit(1))
-
-
 def synthesize_date(year: Column | str, period: Column | str) -> Column:
     """F2-F5: date from CES (year, 'Mxx' period) string pair.
 
@@ -45,26 +34,6 @@ def synthesize_date(year: Column | str, period: Column | str) -> Column:
     )
 
 
-def month_start(col: Column | str) -> Column:
-    """F6: ``to_period('M').to_timestamp(how='start')`` ≡ trunc-to-month."""
-    return F.trunc(_c(col), "month")
-
-
 def month_end(col: Column | str) -> Column:
     """F6: ``to_period('M').to_timestamp(how='M')`` ≡ last_day."""
     return F.last_day(_c(col))
-
-
-def future_month_index(last_month: Column | str, steps: int) -> Column:
-    """W13: array of the next ``steps`` month-start dates after ``last_month``.
-
-    Mirrors ``future_month_index`` (``EDA.ipynb cells 27-28``:
-    ``pd.date_range(next_month, periods=H, freq='ME')`` — month grain).
-    Pair with ``posexplode`` to get (step, month) rows.
-    """
-    base = F.trunc(_c(last_month), "month")
-    return F.sequence(
-        F.add_months(base, 1),
-        F.add_months(base, steps),
-        F.expr("interval 1 month"),
-    )

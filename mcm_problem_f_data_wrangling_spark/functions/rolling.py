@@ -24,11 +24,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def series_window(partition_cols: list[str], order_col: str = "date") -> WindowSpec:
-    """Canonical per-series ordered window (W = partitionBy(career).orderBy(date))."""
-    return Window.partitionBy(*partition_cols).orderBy(order_col)
-
-
 def _frame(w: WindowSpec, window: int) -> WindowSpec:
     return w.rowsBetween(-(window - 1), Window.currentRow)
 
@@ -56,11 +51,6 @@ def diff(col: Column | str, w: WindowSpec, periods: int = 1) -> Column:
     """W6: first difference ``x - x.shift(k)`` (``EDA.ipynb cell 25``)."""
     c = _c(col)
     return c - F.lag(c, periods).over(w)
-
-
-def seasonal_diff(col: Column | str, w: WindowSpec, period: int = 12) -> Column:
-    """W6: seasonal difference ``x - x.shift(s)`` (``EDA.ipynb cell 25``)."""
-    return diff(col, w, periods=period)
 
 
 def rolling_avg(col: Column | str, w: WindowSpec, window: int, min_periods: int | None = None) -> Column:

@@ -133,16 +133,6 @@ def strict_word_shingles(col: Column | str, k: int = 8) -> Column:
     return F.when(n >= k, out).otherwise(F.array().cast("array<string>"))
 
 
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Character n-grams (array<string>)."""
-    c = _c(col)
-    ln = F.length(c)
-    idx = F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1)))
-    return F.when(ln >= n, F.transform(idx, lambda i: F.substring(c, i, n))).otherwise(
-        F.array(c)
-    )
-
-
 def portable_hash64(col: Column | str, seed: str = "") -> Column:
     """Deterministic 60-bit integer hash reproducible in DuckDB.
 

@@ -1,12 +1,13 @@
 """Z-order (Morton) interleaving for multi-dimensional data layout.
 
-Range-clustering a table on ONE column (sources/writers.py
-``compact_parquet`` ``cluster_by``) gives tight parquet zone maps on
-that column and useless ones on every other.  Interleaving the bits
+Range-clustering a table on ONE column gives tight parquet zone maps
+on that column and useless ones on every other.  Interleaving the bits
 of k columns into a single Morton key and range-clustering on THAT
 gives every file a small k-dimensional rectangle, so min/max footer
 pruning works for predicates on ANY of the k columns — the Delta
-OPTIMIZE ZORDER BY / Iceberg sort-order primitive.
+OPTIMIZE ZORDER BY / Iceberg sort-order primitive.  The package
+computes the key (``x_zorder_locality`` buckets on it); it writes
+no z-ordered tables.
 
 The interleave is pure JVM bit arithmetic (shiftleft/and/or — stays
 inside whole-stage codegen; no UDF), deterministic, and mirrored
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -50,45 +51,3 @@ def zorder_value_sql(cols: list[str], bits: int = 16) -> str:
         for i in range(bits)
     ]
     return "(" + " | ".join(f"({t})" for t in terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_by: list[Column],
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
-    """Write parquet range-clustered on the Morton key of ``zorder_by``.
-
-    Each column is first min/max-scaled onto the full ``bits``-wide
-    range (one driver-side bounds agg) — raw interleaving of unequal-
-    width dimensions lets the wider one's high bits own the curve and
-    the narrow one gets no locality.  Linear scaling assumes roughly
-    uniform dims; heavily skewed ones want a rank (ntile) transform
-    first.  ``repartitionByRange`` on the z-value samples the key
-    distribution and assigns contiguous curve segments to files (one
-    shuffle); ``sortWithinPartitions`` keeps row groups tight inside
-    each file.  The key itself is not persisted.
-    """
-    bounds = df.agg(
-        *[
-            m(c.cast("long")).alias(f"__{kind}_{i}")
-            for i, c in enumerate(zorder_by)
-            for kind, m in (("mn", F.min), ("mx", F.max))
-        ]
-    ).first()
-    top = (1 << bits) - 1
-    scaled = []
-    for i, c in enumerate(zorder_by):
-        mn, mx = bounds[f"__mn_{i}"], bounds[f"__mx_{i}"]
-        span = max(1, mx - mn)
-        scaled.append(F.expr(f"(({c._jc.toString()} - {mn}L) * {top}L) div {span}L"))
-    z = zorder_value(scaled, bits).alias("__z")
-    out = df.withColumn("__z", z)
-    out = (
-        out.repartitionByRange(num_files, "__z")
-        if num_files
-        else out.repartitionByRange("__z")
-    )
-    out.sortWithinPartitions("__z").drop("__z").write.mode("overwrite").parquet(path)

@@ -5,7 +5,7 @@ analogue is the opaque-binary contract in ``operators/multimodal.py``):
 a large-scale training-data pipeline needs audio *content* signals,
 not just byte-level metadata — near-duplicate detection must survive
 re-encoding at a different amplitude/gain, which byte hashes (md5,
-:func:`..multimodal.phash64` fallback) cannot.
+the md5 fallback of :func:`..multimodal.compute_phash`) cannot.
 
 The pipeline here is the honest baseline of an audio-fingerprinting
 stack (Shazam-style constellation maps are the production upgrade;

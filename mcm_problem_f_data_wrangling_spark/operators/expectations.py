@@ -27,8 +27,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-REPORT_COLS = ("check_name", "n_rows", "n_violations", "passed")
-
 
 def _report_row(name: str, total: Column, violations: Column) -> Column:
     v = violations.cast("long")

@@ -126,24 +126,3 @@ def interpolate_linear(
         )
     )
     return df.withColumn(out_col, filled)
-
-
-def ensure_monthly_index(
-    df: DataFrame,
-    value_cols: list[str],
-    keys: list[str],
-    date_col: str = "date",
-    rule: str = "mean",
-    order_col: str | None = None,
-) -> DataFrame:
-    """A4 + W12 composed: month-start truncate → dedupe → gap-fill.
-
-    Parity: ``ensure_monthly_index`` (``EDA.ipynb cell 25``) — the
-    notebook's date column may be any day-of-month; everything is
-    normalized to month-start first (pandas ``to_period('M')``).
-    """
-    monthly = df.withColumn("month", F.trunc(F.col(date_col), "month"))
-    deduped = collapse_duplicate_months(
-        monthly, value_cols, keys, "month", rule, order_col
-    )
-    return force_complete_month_grid(deduped, keys, "month")

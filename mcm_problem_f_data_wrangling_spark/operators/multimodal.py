@@ -25,8 +25,6 @@ the pipeline shape (decode → feature-extract → resize/frame-sample)
 stays exercisable end-to-end on arbitrary bytes.
 
 Design for scale:
-- media rows are *heavy*; ``media_repartition_hint`` sizes partitions
-  by bytes, not rows, so one Arrow batch stays within executor memory.
 - decode runs in ``mapInPandas`` (Arrow-batched iterator, streaming
   per-batch — never materializes a whole partition).
 - metadata (byte length, content hash, magic-prefix sniff) stays
@@ -94,24 +92,6 @@ def attach_binary_metadata(df: DataFrame, payload_col: str = "payload") -> DataF
             "magic_hex": F.lower(F.hex(F.substring(p, 1, 4))),
         }
     )
-
-
-def media_repartition_hint(df: DataFrame, target_bytes_per_partition: int = 128 * 1024 * 1024, avg_payload_bytes: int = 1 * 1024 * 1024) -> DataFrame:
-    """Size partitions by payload bytes so Arrow batches fit in memory.
-
-    At 100 TB a rows-based default (e.g. 128 MB of *parquet* per task)
-    under-counts decoded size; callers pass the measured average
-    payload size and the partition count is derived from total payload
-    bytes / target.  Costs one count() action — cheap next to the
-    decode stage it protects.
-    """
-    import math
-
-    total_rows = df.count()
-    n = max(
-        1, math.ceil(total_rows * max(1, avg_payload_bytes) / target_bytes_per_partition)
-    )
-    return df.repartition(n)
 
 
 # --- real stdlib codecs ----------------------------------------------------
@@ -642,16 +622,6 @@ def frame_sample_plan(decoded: DataFrame, every_n: int = 30) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("scale", DoubleType()),
-    ]
-)
-
 FEATURE_DIM = 8
 
 FEATURES_SCHEMA = StructType(
@@ -714,26 +684,6 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             )
 
     return df.mapInPandas(feats, FEATURES_SCHEMA)
-
-
-def phash64(payload_col: str = "payload") -> Column:
-    """64-bit FALLBACK fingerprint column for payloads no stdlib codec
-    can decode (md5-derived, JVM-side, no Python).
-
-    The REAL perceptual hash lives in :func:`compute_phash`: a 2-D
-    DCT over the decoded, 32x32-downscaled grayscale image — fully
-    implemented for PNG (:func:`decode_png`) and baseline JPEG
-    (``operators.jpeg``).  This md5 expression is only the
-    clearly-labeled fallback for payloads outside the decodable set
-    (MP4 stays env-blocked): it finds *identical* payloads only,
-    never visually-similar ones.  Its bit layout matches the Python
-    fallback in :func:`compute_phash` bit-for-bit, so mixed pipelines
-    agree on undecodable rows.
-    """
-    h = F.md5(F.col(payload_col))
-    hi = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return (F.shiftleft(hi, 32).bitwiseOR(lo)).alias("phash")
 
 
 def _dct32() -> "object":
@@ -818,8 +768,8 @@ def _phash64_decoded(decoded: "tuple[int, int, int, bytes]") -> int:
 
 
 def _phash64_fallback(payload: bytes) -> int:
-    """md5-derived fallback for undecodable payloads — bit-identical
-    to the JVM :func:`phash64` expression."""
+    """md5-derived fallback for undecodable payloads: the first 64 bits
+    of the payload's md5, as a signed BIGINT."""
     import hashlib
 
     v = int(hashlib.md5(payload).hexdigest()[:16], 16)
@@ -843,8 +793,9 @@ def compute_phash(
     """Perceptual-hash column via Arrow-batched ``mapInPandas``:
     PNG and baseline-JPEG payloads get the REAL DCT hash
     (:func:`phash64_png` / :func:`phash64_jpeg`), anything
-    undecodable gets the clearly-labeled md5 fallback (identical bits
-    to the JVM :func:`phash64` expression), with ``phash_kind`` ∈
+    undecodable gets the clearly-labeled md5 fallback
+    (:func:`_phash64_fallback`: it finds identical payloads only,
+    never visually-similar ones), with ``phash_kind`` ∈
     {'dct', 'md5'} recording which.
 
     Output: (media_id, phash LONG, phash_kind) — feeds

@@ -395,7 +395,6 @@ def _semantic_dedup_sql(
     return assigned.join(dropped, id_col, "left_anti")
 
 
-
 def _knn_candidate_frames(
     queries: DataFrame,
     corpus: DataFrame,
@@ -434,49 +433,6 @@ def _knn_candidate_frames(
     return q, c
 
 
-def _apply_cell_cap(
-    q: DataFrame, c: DataFrame, cell_cap: int
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Hot-cell skew cap for cell-keyed pair joins: sub-shard any cell
-    whose CORPUS side exceeds ``cell_cap`` rows.
-
-    A cell equi-join concentrates each cell's |Q|·|C| candidate
-    scoring in one task, so at 100 TB one celebrity cell (skewed
-    real-world embeddings) serializes the stage.  The remedy is the
-    salt-replicated join (operators/skew.py): corpus rows of a hot
-    cell get a deterministic salt ``pmod(hash(id), n_sub)`` with
-    ``n_sub = ceil(cell_size / cell_cap)``, and query rows replicate
-    over all ``n_sub`` shards — every (query, corpus) pair of the
-    cell still meets EXACTLY once, now spread over ``n_sub`` tasks.
-    Cells within budget get ``n_sub = 1`` (identity: salt 0, no
-    replication).  Fully declarative: per-cell counts are ONE
-    map-side-combinable aggregate, shipped to both sides by broadcast
-    joins — no driver collect, no new corpus shuffle (the pair join's
-    shuffle now keys on (cell, salt)).
-
-    Returns the salted frames plus the join keys ``["__qcell",
-    "__salt"]``.
-    """
-    sizes = c.groupBy("__qcell").agg(F.count(F.lit(1)).alias("__ccnt"))
-    nsub = F.greatest(
-        F.lit(1), F.ceil(F.col("__ccnt") / F.lit(float(cell_cap)))
-    ).cast("int")
-    sizes = sizes.select("__qcell", nsub.alias("__nsub"))
-    c2 = (
-        c.join(broadcast(sizes), "__qcell")
-        .withColumn("__salt", F.pmod(F.hash("__nid"), F.col("__nsub")))
-        .drop("__nsub")
-    )
-    q2 = (
-        q.join(broadcast(sizes), "__qcell")
-        .withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.col("__nsub") - 1))
-        )
-        .drop("__nsub")
-    )
-    return q2, c2, ["__qcell", "__salt"]
-
-
 def _knn_topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
     """kNN-join ranking/output contract: per-query row_number over
     (cos desc, neighbor id asc), rounded presentation.
@@ -510,7 +466,6 @@ def ivf_knn_join(
     cell_col: str = "label",
     n_probe: int = 1,
     centroids: list[list[float]] | None = None,
-    cell_cap: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
     """kNN JOIN: top-k cosine neighbors for EVERY query vector.
@@ -529,14 +484,6 @@ def ivf_knn_join(
     the cross-engine-oracle configuration).  Self-pairs (same id) are
     excluded, and so are zero-norm vectors: a zero-norm query emits no
     rows.
-
-    ``cell_cap`` is the hot-cell skew guard: any cell whose corpus
-    side exceeds it is sub-sharded by :func:`_apply_cell_cap`
-    (deterministic corpus salt + query replication — row-identical
-    output, pinned in tests on a planted celebrity cell), so one
-    giant cell spreads over ``ceil(size/cap)`` tasks instead of
-    serializing the stage.  ``None`` (default) keeps the plain
-    cell-keyed join — the fully deterministic oracle configuration.
 
     ``dim`` is a pure PERFORMANCE hint (defaults to the centroid
     dimension when ``centroids`` is given): with it the per-pair dot
@@ -566,9 +513,6 @@ def ivf_knn_join(
     # already satisfied — the 400k-pair-row exchange between the pair
     # stage and the ranking stage disappears (guide §2.4).
     q = spread(q, width=1.0, by=["__qid"])
-    join_keys = ["__qcell"]
-    if cell_cap is not None:
-        q, c, join_keys = _apply_cell_cap(q, c, cell_cap)
     # pre-normalize both sides ONCE so each candidate pair costs one
     # dot product instead of dot + two norms (the pair count is
     # |cells|·avg_cell²-shaped and dwarfs both row counts); zero-norm
@@ -606,7 +550,7 @@ def ivf_knn_join(
         else dot(F.col("__qunit"), F.col("__nunit"))
     )
     pairs = (
-        q.join(c, join_keys)
+        q.join(c, ["__qcell"])
         .filter(F.col("__qid") != F.col("__nid"))
         .filter(F.size("__qunit") == F.size("__nunit"))
         .select(

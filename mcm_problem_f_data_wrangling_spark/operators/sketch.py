@@ -66,42 +66,6 @@ def rolling_distinct_exact(
     )
 
 
-def rolling_distinct_hll(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-    lg_k: int = 12,
-) -> DataFrame:
-    """HLL-sketch rolling distinct actives — the 100 TB path.
-
-    The exact version shuffles (user, day) pairs ×window_days; here
-    the heavy aggregation builds ONE fixed-size Datasketches HLL
-    sketch per day (partial/final, O(days) state), and the rolling
-    union runs as a window aggregate over the tiny per-day sketch
-    table (range frame over day numbers, so calendar gaps don't
-    corrupt the window).  Output: (day, active_users_approx).
-    Accuracy is sketch-defined — bounded-error tested, no SQL oracle.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        events.groupBy(F.date_trunc("day", F.col(ts_col)).cast("date").alias("day"))
-        .agg(F.hll_sketch_agg(F.col(user_col), F.lit(lg_k)).alias("sk"))
-        .withColumn("daynum", F.datediff("day", F.lit("1970-01-01").cast("date")))
-    )
-    w = (
-        Window.orderBy("daynum")
-        .rangeBetween(-(window_days - 1), Window.currentRow)
-    )
-    return daily.select(
-        "day",
-        F.hll_sketch_estimate(F.hll_union_agg("sk").over(w)).alias(
-            "active_users_approx"
-        ),
-    )
-
-
 def approx_quantiles_by(
     df: DataFrame,
     group_cols: list[str],

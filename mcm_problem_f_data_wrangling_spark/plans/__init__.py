@@ -1,6 +1,1 @@
-from .registry import (  # noqa: F401
-    REGISTRY,
-    Query,
-    headline_queries,
-    run_noop,
-)
+from .registry import REGISTRY, headline_queries, run_noop  # noqa: F401

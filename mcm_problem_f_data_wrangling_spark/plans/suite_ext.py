@@ -3274,8 +3274,8 @@ def x_skew_salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s09_sessionize_batch",
-    "Gap-based sessionization (batch mirror of the stateful streaming "
-    "operator streaming/sessionize.sessionize_stream): lag → gap flag → "
+    "Gap-based sessionization (streaming/sessionize.sessionize_batch): "
+    "lag → gap flag → "
     "running-sum session id → aggregate; one shuffle on the key, all in "
     "whole-stage codegen. Gap math in whole epoch seconds on both "
     "engines (Spark timestamp→long truncates; oracle floors epoch()). "
@@ -3501,9 +3501,7 @@ def s15_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rolling_distinct_exact): rolling COUNT(DISTINCT) can't compose "
     "from daily counts, so each distinct (user, day) pair is exploded "
     "to the 7 report days it serves, then distinct-counted per day "
-    "(report days restricted to observed days).  The HLL-sketch "
-    "variant (rolling_distinct_hll: one fixed-size sketch per day + "
-    "window union) is the 100 TB path, bounded-error tested.",
+    "(report days restricted to observed days).",
     """
 WITH pairs AS (
   SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day FROM events
@@ -6870,7 +6868,7 @@ FROM dims GROUP BY 1
     "codegen, no UDF — and report per curve-segment (z >> 16) the "
     "row count and BOTH dimensions' min/max: every segment covers a "
     "small rectangle, which is exactly why range-clustering files on "
-    "z (write_zordered) makes parquet footer pruning work on EITHER "
+    "z makes parquet footer pruning work on EITHER "
     "column's predicate at 100 TB (Delta OPTIMIZE ZORDER BY).  "
     "Bit arithmetic is mirrored term-for-term in the oracle.",
     _ZORDER_ORACLE,

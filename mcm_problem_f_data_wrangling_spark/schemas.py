@@ -7,18 +7,14 @@ scan skip inference and letting Catalyst prune columns — and keeps a
 small normalization layer (``sources.readers.normalize_columns``) for
 the alias-resolution role ``find_col`` played.
 
-Two families:
-- CES-shaped frames (FIXTURES.md §5-7): the reference's collapsed series,
-  exog and extract outputs.
-- Driver testdata (TESTDATA.md): TPC-H-ish parquet; schemas recorded
-  here for documentation/validation (parquet is self-describing).
+The schemas are the driver testdata's (TESTDATA.md): TPC-H-ish parquet,
+recorded here for documentation/validation (parquet is self-describing).
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    DateType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -32,38 +28,6 @@ from pyspark.sql.types import (
 
 def _s(*fields: tuple[str, object]) -> StructType:
     return StructType([StructField(n, t, True) for n, t in fields])
-
-
-# --- CES-shaped frames (FIXTURES.md) ---
-
-# collapsed per-career monthly series (prep_CES_pandas.py:69-102 output)
-CAREER_MONTHLY = _s(
-    ("career", StringType()),
-    ("date", DateType()),
-    ("employment_thousands", DoubleType()),
-    ("avg_hourly_earnings", DoubleType()),
-)
-
-# exogenous AI-intensity series (EDA.ipynb cell 23)
-AI_EXOG_MONTHLY = _s(
-    ("month", DateType()),
-    ("ai_share_monthly", DoubleType()),
-    ("ai_share_smoothed", DoubleType()),
-)
-
-# tidy 10-column extract (bls_ces/out/*_proxy_monthly.csv:1)
-PROXY_EXTRACT = _s(
-    ("date", DateType()),
-    ("year", IntegerType()),
-    ("period", StringType()),
-    ("series_id", StringType()),
-    ("seasonal", StringType()),
-    ("industry_code", StringType()),
-    ("industry_name", StringType()),
-    ("datatype_code", StringType()),
-    ("datatype_text", StringType()),
-    ("value", DoubleType()),
-)
 
 
 # --- driver testdata (TESTDATA.md) -----------------------------------------

@@ -3,35 +3,23 @@
 The reference's source surface is files + HTTP (SURVEY.md §2.1 S1-S4);
 this module extends it with the engine's own *programmable* connector
 surface — the public Python Data Source API — so users can plug
-non-file feeds (an internal corpus service, a synthetic load
-generator) into `spark.read.format(...)` exactly like parquet.
+non-file feeds (an internal event service, a synthetic load
+generator) into `spark.readStream.format(...)` exactly like a file
+source.
 
-Shipped source: ``synthetic_docs`` — a deterministic, partition-
-parallel document-corpus generator.  Why it earns its place:
-
-- **scale harness**: `tools/scale_smoke.py`-style runs need
-  100M-doc-shaped inputs without writing 100 GB to disk first; a
-  generating source streams them straight into the scan.
-- **partition planning is the API lesson**: `partitions()` returns
-  one `InputPartition` per shard, and Spark schedules `read(part)`
-  across executors — the same contract a real service connector
-  (range-sharded HTTP, kafka-like cursors) would implement.
-- **determinism**: every row is a pure function of (seed, doc_id), so
-  retried/speculated tasks reproduce identical data — the property a
-  production source must guarantee for exactly-once semantics
-  downstream.
-
-Rows mirror the testdata ``documents`` schema (doc_id, source, lang,
-text) so every operator in the engine runs on generated corpora
-unchanged.
+Shipped source: ``synthetic_events`` — a bounded, deterministic event
+stream (``s42_streaming_python_source`` drains it).  Every row is a
+pure function of its event id, so a replay after restart regenerates
+identical data — the property a production source must guarantee for
+exactly-once semantics downstream — and the DuckDB oracle reproduces
+the streamed rows with ``generate_series``.
 
 Usage::
 
-    from mcm_problem_f_data_wrangling_spark.sources.pyds import register_synthetic_docs
-    register_synthetic_docs(spark)
-    df = (spark.read.format("synthetic_docs")
-          .option("n_docs", 1_000_000).option("n_partitions", 64)
-          .option("seed", 42).load())
+    from mcm_problem_f_data_wrangling_spark.sources.pyds import register_synthetic_events
+    register_synthetic_events(spark)
+    df = (spark.readStream.format("synthetic_events")
+          .option("n_events", 10_000).option("rows_per_batch", 2_500).load())
 """
 
 from __future__ import annotations
@@ -42,113 +30,7 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("source", StringType(), False),
-        StructField("lang", StringType(), False),
-        StructField("n_words", IntegerType(), False),
-        StructField("text", StringType(), False),
-    ]
-)
-
-_SOURCES = ("web", "books", "code", "wiki", "forums")
-_LANGS = ("en", "de", "fr", "es")
-# tiny per-language lexicons: enough structure for lang-id/quality/
-# dedup operators to produce non-degenerate results on generated docs
-_LEX = {
-    "en": "the of and to in is was for on with he she they this that have from".split(),
-    "de": "der die das und ist war nicht ich mit ein eine auf sie wir haben von".split(),
-    "fr": "le la les et est dans pour que une des il elle nous avec sur pas".split(),
-    "es": "el la los las y es en de que una por con para no se su como".split(),
-}
-
-
-class _DocsPartition(InputPartition):
-    def __init__(self, start: int, end: int, seed: int, dup_rate: float):
-        self.start = start
-        self.end = end
-        self.seed = seed
-        self.dup_rate = dup_rate
-
-
-class SyntheticDocsReader(DataSourceReader):
-    def __init__(self, options):
-        self.n_docs = int(options.get("n_docs", 10_000))
-        self.n_partitions = int(options.get("n_partitions", 8))
-        self.seed = int(options.get("seed", 42))
-        # fraction of docs that are exact duplicates of an earlier doc
-        # (gives dedup operators real work on generated corpora)
-        self.dup_rate = float(options.get("dup_rate", 0.05))
-
-    def partitions(self):
-        step = max(1, -(-self.n_docs // self.n_partitions))
-        return [
-            _DocsPartition(lo, min(lo + step, self.n_docs), self.seed, self.dup_rate)
-            for lo in range(0, self.n_docs, step)
-        ]
-
-    def read(self, partition: _DocsPartition):
-        # pure function of (seed, doc_id): retried tasks regenerate
-        # byte-identical rows (exactly-once-safe)
-        import numpy as np
-
-        for doc_id in range(partition.start, partition.end):
-            rng = np.random.RandomState((partition.seed * 1_000_003 + doc_id) % (2**31))
-            is_dup = doc_id > 100 and rng.random_sample() < partition.dup_rate
-            base_id = int(rng.randint(0, doc_id)) if is_dup else doc_id
-            brng = np.random.RandomState(
-                (partition.seed * 1_000_003 + base_id) % (2**31)
-            )
-            src = _SOURCES[int(brng.randint(0, len(_SOURCES)))]
-            lang = _LANGS[int(brng.randint(0, len(_LANGS)))]
-            lex = _LEX[lang]
-            n_words = int(brng.randint(20, 200))
-            words = [lex[int(brng.randint(0, len(lex)))] for _ in range(n_words)]
-            # sprinkle rare content words so docs aren't pure stopwords
-            for i in range(0, n_words, 7):
-                words[i] = f"w{int(brng.randint(0, 5000)):04d}"
-            yield (doc_id, src, lang, n_words, " ".join(words))
-
-
-class SyntheticDocsDataSource(DataSource):
-    """`spark.read.format("synthetic_docs")` — see module docstring."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_docs"
-
-    def schema(self):
-        return DOCS_SCHEMA
-
-    def reader(self, schema) -> DataSourceReader:
-        return SyntheticDocsReader(self.options)
-
-
-def register_synthetic_docs(spark) -> None:
-    """Idempotently register the connector on a session.
-
-    The DataSource class is cloudpickled *by reference* into the scan's
-    Python workers, so the package must be importable there — same
-    deploy contract as the applyInPandas stages (``session.ship_package``).
-    """
-    from ..session import ship_package
-
-    ship_package(spark)
-    spark.dataSource.register(SyntheticDocsDataSource)
-
-
-# --------------------------------------------------------------------------
-# streaming source: synthetic_events (SimpleDataSourceStreamReader)
-# --------------------------------------------------------------------------
+from pyspark.sql.types import LongType, StructField, StructType
 
 EVENTS_SCHEMA = StructType(
     [
@@ -249,8 +131,12 @@ class SyntheticEventsBatchReader(DataSourceReader):
 
 
 def register_synthetic_events(spark) -> None:
-    """Idempotently register the streaming connector (same deploy
-    contract as ``register_synthetic_docs``)."""
+    """Idempotently register the connector on a session.
+
+    The DataSource class is cloudpickled *by reference* into the scan's
+    Python workers, so the package must be importable there — same
+    deploy contract as the applyInPandas stages (``session.ship_package``).
+    """
     from ..session import ship_package
 
     ship_package(spark)

@@ -27,8 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..schemas import TESTDATA_TABLES
-
 
 def normalize_columns(df: DataFrame, lower: bool = True) -> DataFrame:
     """Header normalization (P2): strip whitespace, optionally lowercase.
@@ -121,11 +119,6 @@ def read_whitespace_tsv(spark: SparkSession, path: str, n_cols: int, names: list
     return body.select(*cols)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan — the scale path (self-describing, prunable)."""
-    return spark.read.parquet(path)
-
-
 def read_nanos_timestamp_parquet(
     spark: SparkSession, path: str, ts_cols: tuple[str, ...] = ("ts",)
 ) -> DataFrame:
@@ -148,19 +141,6 @@ def micros_from_nanos(df: DataFrame, ts_cols: tuple[str, ...] = ("ts",)) -> Data
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver testdata table from ``sf_dir`` (TESTDATA.md)."""
-    out = {}
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        out[t] = (
-            read_nanos_timestamp_parquet(spark, path)
-            if t == "events"
-            else spark.read.parquet(path)
-        )
-    return out
 
 
 def download_file(name: str, dest_dir: str, base_url: str) -> str:

@@ -204,74 +204,6 @@ def _write_xlsx_minimal(pdfs: dict, path: str) -> str:
     return path
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed catalog table: the shuffle-free co-located join path.
-
-    Two tables bucketed on the same key with the same bucket count
-    join WITHOUT an exchange — at 100 TB the repeated fact⨝dict join
-    (SURVEY.md §2.3 J3) amortizes its shuffle into this one-time
-    layout.  Requires ``saveAsTable`` (bucket metadata lives in the
-    catalog, not the parquet files).
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    out_path: str | None = None,
-    target_file_bytes: int = 512 * 1024 * 1024,
-    cluster_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction — the table-maintenance pass a 100 TB
-    lake needs continuously: streaming/incremental ingest leaves
-    thousands of KB-scale files whose footer/scheduling/listing
-    overhead dominates scan cost.  Rewrites the dataset into
-    ``ceil(total_bytes / target_file_bytes)`` files (sized on the
-    EXISTING compressed bytes, not row counts, so heterogeneous row
-    widths don't skew file sizes).
-
-    ``cluster_by`` additionally sorts within output partitions so
-    parquet min/max zone maps become selective on those columns —
-    cheap clustering without a full global sort.
-
-    Returns the output file count.  Writes to ``out_path`` (or
-    ``path + '.compacted'``): an in-place rewrite that crashes midway
-    would destroy the only copy; callers swap directories after
-    success (the pattern table formats automate with commits).
-    """
-    import math
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    if cluster_by:
-        # range partitioning (not hash): each output file owns a
-        # DISJOINT slice of the cluster key, so parquet min/max zone
-        # maps actually prune — hash repartition + sort gives every
-        # file a uniform sample of the key space and prunes nothing
-        df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-    else:
-        df = df.repartition(n)
-    dest = out_path or (path.rstrip("/") + ".compacted")
-    df.write.mode("overwrite").parquet(dest)
-    return len(glob.glob(os.path.join(dest, "*.parquet")))
-
-
 def write_orc(
     df: DataFrame,
     path: str,

@@ -11,9 +11,8 @@ one-time broadcast per batch, which AQE caches for the batch duration.
 
 Scale note: a dimension too large to broadcast falls back to a
 shuffled sort-merge join PER MICRO-BATCH — at that point pre-bucketing
-the dimension table on the join key (``sources.writers.
-write_bucketed_table``) keeps the dimension side's shuffle out of the
-steady-state cost.
+the dimension table on the join key (a ``bucketBy`` catalog table)
+keeps the dimension side's shuffle out of the steady-state cost.
 """
 
 from __future__ import annotations

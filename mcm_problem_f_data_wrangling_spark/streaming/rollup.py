@@ -1,13 +1,13 @@
-"""Structured Streaming extension (SURVEY.md §2.8).
+"""Structured Streaming extension (SURVEY.md §2.8): the tumbling-window
+rollup.
 
 The reference is pure batch over monthly snapshot files — no streaming
 surface exists in it.  This module is the clearly-labeled *extension*
-the survey plans (§2.8, §7): the same tumbling-window rollup the batch
-suite runs (``s08_tumbling_window_rollup``) expressed over
-``readStream``, with a watermark for late data.  The batch mirror is
-what the correctness oracle checks; the streaming variant is exercised
-in tests with a file source + ``availableNow`` trigger (processes all
-available data then stops — the batch-equivalent execution mode).
+the survey plans (§2.8, §7): the event-time tumbling-window rollup,
+applied to a stream the caller opens.  ``s08_tumbling_window_rollup``
+runs it over a file stream with an ``availableNow`` trigger (processes
+all available data then stops — the batch-equivalent execution mode)
+and checks it against the batch oracle.
 
 Scale notes: a tumbling event-time window with watermark keeps state
 bounded to (watermark horizon / window size) windows per key; the
@@ -16,34 +16,8 @@ aggregation itself is the same partial/final hash agg as batch.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-
-def streaming_tumbling_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_size: str = "1 day",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """readStream → watermark → tumbling window agg (count + sum).
-
-    Returns the unstarted streaming DataFrame; callers attach a sink
-    (tests use ``format("memory")`` + ``trigger(availableNow=True)``).
-
-    The sum is decimal-exact (cast to ``DECIMAL(18,6)`` before
-    aggregating, back to double after) for the same reason as the
-    batch suite (plans/base.py): decimal addition is associative, so
-    the result is bit-identical to the batch mirror no matter how the
-    micro-batch planner splits the input — which is exactly what the
-    live driver gate compares against.
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return tumbling_rollup_agg(stream, ts_col, key_col, window_size, watermark)
 
 
 def tumbling_rollup_agg(
@@ -53,9 +27,15 @@ def tumbling_rollup_agg(
     window_size: str = "1 day",
     watermark: "str | None" = "2 days",
 ) -> DataFrame:
-    """The rollup aggregation on an already-opened stream (callers
-    that need schema fix-ups — e.g. nanos-as-long timestamps — open
-    the stream themselves and pass it here).
+    """Watermark → tumbling window agg (count + sum) on a stream the
+    caller opened (with its schema fix-ups, e.g. nanos-as-long
+    timestamps).
+
+    The sum is decimal-exact (cast to ``DECIMAL(18,6)`` before
+    aggregating, back to double after) for the same reason as the
+    batch suite (plans/base.py): decimal addition is associative, so
+    the result is bit-identical to the batch oracle no matter how the
+    micro-batch planner splits the input.
 
     ``watermark=None`` skips the watermark: Spark's event-time
     watermark requires TIMESTAMP and rejects TIMESTAMP_NTZ
@@ -77,4 +57,3 @@ def tumbling_rollup_agg(
         )
         .select(F.col("w.start").cast("date").alias("day"), key_col, "n", "total")
     )
-

@@ -1,63 +1,23 @@
-"""Custom stateful streaming operator: gap-based sessionization
-(SURVEY.md §2.8 extension — the reference has no streaming surface;
-this is the ``applyInPandasWithState`` pattern the north star calls
-for on event streams).
+"""Gap-based sessionization (SURVEY.md §2.8 extension — the reference
+has no event-stream surface).
 
-Semantics (identical batch and streaming): events for a key belong to
-one session while consecutive event times are ≤ ``gap_seconds`` apart;
-a larger gap closes the session and starts a new one.  A closed
-session row is ``(key, session_start, session_end, n_events,
-total_value)``.
+Events for a key belong to one session while consecutive event times
+are ≤ ``gap_seconds`` apart; a larger gap closes the session and
+starts a new one.  A closed session row is ``(key, session_start,
+session_end, n_events, total_value)``.
 
-Two implementations:
-
-- :func:`sessionize_batch` — pure window functions: flag gap breaks
-  with ``lag``, running-sum the flags into a session id, aggregate.
-  One shuffle on the key; everything in whole-stage codegen.  This is
-  the oracle-checkable mirror (lag + windowed sum exist in ANSI SQL).
-- :func:`sessionize_stream` — ``applyInPandasWithState`` keeps one
-  open session per key in state; arriving batches close any sessions
-  whose gap is exceeded and update the open one.  State is O(1) per
-  key (start, last_ts, n, total) — bounded regardless of stream
-  length; an event-time timeout flushes a session once the watermark
-  passes its end + gap.
-
-Scale notes: both shapes shuffle once on the session key.  The
-streaming state never holds raw events — only the 4-field running
-summary — so a billion-key stream holds ~tens of GB of state across
-the cluster, spillable via the state store.
+:func:`sessionize_batch` is pure window functions: flag gap breaks
+with ``lag``, running-sum the flags into a session id, aggregate.  One
+shuffle on the key; everything in whole-stage codegen, and
+oracle-checkable (lag + windowed sum exist in ANSI SQL).  The live
+streaming session gates (s31, s43) use Spark's native
+``session_window``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-# state: (session_start_epoch_us, last_ts_epoch_us, n_events, total_value)
-_STATE_SCHEMA = "start_us LONG, last_us LONG, n LONG, total DOUBLE"
 
 
 def sessionize_batch(
@@ -97,94 +57,4 @@ def sessionize_batch(
             F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
         .drop("_sid")
-    )
-
-
-def sessionize_stream(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap_seconds: int = 1800,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming sessionization via ``applyInPandasWithState``.
-
-    Event-time semantics (deterministic — no wall-clock dependence): a
-    session closes when (a) a later event for its key exceeds the gap,
-    or (b) the watermark passes ``session_end + gap`` (event-time
-    timeout flush).  Sessions still within the gap of the watermark
-    stay open in state.  ProcessingTimeTimeout is deliberately NOT
-    used: it is nondeterministic and keeps an ``availableNow`` drain
-    running empty micro-batches on a wall-clock cadence.
-    """
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        closed: list[tuple] = []
-        k = str(key[0])
-
-        if state.hasTimedOut:
-            if state.exists:
-                start_us, last_us, n, total = state.get
-                closed.append((k, start_us, last_us, n, total))
-                state.remove()
-        else:
-            if state.exists:
-                start_us, last_us, n, total = state.get
-            else:
-                start_us = last_us = None
-                n, total = 0, 0.0
-            rows = pd.concat(list(pdfs)).sort_values(ts_col)
-            rows = rows[rows[ts_col].notna()]  # null event times carry no order
-            for ts, val in zip(rows[ts_col], rows[value_col]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                # whole-SECOND gap test, matching sessionize_batch's
-                # documented cross-engine contract (floored epoch
-                # seconds); raw-microsecond comparison would split a
-                # 21600.5 s gap the batch twin keeps together
-                if last_us is not None and (
-                    ts_us // 1_000_000 - last_us // 1_000_000 > gap_seconds
-                ):
-                    closed.append((k, start_us, last_us, n, total))
-                    start_us, n, total = ts_us, 0, 0.0
-                if start_us is None:
-                    start_us = ts_us
-                last_us = ts_us
-                n += 1
-                total += float(val) if val == val else 0.0
-            state.update((start_us, last_us, n, total))
-            # flush when the watermark passes session_end + gap (must
-            # stay strictly above the current watermark to be accepted)
-            timeout_ms = max(
-                last_us // 1000 + gap_seconds * 1000,
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(timeout_ms)
-
-        if closed:
-            out = pd.DataFrame(
-                closed,
-                columns=["key", "session_start", "session_end", "n_events", "total_value"],
-            )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-            yield out
-
-    return (
-        stream.select(
-            F.col(key_col).cast("string").alias(key_col), ts_col, value_col
-        )
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )

@@ -560,68 +560,6 @@ class TestHammingNeardup:
             hamming_neardup_pairs(df, "h", "doc_id", bits=16, max_hamming=31)
 
 
-def test_cell_cap_row_identity_on_planted_celebrity_cell(spark):
-    """Hot-cell skew cap (_apply_cell_cap): a planted celebrity cell
-    (one cell holding ~90% of the corpus) sub-shards under cell_cap,
-    and ivf_knn_join's output must be row-identical with the cap on or
-    off — every pair still meets exactly once, just spread over
-    ceil(size/cap) tasks."""
-    import numpy as np
-
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import ivf_knn_join
-
-    rng = np.random.RandomState(7)
-    rows = []
-    for vid in range(400):
-        # 360 vectors pile into one direction (the celebrity cell
-        # after assignment); 40 spread into a second direction
-        hot = vid % 10 != 0
-        base = np.array([1.0, 0.0]) if hot else np.array([0.0, 1.0])
-        v = base + rng.normal(0, 0.05, 2)
-        rows.append((vid, [float(x) for x in v], 0 if hot else 1))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-
-    plain = sorted(map(tuple, ivf_knn_join(df, df, k=3).collect()))
-    capped = sorted(map(tuple, ivf_knn_join(df, df, k=3, cell_cap=64).collect()))
-    assert plain == capped and plain
-
-
-def test_cell_cap_actually_sub_shards(spark):
-    """The cap must genuinely split the hot cell's candidate space:
-    with 360 corpus rows in one cell and cell_cap=64 the salted
-    corpus side carries ceil(360/64)=6 distinct salts for that cell
-    (and exactly 1 for the small cell)."""
-    from pyspark.sql import functions as F
-
-    from mcm_problem_f_data_wrangling_spark.operators.similarity import (
-        _apply_cell_cap,
-        _knn_candidate_frames,
-    )
-
-    rows = [(i, [1.0, 0.0], 0) for i in range(360)] + [
-        (1000 + i, [0.0, 1.0], 1) for i in range(20)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    q, c = _knn_candidate_frames(df, df, "embedding", "vec_id", "label", 1, None)
-    q2, c2, keys = _apply_cell_cap(q, c, 64)
-    assert keys == ["__qcell", "__salt"]
-    salts = {
-        r["__qcell"]: r["n"]
-        for r in c2.groupBy("__qcell")
-        .agg(F.countDistinct("__salt").alias("n"))
-        .collect()
-    }
-    assert salts[0] == 6 and salts[1] == 1
-    # query side replicates to every shard of its probed cell
-    reps = {
-        r["__qcell"]: r["n"]
-        for r in q2.groupBy("__qcell")
-        .agg((F.count(F.lit(1)) / F.countDistinct("__qid")).alias("n"))
-        .collect()
-    }
-    assert reps[0] == 6.0 and reps[1] == 1.0
-
-
 def test_minhash_jaccard_pairs_subset_of_exact_with_true_values(spark):
     """LSH-verified pairs are a SUBSET of the exact prefix join with
     identical jaccard values on the shared pairs — banding can miss,

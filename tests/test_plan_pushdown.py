@@ -169,44 +169,6 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     assert "PartitionFilters" in pruned and "grp" in pruned
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """The 100 TB claim behind write_bucketed_table: two tables
-    bucketed on the same key with the same bucket count sort-merge
-    join with ZERO Exchange operators in the plan (the shuffle was
-    amortized into the one-time layout)."""
-    from mcm_problem_f_data_wrangling_spark.sources.writers import (
-        write_bucketed_table,
-    )
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        facts = spark.range(10_000).select(
-            (F.col("id") % 500).alias("k"), F.col("id").alias("v")
-        )
-        dims = spark.range(500).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("w")
-        )
-        write_bucketed_table(facts, "bkt_facts", ["k"], n_buckets=8)
-        write_bucketed_table(dims, "bkt_dims", ["k"], n_buckets=8)
-        joined = spark.table("bkt_facts").join(spark.table("bkt_dims"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10_000
-        # control: the same join over plain (unbucketed) parquet DOES
-        # exchange both sides — proving the bucket layout is what
-        # removed it
-        facts.write.parquet(str(tmp_path / "pf"), mode="overwrite")
-        dims.write.parquet(str(tmp_path / "pd"), mode="overwrite")
-        plain = spark.read.parquet(str(tmp_path / "pf")).join(
-            spark.read.parquet(str(tmp_path / "pd")), "k"
-        )
-        assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_facts")
-        spark.sql("DROP TABLE IF EXISTS bkt_dims")
-
-
 def test_dynamic_partition_pruning_fires_on_hive_layout(spark, tmp_path):
     """At 100 TB the fact table is date/region partitioned and the
     filter usually arrives on the DIM side; dynamic partition pruning

@@ -1,94 +1,8 @@
-"""Python Data Source connector (sources/pyds.py): partition planning,
-determinism under re-partitioning (exactly-once contract), and
-integration with the dedup operator family on generated corpora."""
+"""Python Data Source connector (sources/pyds.py): the synthetic_events
+stream and its batch twin generate the same rows, and a committed
+offset range replays byte-identically (the exactly-once contract)."""
 
 from __future__ import annotations
-
-import pytest
-
-from mcm_problem_f_data_wrangling_spark.sources.pyds import (
-    DOCS_SCHEMA,
-    register_synthetic_docs,
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    register_synthetic_docs(spark)
-    return (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 3000)
-        .option("n_partitions", 6)
-        .option("seed", 7)
-        .load()
-    )
-
-
-def test_schema_and_count(docs):
-    assert docs.schema == DOCS_SCHEMA
-    assert docs.count() == 3000
-    assert docs.rdd.getNumPartitions() == 6
-
-
-def test_rows_are_pure_function_of_seed_and_id(spark, docs):
-    """Repartitioning the scan must not change any row — the retried/
-    speculated-task safety property a generating source must hold."""
-    other = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 3000)
-        .option("n_partitions", 11)
-        .option("seed", 7)
-        .load()
-    )
-    a = {r["doc_id"]: r["text"] for r in docs.collect()}
-    b = {r["doc_id"]: r["text"] for r in other.collect()}
-    assert a == b
-
-
-def test_seed_changes_content(spark, docs):
-    other = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 3000)
-        .option("n_partitions", 6)
-        .option("seed", 8)
-        .load()
-    )
-    a = docs.filter("doc_id = 42").first()["text"]
-    b = other.filter("doc_id = 42").first()["text"]
-    assert a != b
-
-
-def test_planted_duplicates_found_by_dedup_operator(docs):
-    """End-to-end: the corpus generator's dup_rate plants exact
-    duplicates that exact_dedup_groups must recover."""
-    from mcm_problem_f_data_wrangling_spark.operators.dedup import (
-        exact_dedup_groups,
-    )
-
-    groups = exact_dedup_groups(docs, text_col="text", id_col="doc_id")
-    n_docs = docs.count()
-    n_fingerprints = groups.count()
-    # dup_rate defaults to 5%: some dup clusters must exist, but far
-    # fewer than 20% of the corpus collapses
-    assert n_docs * 0.80 < n_fingerprints < n_docs
-    clusters = groups.filter("n_docs > 1")
-    assert clusters.count() > 0
-    # the canonical survivor is the minimum doc_id of its cluster, so
-    # it can never exceed any planted duplicate's id
-    worst = clusters.selectExpr("max(keep_doc_id) AS m").first()["m"]
-    assert worst < n_docs
-
-
-def test_lang_lexicons_are_separable(docs):
-    """Generated docs carry enough language signal for lang_id to beat
-    chance by a wide margin (lexicons are disjoint-ish by design)."""
-    from pyspark.sql import functions as F
-
-    from mcm_problem_f_data_wrangling_spark.functions.textfn import lang_id
-
-    scored = docs.withColumn("pred", lang_id(F.col("text")))
-    acc = scored.filter(F.col("pred") == F.col("lang")).count() / docs.count()
-    assert acc > 0.5
 
 
 def test_synthetic_events_stream_equals_batch(spark):

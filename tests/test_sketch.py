@@ -73,24 +73,3 @@ def test_rolling_distinct_exact_window_semantics(spark):
         "2024-01-03": 2,          # u1,u2 (Jan1 still in window)
         "2024-01-09": 2,          # u3 + u1 (Jan3 in [Jan3..Jan9]); Jan1 aged out
     }
-
-
-def test_rolling_distinct_hll_tracks_exact(spark):
-    import datetime as dt
-
-    from mcm_problem_f_data_wrangling_spark.operators.sketch import (
-        rolling_distinct_exact,
-        rolling_distinct_hll,
-    )
-
-    T = dt.datetime
-    rows = [
-        ((i * 37) % 500, T(2024, 1, 1 + (i % 20), i % 24))
-        for i in range(4000)
-    ]
-    ev = spark.createDataFrame(rows, "user_id bigint, ts timestamp")
-    exact = {str(r["day"]): r["active_users"] for r in rolling_distinct_exact(ev).collect()}
-    approx = {str(r["day"]): r["active_users_approx"] for r in rolling_distinct_hll(ev).collect()}
-    assert set(exact) == set(approx)
-    for d, n in exact.items():
-        assert abs(approx[d] - n) / n < 0.05, (d, n, approx[d])

@@ -42,31 +42,6 @@ def test_salted_agg_two_exchanges(skewed):
     assert plan.count("Exchange") >= 2  # (key,salt) shuffle then key shuffle
 
 
-def test_bucketed_join_is_shuffle_free(spark, skewed):
-    from mcm_problem_f_data_wrangling_spark.sources.writers import write_bucketed_table
-
-    dim = skewed.select("key").distinct().withColumn("label", F.upper("key"))
-    try:
-        write_bucketed_table(skewed, "t_fact_b", ["key"], n_buckets=4)
-        write_bucketed_table(dim, "t_dim_b", ["key"], n_buckets=4)
-        fact_t, dim_t = spark.table("t_fact_b"), spark.table("t_dim_b")
-        # disable broadcast so the co-location (not a broadcast) avoids the shuffle
-        joined = fact_t.hint("merge").join(dim_t, "key").groupBy("label").count()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert plan.count("Bucketed: true") == 2
-        # join inputs are printed below the SortMergeJoin node; neither may
-        # be re-shuffled (the only allowed Exchange is the final groupBy's)
-        below_join = plan.split("SortMergeJoin", 1)[1]
-        assert "Exchange" not in below_join
-        assert {tuple(r) for r in joined.collect()} == {
-            tuple(r) for r in skewed.join(dim, "key").groupBy("label").count().collect()
-        }
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_fact_b")
-        spark.sql("DROP TABLE IF EXISTS t_dim_b")
-
-
 def test_aqe_splits_skewed_join_at_runtime(spark):
     """AQE skew-join handling: with a 90%-hot key and thresholds scaled
     to test data, the final adaptive plan must mark the skewed

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mcm_problem_f_data_wrangling_spark.streaming import streaming_tumbling_rollup
+from mcm_problem_f_data_wrangling_spark.streaming.rollup import tumbling_rollup_agg
 from mcm_problem_f_data_wrangling_spark.streaming.replay import drain
 
 
@@ -35,7 +35,9 @@ def test_stream_matches_batch(spark, event_dir):
         .select(F.col("w.start").cast("date").alias("day"), "event_type", "n", "total")
         .collect()
     }
-    stream = streaming_tumbling_rollup(spark, event_dir, batch_df.schema)
+    stream = tumbling_rollup_agg(
+        spark.readStream.schema(batch_df.schema).parquet(event_dir)
+    )
     assert stream.isStreaming
     drain(
         stream.writeStream.format("memory")
@@ -48,71 +50,6 @@ def test_stream_matches_batch(spark, event_dir):
     }
     assert got == expected
     assert len(got) == 10  # 5 days × 2 event types
-
-
-@pytest.fixture(scope="module")
-def session_dir(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("sessions_stream"))
-    rows = []
-    # two users, three sessions each (gap = 60s closes a session);
-    # 15s steps keep the seconds field < 60
-    for u in ("u1", "u2"):
-        base = 0 if u == "u1" else 7
-        for start_min, n in ((0, 3), (10, 2), (30, 4)):
-            for i in range(n):
-                rows.append(
-                    (u, f"2024-02-01 10:{start_min + base:02d}:{i * 15:02d}", float(i + 1))
-                )
-    df = (
-        spark.createDataFrame(rows, ["user_id", "ts_s", "value"])
-        .withColumn("ts", F.to_timestamp("ts_s"))
-        .drop("ts_s")
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    return path
-
-
-def test_stateful_sessionize_stream_matches_batch(spark, session_dir):
-    from mcm_problem_f_data_wrangling_spark.streaming.sessionize import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    batch_df = spark.read.parquet(session_dir)
-    all_sessions = {
-        (r["key"], str(r["session_start"])): (r["n_events"], r["total_value"])
-        for r in sessionize_batch(batch_df, "user_id", "ts", "value", 60).collect()
-    }
-    assert len(all_sessions) == 6  # 2 users × 3 sessions
-
-    stream = spark.readStream.schema(batch_df.schema).parquet(session_dir)
-    sess = sessionize_stream(stream, "user_id", "ts", "value", gap_seconds=60)
-    assert sess.isStreaming
-    q = (
-        sess.writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["key"], str(r["session_start"])): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM sessions_test").collect()
-    }
-    # event-time semantics: a session is closed once the final watermark
-    # (= max event time, delay 0) passes its end + gap — either by a
-    # later in-gap-exceeding event or by the timeout flush.  Only u2's
-    # final session is still within the gap of stream end → stays open.
-    batch_rows = sessionize_batch(batch_df, "user_id", "ts", "value", 60).collect()
-    max_ts = max(r["session_end"] for r in batch_rows)
-    expected_closed = {
-        (r["key"], str(r["session_start"])): (r["n_events"], r["total_value"])
-        for r in batch_rows
-        if (max_ts - r["session_end"]).total_seconds() > 60
-    }
-    assert len(expected_closed) == 5
-    assert got == expected_closed
 
 
 def test_watermark_drops_late_rows(spark, tmp_path_factory):

@@ -1,22 +1,15 @@
-"""Z-order interleave correctness and the layout property it buys:
-files range-clustered on the Morton key get tight parquet footer
-min/max on BOTH dimensions (single-column clustering only gets one)."""
+"""Z-order interleave correctness: known bits, the bit-for-bit SQL
+mirror the oracle uses, and the 64-bit overflow guard."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from mcm_problem_f_data_wrangling_spark.functions.zorder import (
-    write_zordered,
     zorder_value,
     zorder_value_sql,
 )
-
-SF = "/root/testdata/sf0.01"
 
 
 def test_interleave_known_bits(spark):
@@ -53,61 +46,3 @@ def test_interleave_matches_sql_mirror(spark):
 def test_interleave_rejects_overflow(spark):
     with pytest.raises(ValueError):
         zorder_value([F.lit(1), F.lit(2)], bits=32)
-
-
-def _file_ranges(path: str, cols: list[str]) -> list[dict[str, tuple]]:
-    out = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for i in range(row_group.num_columns):
-                col = row_group.column(i)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    st = col.statistics
-                    lo[name] = min(lo.get(name, st.min), st.min)
-                    hi[name] = max(hi.get(name, st.max), st.max)
-        if lo:
-            out.append({c: (lo[c], hi[c]) for c in cols})
-    return out
-
-
-def test_zordered_layout_prunes_both_dims(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_custkey",
-        F.expr(
-            "unix_micros(cast(o_orderdate as timestamp)) div 86400000000"
-        ).alias("day"),
-    )
-    total = orders.count()
-    gx = orders.agg(F.min("o_custkey"), F.max("o_custkey")).first()
-    gy = orders.agg(F.min("day"), F.max("day")).first()
-    span_x, span_y = gx[1] - gx[0], gy[1] - gy[0]
-
-    zpath = str(tmp_path / "zordered")
-    write_zordered(
-        orders, zpath, [F.col("o_custkey"), F.col("day")], bits=16, num_files=8
-    )
-    back = spark.read.parquet(zpath)
-    assert back.count() == total
-
-    ranges = _file_ranges(zpath, ["o_custkey", "day"])
-    assert len(ranges) >= 4
-    # every file must cover a strict sub-rectangle on BOTH dimensions
-    # for at least half the files (curve ends can straddle)
-    tight = [
-        r
-        for r in ranges
-        if (r["o_custkey"][1] - r["o_custkey"][0]) <= 0.7 * span_x
-        and (r["day"][1] - r["day"][0]) <= 0.7 * span_y
-    ]
-    assert len(tight) >= len(ranges) // 2, ranges
-
-    # contrast: clustering on custkey alone leaves day unpruned everywhere
-    cpath = str(tmp_path / "bykey")
-    orders.repartitionByRange(8, "o_custkey").write.mode("overwrite").parquet(cpath)
-    cranges = _file_ranges(cpath, ["o_custkey", "day"])
-    assert all((r["day"][1] - r["day"][0]) > 0.9 * span_y for r in cranges)
