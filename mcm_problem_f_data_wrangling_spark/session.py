@@ -66,7 +66,29 @@ remaining correct on ``local[32]``:
   ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` and ``SPARK_DIST_CLASSPATH``
   -- only when each holds nothing but ``*.template`` files; otherwise,
   and for a caller's own CDS flags, a read-only checkout, a cluster
-  master or a JVM launched elsewhere, the launch is unchanged.
+  master or a JVM launched elsewhere, the launch maps no archive.
+- On a local master, a call that launches the driver JVM also makes
+  C2 compile later, archive or not: ``LATE_C2`` sets
+  ``-XX:Tier4InvocationThreshold=40000``,
+  ``Tier4MinInvocationThreshold=4800``, ``Tier4CompileThreshold=120000``
+  and ``Tier4BackEdgeThreshold=320000``, 8x JDK 17's defaults
+  (5000/600/15000/40000).  Even on the archive, JIT compiler threads
+  took some 60% of a short session's first-pass CPU, much of it C2
+  compiling start-up and one-off code that never pays the compile
+  back; code that stays hot still reaches C2.  C1 only
+  (``-XX:TieredStopAtLevel=1``) halved that CPU too, but made the
+  warm ``bench.py`` suite 57-71% slower, so C2 stays.  Why 8x
+  (perfbench, 4 cores, order-alternated pairs, medians): 8x cut
+  ``ces_pipeline``'s cold-pass CPU by 27% and set-up CPU by 37% for
+  +3% warm CPU (``stream_replay``: -24%, -27%, +10%); 4x cut the
+  cold pass by only 18%; 16x by 36%, but warm CPU rose 11-14%.  The
+  price is paid by code timed soon after start-up: ``bench.py``'s
+  sf0.1 suite, which warms each query twice, read +8.5% (median of
+  four runs, inside the default's run-to-run range).  The flags go
+  before the caller's ``spark.driver.extraJavaOptions``:
+  HotSpot takes a flag's last occurrence, so a caller's own value
+  wins.  Cluster masters, executors and a JVM launched elsewhere are
+  untouched.
 """
 
 from __future__ import annotations
@@ -95,6 +117,11 @@ _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 LOCAL_FILE_SYSTEM = "sparkgraft.fs.NioLocalFileSystem"
 LOCAL_FILE_SYSTEM_JAR = os.path.join(_PKG_DIR, "jvm", "spark-graft-fs.jar")
 CDS_DIR = os.path.join(os.path.dirname(_PKG_DIR), ".cds")
+# C2 compiles 8x later than JDK 17's defaults (module docstring)
+LATE_C2 = (
+    "-XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800 "
+    "-XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000"
+)
 # the class-path entries the launcher takes from the environment
 _LAUNCH_ENV = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 _shipped_apps: set[str] = set()
@@ -192,6 +219,9 @@ def get_spark(
         if "spark.hadoop.fs.file.impl" not in conf and _jvm_loads(LOCAL_FILE_SYSTEM):
             conf["spark.hadoop.fs.file.impl"] = LOCAL_FILE_SYSTEM
         if _launches_jvm():
+            # before the caller's options: HotSpot takes a flag's last value
+            opts = conf.get("spark.driver.extraJavaOptions")
+            conf["spark.driver.extraJavaOptions"] = f"{LATE_C2} {opts}" if opts else LATE_C2
             cds = _cds_launch(conf, conf.get("spark.driver.memory", memory))
     for k, v in conf.items():
         builder = builder.config(k, v)

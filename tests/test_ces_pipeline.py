@@ -99,7 +99,7 @@ def test_extract_and_collapse_parity(ces, spark):
     emp_m = emp.groupby("date", as_index=False)["value"].sum(min_count=1)
     w = emp.rename(columns={"value": "w"})[["date", "industry_code", "w"]]
     ew = earn.merge(w, on=["date", "industry_code"], how="left")
-    earn_m = ew.groupby("date").apply(
+    earn_m = ew.groupby("date")[["value", "w"]].apply(
         lambda g: (g["value"] * g["w"]).sum() / g["w"].sum()
     )
     for _, row in out.iterrows():

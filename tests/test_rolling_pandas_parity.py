@@ -70,7 +70,7 @@ def test_rolling_family_matches_pandas(series):
     )
     exp_corr = (
         pdf.sort_values(["career", "t"])
-        .groupby("career")
+        .groupby("career")[["x", "y"]]
         .apply(lambda d: d["x"].rolling(12).corr(d["y"]))
         .reset_index(drop=True)
     )
@@ -120,7 +120,8 @@ def test_ewma_matches_pandas_ewm(spark):
     # pandas ewm: adjust=True with alpha = 1 - decay
     exp = (
         pdf.groupby("k", group_keys=False)
-        .apply(lambda g: g.sort_values("i").assign(y=g.sort_values("i")["x"].ewm(alpha=0.5, adjust=True).mean()), include_groups=True)
+        .apply(lambda g: g.sort_values("i").assign(y=g.sort_values("i")["x"].ewm(alpha=0.5, adjust=True).mean()), include_groups=False)
+        .assign(k=pdf["k"])
         .sort_values(["k", "i"])
         .reset_index(drop=True)
     )

@@ -6,7 +6,8 @@ A local master checkpoints through Spark's FileSystem-based manager
 ``NioLocalFileSystem`` (no forked ``chmod`` per created file); cluster
 masters keep Spark's and Hadoop's defaults, and a caller's
 ``extra_conf`` always wins.  A local call that launches the JVM maps
-the class-data-sharing archive, or records it for publication at exit.
+the class-data-sharing archive, or records it for publication at exit,
+and raises the C2 thresholds ahead of the caller's JVM options.
 """
 
 from __future__ import annotations
@@ -35,6 +36,13 @@ CP = "spark.driver.extraClassPath"
 FS = "spark.hadoop.fs.file.impl"
 JOPT = "spark.driver.extraJavaOptions"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# session.LATE_C2, spelled out
+TIER4 = {
+    "Tier4InvocationThreshold": "40000",
+    "Tier4MinInvocationThreshold": "4800",
+    "Tier4CompileThreshold": "120000",
+    "Tier4BackEdgeThreshold": "320000",
+}
 
 
 @pytest.fixture
@@ -129,11 +137,10 @@ def launch(monkeypatch, tmp_path):
 
 
 def _flag(opts: str, name: str) -> str | None:
-    """The value of ``-XX:<name>=`` in JVM options, or None."""
-    for o in opts.split():
-        if o.startswith(f"-XX:{name}="):
-            return o.split("=", 1)[1]
-    return None
+    """The value HotSpot takes for ``-XX:<name>=`` in JVM options (the
+    last one), or None."""
+    values = [o.split("=", 1)[1] for o in opts.split() if o.startswith(f"-XX:{name}=")]
+    return values[-1] if values else None
 
 
 def test_cds_flags_only_when_a_local_call_launches_the_jvm(
@@ -142,6 +149,7 @@ def test_cds_flags_only_when_a_local_call_launches_the_jvm(
     tmp = _flag(options(master="local[2]")[JOPT], "ArchiveClassesAtExit")
     assert os.path.dirname(tmp) == session.CDS_DIR
     assert tmp.endswith(f".{os.getpid()}.tmp")
+    # no JVM option at all below: neither the archive's nor the late C2's
     assert JOPT not in options(master="spark://head:7077")
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     assert JOPT not in options(master="local[2]")
@@ -151,10 +159,22 @@ def test_cds_flags_only_when_a_local_call_launches_the_jvm(
 
 
 def test_cds_flags_append_to_the_caller_options(options, launch):
-    opts = options(master="local[2]", extra_conf={JOPT: "-Dx=1"})[JOPT]
-    assert opts.startswith("-Dx=1 ") and _flag(opts, "ArchiveClassesAtExit")
+    opts = options(master="local[2]", extra_conf={JOPT: "-Dx=1"})[JOPT].split()
+    tmp = next(o for o in opts if o.startswith("-XX:ArchiveClassesAtExit="))
+    assert opts.index("-Dx=1") < opts.index(tmp)
     # a caller's own class-data-sharing choice is left alone
-    assert options(master="local[2]", extra_conf={JOPT: "-Xshare:off"})[JOPT] == "-Xshare:off"
+    opts = options(master="local[2]", extra_conf={JOPT: "-Xshare:off"})[JOPT]
+    assert opts.endswith(" -Xshare:off")
+    assert not any(_flag(opts, f) for f in ("ArchiveClassesAtExit", "SharedArchiveFile"))
+
+
+def test_caller_tier4_value_wins(options, launch):
+    opts = options(
+        master="local[2]", extra_conf={JOPT: "-XX:Tier4InvocationThreshold=5000"}
+    )[JOPT]
+    # HotSpot takes a flag's last occurrence: the caller's comes later
+    assert _flag(opts, "Tier4InvocationThreshold") == "5000"
+    assert _flag(opts, "Tier4CompileThreshold") == TIER4["Tier4CompileThreshold"]
 
 
 def test_published_archive_is_mapped_never_a_tmp(options, launch):
@@ -195,7 +215,9 @@ def test_conf_directory_with_a_real_file_leaves_the_launch_unchanged(
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
     monkeypatch.setenv("HADOOP_CONF_DIR", str(launch))
-    assert _flag(options(master="local[2]")[JOPT], "ArchiveClassesAtExit")
+    opts = options(master="local[2]")[JOPT]
+    assert _flag(opts, "ArchiveClassesAtExit")
+    assert {f: _flag(opts, f) for f in TIER4} == TIER4
     # the launch alone sees the empty conf directory; the caller's
     # environment is back afterwards
     assert seen["env"] == dict.fromkeys(session._LAUNCH_ENV) | {
@@ -204,8 +226,11 @@ def test_conf_directory_with_a_real_file_leaves_the_launch_unchanged(
     assert os.environ["SPARK_CONF_DIR"] == str(launch)
     assert os.environ["HADOOP_CONF_DIR"] == str(launch)
     (launch / "spark-defaults.conf").write_text("spark.x 1\n")
-    assert JOPT not in options(master="local[2]")
+    opts = options(master="local[2]")[JOPT]
     assert seen["env"]["SPARK_CONF_DIR"] == str(launch)
+    # no archive, but C2 still compiles later
+    assert not any(_flag(opts, f) for f in ("ArchiveClassesAtExit", "SharedArchiveFile"))
+    assert {f: _flag(opts, f) for f in TIER4} == TIER4
 
 
 @pytest.mark.parametrize("code, published", [(0, True), (3, False)])
@@ -295,10 +320,18 @@ def test_package_zip_is_removed_at_exit(tmp_path):
         # imports the package from the shipped zip
         one = F.udf(lambda i: default_parallelism() * 0 + 1, "long")
         print(spark.range(4).select(F.sum(one("id")).alias("n")).first().n)
+        # the value the launched JVM runs with: Spark's own driver
+        # options carry -XX:+IgnoreUnrecognizedVMOptions, so a
+        # misspelled flag would be dropped without a word
+        jvm = spark._jvm
+        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        print(bean.getVMOption("Tier4InvocationThreshold").getValue())
         """,
         tmp_path,
         TMPDIR=str(tmp_path),
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert r.stdout.splitlines()[-1] == "4"
+    assert r.stdout.splitlines()[-2:] == ["4", TIER4["Tier4InvocationThreshold"]]
     assert not list(tmp_path.glob("mcm_problem_f_data_wrangling_spark_*.zip"))
