@@ -11,7 +11,8 @@ pandas-parity (SURVEY.md §7 hard parts): pandas ``rolling(w)`` uses a
 w-row frame AND ``min_periods=w`` by default, emitting NaN until w
 observations exist; a bare Spark frame over-produces at series starts.
 Every rolling helper therefore guards with ``count(...) over the same
-frame >= min_periods`` and yields NULL otherwise.
+frame >= w`` (``min_periods`` for ``rolling_median``) and yields NULL
+otherwise.
 """
 
 from __future__ import annotations
@@ -53,16 +54,16 @@ def diff(col: Column | str, w: WindowSpec, periods: int = 1) -> Column:
     return c - F.lag(c, periods).over(w)
 
 
-def rolling_avg(col: Column | str, w: WindowSpec, window: int, min_periods: int | None = None) -> Column:
+def rolling_avg(col: Column | str, w: WindowSpec, window: int) -> Column:
     """W2: ``rolling(w).mean()`` with pandas min_periods semantics."""
     c = _c(col)
-    return _guarded(F.avg(c), c, w, window, min_periods)
+    return _guarded(F.avg(c), c, w, window, window)
 
 
-def rolling_std(col: Column | str, w: WindowSpec, window: int, min_periods: int | None = None) -> Column:
+def rolling_std(col: Column | str, w: WindowSpec, window: int) -> Column:
     """W3: ``rolling(w).std()`` (sample std, ddof=1 — pandas default)."""
     c = _c(col)
-    return _guarded(F.stddev_samp(c), c, w, window, min_periods)
+    return _guarded(F.stddev_samp(c), c, w, window, window)
 
 
 def rolling_median(col: Column | str, w: WindowSpec, window: int, min_periods: int | None = None) -> Column:
@@ -80,35 +81,29 @@ def rolling_median(col: Column | str, w: WindowSpec, window: int, min_periods: i
     return _guarded(F.percentile(c, F.lit(0.5)), c, w, window, min_periods)
 
 
-def rolling_corr(x: Column | str, y: Column | str, w: WindowSpec, window: int, min_periods: int | None = None) -> Column:
+def rolling_corr(x: Column | str, y: Column | str, w: WindowSpec, window: int) -> Column:
     """W4: ``x.rolling(w).corr(y)`` (``EDA.ipynb cell 17``).
 
-    The count guard requires BOTH sides non-null (pandas pairwise
-    behavior).
+    The count guard requires BOTH sides non-null on every row of the
+    frame (pandas pairwise behavior), so the moments below never see a
+    one-sided NULL.
 
     Computed as ``try_divide(covar_samp(x,y), stddev(x)*stddev(y))``
     rather than ``F.corr``: under an ANSI-on session (the driver's
     vanilla Spark 4 config) ``corr`` raises DIVIDE_BY_ZERO on a
-    zero-variance frame, and a ``when(count >= mp, ...)`` projection
+    zero-variance frame, and a ``when(count >= w, ...)`` projection
     guard does not help because window aggregates are evaluated
     before the CASE.  ``try_divide`` yields NULL on zero variance,
     matching DuckDB's ``corr`` and pandas' NaN.
     """
     cx, cy = _c(x), _c(y)
-    both = cx.isNotNull() & cy.isNotNull()
-    # pairwise-complete masking: every moment uses ONLY rows where BOTH
-    # sides are present (pandas/DuckDB corr semantics).  Unmasked
-    # per-side stddevs would mix in rows the other side lacks and can
-    # produce |corr| > 1.
-    xm = F.when(both, cx)
-    ym = F.when(both, cy)
     frame = _frame(w, window)
-    mp = window if min_periods is None else min_periods
     corr = F.try_divide(
-        F.covar_samp(xm, ym).over(frame),
-        F.stddev_samp(xm).over(frame) * F.stddev_samp(ym).over(frame),
+        F.covar_samp(cx, cy).over(frame),
+        F.stddev_samp(cx).over(frame) * F.stddev_samp(cy).over(frame),
     )
-    return F.when(F.count(xm).over(frame) >= mp, corr)
+    both = F.when(cx.isNotNull() & cy.isNotNull(), F.lit(1))
+    return F.when(F.count(both).over(frame) >= window, corr)
 
 
 def index_rebase(col: Column | str, w: WindowSpec, base: float = 100.0) -> Column:
@@ -142,31 +137,31 @@ def tail_slice_flag(partition_cols: list[str], order_col: str, n: int) -> Column
     return F.row_number().over(desc) <= n
 
 
-def ewma(
-    col: Column | str,
-    w: WindowSpec,
-    decay: float = 0.5,
-    n_lags: int = 40,
-) -> Column:
-    """Exponentially-weighted moving average (pandas
-    ``ewm(adjust=True)`` semantics, truncated at ``n_lags`` terms).
+# ewma's decay and its number of unrolled lags, shared with ewma_sql
+_DECAY = 0.5
+_N_LAGS = 40
 
-    ``y_t = Σ_d decay^d·x_{t-d} / Σ_d decay^d`` over present terms.
-    The recursive EWMA form can't be a window aggregate, and the
-    rescaled-cumsum trick (``decay^{-i}`` factors) overflows after a
-    few hundred rows — so this unrolls the ``n_lags`` dominant terms
-    as an explicit lag chain over ONE window sort.  With decay=0.5,
-    terms beyond 40 lags are < 1e-12 of the newest — below double
-    noise.  Both numerator and denominator fold LEFT-TO-RIGHT with
-    driver-computed literal weights, so the value is bit-identical in
-    any engine that evaluates the same chain (the SQL oracle does).
-    O(n_lags) per row, one sort, no shuffle beyond the window's own.
+
+def ewma(col: Column | str, w: WindowSpec) -> Column:
+    """Exponentially-weighted moving average (pandas
+    ``ewm(alpha=0.5, adjust=True)`` semantics, truncated at 40 terms).
+
+    ``y_t = Σ_d decay^d·x_{t-d} / Σ_d decay^d`` over present terms,
+    decay = 0.5.  The recursive EWMA form can't be a window aggregate,
+    and the rescaled-cumsum trick (``decay^{-i}`` factors) overflows
+    after a few hundred rows — so this unrolls the 40 dominant terms
+    as an explicit lag chain over ONE window sort: terms beyond 40
+    lags are < 1e-12 of the newest — below double noise.  Both
+    numerator and denominator fold LEFT-TO-RIGHT with driver-computed
+    literal weights, so the value is bit-identical in any engine that
+    evaluates the same chain (the SQL oracle does).
+    O(lags) per row, one sort, no shuffle beyond the window's own.
     """
     c = _c(col)
     num = None
     den = None
-    for d in range(n_lags):
-        weight = F.lit(float(decay**d))
+    for d in range(_N_LAGS):
+        weight = F.lit(float(_DECAY**d))
         x_d = F.lag(c, d).over(w)
         t_num = F.coalesce(x_d * weight, F.lit(0.0))
         t_den = F.when(x_d.isNotNull(), weight).otherwise(F.lit(0.0))
@@ -175,16 +170,16 @@ def ewma(
     return num / F.nullif(den, F.lit(0.0))
 
 
-def ewma_sql(expr: str, over: str, decay: float = 0.5, n_lags: int = 40) -> str:
+def ewma_sql(expr: str, over: str) -> str:
     """DuckDB mirror of :func:`ewma` — the SAME left-to-right chain
     with the SAME float literals (``repr`` round-trips exactly)."""
     nums = " + ".join(
-        f"COALESCE(LAG({expr}, {d}) OVER {over} * {decay**d!r}, 0.0)"
-        for d in range(n_lags)
+        f"COALESCE(LAG({expr}, {d}) OVER {over} * {_DECAY**d!r}, 0.0)"
+        for d in range(_N_LAGS)
     )
     dens = " + ".join(
         f"(CASE WHEN LAG({expr}, {d}) OVER {over} IS NOT NULL"
-        f" THEN {decay**d!r} ELSE 0.0 END)"
-        for d in range(n_lags)
+        f" THEN {_DECAY**d!r} ELSE 0.0 END)"
+        for d in range(_N_LAGS)
     )
     return f"({nums}) / NULLIF({dens}, 0.0)"

@@ -22,27 +22,22 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     attach: tuple[str, ...] = (),
     suffix: str = "_asof",
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Left as-of join: for every left row, attach ``attach`` columns
-    from the latest right row with ``right_ts <= left_ts`` per ``on``
-    key (NULLs when no such row).  ``tolerance_seconds`` additionally
-    voids matches older than the given horizon (pandas
-    ``merge_asof(tolerance=...)`` semantics).
+    """Left as-of join on the ``ts`` column of both sides: for every
+    left row, attach ``attach`` columns from the latest right row with
+    right ``ts`` <= left ``ts`` per ``on`` key (NULLs when no such row).
 
-    Ties on ``right_ts`` within a key resolve to one arbitrary row —
+    Ties on the right ``ts`` within a key resolve to one arbitrary row —
     the same contract as DuckDB ASOF JOIN / pandas merge_asof.
     """
     out_cols = [f"{c}{suffix}" for c in attach]
-    ats = f"{right_ts}{suffix}"  # right timestamp always attached
+    ats = f"ts{suffix}"  # right timestamp always attached
 
     r = right.select(
         *on,
-        F.col(right_ts).alias(ats),
+        F.col("ts").alias(ats),
         *[F.col(c).alias(f"{c}{suffix}") for c in attach],
         F.lit(0).alias("__side"),
     )
@@ -54,7 +49,7 @@ def asof_join(
         if c not in r.columns:
             r = r.withColumn(c, F.lit(None).cast(dict(l.dtypes)[c]))
 
-    order_ts = F.when(F.col("__side") == 0, F.col(ats)).otherwise(F.col(left_ts))
+    order_ts = F.when(F.col("__side") == 0, F.col(ats)).otherwise(F.col("ts"))
     w = (
         Window.partitionBy(*on)
         .orderBy(order_ts, "__side")
@@ -64,18 +59,4 @@ def asof_join(
     filled = unioned.withColumns(
         {c: F.last(c, ignorenulls=True).over(w) for c in [ats, *out_cols]}
     )
-    out = filled.filter(F.col("__side") == 1).drop("__side")
-    if tolerance_seconds is not None:
-        # materialize the flag BEFORE voiding: the first voided column
-        # is the right timestamp itself, which the predicate reads
-        out = out.withColumn(
-            "__stale",
-            (F.col(left_ts).cast("double") - F.col(ats).cast("double"))
-            > F.lit(float(tolerance_seconds)),
-        )
-        for c in [ats, *out_cols]:
-            out = out.withColumn(
-                c, F.when(F.col("__stale"), F.lit(None)).otherwise(F.col(c))
-            )
-        out = out.drop("__stale")
-    return out
+    return filled.filter(F.col("__side") == 1).drop("__side")

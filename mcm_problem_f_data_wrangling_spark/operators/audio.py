@@ -56,7 +56,7 @@ SPECTRAL_SCHEMA = StructType(
 )
 
 
-def resample_to_rate(sig, sr: int, rate: int, anti_alias: bool = True, n_taps: int = 255):
+def resample_to_rate(sig, sr: int, rate: int, n_taps: int = 255):
     """Resample ``sig`` (numpy float64) from ``sr`` to ``rate`` Hz:
     windowed-sinc FIR low-pass at the TARGET Nyquist, then linear
     interpolation onto the target grid.
@@ -68,17 +68,16 @@ def resample_to_rate(sig, sr: int, rate: int, anti_alias: bool = True, n_taps: i
     at 2.75 kHz after naive decimation to 8 kHz) and a stream can
     fingerprint-match content it never contained; upsampling has no
     such folding (linear-interp imaging lands above the original
-    content and inside the widened band span).  ``anti_alias=False``
-    preserves the naive path so tests can PIN the aliasing failure
-    mode this fixes.  ``n_taps=255`` puts the stopband ~0.6 kHz above
-    an 8 kHz target's Nyquist at 48 kHz input — in-band content keeps
-    its dominant band, folded content drops ~50 dB.
+    content and inside the widened band span).  ``n_taps=255`` puts
+    the stopband ~0.6 kHz above an 8 kHz target's Nyquist at 48 kHz
+    input — in-band content keeps its dominant band, folded content
+    drops ~50 dB.
     """
     import numpy as np
 
     if sr == rate or not len(sig):
         return sig
-    if anti_alias and sr > rate:
+    if sr > rate:
         m = n_taps - 1
         n = np.arange(n_taps, dtype=np.float64) - m / 2.0
         fc = 0.5 * rate / sr  # target Nyquist, cycles/sample of sig
@@ -436,19 +435,17 @@ def audio_shifted_neardup(
     id_col: str = "media_id",
     frame_len: int = 256,
     n_bands: int = 8,
-    gram: int = 4,
-    min_matches: int = 6,
 ) -> DataFrame:
     """Shift-tolerant audio near-dup: the same content starting at a
     DIFFERENT point in the stream (clipped intro, prepended silence)
     defeats the whole-sequence fingerprint; this matcher indexes
-    band-sequence g-grams instead and requires ``min_matches`` gram
-    hits at ONE CONSISTENT frame offset — the banded-candidates +
+    band-sequence 4-grams instead and requires 6 gram hits at ONE
+    CONSISTENT frame offset — the banded-candidates +
     verify shape every LSH stage here uses, never all-pairs.
 
-    Plan: frames → JVM window ``lead`` builds each position's g-gram
+    Plan: frames → JVM window ``lead`` builds each position's 4-gram
     string → equi-join on ``xxhash64(gram)`` (8-byte key) with exact
-    gram verify → group by (pair, offset) → count ≥ ``min_matches``.
+    gram verify → group by (pair, offset) → count ≥ 6.
     A degenerate gram (one shared by m media) fans out like any LSH
     band bucket; AQE skew-split applies to the equi-join.
 
@@ -461,14 +458,14 @@ def audio_shifted_neardup(
     frames = spectral_frames(df, payload_col, id_col, frame_len, n_bands)
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     parts = [F.col("dom_band").cast("string")] + [
-        F.lead("dom_band", j).over(w).cast("string") for j in range(1, gram)
+        F.lead("dom_band", j).over(w).cast("string") for j in range(1, 4)
     ]
     grams = (
         frames.select(
             "media_id",
             "frame_idx",
             F.concat_ws(",", *parts).alias("g"),
-            F.lead("dom_band", gram - 1).over(w).alias("_tail"),
+            F.lead("dom_band", 3).over(w).alias("_tail"),
         )
         .where(F.col("_tail").isNotNull())  # complete grams only
         .drop("_tail")
@@ -488,5 +485,5 @@ def audio_shifted_neardup(
             (F.col("a.frame_idx") - F.col("b.frame_idx")).alias("offset"),
         )
         .agg(F.count("*").cast("int").alias("n_matches"))
-        .where(F.col("n_matches") >= min_matches)
+        .where(F.col("n_matches") >= 6)
     )

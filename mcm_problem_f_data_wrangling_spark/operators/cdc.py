@@ -1,11 +1,10 @@
 """Change-data-capture apply: change log -> current snapshot.
 
 Collapses an ordered stream of row-level changes (upserts + deletes)
-into the final table state, optionally on top of a base snapshot —
-the core of lakehouse MERGE/upsert maintenance (Delta/Iceberg MERGE
-INTO, Kafka compacted-topic materialization). No analogue in the
-reference (its tables are static monthly extracts); engine extension
-per SURVEY.md §2.3 notes.
+into the final table state — the core of lakehouse MERGE/upsert
+maintenance (Delta/Iceberg MERGE INTO, Kafka compacted-topic
+materialization). No analogue in the reference (its tables are static
+monthly extracts); engine extension per SURVEY.md §2.3 notes.
 
 Scale shape: the winner per key is ``max(struct(order, payload))`` —
 an ordinary combinable aggregate, so Spark computes it with map-side
@@ -29,7 +28,6 @@ def cdc_apply(
     attr_cols: list[str],
     tiebreak_cols: list[str] | None = None,
     delete_op: str = "D",
-    base: DataFrame | None = None,
 ) -> DataFrame:
     """Apply a change log and return the resulting snapshot.
 
@@ -37,11 +35,6 @@ def cdc_apply(
     wins; if its ``op_col`` equals ``delete_op`` the key is absent
     from the output, otherwise the output row carries the winning
     change's ``attr_cols``.
-
-    ``base`` (optional) is a prior snapshot with ``key_cols`` +
-    ``attr_cols``; keys untouched by the log pass through, keys with
-    changes are replaced (or deleted). The join runs on the already
-    key-aggregated log — O(distinct changed keys), not O(log rows).
     """
     order = [F.col(ts_col)] + [F.col(c) for c in (tiebreak_cols or [])]
     payload = F.struct(
@@ -58,22 +51,7 @@ def cdc_apply(
             *[F.col(f"__w.__attrs.{c}").alias(c) for c in attr_cols],
         )
     )
-    if base is None:
-        return latest.filter(F.col("__op") != delete_op).drop("__op")
-    merged = base.alias("b").join(latest.alias("u"), on=key_cols, how="full_outer")
-    keep = F.col("u.__op").isNull() | (F.col("u.__op") != delete_op)
-    return (
-        merged.filter(keep)
-        .select(
-            *key_cols,
-            *[
-                F.when(F.col("u.__op").isNotNull(), F.col(f"u.{c}"))
-                .otherwise(F.col(f"b.{c}"))
-                .alias(c)
-                for c in attr_cols
-            ],
-        )
-    )
+    return latest.filter(F.col("__op") != delete_op).drop("__op")
 
 
 def snapshot_diff(

@@ -105,12 +105,12 @@ def source_mix(
     source_col: str,
     rates: dict[str, float],
     key_col: str = "doc_id",
-    default_rate: float = 1.0,
     seed: str = "mix",
 ) -> DataFrame:
     """Down-weight sources to target sampling ``rates`` (e.g. keep 30%
-    of crawl, 100% of curated) — the mixing step that shapes a training
-    corpus.  Pure filter on the hash fraction: no shuffle."""
+    of crawl); a source ``rates`` does not name is kept whole — the
+    mixing step that shapes a training corpus.  Pure filter on the
+    hash fraction: no shuffle."""
     frac = hash_frac(F.col(key_col).cast("string"), seed=seed)
     rate = None
     for name, r in rates.items():
@@ -119,9 +119,7 @@ def source_mix(
             if rate is None
             else rate.when(F.col(source_col) == name, F.lit(float(r)))
         )
-    rate = F.lit(float(default_rate)) if rate is None else rate.otherwise(
-        F.lit(float(default_rate))
-    )
+    rate = F.lit(1.0) if rate is None else rate.otherwise(F.lit(1.0))
     return df.filter(frac < rate)
 
 

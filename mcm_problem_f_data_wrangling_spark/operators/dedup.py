@@ -330,11 +330,9 @@ def ngram_jaccard_pairs(
     )
 
 
-def srp_hyperplanes(
-    dim: int, n_bits: int = 6, n_tables: int = 1, seed: int = 7
-) -> list[list[float]]:
+def srp_hyperplanes(dim: int, n_bits: int = 6, seed: int = 7) -> list[list[float]]:
     """Seeded Gaussian hyperplanes for sign-random-projection LSH
-    (Charikar, STOC'02) — ``n_tables * n_bits`` rows of ``dim`` floats.
+    (Charikar, STOC'02) — one table: ``n_bits`` rows of ``dim`` floats.
 
     Driver-side literals: the SAME floats feed the Spark plan and the
     DuckDB oracle (``repr`` round-trips doubles exactly), so banding is
@@ -344,7 +342,7 @@ def srp_hyperplanes(
 
     rng = np.random.RandomState(seed)
     return [
-        [float(x) for x in row] for row in rng.randn(n_tables * n_bits, dim)
+        [float(x) for x in row] for row in rng.randn(n_bits, dim)
     ]
 
 
@@ -406,7 +404,6 @@ def embedding_neardup_pairs(
     top_per_band: int = 3,
     hyperplanes: list[list[float]] | None = None,
     n_bits: int = 6,
-    band_col: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup candidates, banded to avoid O(n²).
 
@@ -420,14 +417,9 @@ def embedding_neardup_pairs(
     self-join stays O(n²/2^n_bits) instead of degenerating when a
     fixed-cardinality column is the band.  Identical/near-identical
     vectors agree on every sign bit, so true near-dups collide;
-    recall for a pair at angle θ is (1-θ/π)^n_bits per table —
-    raise ``n_tables`` in :func:`srp_hyperplanes` (OR-amplification)
-    for the high-recall production sweep.  With ``n_tables`` > 1 the
+    recall for a pair at angle θ is (1-θ/π)^n_bits per table.  With
+    more than one table in ``hyperplanes`` (OR-amplification) the
     emitted band id is ``table_idx * 2^n_bits + key``.
-
-    ``band_col`` short-circuits to pre-assigned cells (a trained IVF
-    quantizer's cell column — see ``operators.similarity``) when the
-    caller already has them.
     """
     from pyspark.sql import Window
 
@@ -438,35 +430,30 @@ def embedding_neardup_pairs(
     # see minhash_signatures' spread note
     df = spread(df)
 
-    if band_col is not None:
-        banded = df.select(
-            F.col(id_col), F.col(vec_col), F.col(band_col).cast("long").alias("band")
-        )
-    else:
-        if hyperplanes is None:
-            first = df.select(vec_col).first()
-            if first is None:
-                # empty input: no pairs (and no dimension to derive
-                # hyperplanes from) — return the empty result with the
-                # output schema rather than crashing a scheduled sweep.
-                # The id columns inherit the caller's id type so empty
-                # and non-empty batches union cleanly.
-                id_type = df.schema[id_col].dataType.simpleString()
-                return df.sparkSession.createDataFrame(
-                    [],
-                    f"band long, vec_id_1 {id_type}, vec_id_2 {id_type}, cos_sim double",
-                )
-            hyperplanes = srp_hyperplanes(len(first[0]), n_bits=n_bits)
-        keys = srp_band_keys(vec_col, hyperplanes, n_bits)
-        banded = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode(keys).alias("__t", "__key"),
-        ).select(
-            id_col,
-            vec_col,
-            (F.col("__t") * (1 << n_bits) + F.col("__key")).alias("band"),
-        )
+    if hyperplanes is None:
+        first = df.select(vec_col).first()
+        if first is None:
+            # empty input: no pairs (and no dimension to derive
+            # hyperplanes from) — return the empty result with the
+            # output schema rather than crashing a scheduled sweep.
+            # The id columns inherit the caller's id type so empty
+            # and non-empty batches union cleanly.
+            id_type = df.schema[id_col].dataType.simpleString()
+            return df.sparkSession.createDataFrame(
+                [],
+                f"band long, vec_id_1 {id_type}, vec_id_2 {id_type}, cos_sim double",
+            )
+        hyperplanes = srp_hyperplanes(len(first[0]), n_bits=n_bits)
+    keys = srp_band_keys(vec_col, hyperplanes, n_bits)
+    banded = df.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.posexplode(keys).alias("__t", "__key"),
+    ).select(
+        id_col,
+        vec_col,
+        (F.col("__t") * (1 << n_bits) + F.col("__key")).alias("band"),
+    )
     # pre-normalize ONCE per banded row so the within-band pair scoring
     # is a single dot product: naive cosine per pair is dot + two norms
     # = 3 O(d) array passes, and the pair count dwarfs the row count
@@ -608,15 +595,14 @@ def chunk_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    chunk_words: int = 8,
 ) -> DataFrame:
     """Sub-document exact dedup at fixed word-chunk granularity
     (C4/RefinedWeb-style: boilerplate repeated across pages is removed
     even when whole documents differ).
 
-    Every document splits into consecutive ``chunk_words``-word
-    chunks; only the globally FIRST occurrence of each chunk text
-    (min ``(doc_id, pos)``) survives; surviving chunks reassemble in
+    Every document splits into consecutive 8-word chunks; only the
+    globally FIRST occurrence of each chunk text (min
+    ``(doc_id, pos)``) survives; surviving chunks reassemble in
     original order.  Documents whose every chunk was seen elsewhere
     vanish entirely.
 
@@ -633,12 +619,10 @@ def chunk_dedup(
     # a HOF lambda re-evaluates PER ELEMENT, so the inline form ran
     # tokenize once per chunk (see chunk_documents; same fix)
     words = F.col("__w")
-    n_chunks = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
+    n_chunks = F.ceil(F.size(words) / F.lit(8)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(
-            F.slice(words, i * chunk_words + 1, chunk_words), " "
-        ),
+        lambda i: F.array_join(F.slice(words, i * 8 + 1, 8), " "),
     )
     exploded = (
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("__w"))
@@ -667,7 +651,6 @@ def jaccard_join_prefix(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 3,
     threshold: float = 0.3,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join via prefix filtering (AllPairs /
@@ -704,9 +687,7 @@ def jaccard_join_prefix(
         spread(df)
         .select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(word_shingles(text_col, k=shingle_k))).alias(
-                "token"
-            ),
+            F.explode(F.array_distinct(word_shingles(text_col, k=3))).alias("token"),
         )
     )
     tok = materialize(tok)

@@ -78,7 +78,6 @@ def simulate_paths(
     sims: int = 200,
     steps: int = 12,
     seed: int = 42,
-    clip_min: float | None = 0.0,
 ) -> DataFrame:
     """F14+W8+F10: native Monte-Carlo path simulation.
 
@@ -113,8 +112,7 @@ def simulate_paths(
         F.col("last_value")
         + F.sum("dx").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
     )
-    if clip_min is not None:
-        path = path.withColumn("y", F.greatest(F.col("y"), F.lit(float(clip_min))))
+    path = path.withColumn("y", F.greatest(F.col("y"), F.lit(0.0)))
     return path.select("group", "sim", "step", "y")
 
 

@@ -26,27 +26,19 @@ def merge_intervals(
     key_cols: list[str],
     start_col: str,
     end_col: str,
-    adjacent: bool = True,
 ) -> DataFrame:
-    """Merge overlapping (and, if ``adjacent``, exactly-touching)
-    intervals per key.
+    """Merge overlapping and exactly-touching intervals per key.
 
     Output: key_cols + (span_start, span_end, n_merged) — one row per
-    maximal merged span. Intervals are treated as closed on both ends
-    for overlap purposes; ``adjacent=False`` keeps spans that merely
-    touch (prev_end == start) separate.
+    maximal merged span. Intervals are treated as closed on both ends,
+    so spans that merely touch (prev_end == start) merge.
     """
     w = Window.partitionBy(*key_cols).orderBy(start_col, end_col)
     prev_max_end = F.max(end_col).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
-    gap = (
-        F.col(start_col) > prev_max_end
-        if adjacent
-        else F.col(start_col) >= prev_max_end
-    )
     new_island = F.when(
-        prev_max_end.isNull() | gap, F.lit(1)
+        prev_max_end.isNull() | (F.col(start_col) > prev_max_end), F.lit(1)
     ).otherwise(F.lit(0))
     labeled = df.withColumn(
         "__island", F.sum(new_island).over(w)

@@ -633,17 +633,15 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def resize_plan(decoded: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize stage: target dims so the longest side is ``max_side``.
+def resize_plan(decoded: DataFrame) -> DataFrame:
+    """Resize stage: target dims so the longest side is at most 256.
 
     The geometry (pure arithmetic) stays JVM-side; a real pixel
     resample would run through the same ``mapInPandas`` batch path as
     :func:`decode_media` with a real imaging library.
     """
     longest = F.greatest("width", "height")
-    scale = F.when(longest > max_side, F.lit(float(max_side)) / longest).otherwise(
-        F.lit(1.0)
-    )
+    scale = F.when(longest > 256, F.lit(256.0) / longest).otherwise(F.lit(1.0))
     return decoded.select(
         "media_id",
         "media_type",

@@ -36,12 +36,12 @@ from pyspark.sql.types import (
 _TEMPORAL = (TimestampType, TimestampNTZType, DateType)
 
 
-def profile_dataset(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Long-format profile: one row per column with
+def profile_dataset(df: DataFrame) -> DataFrame:
+    """Long-format profile: one row per column of ``df`` with
     (column, n, n_null, min_num, max_num, min_str, max_str,
     approx_distinct)."""
     fields = {f.name: f.dataType for f in df.schema.fields}
-    cols = columns or list(fields)
+    cols = list(fields)
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")
     aggs = [F.count(F.lit(1)).alias("__total")]

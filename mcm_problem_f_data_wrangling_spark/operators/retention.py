@@ -27,13 +27,10 @@ def retention_cohorts(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    grain: str = "week",
 ) -> DataFrame:
-    """(cohort_period, period_offset, n_active, cohort_size) table.
-
-    ``grain`` is any clean ``date_trunc`` grain; offsets are computed
-    in days/7 for week (exact integers on truncated timestamps) and
-    months_between for month.
+    """(cohort_period, period_offset, n_active, cohort_size) table over
+    weeks; offsets are days/7 (exact integers on truncated
+    timestamps).
     """
     # repartition by user FIRST: hash(user) satisfies the clustering
     # requirement of BOTH the (user, period) dedup (subset rule) and
@@ -42,26 +39,17 @@ def retention_cohorts(
     # and then again on user for the window)
     act = (
         events.select(
-            F.col(user_col), F.date_trunc(grain, F.col(ts_col)).alias("period")
+            F.col(user_col), F.date_trunc("week", F.col(ts_col)).alias("period")
         )
         .repartition(F.col(user_col))
         .dropDuplicates()
     )
     w = Window.partitionBy(user_col)
     coh = act.withColumn("cohort_period", F.min("period").over(w))
-    if grain == "week":
-        offset = (
-            F.datediff(F.col("period").cast("date"), F.col("cohort_period").cast("date"))
-            / 7
-        ).cast("long")
-    elif grain == "month":
-        offset = F.months_between(F.col("period"), F.col("cohort_period")).cast("long")
-    elif grain == "day":
-        offset = F.datediff(
-            F.col("period").cast("date"), F.col("cohort_period").cast("date")
-        ).cast("long")
-    else:
-        raise ValueError(f"unsupported grain: {grain}")
+    offset = (
+        F.datediff(F.col("period").cast("date"), F.col("cohort_period").cast("date"))
+        / 7
+    ).cast("long")
     agg = coh.groupBy(
         F.col("cohort_period"), offset.alias("period_offset")
     ).agg(F.count(F.lit(1)).alias("n_active"))

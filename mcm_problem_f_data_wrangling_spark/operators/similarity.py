@@ -401,30 +401,15 @@ def _knn_candidate_frames(
     vec_col: str,
     id_col: str,
     cell_col: str,
-    n_probe: int,
-    centroids: list[list[float]] | None,
 ) -> tuple[DataFrame, DataFrame]:
-    """kNN-join candidate generation: queries tagged with their probe
-    cell(s) (trained multi-probe when ``centroids`` is given, own-cell
-    otherwise) and the corpus tagged with its cell, both keyed on
-    ``__qcell`` for the pair join."""
-    if centroids is not None:
-        probes = F.slice(
-            F.reverse(F.array_sort(_centroid_choices(vec_col, centroids))),
-            1,
-            n_probe,
-        )
-        q = queries.select(
-            F.col(id_col).alias("__qid"),
-            F.col(vec_col).alias("__qvec"),
-            F.explode(probes).alias("__probe"),
-        ).select("__qid", "__qvec", F.col("__probe")["cell"].alias("__qcell"))
-    else:
-        q = queries.select(
-            F.col(id_col).alias("__qid"),
-            F.col(vec_col).alias("__qvec"),
-            F.col(cell_col).alias("__qcell"),
-        )
+    """kNN-join candidate generation: queries tagged with their own
+    cell and the corpus tagged with its cell, both keyed on ``__qcell``
+    for the pair join."""
+    q = queries.select(
+        F.col(id_col).alias("__qid"),
+        F.col(vec_col).alias("__qvec"),
+        F.col(cell_col).alias("__qcell"),
+    )
     c = corpus.select(
         F.col(id_col).alias("__nid"),
         F.col(vec_col).alias("__nvec"),
@@ -464,8 +449,6 @@ def ivf_knn_join(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cell_col: str = "label",
-    n_probe: int = 1,
-    centroids: list[list[float]] | None = None,
     dim: int | None = None,
 ) -> DataFrame:
     """kNN JOIN: top-k cosine neighbors for EVERY query vector.
@@ -478,15 +461,12 @@ def ivf_knn_join(
     join — then ranked per query with a window top-k
     (:func:`_knn_candidate_frames` / :func:`_knn_topk`).
 
-    With ``centroids`` (the trained codebook, a driver-side literal),
-    each query probes its ``n_probe`` max-cosine cells; without, it
-    probes its own ``cell_col`` cell (n_probe=1, fully deterministic —
+    Each query probes its own ``cell_col`` cell (fully deterministic —
     the cross-engine-oracle configuration).  Self-pairs (same id) are
     excluded, and so are zero-norm vectors: a zero-norm query emits no
     rows.
 
-    ``dim`` is a pure PERFORMANCE hint (defaults to the centroid
-    dimension when ``centroids`` is given): with it the per-pair dot
+    ``dim`` is a pure PERFORMANCE hint: with it the per-pair dot
     product is :func:`..functions.vectors.dot_unrolled` — the same
     left-to-right fold compiled into whole-stage codegen instead of
     the interpreted ``aggregate(zip_with(...))`` — and rows of any
@@ -495,9 +475,7 @@ def ivf_knn_join(
     """
     from ..operators.skew import spread
 
-    q, c = _knn_candidate_frames(
-        queries, corpus, vec_col, id_col, cell_col, n_probe, centroids
-    )
+    q, c = _knn_candidate_frames(queries, corpus, vec_col, id_col, cell_col)
     # The pair join's probe side inherits the query scan's width — on a
     # single-row-group input (the bench testdata) that is ONE task doing
     # the entire |cells|·avg_cell² pair scoring on one core.  spread()
@@ -519,9 +497,6 @@ def ivf_knn_join(
     # vectors get NULL units = NULL cosine, same as the try_divide
     # guard in cosine_similarity.
     from ..functions.vectors import dot, dot_unrolled, l2_norm
-
-    if dim is None and centroids is not None:
-        dim = len(centroids[0])
 
     def _unit(df_, vec, out):
         return df_.withColumn("__nrm", l2_norm(vec)).withColumn(

@@ -25,11 +25,10 @@ def approx_distinct_by(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    rsd: float = 0.01,
 ) -> DataFrame:
-    """Per-group HyperLogLog++ distinct count (relative std dev ``rsd``)."""
+    """Per-group HyperLogLog++ distinct count (relative std dev 1%)."""
     return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd).alias("approx_distinct"),
+        F.approx_count_distinct(value_col, 0.01).alias("approx_distinct"),
         F.count(value_col).alias("n_rows"),
     )
 

@@ -160,14 +160,6 @@ def stream_table(
     return micros_from_nanos(stream)
 
 
-def spread(df: DataFrame, min_rows: int = 0) -> DataFrame:
-    """Re-export of :func:`operators.skew.spread` (small-scan
-    parallelization guard) for query-level use — see that docstring."""
-    from ..operators.skew import spread as _spread
-
-    return _spread(df, min_rows)
-
-
 def dsum(col: Column | str, scale: int = 6) -> Column:
     """Decimal-exact sum of a double column, returned as double."""
     c = F.col(col) if isinstance(col, str) else col

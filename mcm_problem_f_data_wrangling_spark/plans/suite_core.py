@@ -27,7 +27,8 @@ from ..functions.rolling import (
     tail_slice_flag,
 )
 from ..operators.grid import force_complete_month_grid
-from .base import DSUM, MONTH_OF, MONTHLY_CTE, dsum, month_of, monthly_lineitem, query, spread, table
+from ..operators.skew import spread
+from .base import DSUM, MONTH_OF, MONTHLY_CTE, dsum, month_of, monthly_lineitem, query, table
 
 # --------------------------------------------------------------------------
 # Flagship: the collapse_career pipeline re-expressed over the fixtures

@@ -50,7 +50,7 @@ from ..operators.curation import hash_split, source_mix, stratified_cap
 from ..operators.quality import repetition_signals
 from ..operators.range_join import windowed_range_join
 from ..operators.sketch import approx_distinct_by, approx_quantiles_by
-from ..operators.skew import salted_group_agg
+from ..operators.skew import salted_group_agg, spread
 from ..operators.similarity import (
     brute_force_topk,
     ivf_knn_join,
@@ -69,7 +69,6 @@ from .base import (
     monthly_lineitem,
     query,
     sig_cte,
-    spread,
     stream_table,
     table,
 )

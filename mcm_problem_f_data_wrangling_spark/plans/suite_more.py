@@ -23,6 +23,7 @@ from ..operators.chunking import chunk_documents
 from ..operators.grid import force_complete_month_grid, interpolate_linear
 from ..operators.index import inverted_index
 from ..operators.similarity import semantic_dedup, train_ivf_cells
+from ..operators.skew import spread
 from .base import (
     BANDED_SQL,
     DSUM,
@@ -34,7 +35,6 @@ from .base import (
     month_of,
     monthly_lineitem,
     query,
-    spread,
     table,
 )
 

@@ -24,7 +24,8 @@ from pyspark.sql.functions import broadcast
 
 from ..functions.textfn import portable_hash64, strict_word_shingles, tokens
 from ..materialize import materialize
-from .base import BANDED_SQL, H16, QUERIES, SIG_CTE, TOKS, query, spread, table
+from ..operators.skew import spread
+from .base import BANDED_SQL, H16, QUERIES, SIG_CTE, TOKS, query, table
 
 # single source of truth for the oracle's stopword literal — mirrors
 # functions.textfn.LANG_MARKERS['en'] (what the Spark side resolves)

@@ -1,4 +1,4 @@
-"""as-of join: hand-computed fixture, tolerance, and plan shape."""
+"""as-of join: hand-computed fixture and plan shape."""
 
 from __future__ import annotations
 
@@ -45,19 +45,6 @@ def test_asof_join_hand_computed(spark):
     assert got[2] == (101, 2.0)  # 10:05 row is in the future → excluded
     assert got[3] == (None, None)
     assert got[4] == (None, None)
-
-
-def test_asof_join_tolerance_voids_stale(spark):
-    left, right = _fixture(spark)
-    got = {
-        r["event_id"]: r["event_id_asof"]
-        for r in asof_join(
-            left, right, on=["user_id"], attach=("event_id",), tolerance_seconds=60.0
-        ).collect()
-    }
-    assert got[1] == 101  # 0s old
-    assert got[2] is None  # match is 90s old > 60s tolerance
-    assert got[3] is None and got[4] is None
 
 
 def test_asof_join_single_shuffle_no_nested_loop(spark):

@@ -3,8 +3,7 @@
 Hypothesis generates per-key event sequences (duplicate timestamps on
 the left allowed, right timestamps kept unique per key — ties there
 are contractually arbitrary in BOTH engines) and compares the Spark
-as-of join row-for-row with ``pd.merge_asof``, with and without a
-tolerance horizon.
+as-of join row-for-row with ``pd.merge_asof``.
 """
 
 from __future__ import annotations
@@ -37,9 +36,8 @@ ts_strategy = st.integers(min_value=0, max_value=10_000)
     left_ts=st.lists(ts_strategy, min_size=1, max_size=25),
     right_ts=st.lists(ts_strategy, min_size=0, max_size=25, unique=True),
     n_keys=st.integers(min_value=1, max_value=3),
-    tolerance=st.one_of(st.none(), st.integers(min_value=1, max_value=5000)),
 )
-def test_asof_matches_pandas_merge_asof(sparkref, left_ts, right_ts, n_keys, tolerance):
+def test_asof_matches_pandas_merge_asof(sparkref, left_ts, right_ts, n_keys):
     spark = sparkref
     lrows = [
         (i, f"k{i % n_keys}", float(BASE + t)) for i, t in enumerate(left_ts)
@@ -55,19 +53,11 @@ def test_asof_matches_pandas_merge_asof(sparkref, left_ts, right_ts, n_keys, tol
     right = (
         spark.createDataFrame(
             rrows, "rid long, k string, sec double, payload double"
-        ).selectExpr("rid", "k", "timestamp_seconds(sec) AS rts", "payload")
+        ).selectExpr("rid", "k", "timestamp_seconds(sec) AS ts", "payload")
     )
     got = {
         r["lid"]: r["payload_asof"]
-        for r in asof_join(
-            left,
-            right,
-            on=["k"],
-            left_ts="ts",
-            right_ts="rts",
-            attach=("payload",),
-            tolerance_seconds=float(tolerance) if tolerance is not None else None,
-        ).collect()
+        for r in asof_join(left, right, on=["k"], attach=("payload",)).collect()
     }
 
     lp = (
@@ -86,7 +76,6 @@ def test_asof_matches_pandas_merge_asof(sparkref, left_ts, right_ts, n_keys, tol
         on="sec",
         by="k",
         direction="backward",
-        tolerance=float(tolerance) if tolerance is not None else None,
     )
     exp = dict(zip(merged["lid"], merged["payload"]))
     assert set(got) == set(exp)

@@ -207,16 +207,16 @@ def test_shifted_neardup_finds_offset_pairs(spark):
         audio_shifted_neardup,
     )
 
-    base = _tone_payload([1, 4, 2, 7, 3, 6, 0, 5], seg_len=256)
-    shifted = _tone_payload([5, 1, 4, 2, 7, 3, 6, 0, 5], seg_len=256)  # prefix
+    base = _tone_payload([1, 4, 2, 7, 3, 6, 0, 5, 2, 6], seg_len=256)
+    shifted = _tone_payload([5, 1, 4, 2, 7, 3, 6, 0, 5, 2, 6], seg_len=256)  # prefix
     media = spark.createDataFrame(
         [(0, base, "audio", "s://0"), (1, shifted, "audio", "s://1")],
         MEDIA_SCHEMA,
     )
     fps = {r.media_id: r.fingerprint for r in audio_fingerprint(media).collect()}
     assert fps[0] != fps[1]  # whole-sequence fingerprint misses this
-    got = audio_shifted_neardup(media, gram=4, min_matches=4).collect()
-    assert [(r.id_a, r.id_b, r.offset, r.n_matches) for r in got] == [(0, 1, -1, 5)]
+    got = audio_shifted_neardup(media).collect()
+    assert [(r.id_a, r.id_b, r.offset, r.n_matches) for r in got] == [(0, 1, -1, 7)]
 
 
 def test_null_payload_rows_are_skipped_not_fatal(spark):
@@ -305,8 +305,9 @@ def test_resample_anti_alias_kills_folded_content():
     naive linear decimation of a 48 kHz stream folds a 5.25 kHz tone
     onto the 2.75 kHz band-5 center, so in-band band-2 content under
     a strong above-Nyquist tone fingerprints as band 5 — a FALSE
-    match against content the stream never contained.  anti_alias=
-    False pins the miss; the default path must keep band 2 dominant."""
+    match against content the stream never contained.  The naive
+    decimation, computed here, pins the miss; resample_to_rate must
+    keep band 2 dominant."""
     import numpy as np
 
     from mcm_problem_f_data_wrangling_spark.operators.audio import (
@@ -326,7 +327,9 @@ def test_resample_anti_alias_kills_folded_content():
         spec = np.abs(np.fft.rfft(res[: nf * frame_len].reshape(nf, frame_len), axis=1)) ** 2
         return spec[:, 1 : frame_len // 2 + 1].reshape(nf, 8, -1).sum(axis=2).argmax(axis=1)
 
-    naive = dom_bands(resample_to_rate(sig, sr, canonical, anti_alias=False))
+    n_out = int(round(len(sig) * canonical / sr))
+    grid = np.arange(n_out, dtype=np.float64) * (sr / canonical)
+    naive = dom_bands(np.interp(grid, np.arange(len(sig), dtype=np.float64), sig))
     fixed = dom_bands(resample_to_rate(sig, sr, canonical))
     assert set(naive) == {5}, "naive decimation must fold 5.25 kHz onto band 5"
     assert set(fixed) == {2}, "anti-aliased path must keep real content dominant"
@@ -354,5 +357,5 @@ def test_resample_preserves_in_band_content_and_upsampling():
             assert set(bands.argmax(axis=1)) == {b}
     up_sig = np.cos(2 * np.pi * 300.0 * np.arange(4000) / 4000.0)
     up = resample_to_rate(up_sig, 4000, 8000)
-    up_naive = resample_to_rate(up_sig, 4000, 8000, anti_alias=False)
+    up_naive = np.interp(np.arange(8000) * 0.5, np.arange(4000.0), up_sig)
     assert np.array_equal(up, up_naive)

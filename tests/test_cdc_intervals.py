@@ -34,20 +34,6 @@ def test_cdc_apply_latest_wins_and_deletes_drop(spark):
     assert rows[3]["email"] == "c@x.com"
 
 
-def test_cdc_apply_over_base_snapshot(spark):
-    base = spark.createDataFrame(
-        [(2, "old-b@x.com", 2.0), (9, "keep@x.com", 99.0)],
-        "id bigint, email string, score double",
-    )
-    out = cdc_apply(
-        _changes(spark), ["id"], "ts", "op", ["email", "score"], base=base
-    )
-    rows = {r["id"]: r for r in out.collect()}
-    # 9 passes through untouched; 2 deleted despite existing in base
-    assert set(rows) == {1, 3, 9}
-    assert rows[9]["email"] == "keep@x.com"
-
-
 def test_cdc_apply_same_ts_tiebreak_deterministic(spark):
     ch = spark.createDataFrame(
         [(1, T(2024, 1, 1), "U", "first", 1.0), (1, T(2024, 1, 1), "U", "second", 2.0)],
@@ -71,16 +57,6 @@ def test_merge_intervals_islands(spark):
         [(r["k"], r["span_start"], r["span_end"], r["n_merged"]) for r in out.collect()]
     )
     assert spans == [(1, 0, 15, 3), (1, 20, 25, 1), (2, 3, 4, 1)]
-
-
-def test_merge_intervals_adjacent_false_splits_touching(spark):
-    iv = spark.createDataFrame(
-        [(1, 0, 10), (1, 10, 20)], "k bigint, s bigint, e bigint"
-    )
-    strict = merge_intervals(iv, ["k"], "s", "e", adjacent=False)
-    assert strict.count() == 2
-    loose = merge_intervals(iv, ["k"], "s", "e", adjacent=True)
-    assert loose.count() == 1
 
 
 def test_merge_intervals_contained_interval(spark):

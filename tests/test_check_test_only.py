@@ -1,7 +1,10 @@
 """Pre-snapshot gate 10 (tools/check_test_only.py) on a tiny tree: it
 reports every package name the program does not reach, follows import
 aliases, does not count an outside module's attribute as a reach, and
-rejects stale allowlist entries."""
+rejects stale allowlist entries; its parameter pass reports a
+defaulted parameter only tests bind, counts every way the program can
+bind one, exempts allowlisted reference code and rejects stale
+parameter-allowlist entries."""
 
 from __future__ import annotations
 
@@ -17,9 +20,18 @@ TREE = {
     "bench.py": """
         import pandas as pd
 
-        from mcm_problem_f_data_wrangling_spark.mod import used
+        from mcm_problem_f_data_wrangling_spark.mod import (
+            alias_kw,
+            as_value,
+            by_position,
+            splatted,
+            test_only_kw,
+            used,
+        )
 
-        print(used(), pd.shadowed)
+        kw = {"opt": 2}
+        print(used(), pd.shadowed, test_only_kw(0), alias_kw(0), by_position(0, 2))
+        print(splatted(0, **kw), list(map(as_value, [0])))
     """,
     "mcm_problem_f_data_wrangling_spark/__init__.py": "",
     "mcm_problem_f_data_wrangling_spark/mod.py": """
@@ -45,6 +57,34 @@ TREE = {
 
         def shadowed():
             return 6
+
+
+        def test_only_kw(x, opt=1):
+            return x
+
+
+        def in_query(x, *, opt=1):
+            return x
+
+
+        def alias_kw(x, opt=1):
+            return x
+
+
+        def by_position(x, opt=1):
+            return x
+
+
+        def splatted(x, opt=1):
+            return x
+
+
+        def as_value(x, opt=1):
+            return x
+
+
+        def reference(x, opt=1):
+            return x
     """,
     "mcm_problem_f_data_wrangling_spark/sub/__init__.py": """
         from .impl import reexported  # noqa: F401
@@ -60,18 +100,28 @@ TREE = {
 
         @query
         def q01(spark, sf_dir):
+            from .mod import alias_kw as _ak
             from .mod import aliased as _al
+            from .mod import in_query
 
-            return _al()
+            return _al() + in_query(0, opt=2) + _ak(0, opt=2)
     """,
     "tests/__init__.py": "",
     "tests/test_mod.py": """
+        from mcm_problem_f_data_wrangling_spark import mod
         from mcm_problem_f_data_wrangling_spark.mod import only_tests
         from mcm_problem_f_data_wrangling_spark.sub import reexported
 
 
         def test_it():
             assert only_tests() == 2 and reexported() == 5
+
+
+        def test_options():
+            assert mod.alias_kw(0, opt=3) == mod.test_only_kw(0, opt=3) == 0
+            assert mod.in_query(0, opt=3) == 0
+            assert mod.by_position(0, opt=3) == mod.splatted(0, opt=3) == 0
+            assert mod.as_value(0, opt=3) == mod.reference(0, opt=3) == 0
     """,
 }
 
@@ -79,9 +129,9 @@ TREE = {
 @pytest.fixture
 def gate_run(tmp_path, monkeypatch, capsys):
     """Write ``TREE`` under ``tmp_path``, run the gate's ``main()`` there
-    with the given allowlist; returns (exit code, stdout)."""
+    with the given allowlists; returns (exit code, stdout)."""
 
-    def run(allowlist=frozenset()) -> tuple[int, str]:
+    def run(allowlist=frozenset(), param_allowlist=frozenset()) -> tuple[int, str]:
         for rel, src in TREE.items():
             path = tmp_path / rel
             path.parent.mkdir(parents=True, exist_ok=True)
@@ -90,6 +140,7 @@ def gate_run(tmp_path, monkeypatch, capsys):
         gate = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(gate)
         monkeypatch.setattr(gate, "ALLOWLIST", set(allowlist))
+        monkeypatch.setattr(gate, "PARAM_ALLOWLIST", set(param_allowlist))
         monkeypatch.chdir(tmp_path)
         rc = gate.main()
         return rc, capsys.readouterr().out
@@ -102,6 +153,15 @@ def _reported(out: str) -> set[str]:
         line.split(": ")[1].split(" is not reached")[0]
         for line in out.splitlines()
         if "is not reached by the program" in line
+    }
+
+
+def _test_only_params(out: str) -> set[str]:
+    """``function.parameter`` for each parameter reported as test-only."""
+    return {
+        line.split(": ")[1].split("(")[0] + "." + line.split("(")[1].split("=)")[0]
+        for line in out.splitlines()
+        if "is bound by tests but by no program call" in line
     }
 
 
@@ -141,3 +201,50 @@ def test_stale_allowlist_entry_is_reported(gate_run):
     assert "ALLOWLIST entry 'no_such_name' is not defined" in out
     # an entry the program does not reach is neither reported nor stale
     assert "orphan" not in _reported(out) and "orphan'" not in out
+
+
+def test_keyword_only_tests_bind_is_reported(gate_run):
+    rc, out = gate_run()
+    assert rc == 1
+    assert "test_only_kw.opt" in _test_only_params(out)
+
+
+def test_keyword_bound_in_query_body_passes(gate_run):
+    _, out = gate_run()
+    assert "in_query.opt" not in _test_only_params(out)
+
+
+def test_keyword_bound_through_import_alias_passes(gate_run):
+    _, out = gate_run()
+    assert "alias_kw.opt" not in _test_only_params(out)
+
+
+def test_positional_binding_passes(gate_run):
+    _, out = gate_run()
+    assert "by_position.opt" not in _test_only_params(out)
+
+
+def test_kwargs_pass_through_binds_every_parameter(gate_run):
+    _, out = gate_run()
+    assert "splatted.opt" not in _test_only_params(out)
+
+
+def test_function_passed_as_value_binds_every_parameter(gate_run):
+    _, out = gate_run()
+    assert "as_value.opt" not in _test_only_params(out)
+
+
+def test_parameter_of_allowlisted_reference_is_exempt(gate_run):
+    _, out = gate_run({"reference"})
+    assert "reference" not in _reported(out)
+    assert "reference.opt" not in _test_only_params(out)
+
+
+def test_stale_param_allowlist_entry_is_reported(gate_run):
+    rc, out = gate_run(param_allowlist={"in_query.opt", "nowhere.opt", "test_only_kw.opt"})
+    assert rc == 1
+    assert "PARAM_ALLOWLIST entry 'in_query.opt' is bound by the program" in out
+    assert "PARAM_ALLOWLIST entry 'nowhere.opt'" in out
+    # an entry only tests bind is neither reported nor stale
+    assert "test_only_kw.opt" not in _test_only_params(out)
+    assert "'test_only_kw.opt'" not in out

@@ -9,31 +9,33 @@ from mcm_problem_f_data_wrangling_spark.operators.dedup import chunk_dedup
 
 
 def test_chunk_dedup_first_occurrence_wins(spark):
-    # doc 1 owns "a b"; doc 2 repeats it and vanishes (all chunks seen);
-    # doc 3 keeps only its novel tail chunk
+    # doc 1 owns the 8-word chunk a; doc 2 repeats it and vanishes (all
+    # chunks seen); doc 3 keeps only its novel tail chunk
+    a, tail = "a b c d e f g h", "s t u v w x y z"
     docs = spark.createDataFrame(
-        [(1, "a b"), (2, "a b"), (3, "a b x y")],
+        [(1, a), (2, a), (3, f"{a} {tail}")],
         "doc_id bigint, text string",
     )
-    out = {r["doc_id"]: r for r in chunk_dedup(docs, chunk_words=2).collect()}
+    out = {r["doc_id"]: r for r in chunk_dedup(docs).collect()}
     assert set(out) == {1, 3}
-    assert out[1]["text_dedup"] == "a b"
-    assert out[3]["text_dedup"] == "x y"
+    assert out[1]["text_dedup"] == a
+    assert out[3]["text_dedup"] == tail
     assert out[3]["n_chunks_kept"] == 1
 
 
 def test_chunk_dedup_within_doc_repeat_collapses(spark):
+    chunk = "p q r s t u v w"
     docs = spark.createDataFrame(
-        [(7, "p q p q p q")], "doc_id bigint, text string"
+        [(7, " ".join([chunk] * 3))], "doc_id bigint, text string"
     )
-    out = chunk_dedup(docs, chunk_words=2).collect()[0]
-    assert out["text_dedup"] == "p q"
+    out = chunk_dedup(docs).collect()[0]
+    assert out["text_dedup"] == chunk
 
 
 def test_chunk_dedup_order_restored(spark):
     words = " ".join(f"w{i}" for i in range(40))
     docs = spark.createDataFrame([(1, words)], "doc_id bigint, text string")
-    out = chunk_dedup(docs, chunk_words=8).collect()[0]
+    out = chunk_dedup(docs).collect()[0]
     assert out["text_dedup"] == words
     assert out["n_chunks_kept"] == 5
 

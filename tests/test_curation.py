@@ -50,14 +50,15 @@ def test_stratified_cap_enforced_and_stable(spark, docs):
 
 
 def test_source_mix_hits_target_rates(spark, docs):
-    mixed = source_mix(docs, "source", {"src0": 0.0, "src1": 1.0}, default_rate=0.5)
+    halved = {f"src{i}" for i in range(10, 20)}
+    mixed = source_mix(docs, "source", {"src0": 0.0, **{s: 0.5 for s in halved}})
     per = {r["source"]: r["n"] for r in mixed.groupBy("source").agg(F.count("*").alias("n")).collect()}
     orig = {r["source"]: r["n"] for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert "src0" not in per  # rate 0 drops everything
-    assert per["src1"] == orig["src1"]  # rate 1 keeps everything
-    rest_kept = sum(v for k, v in per.items() if k != "src1")
-    rest_orig = sum(v for k, v in orig.items() if k not in ("src0", "src1"))
-    assert abs(rest_kept / rest_orig - 0.5) < 0.1
+    unlisted = set(orig) - halved - {"src0"}
+    assert unlisted and all(per[s] == orig[s] for s in unlisted)  # kept whole
+    halved_kept = sum(per.get(s, 0) for s in halved)
+    assert abs(halved_kept / sum(orig[s] for s in halved) - 0.5) < 0.1
 
 
 def test_weighted_sample_deterministic_and_monotone(spark):

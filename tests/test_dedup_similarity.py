@@ -103,20 +103,11 @@ def test_embedding_neardup_detects_plant(vectors):
     assert len({r["band"] for r in top}) > 3
 
 
-def test_embedding_neardup_band_col_passthrough(vectors):
-    """Pre-assigned cells (e.g. a trained IVF quantizer's column) are
-    honored verbatim when band_col is given."""
-    top = embedding_neardup_pairs(vectors, band_col="label").collect()
-    assert {r["band"] for r in top} <= {0, 1, 2}
-    best_band0 = [r for r in top if r["band"] == 0][0]
-    assert (best_band0["vec_id_1"], best_band0["vec_id_2"]) == (0, 999)
-
-
 def test_srp_band_recall_on_near_identical(spark):
     """Recall property: every pair of IDENTICAL vectors must share a
-    band in every table (sign bits are equal by construction), so
-    SRP banding has recall 1.0 on exact duplicates regardless of
-    n_bits; random other vectors spread over >1 band."""
+    band (sign bits are equal by construction), so SRP banding has
+    recall 1.0 on exact duplicates regardless of n_bits; random other
+    vectors spread over >1 band."""
     import numpy as np
 
     from mcm_problem_f_data_wrangling_spark.operators.dedup import srp_hyperplanes
@@ -126,12 +117,12 @@ def test_srp_band_recall_on_near_identical(spark):
     rows = [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(40)]
     rows += [(100, [float(x) for x in base]), (101, [float(x) for x in base])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    hp = srp_hyperplanes(16, n_bits=5, n_tables=2, seed=5)
+    hp = srp_hyperplanes(16, n_bits=5, seed=5)
     out = embedding_neardup_pairs(df, hyperplanes=hp, n_bits=5).collect()
     dup_rows = [r for r in out if (r["vec_id_1"], r["vec_id_2"]) == (100, 101)]
-    # identical vectors collide in BOTH tables and top the band (cos=1)
-    assert len(dup_rows) == 2
-    assert all(r["cos_sim"] == 1.0 for r in dup_rows)
+    # identical vectors collide and top their band (cos=1)
+    assert len(dup_rows) == 1
+    assert dup_rows[0]["cos_sim"] == 1.0
     assert len({r["band"] for r in out}) > 2
 
 
@@ -410,10 +401,11 @@ def test_ivf_knn_join_recall_on_clustered_vectors(spark):
         (r["vec_id"], r["neighbor_id"])
         for r in ivf_knn_join(exact_df, exact_df, k=3).collect()
     }
-    # multi-probe over the TRUE centroids (stand-in for a trained codebook)
+    # own-cell probe over the TRUE cluster labels (stand-in for a
+    # trained codebook's assignment)
     approx = {
         (r["vec_id"], r["neighbor_id"])
-        for r in ivf_knn_join(df, df, k=3, centroids=base, n_probe=2).collect()
+        for r in ivf_knn_join(df, df, k=3).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, recall
@@ -457,7 +449,7 @@ def test_jaccard_prefix_complete_vs_brute_force(spark):
     t = 0.3
     got = {
         (r["doc_id_1"], r["doc_id_2"]): (r["n_common"], r["jaccard"])
-        for r in jaccard_join_prefix(df, threshold=t, shingle_k=3).collect()
+        for r in jaccard_join_prefix(df, threshold=t).collect()
     }
 
     def shingles(text):

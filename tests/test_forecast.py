@@ -38,7 +38,8 @@ def test_simulated_paths_distribution(spark):
     params = spark.createDataFrame(
         [("g", 1.0, 2.0, 100.0)], ["group", "mu", "sigma", "last_value"]
     )
-    paths = simulate_paths(params, sims=400, steps=10, seed=3, clip_min=None).toPandas()
+    # the paths stay far above the clip floor at 0
+    paths = simulate_paths(params, sims=400, steps=10, seed=3).toPandas()
     assert len(paths) == 4000
     step10 = paths[paths["step"] == 10]["y"]
     # E[y_10] = 100 + 10*mu = 110, sd = sigma*sqrt(10) ≈ 6.32
@@ -50,7 +51,7 @@ def test_clip_floor_applies(spark):
     params = spark.createDataFrame(
         [("g", -50.0, 1.0, 10.0)], ["group", "mu", "sigma", "last_value"]
     )
-    paths = simulate_paths(params, sims=20, steps=5, seed=1, clip_min=0.0).toPandas()
+    paths = simulate_paths(params, sims=20, steps=5, seed=1).toPandas()
     assert (paths["y"] >= 0.0).all()
 
 

@@ -34,14 +34,6 @@ def test_weekly_retention_triangle(spark):
     assert set(out) == {(w0, 0), (w0, 1), (w0, 2), (w1, 0)}
 
 
-def test_monthly_grain_offsets(spark):
-    ev = spark.createDataFrame(
-        [(1, T(2024, 1, 5)), (1, T(2024, 3, 20))], "user_id bigint, ts timestamp"
-    )
-    out = {r["period_offset"]: r["n_active"] for r in retention_cohorts(ev, grain="month").collect()}
-    assert out == {0: 1, 2: 1}
-
-
 def test_retention_single_user_exchange(spark):
     ev = spark.createDataFrame([(1, T(2024, 1, 1))], "user_id bigint, ts timestamp")
     plan = retention_cohorts(ev)._jdf.queryExecution().executedPlan().toString()

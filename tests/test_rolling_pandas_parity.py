@@ -112,7 +112,7 @@ def test_ewma_matches_pandas_ewm(spark):
     sdf = spark.createDataFrame(pdf)
     w = Window.partitionBy("k").orderBy("i")
     got = (
-        sdf.select("k", "i", ewma("x", w, decay=0.5, n_lags=40).alias("y"))
+        sdf.select("k", "i", ewma("x", w).alias("y"))
         .toPandas()
         .sort_values(["k", "i"])
         .reset_index(drop=True)
@@ -129,27 +129,29 @@ def test_ewma_matches_pandas_ewm(spark):
 
 
 def test_rolling_corr_pairwise_complete_masking(spark):
-    """One-sided nulls: every moment must use only pairwise-complete
-    rows (pandas/DuckDB corr semantics).  Unmasked per-side stddevs
-    returned 1.414... (> 1) on this repro before the fix."""
+    """One-sided nulls: a frame yields a value only when every row in
+    it is pairwise-complete (pandas/DuckDB corr semantics), so no
+    moment mixes in a row the other side lacks.  Unmasked per-side
+    stddevs once returned 1.414... (> 1) on such frames."""
     from mcm_problem_f_data_wrangling_spark.functions.rolling import rolling_corr
 
     pdf = pd.DataFrame(
         {
-            "k": ["a"] * 3,
-            "t": [1, 2, 3],
-            "x": [1.0, 2.0, 3.0],
-            "y": [1.0, None, 3.0],
+            "k": ["a"] * 6,
+            "t": [1, 2, 3, 4, 5, 6],
+            "x": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+            "y": [1.0, None, 3.0, 4.0, 6.0, 5.0],
         }
     )
     sdf = spark.createDataFrame(pdf)
     w = Window.partitionBy("k").orderBy("t")
     got = (
-        sdf.withColumn("c", rolling_corr("x", "y", w, window=3, min_periods=2))
+        sdf.withColumn("c", rolling_corr("x", "y", w, window=3))
         .orderBy("t")
         .collect()
     )
-    want = pdf["x"].rolling(3, min_periods=2).corr(pdf["y"]).tolist()
+    want = pdf["x"].rolling(3).corr(pdf["y"]).tolist()
+    assert sum(p == p for p in want) == 2  # frames ending at t = 5, 6
     for g, p in zip((r["c"] for r in got), want):
         if p != p:  # NaN
             assert g is None

@@ -22,7 +22,7 @@ def test_approx_distinct_within_rsd(spark):
     }
     approx = {
         r["l_returnflag"]: r["approx_distinct"]
-        for r in approx_distinct_by(li, ["l_returnflag"], "l_orderkey", rsd=0.01).collect()
+        for r in approx_distinct_by(li, ["l_returnflag"], "l_orderkey").collect()
     }
     assert set(approx) == set(exact)
     for k, d in exact.items():

@@ -194,7 +194,7 @@ def test_resize_plan_geometry(media):
         resize_plan,
     )
 
-    out = resize_plan(decode_media(media), max_side=256).collect()
+    out = resize_plan(decode_media(media)).collect()
     assert out
     for r in out:
         assert max(r["width"], r["height"]) <= 256

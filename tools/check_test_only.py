@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""List the top-level package names the program never reaches.
+"""List the package names and parameters only tests reach.
 
 Every function, class or constant defined at the top level of a module
 under ``mcm_problem_f_data_wrangling_spark/`` must be reached from the
@@ -28,6 +28,22 @@ Private names are checked too.  ``ALLOWLIST`` holds the unreached
 names that stay on purpose, each with its reason; an entry the program
 reaches without it, or one the package does not define, fails as
 stale.
+
+A second pass checks the defaulted parameters (positional or
+keyword-only) of every package function and method the roots reach
+without ``ALLOWLIST``.  A call binds a parameter by keyword, by
+position (after ``self``/``cls``), or all of them through a ``*args``
+or ``**kwargs`` splat; using a function as a value rather than calling
+it binds all of them too.  Calls resolve by name, through import
+aliases, as in the first pass.  A parameter that a test binds (by
+keyword or position: a test's splat or value use binds nothing) but
+no call in a reached statement does selects a branch only tests run,
+and the scan reports it.  Parameters nothing binds only ever take their
+default; the scan counts them but does not fail on them.
+``PARAM_ALLOWLIST`` holds the test-only ``function.parameter`` pairs
+that stay on purpose, each with its reason; an entry the program binds,
+or one that is not a defaulted parameter of a package function, fails
+as stale.
 
 Usage: python tools/check_test_only.py   (from the repo root)
 """
@@ -70,6 +86,37 @@ ALLOWLIST = {
     "extract_proxy_dataset",
     "collapse_career",
     "collapse_duplicate_months",
+}
+
+
+PARAM_ALLOWLIST = {
+    # Safety and deployment settings that a query runs at their
+    # default, kept so a caller on a cluster can set them:
+    # where connected components keeps its durable per-round state
+    "connected_components.state",
+    # the directory connected components checkpoints its rounds into
+    "connected_components.work_dir",
+    # the round cap that turns a non-converging graph into an error
+    "connected_components.max_iter",
+    # where k-core peeling keeps its durable per-round state
+    "k_core.state",
+    # the directory k-core peeling checkpoints its rounds into
+    "k_core.work_dir",
+    # the range-bucket count that bounds one task's share of a global lag
+    "global_lag.n_buckets",
+    # the range-bucket count that bounds one task's share of a row number
+    "global_row_number.n_buckets",
+    # the range-bucket count that bounds one task's share of a running sum
+    "global_running_sum.n_buckets",
+    # the driver-side training sample, bounded for large corpora
+    "train_ivf_cells.sample_n",
+    # the Bloom filter size, which sets its false-positive rate
+    "bloom_decontaminate.m_bits",
+    # the cap on the broadcast boilerplate set, which bounds driver memory
+    "boilerplate_removal.max_boiler_set",
+    # The fixture builder: the stereo MP4 that checks the audio-track
+    # parser reads a multi-channel header.
+    "encode_mp4_av.channels",
 }
 
 
@@ -134,16 +181,60 @@ def _imports(tree: ast.Module) -> tuple[dict[str, set[str]], set[str]]:
 
 def _references(node: ast.AST, imports: tuple[dict, set]) -> tuple[set, set]:
     """(loaded names, through aliases; loaded attributes) under ``node``."""
-    aliases, outside = imports
     names, attrs = set(), set()
+    for loaded, attr, _ in _loads(node, imports):
+        if attr is None:
+            names |= loaded
+        else:
+            attrs.add(attr)
+    return names, attrs
+
+
+def _functions(tree: ast.Module) -> dict[str, tuple[ast.AST, bool]]:
+    """``name -> (definition, is method)`` for the file's top-level
+    functions and its top-level classes' methods (``Class.method``)."""
+    out = {}
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            out[stmt.name] = (stmt, False)
+        elif isinstance(stmt, ast.ClassDef):
+            for m in stmt.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    out[f"{stmt.name}.{m.name}"] = (m, True)
+    return out
+
+
+def _defaulted(fn: ast.AST) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    return [p.arg for p in pos[len(pos) - len(a.defaults):]] + [
+        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _loads(node: ast.AST, imports: tuple[dict, set]):
+    """Yield ``(names, attr, bound)`` for each loaded name or attribute
+    under ``node``: the names (through aliases) or the attribute it is
+    reached by, and what it binds: ``(n positional, {keywords})`` when
+    it is called, ``None`` (everything) for a splat call or a value use.
+    An attribute of a name imported from outside the package is skipped."""
+    aliases, outside = imports
+    called = {}
     for n in ast.walk(node):
+        if isinstance(n, ast.Call):
+            splat = any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            )
+            called[id(n.func)] = None if splat else (
+                len(n.args), {k.arg for k in n.keywords if k.arg}
+            )
+    for n in ast.walk(node):
+        bound = called.get(id(n))
         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
-            names.add(n.id)
-            names |= aliases.get(n.id, set())
+            yield {n.id} | aliases.get(n.id, set()), None, bound
         elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
             if not (isinstance(n.value, ast.Name) and n.value.id in outside):
-                attrs.add(n.attr)
-    return names, attrs
+                yield set(), n.attr, bound
 
 
 def _closure(start: set, edges: dict) -> set:
@@ -159,23 +250,31 @@ def _closure(start: set, edges: dict) -> set:
 def main() -> int:
     # a package definition is the node (path, name)
     local: dict[str, set[str]] = {}  # package file -> names it defines
-    uses: list[tuple[str, list[str], bool, tuple[set, set]]] = []
+    funcs: dict[tuple[str, str], tuple[ast.AST, bool]] = {}
+    uses: list[tuple[str, list[str], bool, tuple[set, set], ast.stmt, tuple]] = []
+    tests: list[tuple[str, ast.Module, tuple]] = []
     for path in _py_files():
-        if _is_test(path):
-            continue
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read(), path)
         imports = _imports(tree)
+        if _is_test(path):
+            tests.append((path, tree, imports))
+            continue
         in_package = path.split(os.sep)[0] == PACKAGE
+        if in_package:
+            funcs.update({(path, q): f for q, f in _functions(tree).items()})
         for stmt in tree.body:
             names = _defined(stmt) if in_package else []
             local.setdefault(path, set()).update(names)
             root = not in_package or _is_root(stmt, names)
-            uses.append((path, names, root, _references(stmt, imports)))
+            refs = _references(stmt, imports)
+            uses.append((path, names, root, refs, stmt, imports))
     by_name: dict[str, set[tuple[str, str]]] = {}
     for path, names in local.items():
         for name in names:
             by_name.setdefault(name, set()).add((path, name))
+    for path, tree, _ in tests:  # a test's own definitions shadow the package's
+        local[path] = {n for stmt in tree.body for n in _defined(stmt)}
 
     def resolve(path: str, refs: tuple[set, set]) -> set:
         names, attrs = refs
@@ -186,13 +285,14 @@ def main() -> int:
 
     edges: dict[tuple[str, str], set] = {}
     roots: set = set()
-    for path, names, root, refs in uses:
+    for path, names, root, refs, _, _ in uses:
         targets = resolve(path, refs)
         if root:
             roots |= targets | {(path, n) for n in names}
         for name in names:
             edges.setdefault((path, name), set()).update(targets)
     allowed = set().union(*(by_name.get(n, set()) for n in ALLOWLIST))
+    live = _closure(roots, edges)
     reached = _closure(roots | allowed, edges)
     problems = [
         f"{path}: {name} is not reached by the program"
@@ -200,13 +300,78 @@ def main() -> int:
     ]
     problems += [
         f"ALLOWLIST entry {n!r} is reached without the allowlist; remove it"
-        for n in sorted({n for _, n in allowed & _closure(roots, edges)})
+        for n in sorted({n for _, n in allowed & live})
     ]
     problems += [
         f"ALLOWLIST entry {n!r} is not defined in the package; remove it"
         for n in sorted(ALLOWLIST - by_name.keys())
     ]
-    print("\n".join(problems) if problems else "every package name is reached")
+
+    # parameter pass: what each reached call binds, per (path, qualname)
+    methods: dict[str, set] = {}
+    for path, q in funcs:
+        if "." in q:
+            methods.setdefault(q.split(".")[1], set()).add((path, q))
+
+    def bind(path: str, node: ast.AST, imports: tuple, into: dict, test: bool) -> None:
+        for names, attr, bound in _loads(node, imports):
+            if test and bound is None:
+                continue
+            if attr is None:
+                targets = resolve(path, (names, set()))
+            else:
+                targets = resolve(path, (set(), {attr})) | methods.get(attr, set())
+            for tp, tq in targets:
+                key = (tp, tq) if (tp, tq) in funcs else (tp, f"{tq}.__init__")
+                if key not in funcs:
+                    continue
+                fn, is_method = funcs[key]
+                if bound is None:
+                    into.setdefault(key, set()).add(None)
+                    continue
+                n_pos, keywords = bound
+                pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                skip = int(is_method and pos[:1] in (["self"], ["cls"]))
+                into.setdefault(key, set()).update(pos[skip:skip + n_pos], keywords)
+
+    program: dict = {}
+    for path, names, root, _, stmt, imports in uses:
+        if root or any((path, n) in live for n in names):
+            bind(path, stmt, imports, program, False)
+    by_tests: dict = {}
+    for path, tree, imports in tests:
+        bind(path, tree, imports, by_tests, True)
+
+    defaulted = {
+        (key, p): f"{key[1]}.{p}" for key, (fn, _) in funcs.items() for p in _defaulted(fn)
+    }
+    unbound = 0
+    param_stale = set(PARAM_ALLOWLIST) - set(defaulted.values())
+    for (key, p), label in sorted(defaulted.items()):
+        if (key[0], key[1].split(".")[0]) not in live:
+            continue
+        if None in program.get(key, ()) or p in program.get(key, ()):
+            if label in PARAM_ALLOWLIST:
+                param_stale.add(label)
+        elif p in by_tests.get(key, ()):
+            if label not in PARAM_ALLOWLIST:
+                problems.append(
+                    f"{key[0]}: {key[1]}({p}=) is bound by tests but by no program call"
+                )
+        else:
+            unbound += 1
+    problems += [
+        f"PARAM_ALLOWLIST entry {e!r} is bound by the program"
+        " or is not a defaulted parameter of a package function; remove it"
+        for e in sorted(param_stale)
+    ]
+    print(
+        "\n".join(problems)
+        if problems
+        else "every package name is reached and every test-bound parameter"
+        f" is bound by the program ({unbound} defaulted parameters are bound"
+        " by no call)"
+    )
     return 1 if problems else 0
 
 
