@@ -35,13 +35,11 @@ from .textfn import tokens
 END = "</w>"  # end-of-word sentinel: merges never cross word boundaries
 
 
-def corpus_word_counts(
-    df: DataFrame, text_col: str = "text", max_words: int = 50000
-) -> list[tuple[str, int]]:
+def corpus_word_counts(df: DataFrame, max_words: int = 50000) -> list[tuple[str, int]]:
     """Distributed word-frequency table, truncated to the ``max_words``
     most frequent (deterministic tie-break on the word)."""
     wc = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
+        df.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
         .count()
         .orderBy(F.desc("count"), "w")
@@ -114,12 +112,7 @@ BPE_SCHEMA = StructType(
 )
 
 
-def bpe_token_stats(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_token_stats(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Distributed BPE encode: per-doc token counts + the first word's
     encoding (as an auditable sample).  Arrow-batched ``mapInPandas``;
     word-level memoization per batch."""
@@ -138,7 +131,7 @@ def bpe_token_stats(
             out = []
             # zip over the column arrays, not iterrows — row-boxing
             # overhead is pure waste next to the memoized encode
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 words = str(text or "").split()
                 n_bpe = sum(len(enc(w)) for w in words)
                 out.append((doc_id, n_bpe, len(words), enc(words[0]) if words else []))
@@ -147,4 +140,4 @@ def bpe_token_stats(
                 columns=["doc_id", "n_tokens_bpe", "n_tokens_ws", "sample_tokens"],
             )
 
-    return df.select(id_col, text_col).mapInPandas(encode, BPE_SCHEMA)
+    return df.select("doc_id", "text").mapInPandas(encode, BPE_SCHEMA)

@@ -106,8 +106,8 @@ def rolling_corr(x: Column | str, y: Column | str, w: WindowSpec, window: int) -
     return F.when(F.count(both).over(frame) >= window, corr)
 
 
-def index_rebase(col: Column | str, w: WindowSpec, base: float = 100.0) -> Column:
-    """W7: rebase to first non-null value = ``base`` (``EDA.ipynb cell 5``).
+def index_rebase(col: Column | str, w: WindowSpec) -> Column:
+    """W7: rebase to first non-null value = 100 (``EDA.ipynb cell 5``).
 
     ``x / x.iloc[0] * 100`` — the wage variant divides by the first
     *non-null*, which also covers the plain variant when the series
@@ -117,7 +117,7 @@ def index_rebase(col: Column | str, w: WindowSpec, base: float = 100.0) -> Colum
     first = F.first(c, ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return F.try_divide(c, first) * F.lit(base)
+    return F.try_divide(c, first) * F.lit(100.0)
 
 
 def cumulative_sum(col: Column | str, w: WindowSpec) -> Column:

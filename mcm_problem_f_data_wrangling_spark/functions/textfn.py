@@ -55,11 +55,11 @@ def punct_ratio(col: Column | str) -> Column:
     return F.length(stripped) / F.greatest(F.length(c), F.lit(1))
 
 
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of whitespace tokens that are (lowercased) stopwords."""
-    sw = stopwords or LANG_MARKERS["en"]
+def stopword_ratio(col: Column | str) -> Column:
+    """Fraction of whitespace tokens that are (lowercased) English
+    stopwords (``LANG_MARKERS["en"]``)."""
     toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(sw)))
+    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(LANG_MARKERS["en"])))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 

@@ -23,22 +23,22 @@ def asof_join(
     right: DataFrame,
     on: list[str],
     attach: tuple[str, ...] = (),
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left as-of join on the ``ts`` column of both sides: for every
-    left row, attach ``attach`` columns from the latest right row with
-    right ``ts`` <= left ``ts`` per ``on`` key (NULLs when no such row).
+    left row, attach ``attach`` columns (as ``<c>_asof``, with the right
+    ``ts`` as ``ts_asof``) from the latest right row with right ``ts``
+    <= left ``ts`` per ``on`` key (NULLs when no such row).
 
     Ties on the right ``ts`` within a key resolve to one arbitrary row —
     the same contract as DuckDB ASOF JOIN / pandas merge_asof.
     """
-    out_cols = [f"{c}{suffix}" for c in attach]
-    ats = f"ts{suffix}"  # right timestamp always attached
+    out_cols = [f"{c}_asof" for c in attach]
+    ats = "ts_asof"  # right timestamp always attached
 
     r = right.select(
         *on,
         F.col("ts").alias(ats),
-        *[F.col(c).alias(f"{c}{suffix}") for c in attach],
+        *[F.col(c).alias(rc) for c, rc in zip(attach, out_cols)],
         F.lit(0).alias("__side"),
     )
     l = left.withColumn(ats, F.lit(None).cast(r.schema[ats].dataType))

@@ -27,7 +27,7 @@ core both share):
 
 Scale: the FFT stage streams one Arrow batch at a time (a partition
 of large payloads never materializes fully in Python); frames are a
-single ``(n_frames, frame_len)`` numpy matrix per payload so the FFT
+single ``(n_frames, FRAME_LEN)`` numpy matrix per payload so the FFT
 is one vectorized call.  The pairs join shuffles 8-byte keys.
 """
 
@@ -46,6 +46,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+FRAME_LEN = 256  # samples per analysis frame (an even number)
+N_BANDS = 8  # equal band slices of the FRAME_LEN/2 spectrum bins
+
 SPECTRAL_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -56,7 +59,7 @@ SPECTRAL_SCHEMA = StructType(
 )
 
 
-def resample_to_rate(sig, sr: int, rate: int, n_taps: int = 255):
+def resample_to_rate(sig, sr: int, rate: int):
     """Resample ``sig`` (numpy float64) from ``sr`` to ``rate`` Hz:
     windowed-sinc FIR low-pass at the TARGET Nyquist, then linear
     interpolation onto the target grid.
@@ -68,8 +71,8 @@ def resample_to_rate(sig, sr: int, rate: int, n_taps: int = 255):
     at 2.75 kHz after naive decimation to 8 kHz) and a stream can
     fingerprint-match content it never contained; upsampling has no
     such folding (linear-interp imaging lands above the original
-    content and inside the widened band span).  ``n_taps=255`` puts
-    the stopband ~0.6 kHz above an 8 kHz target's Nyquist at 48 kHz
+    content and inside the widened band span).  255 taps put the
+    stopband ~0.6 kHz above an 8 kHz target's Nyquist at 48 kHz
     input — in-band content keeps its dominant band, folded content
     drops ~50 dB.
     """
@@ -78,10 +81,9 @@ def resample_to_rate(sig, sr: int, rate: int, n_taps: int = 255):
     if sr == rate or not len(sig):
         return sig
     if sr > rate:
-        m = n_taps - 1
-        n = np.arange(n_taps, dtype=np.float64) - m / 2.0
+        n = np.arange(255, dtype=np.float64) - 127.0  # 255 centred taps
         fc = 0.5 * rate / sr  # target Nyquist, cycles/sample of sig
-        h = 2.0 * fc * np.sinc(2.0 * fc * n) * np.hamming(n_taps)
+        h = 2.0 * fc * np.sinc(2.0 * fc * n) * np.hamming(255)
         h /= h.sum()
         sig = np.convolve(sig, h, mode="same")
     n_out = int(round(len(sig) * rate / sr))
@@ -94,21 +96,15 @@ def resample_to_rate(sig, sr: int, rate: int, n_taps: int = 255):
     )
 
 
-def spectral_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    frame_len: int = 256,
-    n_bands: int = 8,
-    canonical_rate: int | None = None,
-) -> DataFrame:
-    """Framed FFT band analysis of WAV payloads via ``mapInPandas``.
+def spectral_frames(df: DataFrame, canonical_rate: int | None = None) -> DataFrame:
+    """Framed FFT band analysis of the ``(media_id, payload)`` WAV
+    payloads via ``mapInPandas``.
 
     Per payload: :func:`..multimodal.decode_wav` → channel-mean mono →
-    non-overlapping frames of ``frame_len`` samples (hop =
-    ``frame_len``; a trailing partial frame is dropped) → power
-    spectrum ``|rfft|^2`` → bins ``1..frame_len/2`` (DC excluded —
-    PCM offset is content-free) split into ``n_bands`` equal slices →
+    non-overlapping frames of ``FRAME_LEN`` samples (hop =
+    ``FRAME_LEN``; a trailing partial frame is dropped) → power
+    spectrum ``|rfft|^2`` → bins ``1..FRAME_LEN/2`` (DC excluded —
+    PCM offset is content-free) split into ``N_BANDS`` equal slices →
     per frame the argmax band (first band wins ties, so an all-zero
     frame deterministically reports band 0 with
     ``band_energy_frac = 0.0``).
@@ -125,20 +121,13 @@ def spectral_frames(
     canonical Nyquist before linear interpolation, so content above
     the canonical Nyquist is REMOVED instead of folding down into the
     canonical bands and corrupting the sequence) BEFORE framing.
-    With it, a frame is a fixed TIME window (``frame_len/rate``
+    With it, a frame is a fixed TIME window (``FRAME_LEN/rate``
     seconds) and each band a fixed absolute-frequency range, so
     44.1 kHz and 48 kHz re-encodes of the same content produce the
     same band sequence — without it they never match, because
     sample-count framing makes both the window duration and the band
     edges functions of the file's own rate.
     """
-    if frame_len < 2 or frame_len % 2:
-        raise ValueError("frame_len must be an even integer >= 2")
-    if n_bands < 1 or (frame_len // 2) % n_bands:
-        raise ValueError(
-            f"n_bands={n_bands} must divide frame_len/2={frame_len // 2} evenly"
-        )
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -163,13 +152,13 @@ def spectral_frames(
                     sig = resample_to_rate(sig, sr, canonical_rate)
                     if not len(sig):
                         continue
-                nf = len(sig) // frame_len
+                nf = len(sig) // FRAME_LEN
                 if nf == 0:
                     continue
-                frames = sig[: nf * frame_len].reshape(nf, frame_len)
+                frames = sig[: nf * FRAME_LEN].reshape(nf, FRAME_LEN)
                 spec = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                bins = spec[:, 1 : frame_len // 2 + 1]
-                bands = bins.reshape(nf, n_bands, -1).sum(axis=2)
+                bins = spec[:, 1 : FRAME_LEN // 2 + 1]
+                bands = bins.reshape(nf, N_BANDS, -1).sum(axis=2)
                 d = bands.argmax(axis=1)
                 tot = bands.sum(axis=1)
                 f = bands[np.arange(nf), d] / np.where(tot > 0.0, tot, 1.0)
@@ -186,18 +175,10 @@ def spectral_frames(
                 }
             )
 
-    out = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
-    return out.mapInPandas(batches, SPECTRAL_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(batches, SPECTRAL_SCHEMA)
 
 
-def audio_fingerprint(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    frame_len: int = 256,
-    n_bands: int = 8,
-    canonical_rate: int | None = None,
-) -> DataFrame:
+def audio_fingerprint(df: DataFrame, canonical_rate: int | None = None) -> DataFrame:
     """Per-payload spectral fingerprint: ``(media_id, fingerprint
     LONG, band_seq STRING, n_frames INT)``.
 
@@ -213,9 +194,7 @@ def audio_fingerprint(
     corpus dedups across 44.1 kHz/48 kHz re-encodes, which the
     rate-native fingerprint provably misses.
     """
-    frames = spectral_frames(
-        df, payload_col, id_col, frame_len, n_bands, canonical_rate
-    )
+    frames = spectral_frames(df, canonical_rate)
     seq = F.array_join(
         F.transform(
             F.array_sort(
@@ -237,10 +216,6 @@ def audio_fingerprint(
 
 def audio_neardup_pairs(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    frame_len: int = 256,
-    n_bands: int = 8,
     mode: str = "pairs",
     canonical_rate: int | None = None,
 ) -> DataFrame:
@@ -264,9 +239,7 @@ def audio_neardup_pairs(
     """
     if mode not in ("pairs", "star"):
         raise ValueError(f"unknown mode {mode!r}")
-    fps = audio_fingerprint(
-        df, payload_col, id_col, frame_len, n_bands, canonical_rate
-    )
+    fps = audio_fingerprint(df, canonical_rate)
     if mode == "star":
         from pyspark.sql import Window
 
@@ -297,7 +270,6 @@ def audio_chunk_plan(
     decoded: DataFrame,
     chunk_s: float = 30.0,
     hop_s: float = 25.0,
-    id_col: str = "media_id",
 ) -> DataFrame:
     """Segment long audio into fixed-duration windows (ASR-style
     pipelines train on ~30 s chunks with overlap so no speech is lost
@@ -331,7 +303,7 @@ def audio_chunk_plan(
         & F.col("sample_rate").isNotNull()
         & (F.col("sample_rate") > 0)
     ).select(
-        F.col(id_col).alias("media_id"),
+        "media_id",
         F.sequence(F.lit(0).cast("long"), n - 1, hop).alias("starts"),
         chunk.alias("chunk"),
         n.alias("n"),
@@ -362,24 +334,17 @@ QUALITY_SCHEMA = StructType(
 )
 
 
-def audio_quality_stats(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    frame_len: int = 256,
-    clip_level: int = 32767,
-    silence_level: int = 3,
-) -> DataFrame:
+def audio_quality_stats(df: DataFrame) -> DataFrame:
     """Audio quality signals for corpus filtering — the audio twin of
     the text quality metrics: clipped audio (samples pinned at the
     int16 rail) and silence-dominated audio are the standard rejects
     before ASR/audio-model training.
 
     Integer outputs only (hash-stable cross-engine):
-    ``n_clipped`` counts samples with ``|s| >= clip_level``;
-    ``silence_frames`` counts frames whose max ``|s|`` is
-    ``<= silence_level`` (mono-folded, non-overlapping frames of
-    ``frame_len``, trailing partial dropped — same framing as
+    ``n_clipped`` counts samples with ``|s| >= 32767``;
+    ``silence_frames`` counts frames whose max ``|s|`` is ``<= 3``
+    (mono-folded, non-overlapping frames of ``FRAME_LEN``, trailing
+    partial dropped — same framing as
     :func:`spectral_frames`).  One Arrow crossing, all numpy.
     NULL payloads emit no stats row; corrupt non-null payloads fail
     fast in ``decode_wav``.
@@ -399,14 +364,14 @@ def audio_quality_stats(
                     continue
                 _, ch, ns, samples = decode_wav(bytes(p))
                 sig = np.asarray(samples, dtype=np.float64)
-                clipped = int((np.abs(sig) >= clip_level).sum())
+                clipped = int((np.abs(sig) >= 32767).sum())
                 if ch > 1:
                     sig = sig[: (len(sig) // ch) * ch].reshape(-1, ch).mean(axis=1)
-                nf = len(sig) // frame_len
+                nf = len(sig) // FRAME_LEN
                 silent = 0
                 if nf:
-                    fr = np.abs(sig[: nf * frame_len]).reshape(nf, frame_len)
-                    silent = int((fr.max(axis=1) <= silence_level).sum())
+                    fr = np.abs(sig[: nf * FRAME_LEN]).reshape(nf, FRAME_LEN)
+                    silent = int((fr.max(axis=1) <= 3).sum())
                 out["media_id"].append(int(mid))
                 out["n_samples"].append(ns)
                 out["n_clipped"].append(clipped)
@@ -423,19 +388,10 @@ def audio_quality_stats(
             )
             out = {k.name: [] for k in QUALITY_SCHEMA.fields}
 
-    src = df.select(
-        F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
-    )
-    return src.mapInPandas(batches, QUALITY_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(batches, QUALITY_SCHEMA)
 
 
-def audio_shifted_neardup(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    frame_len: int = 256,
-    n_bands: int = 8,
-) -> DataFrame:
+def audio_shifted_neardup(df: DataFrame) -> DataFrame:
     """Shift-tolerant audio near-dup: the same content starting at a
     DIFFERENT point in the stream (clipped intro, prepended silence)
     defeats the whole-sequence fingerprint; this matcher indexes
@@ -455,7 +411,7 @@ def audio_shifted_neardup(
     """
     from pyspark.sql import Window
 
-    frames = spectral_frames(df, payload_col, id_col, frame_len, n_bands)
+    frames = spectral_frames(df)
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     parts = [F.col("dom_band").cast("string")] + [
         F.lead("dom_band", j).over(w).cast("string") for j in range(1, 4)

@@ -27,12 +27,11 @@ def cdc_apply(
     op_col: str,
     attr_cols: list[str],
     tiebreak_cols: list[str] | None = None,
-    delete_op: str = "D",
 ) -> DataFrame:
     """Apply a change log and return the resulting snapshot.
 
     For each key the latest change by ``(ts_col, *tiebreak_cols)``
-    wins; if its ``op_col`` equals ``delete_op`` the key is absent
+    wins; if its ``op_col`` equals ``"D"`` the key is absent
     from the output, otherwise the output row carries the winning
     change's ``attr_cols``.
     """
@@ -51,7 +50,7 @@ def cdc_apply(
             *[F.col(f"__w.__attrs.{c}").alias(c) for c in attr_cols],
         )
     )
-    return latest.filter(F.col("__op") != delete_op).drop("__op")
+    return latest.filter(F.col("__op") != "D").drop("__op")
 
 
 def snapshot_diff(

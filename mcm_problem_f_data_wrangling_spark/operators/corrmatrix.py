@@ -24,12 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def corr_matrix(df: DataFrame, cols: list[str], scale: int = 6) -> DataFrame:
-    """Pairwise Pearson correlations → (col_a, col_b, corr), one scan.
+def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Pairwise Pearson correlations → (col_a, col_b, corr), one scan,
+    over the columns cast to ``decimal(18,6)`` and rounded to 6 places.
 
     ``corr`` is NULL for a zero-variance column (SQL convention).
     """
-    dec = f"decimal(18,{scale})"
+    dec = "decimal(18,6)"
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.append(F.sum(F.col(c).cast(dec)).cast("double").alias(f"__s_{c}"))
@@ -65,7 +66,7 @@ def corr_matrix(df: DataFrame, cols: list[str], scale: int = 6) -> DataFrame:
                         n * F.col(f"__p_{a}_{b}") - F.col(f"__s_{a}") * F.col(f"__s_{b}"),
                         F.sqrt(var_term(a) * var_term(b)),
                     ),
-                    scale,
+                    6,
                 ).alias("corr"),
             )
             for a, b in combinations(cols, 2)

@@ -39,7 +39,6 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     weights: dict[str, float],
-    seed: str = "split",
 ) -> DataFrame:
     """Assign a ``split`` label by hash-bucket ranges (e.g.
     ``{"train": .9, "val": .05, "test": .05}``).  Weights must sum to
@@ -47,7 +46,7 @@ def hash_split(
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1, got {total}")
-    frac = hash_frac(F.col(key_col).cast("string"), seed=seed)
+    frac = hash_frac(F.col(key_col).cast("string"), seed="split")
     expr = None
     acc = 0.0
     labels = list(weights.items())
@@ -64,14 +63,12 @@ def stratified_cap(
     df: DataFrame,
     group_cols: list[str],
     cap: int,
-    key_col: str = "doc_id",
-    seed: str = "cap",
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group, chosen deterministically by
-    hash order (not arbitrarily by partition layout).  One shuffle on
-    the group key; the rank is a plain window."""
+    ``doc_id`` hash order (not arbitrarily by partition layout).  One
+    shuffle on the group key; the rank is a plain window."""
     w = Window.partitionBy(*group_cols).orderBy(
-        portable_hash64(F.col(key_col).cast("string"), seed=seed), key_col
+        portable_hash64(F.col("doc_id").cast("string"), seed="cap"), "doc_id"
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -83,11 +80,9 @@ def stratified_cap(
 def weighted_sample(
     df: DataFrame,
     weight_col: Column | str,
-    key_col: str = "doc_id",
-    seed: str = "wsample",
 ) -> DataFrame:
     """Keep each row with probability = its weight (clamped to [0, 1]),
-    deterministically: hash_frac(key) < weight.
+    deterministically: hash_frac(doc_id) < weight.
 
     The per-ROW generalization of :func:`source_mix` — the weight is
     any Column (a quality score, a domain prior, an importance weight
@@ -97,21 +92,19 @@ def weighted_sample(
     or what else is in the corpus.  Pure filter, no shuffle."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     bounded = F.least(F.greatest(w, F.lit(0.0)), F.lit(1.0))
-    return df.filter(hash_frac(F.col(key_col).cast("string"), seed=seed) < bounded)
+    return df.filter(hash_frac(F.col("doc_id").cast("string"), seed="wsample") < bounded)
 
 
 def source_mix(
     df: DataFrame,
     source_col: str,
     rates: dict[str, float],
-    key_col: str = "doc_id",
-    seed: str = "mix",
 ) -> DataFrame:
     """Down-weight sources to target sampling ``rates`` (e.g. keep 30%
     of crawl); a source ``rates`` does not name is kept whole — the
     mixing step that shapes a training corpus.  Pure filter on the
-    hash fraction: no shuffle."""
-    frac = hash_frac(F.col(key_col).cast("string"), seed=seed)
+    ``doc_id`` hash fraction: no shuffle."""
+    frac = hash_frac(F.col("doc_id").cast("string"), seed="mix")
     rate = None
     for name, r in rates.items():
         rate = (
@@ -129,8 +122,6 @@ def temperature_mix(
     alpha: float = 0.5,
     budget_frac: float = 0.5,
     weight_col: str | None = None,
-    key_col: str = "doc_id",
-    seed: str = "tmix",
 ) -> DataFrame:
     """Temperature-based source rebalancing (the multilingual-corpus
     standard: sampling mass per group ∝ size^alpha, alpha<1 flattens
@@ -139,7 +130,7 @@ def temperature_mix(
     Per group s with mass ``c_s`` (row count, or exact sum of
     ``weight_col`` e.g. chars): target budget ``B = budget_frac *
     Σc``; group keep-rate ``q_s = min(1, B · p_s / c_s)`` with ``p_s ∝
-    c_s^alpha``.  Rows keep via the portable hash — exactly
+    c_s^alpha``.  Rows keep via the portable ``doc_id`` hash — exactly
     reproducible, and the DuckDB oracle replays the assignment.
 
     Cross-engine determinism: group masses are exact integers; the
@@ -185,7 +176,7 @@ def temperature_mix(
     rate_df = spark.createDataFrame(rates, [group_col, "__q"])
     return (
         df.join(F.broadcast(rate_df), on=group_col, how="inner")
-        .filter(hash_frac(F.col(key_col).cast("string"), seed=seed) < F.col("__q"))
+        .filter(hash_frac(F.col("doc_id").cast("string"), seed="tmix") < F.col("__q"))
         .drop("__q")
     )
 
@@ -194,8 +185,6 @@ def topk_weighted_sample(
     df: DataFrame,
     weight_col: Column | str,
     k: int,
-    key_col: str = "doc_id",
-    seed: str = "ares",
 ) -> DataFrame:
     """EXACTLY-k weighted sample without replacement (Efraimidis &
     Spirakis 2006 A-Res): each row gets key u^(1/w) — equivalently
@@ -203,20 +192,20 @@ def topk_weighted_sample(
     probability scales with the weight; the fixed output size is what
     :func:`weighted_sample`'s Bernoulli filter cannot give.
 
-    ``u`` derives from the portable content hash, NOT a random source,
+    ``u`` derives from the portable ``doc_id`` hash, NOT a random source,
     so the sample is deterministic across engines, partitionings, and
     reruns (the suite's reproducible-curation contract).  The rank key
-    rounds at 12 decimals with a ``key_col`` tie-break so cross-engine
+    rounds at 12 decimals with a ``doc_id`` tie-break so cross-engine
     libm last-ulp ln() differences cannot reorder the cut.  Runs as
     TakeOrdered (per-partition heaps, k-row merge) — never a global
     sort."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    u = (portable_hash64(F.col(key_col).cast("string"), seed=seed) + 1) / F.lit(
+    u = (portable_hash64(F.col("doc_id").cast("string"), seed="ares") + 1) / F.lit(
         _HASH_SPACE
     )
     key = F.round(-F.log(u) / F.greatest(w, F.lit(1e-12)), 12)
     return (
         df.withColumn("ares_key", key)
-        .orderBy("ares_key", key_col)
+        .orderBy("ares_key", "doc_id")
         .limit(k)
     )

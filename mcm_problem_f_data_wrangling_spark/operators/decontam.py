@@ -26,22 +26,21 @@ from pyspark.sql import functions as F
 from ..functions.textfn import portable_hash64, strict_word_shingles
 
 
-def _shingle_pairs(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(id, h) pairs: distinct k-gram hashes per document."""
+def _shingle_pairs(df: DataFrame, k: int) -> DataFrame:
+    """(doc_id, h) pairs: distinct ``text`` k-gram hashes per document."""
     return df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(strict_word_shingles(text_col, k))).alias("ng"),
-    ).select(F.col(id_col), portable_hash64("ng").alias("h"))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(strict_word_shingles("text", k))).alias("ng"),
+    ).select(F.col("doc_id"), portable_hash64("ng").alias("h"))
 
 
 def ngram_decontaminate(
     train: DataFrame,
     eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
 ) -> DataFrame:
-    """Flag training docs overlapping the eval set on any k-word shingle.
+    """Flag training docs overlapping the eval set on any k-word shingle
+    of ``text`` (both sides keyed by ``doc_id``).
 
     Output (contaminated docs only):
     (doc_id, n_shared_ngrams, n_eval_docs) — how many distinct
@@ -49,19 +48,20 @@ def ngram_decontaminate(
     drive the usual remediation choice (drop doc vs. excise span).
     """
     ev = F.broadcast(
-        _shingle_pairs(eval_df, text_col, id_col, k).withColumnRenamed(
-            id_col, "eval_id"
-        )
+        _shingle_pairs(eval_df, k).withColumnRenamed("doc_id", "eval_id")
     )
-    tr = _shingle_pairs(train, text_col, id_col, k)
+    tr = _shingle_pairs(train, k)
     return (
         tr.join(ev, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.countDistinct("h").alias("n_shared_ngrams"),
             F.countDistinct("eval_id").alias("n_eval_docs"),
         )
     )
+
+
+BLOOM_HASHES = 4  # double-hashed probe positions per shingle
 
 
 def _bloom_positions(h, j: int, m_bits: int):
@@ -80,11 +80,8 @@ def _bloom_positions(h, j: int, m_bits: int):
 def bloom_decontaminate(
     train: DataFrame,
     eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     m_bits: int = 1 << 20,
-    n_hashes: int = 4,
 ) -> DataFrame:
     """:func:`ngram_decontaminate` for eval sets too big to broadcast
     raw — EXACT output, Bloom-pruned plan.
@@ -94,7 +91,7 @@ def bloom_decontaminate(
     shingles are folded into an ``m_bits``-bit Bloom filter stored as
     a DataFrame of ``m_bits/64`` bit-words (built with one group-by
     ``bit_or`` over the eval side — never collected to the driver),
-    and the 100 TB train side probes it with ``n_hashes`` MAP-SIDE
+    and the 100 TB train side probes it with ``BLOOM_HASHES`` MAP-SIDE
     broadcast joins on the word index (the broadcast is the 8 KB-per-
     MB-of-filter word table, independent of eval row count).  Rows
     passing all probes — true hits plus the filter's false-positive
@@ -107,18 +104,14 @@ def bloom_decontaminate(
     Output schema matches :func:`ngram_decontaminate`:
     ``(doc_id, n_shared_ngrams, n_eval_docs)``, contaminated docs only.
     """
-    if m_bits < 64 or n_hashes < 1:
-        raise ValueError(
-            f"need m_bits >= 64 and n_hashes >= 1, got {m_bits}, {n_hashes}"
-        )
-    ev = _shingle_pairs(eval_df, text_col, id_col, k).withColumnRenamed(
-        id_col, "eval_id"
-    )
+    if m_bits < 64:
+        raise ValueError(f"need m_bits >= 64, got {m_bits}")
+    ev = _shingle_pairs(eval_df, k).withColumnRenamed("doc_id", "eval_id")
     # Bloom build: eval positions -> (word_idx, or of bits).  The only
     # eval-side shuffle is this m_bits/64-key group-by.
     ev_pos = ev.select(
         F.explode(
-            F.array(*[_bloom_positions(F.col("h"), j, m_bits) for j in range(n_hashes)])
+            F.array(*[_bloom_positions(F.col("h"), j, m_bits) for j in range(BLOOM_HASHES)])
         ).alias("pos")
     )
     words = ev_pos.groupBy(
@@ -128,10 +121,9 @@ def bloom_decontaminate(
             "word"
         )
     )
-    # Probe: n_hashes map-side broadcast joins; no big-side shuffle.
-    tr = _shingle_pairs(train, text_col, id_col, k)
-    probed = tr
-    for j in range(n_hashes):
+    # Probe: BLOOM_HASHES map-side broadcast joins; no big-side shuffle.
+    probed = _shingle_pairs(train, k)
+    for j in range(BLOOM_HASHES):
         pos = _bloom_positions(F.col("h"), j, m_bits)
         probed = (
             probed.withColumn(f"_wi{j}", F.shiftright(pos, 6))
@@ -154,13 +146,13 @@ def bloom_decontaminate(
                 )
             )
         )
-    passed = probed.select(id_col, "h")
+    passed = probed.select("doc_id", "h")
     # Exact verify on the pruned stream: the eval side is NOT
     # broadcast (the premise is it's too big) — a plain shuffle hash
     # join of two pruned/small inputs.
     return (
         passed.join(ev, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.countDistinct("h").alias("n_shared_ngrams"),
             F.countDistinct("eval_id").alias("n_eval_docs"),

@@ -35,24 +35,25 @@ MINHASH_K = 16
 LSH_BANDS = 8
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: fingerprint → group → keep min id.
 
     Output: (fingerprint, n_docs, keep_doc_id).  Rows with n_docs > 1
     are duplicate clusters; the canonical survivor is the min id.
     """
     return (
-        df.select(doc_fingerprint(text_col).alias("fingerprint"), F.col(id_col))
+        df.select(doc_fingerprint("text").alias("fingerprint"), F.col("doc_id"))
         .groupBy("fingerprint")
         .agg(
             F.count("*").alias("n_docs"),
-            F.min(id_col).alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
         )
     )
 
 
-def minhash_hashpair_col(text_col: str = "text", shingle_k: int = 3) -> Column:
-    """Per-shingle (h1, h2) 56-bit hash pairs from ONE md5 pass.
+def minhash_hashpair_col() -> Column:
+    """Per-shingle (h1, h2) 56-bit hash pairs from ONE md5 pass over
+    the word trigrams of ``text``.
 
     The md5 hex (32 chars) is split into two 14-hex-char (56-bit)
     halves.  All k MinHash components derive from these via the
@@ -61,7 +62,7 @@ def minhash_hashpair_col(text_col: str = "text", shingle_k: int = 3) -> Column:
     every LSH pipeline at corpus scale.  DuckDB mirror:
     ``CAST('0x' || substr(md5(s), 1|15, 14) AS BIGINT)``.
     """
-    m5 = F.transform(word_shingles(text_col, k=shingle_k), F.md5)
+    m5 = F.transform(word_shingles("text", k=3), F.md5)
     return F.transform(
         m5,
         lambda m: F.struct(
@@ -71,8 +72,9 @@ def minhash_hashpair_col(text_col: str = "text", shingle_k: int = 3) -> Column:
     )
 
 
-def minhash_signature_cols(hp_col: str = "hp", k: int = MINHASH_K) -> list[Column]:
-    """k MinHash components s0..s{k-1} from a precomputed hash-pair array.
+def minhash_signature_cols() -> list[Column]:
+    """``MINHASH_K`` MinHash components s0..s{k-1} from the precomputed
+    hash-pair array ``hp``.
 
     ``s_i = min over shingles of (h1 + i*h2)`` — max value 16*2^56 =
     2^60, so the BIGINT arithmetic is overflow-free (hence ANSI-safe
@@ -85,16 +87,13 @@ def minhash_signature_cols(hp_col: str = "hp", k: int = MINHASH_K) -> list[Colum
     same expressions — ``i`` is inlined as a long literal, so the
     ``h1 + iL * h2`` arithmetic is bit-identical.
     """
-    name = ".".join(f"`{p}`" for p in hp_col.split("."))
     return [
-        F.expr(
-            f"array_min(transform({name}, p -> p.h1 + {i}L * p.h2))"
-        ).alias(f"s{i}")
-        for i in range(k)
+        F.expr(f"array_min(transform(`hp`, p -> p.h1 + {i}L * p.h2))").alias(f"s{i}")
+        for i in range(MINHASH_K)
     ]
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = MINHASH_K) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """Per-doc MinHash signature table: (id, s0..s{k-1}).
 
     Two narrow projections, no shuffle: (1) one md5 per shingle →
@@ -107,47 +106,32 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
 
     return (
         spread(df)
-        .select(F.col(id_col), minhash_hashpair_col(text_col).alias("hp"))
-        .select(F.col(id_col), *minhash_signature_cols("hp", k))
+        .select(F.col("doc_id"), minhash_hashpair_col().alias("hp"))
+        .select(F.col("doc_id"), *minhash_signature_cols())
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """LSH banding: pairs sharing at least one band bucket.
 
-    Signature is split into ``bands`` bands of ``k/bands`` rows; the
-    band key is the concatenation of its components.  Candidates are
-    produced by an equi-self-join on (band_idx, band_key) — at scale
-    this is one shuffle keyed on the band hash, never a cross join.
+    Signature is split into ``LSH_BANDS`` bands (:func:`banded_keys`).
+    Candidates are produced by an equi-self-join on (band_idx,
+    band_key) — at scale this is one shuffle keyed on the band hash,
+    never a cross join.
     """
-    rows = k // bands
-    band_key = [
-        F.concat_ws("|", *[F.col(f"s{b * rows + r}") for r in range(rows)]).alias(f"b{b}")
-        for b in range(bands)
-    ]
-    banded = signatures.select(F.col(id_col), *band_key).select(
-        F.col(id_col),
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(bands)])).alias(
-            "band_idx", "band_key"
-        ),
-    )
+    banded = banded_keys(signatures)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
         a.join(
             b,
-            (F.col(f"a.band_idx") == F.col(f"b.band_idx"))
-            & (F.col(f"a.band_key") == F.col(f"b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_id_1"),
-            F.col(f"b.{id_col}").alias("doc_id_2"),
+            F.col("a.doc_id").alias("doc_id_1"),
+            F.col("b.doc_id").alias("doc_id_2"),
         )
         .dropDuplicates()
     )
@@ -155,11 +139,7 @@ def lsh_candidate_pairs(
 
 def minhash_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.3,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
 ) -> DataFrame:
     """LSH-banded candidates + EXACT trigram-shingle Jaccard verify —
     the sub-threshold SCALE path the exact AllPairs join cannot walk.
@@ -169,7 +149,7 @@ def minhash_jaccard_pairs(
     ``(1-t)``-fraction of every document's shingle set, so at t=0.2
     ~80% of every set becomes join keys (the measured dominator of
     ``x_dedup_clusters_cc`` at sf1, SCALE.md round-10 note).  Banding
-    cost is threshold-INDEPENDENT — k minhashes + ``bands`` bucket
+    cost is threshold-INDEPENDENT — k minhashes + ``LSH_BANDS`` bucket
     keys per doc — and candidate fan-out follows the banding
     chemistry ``P(candidate) = 1-(1-J^r)^b``, concentrated on pairs
     that are actually similar.  The trade is RECALL < 1 on pairs near
@@ -190,23 +170,18 @@ def minhash_jaccard_pairs(
     """
     from .skew import spread
 
-    cand = lsh_candidate_pairs(
-        minhash_signatures(df, text_col=text_col, id_col=id_col, k=k),
-        id_col,
-        k,
-        bands,
-    )
+    cand = lsh_candidate_pairs(minhash_signatures(df))
     sets = spread(df).select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(text_col, k=3)).alias("sh"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles("text", k=3)).alias("sh"),
     )
     j = (
         cand.join(
-            sets.select(F.col(id_col).alias("doc_id_1"), F.col("sh").alias("sh1")),
+            sets.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
             "doc_id_1",
         )
         .join(
-            sets.select(F.col(id_col).alias("doc_id_2"), F.col("sh").alias("sh2")),
+            sets.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2")),
             "doc_id_2",
         )
         .select(
@@ -235,12 +210,7 @@ def minhash_jaccard_pairs(
     )
 
 
-def simhash16_frame(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "simhash",
-) -> DataFrame:
+def simhash16_frame(df: DataFrame) -> DataFrame:
     """(id, simhash) frame: 16-bit SimHash over word tokens
     (multiset-weighted).
 
@@ -256,11 +226,11 @@ def simhash16_frame(
     separate — measured 0.39 s -> 0.18 s on the sf0.1 corpus (r12),
     values identical.
     """
-    toks = tokens(text_col)
+    toks = tokens("text")
     th = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long")
     )
-    base = df.select(F.col(id_col), F.size(toks).alias("__n"), th.alias("__th"))
+    base = df.select(F.col("doc_id"), F.size(toks).alias("__n"), th.alias("__th"))
 
     def bit_set(bit: int):
         return lambda h: F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1
@@ -269,20 +239,17 @@ def simhash16_frame(
     for b in range(16):
         cnt = F.size(F.filter(F.col("__th"), bit_set(b)))
         acc = acc + F.when(cnt * 2 > F.col("__n"), F.lit(1 << b)).otherwise(F.lit(0))
-    return base.select(F.col(id_col), acc.cast("long").alias(out_col))
+    return base.select(F.col("doc_id"), acc.cast("long").alias("simhash"))
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.2,
-    shingle_k: int = 2,
 ) -> DataFrame:
     """EXACT n-gram-set Jaccard near-dup pairs via prefix filtering.
 
     Output: (doc_id_1, doc_id_2, jaccard) — every pair of documents
-    whose distinct ``shingle_k``-word-shingle Jaccard is >=
+    whose distinct word-bigram (2-word shingle) Jaccard is >=
     ``threshold``.
 
     Scale path (round-1 judge feedback): the earlier length-bucket
@@ -293,7 +260,7 @@ def ngram_jaccard_pairs(
     RARE-feature document frequencies, complete by construction, and
     the per-pair verify is an integer intersection count.
 
-    The feature unit is the n-GRAM (default bigram), not the raw
+    The feature unit is the n-GRAM (a bigram), not the raw
     token (round-2 fix): on a small-vocabulary corpus every token is
     a stopword-grade feature (df ≈ 0.7·n here), so a token-set join
     has no rare prefixes to filter on and the TRUE result itself is
@@ -312,8 +279,8 @@ def ngram_jaccard_pairs(
     tok = (
         spread(df)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(word_shingles(text_col, k=shingle_k))).alias(
+            F.col("doc_id"),
+            F.explode(F.array_distinct(word_shingles("text", k=2))).alias(
                 "token"
             ),
         )
@@ -346,13 +313,9 @@ def srp_hyperplanes(dim: int, n_bits: int = 6, seed: int = 7) -> list[list[float
     ]
 
 
-def srp_band_keys(
-    vec_col: Column | str, hyperplanes: list[list[float]], n_bits: int
-) -> Column:
-    """Array of SRP band keys (one per table) for a vector column.
-
-    Each key packs ``n_bits`` sign bits — bit i of table t is
-    ``dot(v, H[t*n_bits+i]) > 0``.  The dot products accumulate in
+def srp_band_keys(vec_col: str, hyperplanes: list[list[float]]) -> Column:
+    """SRP band key of a vector column: one bit per hyperplane, bit i
+    is ``dot(v, H[i]) > 0``.  The dot products accumulate in
     DECIMAL(38,14) (per-element double product, deterministically
     rounded to decimal, then exact associative sum) so the SIGN —
     hence the band — is bit-identical in any engine regardless of
@@ -363,8 +326,7 @@ def srp_band_keys(
     expression inside codegen (k-way expanded literal trees fall out
     of whole-stage codegen).
     """
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    n_tables = len(hyperplanes) // n_bits
+    v = F.col(vec_col)
     # one py4j round trip for the whole hyperplane matrix (r12; see
     # functions.vectors.lit_doubles — per-element F.lit round trips
     # dominate plan-build time for big literals); same doubles, same
@@ -387,39 +349,26 @@ def srp_band_keys(
             F.lit(1),
         ).otherwise(F.lit(0)),
     )
-    weights = F.array(*[F.lit(1 << (i % n_bits)) for i in range(len(hyperplanes))])
+    weights = F.array(*[F.lit(1 << i) for i in range(len(hyperplanes))])
     weighted = F.zip_with(bits, weights, lambda bit, wt: bit * wt)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.aggregate(
-            F.slice(weighted, t * n_bits + 1, n_bits), F.lit(0), lambda acc, x: acc + x
-        ).cast("long"),
-    )
+    return F.aggregate(weighted, F.lit(0), lambda acc, x: acc + x).cast("long")
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    top_per_band: int = 3,
-    hyperplanes: list[list[float]] | None = None,
-    n_bits: int = 6,
-) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, hyperplanes: list[list[float]]) -> DataFrame:
     """Embedding-cosine near-dup candidates, banded to avoid O(n²).
 
-    Pairs are generated only within a band and the top pairs per band
-    by cosine are kept.  Output: (band, vec_id_1, vec_id_2, cos_sim).
+    Over ``(vec_id, embedding)`` rows, pairs are generated only within
+    a band and the top 3 pairs per band by cosine are kept.  Output:
+    (band, vec_id_1, vec_id_2, cos_sim).
 
-    Banding (round-1 judge feedback): the default is sign-random-
-    projection LSH over ``hyperplanes`` (:func:`srp_hyperplanes`) —
-    band count is 2^n_bits PER TABLE and is chosen to grow with n
-    (n_bits ≈ log2(n / target_band_size)), so the within-band
-    self-join stays O(n²/2^n_bits) instead of degenerating when a
-    fixed-cardinality column is the band.  Identical/near-identical
-    vectors agree on every sign bit, so true near-dups collide;
-    recall for a pair at angle θ is (1-θ/π)^n_bits per table.  With
-    more than one table in ``hyperplanes`` (OR-amplification) the
-    emitted band id is ``table_idx * 2^n_bits + key``.
+    Banding (round-1 judge feedback): sign-random-projection LSH over
+    ``hyperplanes`` (:func:`srp_hyperplanes`), n_bits =
+    ``len(hyperplanes)`` — band count is 2^n_bits and is chosen to
+    grow with n (n_bits ≈ log2(n / target_band_size)), so the
+    within-band self-join stays O(n²/2^n_bits) instead of degenerating
+    when a fixed-cardinality column is the band.  Identical/near-
+    identical vectors agree on every sign bit, so true near-dups
+    collide; recall for a pair at angle θ is (1-θ/π)^n_bits.
     """
     from pyspark.sql import Window
 
@@ -428,31 +377,8 @@ def embedding_neardup_pairs(
 
     # the decimal-exact SRP dot products are the dominant per-row cost;
     # see minhash_signatures' spread note
-    df = spread(df)
-
-    if hyperplanes is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            # empty input: no pairs (and no dimension to derive
-            # hyperplanes from) — return the empty result with the
-            # output schema rather than crashing a scheduled sweep.
-            # The id columns inherit the caller's id type so empty
-            # and non-empty batches union cleanly.
-            id_type = df.schema[id_col].dataType.simpleString()
-            return df.sparkSession.createDataFrame(
-                [],
-                f"band long, vec_id_1 {id_type}, vec_id_2 {id_type}, cos_sim double",
-            )
-        hyperplanes = srp_hyperplanes(len(first[0]), n_bits=n_bits)
-    keys = srp_band_keys(vec_col, hyperplanes, n_bits)
-    banded = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode(keys).alias("__t", "__key"),
-    ).select(
-        id_col,
-        vec_col,
-        (F.col("__t") * (1 << n_bits) + F.col("__key")).alias("band"),
+    banded = spread(df).select(
+        "vec_id", "embedding", srp_band_keys("embedding", hyperplanes).alias("band")
     )
     # pre-normalize ONCE per banded row so the within-band pair scoring
     # is a single dot product: naive cosine per pair is dot + two norms
@@ -460,30 +386,29 @@ def embedding_neardup_pairs(
     # (measured 27 s → ~11 s on the 100k×64d / 1024-band smoke).  A
     # zero-norm vector gets a NULL unit (cosine undefined), matching
     # the try_divide guard of cosine_similarity.
-    nrm = banded.withColumn("__nrm", l2_norm(vec_col))
+    nrm = banded.withColumn("__nrm", l2_norm("embedding"))
     banded = nrm.select(
-        id_col,
+        "vec_id",
         "band",
         F.when(
             F.col("__nrm") > 0,
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__nrm")),
+            F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("__nrm")),
         ).alias("__unit"),
     )
     a, b = banded.alias("a"), banded.alias("b")
     pairs = a.join(
         b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        (F.col("a.band") == F.col("b.band")) & (F.col("a.vec_id") < F.col("b.vec_id")),
     ).select(
         F.col("a.band").alias("band"),
-        F.col(f"a.{id_col}").alias("vec_id_1"),
-        F.col(f"b.{id_col}").alias("vec_id_2"),
+        F.col("a.vec_id").alias("vec_id_1"),
+        F.col("b.vec_id").alias("vec_id_2"),
         dot(F.col("a.__unit"), F.col("b.__unit")).alias("cos_raw"),
     )
     w = Window.partitionBy("band").orderBy(F.desc("cos_raw"), "vec_id_1", "vec_id_2")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_per_band)
+        .filter(F.col("rn") <= 3)
         .select("band", "vec_id_1", "vec_id_2", F.round("cos_raw", 6).alias("cos_sim"))
     )
 
@@ -591,11 +516,7 @@ def edit_distance_pair_counts(
     )
 
 
-def chunk_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_dedup(df: DataFrame) -> DataFrame:
     """Sub-document exact dedup at fixed word-chunk granularity
     (C4/RefinedWeb-style: boilerplate repeated across pages is removed
     even when whole documents differ).
@@ -625,21 +546,21 @@ def chunk_dedup(
         lambda i: F.array_join(F.slice(words, i * 8 + 1, 8), " "),
     )
     exploded = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__w"))
+        df.select(F.col("doc_id"), tokens(F.col("text")).alias("__w"))
         .filter(F.size(words) > 0)
-        .select(F.col(id_col), F.posexplode(chunks).alias("pos", "chunk"))
+        .select(F.col("doc_id"), F.posexplode(chunks).alias("pos", "chunk"))
     )
     w = Window.partitionBy("chunk")
-    first = F.min(F.struct(id_col, "pos")).over(w)
+    first = F.min(F.struct("doc_id", "pos")).over(w)
     kept = exploded.withColumn("__f", first).filter(
-        (F.col(id_col) == F.col(f"__f.{id_col}")) & (F.col("pos") == F.col("__f.pos"))
+        (F.col("doc_id") == F.col("__f.doc_id")) & (F.col("pos") == F.col("__f.pos"))
     )
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "chunk"))),
         lambda s: s["chunk"],
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(ordered, " ").alias("text_dedup"),
             F.count(F.lit(1)).alias("n_chunks_kept"),
@@ -649,8 +570,6 @@ def chunk_dedup(
 
 def jaccard_join_prefix(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.3,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join via prefix filtering (AllPairs /
@@ -686,8 +605,8 @@ def jaccard_join_prefix(
     tok = (
         spread(df)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(word_shingles(text_col, k=3))).alias("token"),
+            F.col("doc_id"),
+            F.explode(F.array_distinct(word_shingles("text", k=3))).alias("token"),
         )
     )
     tok = materialize(tok)
@@ -858,23 +777,20 @@ def _prefix_filter_jaccard(tok: DataFrame, threshold: float) -> DataFrame:
     return inter.where(jac >= F.lit(threshold))
 
 
-def banded_keys(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
-    """(id, band_idx, band_key) from a signature table — the shared
+def banded_keys(signatures: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_key) from a signature table: the
+    signature split into ``LSH_BANDS`` bands of ``MINHASH_K/LSH_BANDS``
+    rows, the band key the concatenation of its components — the shared
     banding step of :func:`lsh_candidate_pairs` and
     :func:`incremental_lsh_dedup`."""
-    rows = k // bands
+    rows = MINHASH_K // LSH_BANDS
     band_key = [
         F.concat_ws("|", *[F.col(f"s{b * rows + r}") for r in range(rows)]).alias(f"b{b}")
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     ]
-    return signatures.select(F.col(id_col), *band_key).select(
-        F.col(id_col),
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(bands)])).alias(
+    return signatures.select(F.col("doc_id"), *band_key).select(
+        F.col("doc_id"),
+        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(LSH_BANDS)])).alias(
             "band_idx", "band_key"
         ),
     )
@@ -883,10 +799,6 @@ def banded_keys(
 def incremental_lsh_dedup(
     new_docs: DataFrame,
     corpus_signatures: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup an INCREMENT against an existing corpus — the daily-ingest
     path: the corpus contributes only its stored MinHash signatures
@@ -902,33 +814,31 @@ def incremental_lsh_dedup(
     Returns ``(kept_new_docs, kept_new_signatures)`` — append the
     latter to the signature store to complete the ingest cycle.
     """
-    new_sigs = minhash_signatures(new_docs, text_col=text_col, id_col=id_col, k=k)
-    nb = banded_keys(new_sigs, id_col, k, bands)
-    cb = banded_keys(corpus_signatures, id_col, k, bands)
+    new_sigs = minhash_signatures(new_docs)
+    nb = banded_keys(new_sigs)
+    cb = banded_keys(corpus_signatures)
     vs_corpus = nb.join(
         cb, ["band_idx", "band_key"], "left_semi"
-    ).select(id_col).dropDuplicates()
+    ).select("doc_id").dropDuplicates()
     a, b = nb.alias("a"), nb.alias("b")
     within = (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"b.{id_col}").alias(id_col))
+        .select(F.col("b.doc_id").alias("doc_id"))
         .dropDuplicates()
     )
     dropped = vs_corpus.unionByName(within).dropDuplicates()
-    kept = new_docs.join(dropped, id_col, "left_anti")
-    kept_sigs = new_sigs.join(dropped, id_col, "left_anti")
+    kept = new_docs.join(dropped, "doc_id", "left_anti")
+    kept_sigs = new_sigs.join(dropped, "doc_id", "left_anti")
     return kept, kept_sigs
 
 
 def dup_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     min_run: int = 3,
 ) -> DataFrame:
@@ -952,8 +862,8 @@ def dup_spans(
     from ..functions.textfn import strict_word_shingles
 
     g = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(strict_word_shingles(text_col, k)).alias("pos0", "s"),
+        F.col("doc_id"),
+        F.posexplode(strict_word_shingles("text", k)).alias("pos0", "s"),
     ).select(
         "doc_id",
         (F.col("pos0") + 1).cast("long").alias("pos"),

@@ -108,11 +108,11 @@ def _adf_design(y: np.ndarray, dy: np.ndarray, p: int) -> tuple[np.ndarray, np.n
     return np.column_stack(cols), dy[p:]
 
 
-def adf_stat(y: np.ndarray, maxlag: int | None = None) -> float:
+def adf_stat(y: np.ndarray) -> float:
     """Augmented Dickey-Fuller t-statistic (constant, AIC lag selection).
 
-    Mirrors ``adfuller``'s defaults: candidate lags 0..maxlag (Schwert
-    bound) are fit on a common sample aligned at maxlag, AIC
+    Mirrors ``adfuller``'s defaults: candidate lags 0..maxlag (the
+    Schwert bound) are fit on a common sample aligned at maxlag, AIC
     (n·log(RSS/n) + 2k) picks the lag, and the chosen regression is
     refit on the full usable sample; the statistic is β̂/se(β̂).
     """
@@ -121,7 +121,7 @@ def adf_stat(y: np.ndarray, maxlag: int | None = None) -> float:
     n = len(y)
     if n < 10:
         return float("nan")
-    pmax = maxlag if maxlag is not None else int(np.floor(12 * (n / 100.0) ** 0.25))
+    pmax = int(np.floor(12 * (n / 100.0) ** 0.25))
     pmax = max(0, min(pmax, n // 2 - 3))
     dy = np.diff(y)
     if len(dy) - pmax < 5:
@@ -183,18 +183,17 @@ def yeo_johnson(y: np.ndarray, lam: float) -> np.ndarray:
     return out
 
 
-def yeo_johnson_mle(y: np.ndarray, grid: np.ndarray | None = None) -> float:
-    """λ maximizing the Yeo-Johnson log-likelihood (grid search ≡ the
-    scipy optimizer to grid resolution)."""
+def yeo_johnson_mle(y: np.ndarray) -> float:
+    """λ maximizing the Yeo-Johnson log-likelihood (search over the grid
+    -2, -1.95, …, 2 ≡ the scipy optimizer to grid resolution)."""
     y = np.asarray(y, dtype=float)
     y = y[~np.isnan(y)]
     if len(y) < 5:
         return float("nan")
-    lams = grid if grid is not None else np.arange(-2.0, 2.01, 0.05)
     best_lam, best_ll = 1.0, -np.inf
     n = len(y)
     jac = np.sign(y) * np.log1p(np.abs(y))  # d log-Jacobian term pieces
-    for lam in lams:
+    for lam in np.arange(-2.0, 2.01, 0.05):
         t = yeo_johnson(y, float(lam))
         var = t.var()
         if var <= 0:
@@ -205,13 +204,13 @@ def yeo_johnson_mle(y: np.ndarray, grid: np.ndarray | None = None) -> float:
     return best_lam
 
 
-def periodogram_period(y: np.ndarray, min_period: int = 2, max_period: int = 24) -> int:
+def periodogram_period(y: np.ndarray) -> int:
     """Dominant seasonal period via the FFT periodogram of the
     detrended (first-differenced) series — the notebook's estimator
     (``EDA.ipynb cell 25``), searching periods 2..24."""
     y = np.asarray(y, dtype=float)
     y = y[~np.isnan(y)]
-    if len(y) < 2 * min_period + 2:
+    if len(y) < 6:  # 2 · the shortest period + 2
         return 0
     d = np.diff(y)
     d = d - d.mean()
@@ -222,7 +221,7 @@ def periodogram_period(y: np.ndarray, min_period: int = 2, max_period: int = 24)
         if freqs[i] <= 0:
             continue
         period = 1.0 / freqs[i]
-        if min_period <= period <= max_period and power[i] > best_pow:
+        if 2 <= period <= 24 and power[i] > best_pow:
             best_pow, best_p = power[i], int(round(period))
     return best_p
 

@@ -37,8 +37,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def gram_partials(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """One row per partition: flattened Xᵀ X Gram, column sums, count."""
+def gram_partials(df: DataFrame) -> DataFrame:
+    """One row per partition of the ``embedding`` vectors: flattened
+    Xᵀ X Gram, column sums, count."""
 
     def acc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         G = None
@@ -47,7 +48,7 @@ def gram_partials(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             if G is None:
                 d = X.shape[1]
                 G = np.zeros((d, d))
@@ -60,7 +61,7 @@ def gram_partials(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
                 {"g": [G.ravel().tolist()], "s": [s.tolist()], "n": [n]}
             )
 
-    return df.select(vec_col).mapInPandas(
+    return df.select("embedding").mapInPandas(
         acc, schema="g array<double>, s array<double>, n bigint"
     )
 
@@ -84,13 +85,11 @@ def _top_eigenpairs(C: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     return vals, vecs
 
 
-def fit_pca(
-    df: DataFrame, k: int = 2, vec_col: str = "embedding"
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
+def fit_pca(df: DataFrame, k: int = 2) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
     """Returns (eigenvalues[k], components[k×d], mean[d], total_var).
 
     Collects O(partitions) partial rows — never vectors."""
-    parts = gram_partials(df, vec_col).collect()
+    parts = gram_partials(df).collect()
     if not parts:
         raise ValueError("fit_pca: empty input")
     d = len(parts[0]["s"])
@@ -112,10 +111,9 @@ def project_pca(
     df: DataFrame,
     components: np.ndarray,
     mean: np.ndarray,
-    vec_col: str = "embedding",
-    prefix: str = "pc",
 ) -> DataFrame:
-    """Append pc1..pck columns — JVM-side centered dot products.
+    """Append pc1..pck columns — JVM-side centered dot products of the
+    ``embedding`` vectors.
 
     The vector is centered ONCE into a shared column; each component
     then costs one zip_with+aggregate dot product (k re-centerings
@@ -125,7 +123,7 @@ def project_pca(
     lit_m = F.array(*[F.lit(float(v)) for v in mean])
     out = df.withColumn(
         "__pca_centered",
-        F.zip_with(F.col(vec_col), lit_m, lambda x, m: x.cast("double") - m),
+        F.zip_with(F.col("embedding"), lit_m, lambda x, m: x.cast("double") - m),
     )
     for i, comp in enumerate(components):
         lit_c = F.array(*[F.lit(float(v)) for v in comp])
@@ -134,5 +132,5 @@ def project_pca(
             F.lit(0.0),
             lambda a, x: a + x,
         )
-        out = out.withColumn(f"{prefix}{i + 1}", dot)
-    return out.select(*cols, *[f"{prefix}{i + 1}" for i in range(len(components))])
+        out = out.withColumn(f"pc{i + 1}", dot)
+    return out.select(*cols, *[f"pc{i + 1}" for i in range(len(components))])

@@ -116,15 +116,17 @@ def simulate_paths(
     return path.select("group", "sim", "step", "y")
 
 
-def quantile_fan_summary(paths: DataFrame, qs: tuple[float, ...] = (0.05, 0.1, 0.5, 0.9, 0.95)) -> DataFrame:
-    """A6: exact per-step quantile fan + moments over simulated paths.
+def quantile_fan_summary(paths: DataFrame) -> DataFrame:
+    """A6: exact per-step quantile fan (p05, p10, p50, p90, p95) +
+    moments over simulated paths.
 
     Parity: ``np.quantile(Y_paths, q, axis=0)`` (``EDA.ipynb cells
     27/28/32``) — exact interpolated percentile, not approx, to match
     numpy's default interpolation.
     """
     aggs = [
-        F.percentile(F.col("y"), F.lit(q)).alias(f"p{int(q * 100):02d}") for q in qs
+        F.percentile(F.col("y"), F.lit(q)).alias(f"p{int(q * 100):02d}")
+        for q in (0.05, 0.1, 0.5, 0.9, 0.95)
     ]
     return paths.groupBy("group", "step").agg(
         *aggs,
@@ -239,10 +241,11 @@ def _css_residuals(z, c, phi, Phi, theta, Theta, s=12):
     return e
 
 
-def _nelder_mead(f, x0, steps=250, tol=1e-10):
+def _nelder_mead(f, x0, steps=250):
     """Minimal Nelder-Mead simplex (public algorithm, Nelder & Mead
     1965) — no scipy in this environment.  Good enough for the ≤5-dim
-    CSS surfaces here."""
+    CSS surfaces here.  Stops when the simplex's value spread falls
+    below a 1e-10 relative tolerance."""
     import numpy as np
 
     x0 = np.asarray(x0, dtype=float)
@@ -256,7 +259,7 @@ def _nelder_mead(f, x0, steps=250, tol=1e-10):
     for _ in range(steps):
         simplex.sort(key=lambda t: t[0])
         fbest, fworst = simplex[0][0], simplex[-1][0]
-        if abs(fworst - fbest) < tol * (abs(fbest) + tol):
+        if abs(fworst - fbest) < 1e-10 * (abs(fbest) + 1e-10):
             break
         centroid = np.mean([p for _, p in simplex[:-1]], axis=0)
         worst = simplex[-1][1]
@@ -475,7 +478,7 @@ def fit_arma_ml(z, p, q, P, Q, s=12):
     return -2.0 * ll + 2.0 * k, best
 
 
-def fit_arma_exog_ml(zy, zx, p, q, P, Q, s=12, beta0=0.0, start=None):
+def fit_arma_exog_ml(zy, zx, p, q, P, Q, s=12, beta0=0.0):
     """Exact-ML fit of regression-with-ARMA-errors on the differenced
     scale: jointly maximize the Kalman likelihood of ``zy - β·zx``
     over (β, c, ARMA coefficients) — differencing is linear, so the
@@ -490,8 +493,7 @@ def fit_arma_exog_ml(zy, zx, p, q, P, Q, s=12, beta0=0.0, start=None):
     zy = np.asarray(zy, dtype=float)
     zx = np.asarray(zx, dtype=float)
     names = ["beta", "c"] + ["phi"] * p + ["theta"] * q + ["Phi"] * P + ["Theta"] * Q
-    if start is None:
-        _, start = fit_arma_css(zy - beta0 * zx, p, q, P, Q, s=s)
+    _, start = fit_arma_css(zy - beta0 * zx, p, q, P, Q, s=s)
 
     def unpack(x):
         d = {"c": 0.0, "phi": 0.0, "theta": 0.0, "Phi": 0.0, "Theta": 0.0}
@@ -565,16 +567,15 @@ def fit_best_arma_forecast(
     order_col: str,
     value_col: str,
     steps: int = 6,
-    season: int = 12,
-    candidates=ARMA_CANDIDATES,
 ) -> DataFrame:
     """X3 parity path: per-group AIC grid over the reference's five
-    candidate orders (``fit_best_sarimax``, ``EDA.ipynb cell 27``),
+    candidate orders (``ARMA_CANDIDATES``; ``fit_best_sarimax``,
+    ``EDA.ipynb cell 27``),
     exact-ML-estimated via the pure-numpy Kalman filter, one
     ``applyInPandas`` crossing.
 
     Output: one row per (group, step) carrying the WINNING candidate's
-    order string and AIC.  Groups shorter than 2·season+2 observations
+    order string and AIC.  Groups shorter than 2·12+2 observations
     (not enough to difference d=1, D=1 and still condition the
     recursion) fall back to the RW-with-drift stand-in, flagged
     ``order='rw_drift'`` — the same degradation the reference hits
@@ -617,15 +618,15 @@ def fit_best_arma_forecast(
                 }
             )
 
-        if len(y) < 2 * season + 2 or not np.isfinite(y).all():
+        if len(y) < 2 * 12 + 2 or not np.isfinite(y).all():
             # short series AND series with gaps (NaN months) both land
             # on the documented rw_drift degradation — a NaN poisons
             # every candidate's SSE, so no finite AIC can exist
             return rw_fallback()
         dy = np.diff(y)
-        z = dy[season:] - dy[:-season]
+        z = dy[12:] - dy[:-12]  # d=1, then D=1 at the 12-month season
         best = None
-        for (p, d_, q), (P, D_, Q, s) in candidates:
+        for (p, d_, q), (P, D_, Q, s) in ARMA_CANDIDATES:
             aic, params = fit_arma_ml(z, p, q, P, Q, s=s)
             if np.isfinite(aic) and (best is None or aic < best[0]):
                 best = (aic, (p, d_, q), (P, D_, Q, s), params)
@@ -699,9 +700,6 @@ def fit_arma_exog_params(
     value_col: str,
     exog_col: str,
     steps: int = 6,
-    season: int = 12,
-    exog_fit_window: int = 60,
-    candidates=ARMA_CANDIDATES,
 ) -> DataFrame:
     """X3+exog: per-group regression-with-ARMA-errors fit (one
     ``applyInPandas`` crossing).
@@ -714,7 +712,7 @@ def fit_arma_exog_params(
     unit roots, so plain OLS is consistent), then a CSS fit
     (:func:`fit_arma_css`) of the residual series u = y − β·x.  The
     exog's own future law is RW+drift over
-    its last ``exog_fit_window`` first differences
+    its last 60 first differences
     (``fit_rw_drift_params``, ``EDA.ipynb cell 32``).
 
     Output: one row per (group, step) carrying the deterministic
@@ -737,7 +735,7 @@ def fit_arma_exog_params(
 
         def rw_fallback():
             d = pd.Series(y).diff().dropna()
-            tail = d.tail(exog_fit_window)
+            tail = d.tail(60)
             mu = float(tail.mean()) if len(tail) else 0.0
             sigma = float(tail.std(ddof=1)) if len(tail) > 1 else 0.0
             finite = y[np.isfinite(y)] if len(y) else y
@@ -757,20 +755,20 @@ def fit_arma_exog_params(
                 }
             )
 
-        if len(y) < 2 * season + 2 or not np.isfinite(y).all():
+        if len(y) < 2 * 12 + 2 or not np.isfinite(y).all():
             return rw_fallback()
 
-        # β on the doubly-differenced scale (d=1, D=1 at `season`)
+        # β on the doubly-differenced scale (d=1, D=1 at the 12-month season)
         def ddiff(v):
             dv = np.diff(v)
-            return dv[season:] - dv[:-season]
+            return dv[12:] - dv[:-12]
 
         zy, zx = ddiff(y), ddiff(x)
         sxx = float(np.dot(zx, zx))
         beta_ols = float(np.dot(zx, zy) / sxx) if sxx > 1e-12 else 0.0
 
         best = None
-        for (p, d_, q), (P, D_, Q, s) in candidates:
+        for (p, d_, q), (P, D_, Q, s) in ARMA_CANDIDATES:
             aic, b, params = fit_arma_exog_ml(
                 zy, zx, p, q, P, Q, s=s, beta0=beta_ols
             )
@@ -784,7 +782,7 @@ def fit_arma_exog_params(
             return rw_fallback()
 
         # exog RW+drift law (fit_rw_drift_params, cell 32: last-window diffs)
-        dx = pd.Series(x).diff().dropna().tail(exog_fit_window)
+        dx = pd.Series(x).diff().dropna().tail(60)
         mu_x = float(dx.mean()) if len(dx) else 0.0
         sigma_x = float(dx.std(ddof=1)) if len(dx) > 1 else 0.0
 
@@ -817,9 +815,6 @@ def sarimax_exog_fan(
     sims: int = 200,
     steps: int = 6,
     seed: int = 42,
-    season: int = 12,
-    exog_fit_window: int = 60,
-    qs: tuple[float, ...] = (0.05, 0.1, 0.5, 0.9, 0.95),
 ) -> DataFrame:
     """X5 full parity path: SARIMAX-with-exog Monte-Carlo fan
     (``EDA.ipynb cell 32`` end-to-end).
@@ -836,8 +831,7 @@ def sarimax_exog_fan(
     from pyspark.sql import Window
 
     fitted = fit_arma_exog_params(
-        df, group_col, order_col, value_col, exog_col,
-        steps=steps, season=season, exog_fit_window=exog_fit_window,
+        df, group_col, order_col, value_col, exog_col, steps=steps
     )
     # fan the sims directly off the per-(group, step) fit rows: ONE
     # Python fit stage in the plan (no self-join of the fit subtree,
@@ -866,7 +860,7 @@ def sarimax_exog_fan(
         "step",
         (F.col("det") + F.col("beta") * F.col("x_sim")).alias("y"),
     )
-    return quantile_fan_summary(paths, qs=qs)
+    return quantile_fan_summary(paths)
 
 
 # ---------------------------------------------------------------------------
@@ -948,13 +942,12 @@ def holt_winters_forecast(
     value_col: str,
     season: int = 12,
     steps: int = 6,
-    grid=HW_GRID,
 ) -> DataFrame:
     """Per-group additive Holt-Winters fit + h-step forecast.
 
-    Selects (alpha, beta, gamma) from ``grid``³ by one-step in-sample
+    Selects (alpha, beta, gamma) from ``HW_GRID``³ by one-step in-sample
     SSE, then forecasts ``level + h·trend + seasonal[(t+h) mod s]``.
-    One ``applyInPandas`` crossing; each group is O(n·|grid|³) local
+    One ``applyInPandas`` crossing; each group is O(n·|HW_GRID|³) local
     work, so the stage scales with the number of series exactly like
     the X3 AIC grid.  Groups shorter than 2·season observations can't
     initialize trend/seasonals and fall back to RW-with-drift, flagged
@@ -987,9 +980,9 @@ def holt_winters_forecast(
             )
 
         best = None
-        for a in grid:
-            for b in grid:
-                for g in grid:
+        for a in HW_GRID:
+            for b in HW_GRID:
+                for g in HW_GRID:
                     sse, level, trend, seas = _hw_fit_sse(y, season, a, b, g)
                     if np.isfinite(sse) and (best is None or sse < best[0]):
                         best = (sse, a, b, g, level, trend, seas)

@@ -26,11 +26,10 @@ from pyspark.sql import functions as F
 def funnel_conversion(
     events: DataFrame,
     steps: list[tuple[str, Column]],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     within_seconds: int | None = None,
 ) -> DataFrame:
-    """Per-step completion counts for an ordered funnel.
+    """Per-step completion counts for an ordered funnel over
+    ``(user_id, ts)`` events.
 
     ``steps`` is (name, predicate) per step; a user completes step i at
     the earliest event satisfying predicate i that is strictly later
@@ -42,7 +41,7 @@ def funnel_conversion(
     step i-1's ``n_users`` (total funnel entrants for step 1), so
     conversion rate is n_users / n_entered.
     """
-    w = Window.partitionBy(user_col)
+    w = Window.partitionBy("user_id")
     cur = events
     prev_t: Column | None = None
     tcols: list[str] = []
@@ -51,19 +50,19 @@ def funnel_conversion(
         if prev_t is None:
             cond = pred
         else:
-            cond = pred & (F.col(ts_col) > prev_t)
+            cond = pred & (F.col("ts") > prev_t)
             if within_seconds is not None:
                 cond = cond & (
-                    F.col(ts_col)
+                    F.col("ts")
                     <= prev_t + F.make_dt_interval(secs=F.lit(float(within_seconds)))
                 )
         cur = cur.withColumn(
-            tcol, F.min(F.when(cond, F.col(ts_col))).over(w)
+            tcol, F.min(F.when(cond, F.col("ts"))).over(w)
         )
         prev_t = F.col(tcol)
         tcols.append(tcol)
 
-    per_user = cur.groupBy(user_col).agg(
+    per_user = cur.groupBy("user_id").agg(
         *[F.min(t).alias(t) for t in tcols]  # constant per partition; min = the value
     )
     counts = per_user.agg(

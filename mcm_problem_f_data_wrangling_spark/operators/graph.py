@@ -71,8 +71,9 @@ from ..materialize import materialize
 from .dedup import ngram_jaccard_pairs
 
 
-def symmetrize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Undirected view of an edge list: both directions, self-loops dropped.
+def symmetrize_edges(edges: DataFrame) -> DataFrame:
+    """Undirected ``(a, b)`` view of a ``(src, dst)`` edge list: both
+    directions, self-loops dropped.
 
     Dedupe on the CANONICAL (least, greatest) orientation first, then
     mirror (r13): the old mirror-then-distinct shuffled 2·|edges| rows
@@ -84,8 +85,8 @@ def symmetrize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
     """
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .dropDuplicates()
@@ -115,19 +116,17 @@ def _round_path(base: str | None, name: str) -> str | None:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     max_iter: int = 60,
     work_dir: str | None = None,
     on_round=None,
     state: str | None = None,
 ) -> DataFrame:
-    """Connected components of an undirected graph → (node, component).
+    """Connected components of an undirected ``(src, dst)`` edge list →
+    (node, component).
 
     ``component`` is the smallest node id in the component (a stable,
-    deterministic cluster id).  ``nodes`` optionally supplies isolated
-    vertices (no incident edges); otherwise the vertex set is derived
+    deterministic cluster id).  ``nodes`` (a ``node`` column)
+    optionally supplies isolated vertices (no incident edges); otherwise the vertex set is derived
     from the edges.
 
     ``state`` picks the per-round grounding medium (module docstring):
@@ -158,8 +157,8 @@ def connected_components(
         # into the grounded state, and everything downstream reads that
         e0 = (
             edges.select(
-                F.least(F.col(src), F.col(dst)).alias("u"),
-                F.greatest(F.col(src), F.col(dst)).alias("v"),
+                F.least(F.col("src"), F.col("dst")).alias("u"),
+                F.greatest(F.col("src"), F.col("dst")).alias("v"),
             )
             .where(F.col("u") != F.col("v"))
             .dropDuplicates()
@@ -245,24 +244,24 @@ def connected_components(
                 # on the leaf side is belt-and-braces (at the fixpoint
                 # each leaf has exactly one edge)
                 leaves = (
-                    cur.groupBy(F.col("u").alias(node_col))
+                    cur.groupBy(F.col("u").alias("node"))
                     .agg(F.min("v").alias("component"))
                 )
                 centers = (
-                    cur.select(F.col("v").alias(node_col))
+                    cur.select(F.col("v").alias("node"))
                     .dropDuplicates()
-                    .withColumn("component", F.col(node_col))
+                    .withColumn("component", F.col("node"))
                 )
                 labeled = leaves.unionByName(centers)
-                labeled = labeled.groupBy(node_col).agg(
+                labeled = labeled.groupBy("node").agg(
                     F.min("component").alias("component")
                 )
                 if nodes is not None:
                     singles = (
-                        nodes.select(F.col(node_col))
+                        nodes.select(F.col("node"))
                         .dropDuplicates()
-                        .join(labeled, node_col, "left_anti")
-                        .withColumn("component", F.col(node_col))
+                        .join(labeled, "node", "left_anti")
+                        .withColumn("component", F.col("node"))
                     )
                     labeled = labeled.unionByName(singles)
                 # materialize the result off the state dir before it
@@ -312,8 +311,6 @@ def assert_materialized(df: DataFrame, context: str = "") -> DataFrame:
 
 def duplicate_clusters(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     jaccard_threshold: float = 0.2,
     pair_method: str = "prefix",
 ) -> DataFrame:
@@ -359,43 +356,32 @@ def duplicate_clusters(
     # same jaccard over a parquet re-read (33.7 s vs 17.7 s).
     base_dir = tempfile.mkdtemp(prefix="dupc_base_")
     try:
-        base = materialize(docs.select(F.col(id_col), F.col(text_col)), base_dir)
+        base = materialize(docs.select(F.col("doc_id"), F.col("text")), base_dir)
         doc_fp = base.select(
-            F.col(id_col), doc_fingerprint(text_col).alias("fingerprint")
+            F.col("doc_id"), doc_fingerprint("text").alias("fingerprint")
         )
         # star edges doc -> min-doc per exact-fingerprint group via ONE
         # window min — same edges exact_dedup_groups + broadcast join
         # produced, minus the second fingerprint pass and the join
         star = (
             doc_fp.withColumn(
-                "m", F.min(id_col).over(Window.partitionBy("fingerprint"))
+                "m", F.min("doc_id").over(Window.partitionBy("fingerprint"))
             )
-            .filter(F.col(id_col) != F.col("m"))
-            .select(F.col(id_col).alias("src"), F.col("m").alias("dst"))
+            .filter(F.col("doc_id") != F.col("m"))
+            .select(F.col("doc_id").alias("src"), F.col("m").alias("dst"))
         )
         if pair_method == "lsh":
             from .dedup import minhash_jaccard_pairs
 
-            pairs = minhash_jaccard_pairs(
-                base,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=jaccard_threshold,
-            )
+            pairs = minhash_jaccard_pairs(base, threshold=jaccard_threshold)
         else:
-            pairs = ngram_jaccard_pairs(
-                base,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=jaccard_threshold,
-            )
+            pairs = ngram_jaccard_pairs(base, threshold=jaccard_threshold)
         jac = pairs.select(
             F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
         )
         comp = connected_components(
             star.unionByName(jac),
-            nodes=base.select(F.col(id_col).alias("node")),
-            node_col="node",
+            nodes=base.select(F.col("doc_id").alias("node")),
         )
         # comp must be localCheckpoint-materialized (inside
         # connected_components) before base_dir is removed — assert
@@ -405,7 +391,7 @@ def duplicate_clusters(
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
     return comp.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
         (F.col("node") == F.col("component")).cast("bigint").alias("is_kept"),
     )
@@ -415,10 +401,8 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list (Page et al. 1999),
+    """Fixed-iteration PageRank over a ``(src, dst)`` edge list (Page et al. 1999),
     computed in 10^-15 fixed-point INTEGER arithmetic.
 
     ``rank_{t+1}(v) = (1-d)/N + d . sum_{u->v} rank_t(u)/outdeg(u)`` —
@@ -446,22 +430,22 @@ def pagerank(
     SCALE = 10**15
     d_num = round(damping * 100)
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     n_nodes = nodes.count()
-    outdeg = edges.groupBy(F.col(src).alias("node")).agg(
+    outdeg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
     base_int = (SCALE * (100 - d_num)) // 100 // n_nodes
     ranks = nodes.withColumn("rank_fp", F.lit(SCALE // n_nodes).cast("long"))
     for _ in range(iters):
         contrib = (
-            edges.join(ranks.withColumnRenamed("node", src), on=src)
-            .join(outdeg.withColumnRenamed("node", src), on=src)
+            edges.join(ranks.withColumnRenamed("node", "src"), on="src")
+            .join(outdeg.withColumnRenamed("node", "src"), on="src")
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 F.expr("rank_fp div outdeg").alias("c"),
             )
         )
@@ -481,10 +465,9 @@ def pagerank(
     )
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle participation counts (node, triangles).
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle participation counts (node, triangles) of a
+    ``(src, dst)`` edge list.
 
     The node-iterator-with-degree-ordering algorithm (Schank & Wagner
     2005, the MapReduce form of Suri & Vassilvitskii 2011): orient
@@ -528,8 +511,8 @@ def triangle_counts(
     """
     e0 = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
+            F.least(F.col("src"), F.col("dst")).cast("long").alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).cast("long").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -603,15 +586,13 @@ def triangle_counts(
 def k_core(
     edges: DataFrame,
     k: int,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     max_iter: int = 1000,
     work_dir: str | None = None,
     on_round=None,
     state: str = "parquet",
 ) -> DataFrame:
-    """Nodes of the k-core (maximal subgraph with min degree >= k) —
+    """Nodes of the k-core (maximal subgraph with min degree >= k) of a
+    ``(src, dst)`` edge list —
     the graph-curation prune (low-connectivity spam/bot tails drop out
     before expensive per-node work).
 
@@ -643,7 +624,7 @@ def k_core(
     base = None if state == "local" else work_dir or tempfile.mkdtemp(prefix="kcore_state_")
     try:
         cur = materialize(
-            symmetrize_edges(edges, src, dst), _round_path(base, "edges_0")
+            symmetrize_edges(edges), _round_path(base, "edges_0")
         )
         prev_edges = None
         for i in range(max_iter):
@@ -665,7 +646,7 @@ def k_core(
             prev_edges = n_edges
         else:
             raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
-        return materialize(cur.select(F.col("a").alias(node_col)).dropDuplicates())
+        return materialize(cur.select(F.col("a").alias("node")).dropDuplicates())
     finally:
         if base is not None and work_dir is None:
             shutil.rmtree(base, ignore_errors=True)

@@ -85,9 +85,9 @@ def interpolate_linear(
     keys: list[str],
     x_col: str,
     y_col: str,
-    out_col: str | None = None,
 ) -> DataFrame:
-    """Per-series linear interpolation of NULL values between the
+    """Per-series linear interpolation of ``y_col``'s NULL values, in
+    place, between the
     nearest non-null neighbors (pandas ``Series.interpolate
     (method='index')`` over the numeric ``x_col`` axis) — the natural
     companion to :func:`force_complete_month_grid`, whose gap rows it
@@ -107,7 +107,6 @@ def interpolate_linear(
     """
     from pyspark.sql import Window
 
-    out_col = out_col or y_col
     y, x = F.col(y_col), F.col(x_col).cast("double")
     anchor = F.when(y.isNotNull(), F.struct(x.alias("x"), y.alias("y")))
     w = Window.partitionBy(*keys).orderBy(x_col)
@@ -125,4 +124,4 @@ def interpolate_linear(
             prev["y"] + (nxt["y"] - prev["y"]) * frac,
         )
     )
-    return df.withColumn(out_col, filled)
+    return df.withColumn(y_col, filled)

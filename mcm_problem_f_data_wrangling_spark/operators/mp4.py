@@ -151,10 +151,9 @@ def encode_mp4_mjpeg_video(
     frames: list[bytes],
     width: int,
     height: int,
-    timescale: int = 600,
-    frame_duration: int = 25,
 ) -> bytes:
-    """MP4 whose samples are REAL JPEG payloads (Motion-JPEG).
+    """MP4 whose samples are REAL JPEG payloads (Motion-JPEG), 25 units
+    of a 600/s timescale per frame (24 fps).
 
     Same genuine ISO BMFF box tree as :func:`encode_mp4_stub_video`,
     but the sample entry is the QuickTime MJPEG fourcc ``jpeg`` and
@@ -168,14 +167,14 @@ def encode_mp4_mjpeg_video(
     if not frames:
         raise ValueError("MJPEG MP4 needs at least one frame")
     n_frames = len(frames)
-    duration = n_frames * frame_duration
+    duration = n_frames * 25
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2mp41")
     mdat = _box(b"mdat", b"".join(frames))
     chunk_offset = len(ftyp) + 8  # mdat payload starts after its header
 
     mvhd = _fullbox(
         b"mvhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
+        struct.pack(">IIII", 0, 0, 600, duration)
         + struct.pack(">IHH", 0x00010000, 0x0100, 0)
         + b"\x00" * 8
         + _UNITY_MATRIX
@@ -192,7 +191,7 @@ def encode_mp4_mjpeg_video(
     )
     mdhd = _fullbox(
         b"mdhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
+        struct.pack(">IIII", 0, 0, 600, duration)
         + struct.pack(">HH", 0x55C4, 0),
     )
     hdlr = _fullbox(
@@ -217,7 +216,7 @@ def encode_mp4_mjpeg_video(
     )
     stsd = _fullbox(b"stsd", 0, 0, struct.pack(">I", 1) + sample_entry)
     stts = _fullbox(
-        b"stts", 0, 0, struct.pack(">III", 1, n_frames, frame_duration)
+        b"stts", 0, 0, struct.pack(">III", 1, n_frames, 25)
     )
     stsc = _fullbox(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n_frames, 1))
     stsz = _fullbox(
@@ -451,10 +450,9 @@ def encode_mp4_av(
     sample_rate: int,
     channels: int = 1,
     audio_fmt: str = "sowt",
-    timescale: int = 600,
-    frame_duration: int = 25,
 ) -> bytes:
-    """Two-track MP4: MJPEG video + uncompressed 16-bit PCM audio.
+    """Two-track MP4: MJPEG video (24 fps, as
+    :func:`encode_mp4_mjpeg_video`) + uncompressed 16-bit PCM audio.
 
     The audio track is a genuine ISO BMFF/QuickTime ``soun`` track —
     ``smhd`` + AudioSampleEntry (fourcc ``sowt`` = little-endian s16,
@@ -472,7 +470,7 @@ def encode_mp4_av(
     if channels < 1 or len(samples) % channels:
         raise ValueError("samples must interleave a whole number of frames")
     n_frames = len(frames)
-    duration = n_frames * frame_duration
+    duration = n_frames * 25
     n_aframes = len(samples) // channels  # PCM frames (all channels)
     endian = "<" if audio_fmt == "sowt" else ">"
     pcm = struct.pack(f"{endian}{len(samples)}h", *samples)
@@ -484,7 +482,7 @@ def encode_mp4_av(
 
     mvhd = _fullbox(
         b"mvhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
+        struct.pack(">IIII", 0, 0, 600, duration)
         + struct.pack(">IHH", 0x00010000, 0x0100, 0)
         + b"\x00" * 8
         + _UNITY_MATRIX
@@ -503,7 +501,7 @@ def encode_mp4_av(
     )
     mdhd_v = _fullbox(
         b"mdhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
+        struct.pack(">IIII", 0, 0, 600, duration)
         + struct.pack(">HH", 0x55C4, 0),
     )
     hdlr_v = _fullbox(
@@ -529,7 +527,7 @@ def encode_mp4_av(
     stbl_v = _box(
         b"stbl",
         _fullbox(b"stsd", 0, 0, struct.pack(">I", 1) + entry_v)
-        + _fullbox(b"stts", 0, 0, struct.pack(">III", 1, n_frames, frame_duration))
+        + _fullbox(b"stts", 0, 0, struct.pack(">III", 1, n_frames, 25))
         + _fullbox(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n_frames, 1))
         + _fullbox(
             b"stsz", 0, 0,
@@ -599,9 +597,7 @@ class NoAudioTrackError(ValueError):
     """
 
 
-def parse_mp4_audio_track(
-    payload: bytes,
-) -> tuple[str, int, int, list[int]]:
+def parse_mp4_audio_track(payload: bytes) -> tuple[str, int, int, list[int]]:
     """Demux the first ``soun`` track → ``(fourcc, sample_rate,
     channels, samples)`` with ``samples`` the interleaved int16
     stream — the same shape ``decode_wav`` returns, so the demuxed
@@ -676,9 +672,7 @@ MP4_AUDIO_SCHEMA = StructType(
 )
 
 
-def demux_mp4_audio(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def demux_mp4_audio(df: DataFrame) -> DataFrame:
     """Audio-track extraction stage for video corpora: one Arrow-
     batched ``mapInPandas`` crossing that demuxes each MP4's ``soun``
     PCM track and RE-ENCODES it as a WAV payload, so every existing
@@ -726,10 +720,7 @@ def demux_mp4_audio(
                 }
             )
 
-    src = df.select(
-        F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
-    )
-    return src.mapInPandas(batches, schema)
+    return df.select("media_id", "payload").mapInPandas(batches, schema)
 
 
 MP4_META_SCHEMA = StructType(
@@ -744,9 +735,7 @@ MP4_META_SCHEMA = StructType(
 )
 
 
-def extract_mp4_metadata(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def extract_mp4_metadata(df: DataFrame) -> DataFrame:
     """Container-metadata stage for video corpora: one Arrow-batched
     ``mapInPandas`` crossing parsing each payload's box tree —
     the pre-decode filter/partition surface (resolution, duration,
@@ -777,7 +766,4 @@ def extract_mp4_metadata(
                 }
             )
 
-    out = df.select(
-        F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
-    )
-    return out.mapInPandas(batches, MP4_META_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(batches, MP4_META_SCHEMA)

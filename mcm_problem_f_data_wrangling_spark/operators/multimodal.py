@@ -651,7 +651,7 @@ def resize_plan(decoded: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature-extract stage via ``mapInPandas``: payload → fixed-dim
     embedding.
 
@@ -677,7 +677,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
                 {
                     "media_id": pdf["media_id"].to_numpy(),
                     "media_type": pdf["media_type"].to_numpy(),
-                    "embedding": [hist_of(p) for p in pdf[payload_col]],
+                    "embedding": [hist_of(p) for p in pdf["payload"]],
                 }
             )
 
@@ -785,9 +785,7 @@ PHASH_SCHEMA = StructType(
 )
 
 
-def compute_phash(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def compute_phash(df: DataFrame) -> DataFrame:
     """Perceptual-hash column via Arrow-batched ``mapInPandas``:
     PNG and baseline-JPEG payloads get the REAL DCT hash
     (:func:`phash64_png` / :func:`phash64_jpeg`), anything
@@ -804,10 +802,10 @@ def compute_phash(
         import numpy as np
 
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["media_id"].to_numpy()
             hashes = np.empty(len(ids), dtype=np.int64)
             kinds = []
-            for i, p in enumerate(pdf[payload_col]):
+            for i, p in enumerate(pdf["payload"]):
                 b = bytes(p) if p is not None else b""
                 if b[:8] == PNG_MAGIC:
                     hashes[i] = phash64_png(b)
@@ -822,14 +820,11 @@ def compute_phash(
                 {"media_id": ids, "phash": hashes, "phash_kind": kinds}
             )
 
-    out = df.select(F.col(id_col).alias("media_id"), F.col(payload_col))
-    return out.mapInPandas(hash_batches, PHASH_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(hash_batches, PHASH_SCHEMA)
 
 
 def phash_neardup_pairs(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """Image near-dup candidate pairs by perceptual-hash Hamming
@@ -840,13 +835,9 @@ def phash_neardup_pairs(
     :func:`compute_phash`."""
     from .dedup import hamming_neardup_pairs
 
-    hashed = (
-        compute_phash(df, payload_col, id_col)
-        .withColumnRenamed("media_id", id_col)
-        .select(id_col, "phash")
-    )
+    hashed = compute_phash(df).select("media_id", "phash")
     return hamming_neardup_pairs(
-        hashed, "phash", id_col, bits=64, max_hamming=max_hamming
+        hashed, "phash", "media_id", bits=64, max_hamming=max_hamming
     )
 
 
@@ -860,9 +851,7 @@ VIDEO_PHASH_SCHEMA = StructType(
 )
 
 
-def video_phash_frames(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def video_phash_frames(df: DataFrame) -> DataFrame:
     """Per-frame DCT pHash sequence for decodable videos — the video
     twin of :func:`compute_phash`: MP4 payloads whose track codec is
     Motion-JPEG (``jpeg``/``mjpa`` sample entries) are demuxed with
@@ -905,16 +894,11 @@ def video_phash_frames(
                 }
             )
 
-    src = df.select(
-        F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
-    )
-    return src.mapInPandas(batches, VIDEO_PHASH_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(batches, VIDEO_PHASH_SCHEMA)
 
 
 def video_phash_neardup(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """Video near-duplicate pairs by ALIGNED per-frame pHash: two
@@ -942,7 +926,7 @@ def video_phash_neardup(
     # ReuseExchange cannot unify a join exchange with an explode input,
     # so without this the whole demux+JPEG-decode Arrow stage runs 3x
     # (same discipline as dedup.py's PPJoin prefix table).
-    frames = materialize(video_phash_frames(df, payload_col, id_col))
+    frames = materialize(video_phash_frames(df))
     first = frames.where(F.col("frame_idx") == 0).select(
         "media_id",
         F.posexplode(
@@ -999,10 +983,7 @@ def video_phash_neardup(
 
 def video_clip_containment(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
     max_hamming: int = 3,
-    min_overlap: int = 2,
 ) -> DataFrame:
     """Trimmed-clip containment: pairs where the SHORTER video's full
     frame sequence sits inside the longer one at ONE consistent
@@ -1019,9 +1000,9 @@ def video_clip_containment(
     offset equals the shorter video's frame count.  A bag-of-frames
     decoy (same frames, scrambled order) dies here: at every voted
     offset some aligned pair exceeds the Hamming tolerance.
-    ``min_overlap`` floors the evidence — a 1-frame video "contained"
-    on a single frame match is formally correct but weak; the default
-    demands at least 2 aligned matching frames.  Never all-pairs.
+    At least 2 aligned matching frames are required — a 1-frame
+    video "contained" on a single frame match is formally correct but
+    weak.  Never all-pairs.
 
     Output: ``(id_a, id_b, offset, n_frames_matched,
     max_frame_hamming)``, ``id_a < id_b``; ``offset`` = the a-frame
@@ -1031,7 +1012,7 @@ def video_clip_containment(
     width = 64 // n_bands
     mask = (1 << width) - 1
     # one decode, three consumers (same discipline as video_phash_neardup)
-    frames = materialize(video_phash_frames(df, payload_col, id_col))
+    frames = materialize(video_phash_frames(df))
     banded = frames.select(
         "media_id",
         "frame_idx",
@@ -1086,6 +1067,6 @@ def video_clip_containment(
     )
     return verdict.where(
         (F.col("n_frames_matched") == F.least("nf_a", "nf_b"))
-        & (F.col("n_frames_matched") >= F.lit(min_overlap))
+        & (F.col("n_frames_matched") >= F.lit(2))
         & (F.col("max_frame_hamming") <= max_hamming)
     ).select("id_a", "id_b", "offset", "n_frames_matched", "max_frame_hamming")

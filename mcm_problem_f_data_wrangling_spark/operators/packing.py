@@ -26,21 +26,20 @@ def pack_sequences(
     df: DataFrame,
     tokens_col: str,
     capacity: int = 4096,
-    partition_col: str = "source",
-    order_col: str = "doc_id",
 ) -> DataFrame:
-    """Contiguous packing of docs into token-budget bins per partition.
+    """Contiguous packing of docs into token-budget bins per ``source``,
+    in ``doc_id`` order.
 
-    Adds: ``bin_id`` (0-based within partition), ``bin_offset`` (token
+    Adds: ``bin_id`` (0-based within source), ``bin_offset`` (token
     start position inside the bin: exclusive cumsum - bin start).
-    Deterministic given (partition_col, order_col) — reruns and the
+    Deterministic given (source, doc_id) — reruns and the
     SQL oracle produce the identical packing.  Docs longer than
     ``capacity`` get a bin to themselves (plus whatever fit before the
     boundary; the overflow rule above).
     """
     w = (
-        Window.partitionBy(partition_col)
-        .orderBy(order_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     excl = F.coalesce(F.sum(tokens_col).over(w), F.lit(0))

@@ -45,13 +45,10 @@ def word_ngrams_strict(toks: Column, n: int) -> Column:
 
 def repetition_signals(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram_sizes: tuple[int, ...] = (2, 3),
 ) -> DataFrame:
-    """Per-document n-gram repetition signals, long format.
+    """Per-document n-gram repetition signals of ``text``, long format.
 
-    Returns one row per (doc, n) with:
+    Returns one row per (doc_id, n), n = 2 and 3, with:
 
     - ``top_gram_frac``  — count of the modal n-gram / total n-grams
       (Gopher "top n-gram character fraction", token-count flavor);
@@ -61,20 +58,20 @@ def repetition_signals(
 
     Documents with fewer than ``n`` tokens emit no row for that ``n``.
     """
-    base = df.select(id_col, tokens(text_col).alias("__toks"))
+    base = df.select("doc_id", tokens("text").alias("__toks"))
     parts = [
         base.filter(F.size("__toks") >= n).select(
-            id_col,
+            "doc_id",
             F.lit(n).alias("n"),
             F.explode(word_ngrams_strict(F.col("__toks"), n)).alias("gram"),
         )
-        for n in ngram_sizes
+        for n in (2, 3)
     ]
     exploded = parts[0]
     for p in parts[1:]:
         exploded = exploded.unionByName(p)
-    counts = exploded.groupBy(id_col, "n", "gram").count()
-    return counts.groupBy(id_col, "n").agg(
+    counts = exploded.groupBy("doc_id", "n", "gram").count()
+    return counts.groupBy("doc_id", "n").agg(
         F.round(F.max("count") / F.sum("count"), 6).alias("top_gram_frac"),
         F.round(F.lit(1.0) - F.count(F.lit(1)) / F.sum("count"), 6).alias(
             "dup_gram_frac"
@@ -145,8 +142,6 @@ def doc_segments(toks: Column, seg_tokens: int = 3) -> Column:
 
 def boilerplate_removal(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seg_tokens: int = 3,
     max_df: int = 4,
     max_boiler_set: int = 10_000,
@@ -193,8 +188,8 @@ def boilerplate_removal(
     # serializes it on one task (measured 8.6 s -> 1.0 s at sf0.1;
     # identity at production scan widths)
     df = spread(df)
-    toks = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    segged = toks.select(id_col, doc_segments(F.col("__toks"), seg_tokens).alias("__segs"))
+    toks = df.select(F.col("doc_id"), tokens("text").alias("__toks"))
+    segged = toks.select("doc_id", doc_segments(F.col("__toks"), seg_tokens).alias("__segs"))
     # Materialize the segmented corpus ONCE (r12): it has two full
     # consumers — the df-count aggregate AND the removal pass — plus
     # the explode's Generate otherwise re-derives tokenize+segment
@@ -203,9 +198,9 @@ def boilerplate_removal(
     # ~7 s -> ~2 s).  The caller's barrier_scope frees it.
     segged = materialize(segged)
     seg_df = (
-        segged.select(F.col(id_col), F.explode("__segs").alias("seg"))
+        segged.select(F.col("doc_id"), F.explode("__segs").alias("seg"))
         .groupBy("seg")
-        .agg(F.count_distinct(F.col(id_col)).alias("df"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("df"))
         .filter(F.col("df") > max_df)
     )
     # Materialize the boilerplate table ONCE before the decision count
@@ -219,10 +214,10 @@ def boilerplate_removal(
     seg_df = materialize(seg_df)
     if seg_df.count() > max_boiler_set:
         pos = segged.select(
-            F.col(id_col), F.posexplode("__segs").alias("__pos", "seg")
+            F.col("doc_id"), F.posexplode("__segs").alias("__pos", "seg")
         )
         kept_rows = pos.join(seg_df.select("seg"), "seg", "left_anti")
-        rebuilt = kept_rows.groupBy(id_col).agg(
+        rebuilt = kept_rows.groupBy("doc_id").agg(
             F.array_join(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("__pos", "seg"))),
@@ -235,9 +230,9 @@ def boilerplate_removal(
         n_seg = F.size("__segs").cast("bigint")
         n_kept = F.coalesce(F.col("__n_kept"), F.lit(0)).cast("bigint")
         return (
-            segged.join(rebuilt, id_col, "left")
+            segged.join(rebuilt, "doc_id", "left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 n_seg.alias("n_segments"),
                 (n_seg - n_kept).alias("n_boiler"),
                 # a fully-boilerplate doc has no kept rows → empty text,
@@ -272,9 +267,9 @@ def boilerplate_removal(
     # duplicate non-cheap expressions, so this stays a separate,
     # single evaluation (r12: full operator 7.0 s -> see bench; the
     # removal pass stopped dominating).
-    with_kept = segged.select(F.col(id_col), F.col("__segs"), kept.alias("__kept"))
+    with_kept = segged.select(F.col("doc_id"), F.col("__segs"), kept.alias("__kept"))
     return with_kept.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__segs").cast("bigint").alias("n_segments"),
         (F.size("__segs") - F.size("__kept")).cast("bigint").alias("n_boiler"),
         F.array_join("__kept", " ").alias("cleaned_text"),

@@ -23,14 +23,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """(cohort_period, period_offset, n_active, cohort_size) table over
-    weeks; offsets are days/7 (exact integers on truncated
-    timestamps).
+def retention_cohorts(events: DataFrame) -> DataFrame:
+    """(cohort_period, period_offset, n_active, cohort_size) table of
+    ``(user_id, ts)`` events over weeks; offsets are days/7 (exact
+    integers on truncated timestamps).
     """
     # repartition by user FIRST: hash(user) satisfies the clustering
     # requirement of BOTH the (user, period) dedup (subset rule) and
@@ -39,12 +35,12 @@ def retention_cohorts(
     # and then again on user for the window)
     act = (
         events.select(
-            F.col(user_col), F.date_trunc("week", F.col(ts_col)).alias("period")
+            F.col("user_id"), F.date_trunc("week", F.col("ts")).alias("period")
         )
-        .repartition(F.col(user_col))
+        .repartition(F.col("user_id"))
         .dropDuplicates()
     )
-    w = Window.partitionBy(user_col)
+    w = Window.partitionBy("user_id")
     coh = act.withColumn("cohort_period", F.min("period").over(w))
     offset = (
         F.datediff(F.col("period").cast("date"), F.col("cohort_period").cast("date"))

@@ -33,38 +33,33 @@ GRAIN_ORDER = ("minute", "hour", "day", "week", "month", "quarter", "year")
 
 
 def rollup_cascade(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-    grains: tuple[str, ...] = ("hour", "day", "week"),
-    scale: int = 6,
+    df: DataFrame, grains: tuple[str, ...] = ("hour", "day", "week")
 ) -> DataFrame:
-    """Cascaded rollup, long format: (grain, bucket, *keys, n, total).
+    """Cascaded rollup of ``value`` by ``ts`` bucket and ``event_type``,
+    long format: (grain, bucket, event_type, n, total).
 
     ``grains`` must be ordered finest → coarsest (each must truncate
     cleanly into the next; validated against GRAIN_ORDER).  The finest
     level aggregates ``df``; every other level aggregates the level
-    below it.  Totals stay decimal(38,scale) inside the cascade and
+    below it.  Totals stay decimal(38,6) inside the cascade and
     surface as double.
     """
     order = [GRAIN_ORDER.index(g) for g in grains]
     if order != sorted(order) or len(set(order)) != len(order):
         raise ValueError(f"grains must be strictly finest->coarsest, got {grains}")
 
-    keys = list(key_cols)
     cur = (
-        df.groupBy(F.date_trunc(grains[0], F.col(ts_col)).alias("bucket"), *keys)
+        df.groupBy(F.date_trunc(grains[0], F.col("ts")).alias("bucket"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(value_col).cast(f"decimal(18,{scale})")).alias("_dtotal"),
+            F.sum(F.col("value").cast("decimal(18,6)")).alias("_dtotal"),
         )
     )
     levels: list[tuple[str, DataFrame]] = [(grains[0], cur)]
     for g in grains[1:]:
         prev = materialize(levels[-1][1])  # scanned twice: as output and as input below
         nxt = (
-            prev.groupBy(F.date_trunc(g, F.col("bucket")).alias("bucket"), *keys)
+            prev.groupBy(F.date_trunc(g, F.col("bucket")).alias("bucket"), "event_type")
             .agg(F.sum("n").alias("n"), F.sum("_dtotal").alias("_dtotal"))
         )
         levels[-1] = (levels[-1][0], prev)
@@ -75,7 +70,7 @@ def rollup_cascade(
         o = lv.select(
             F.lit(g).alias("grain"),
             "bucket",
-            *keys,
+            "event_type",
             F.col("n").cast("long").alias("n"),
             F.col("_dtotal").cast("double").alias("total"),
         )

@@ -25,7 +25,6 @@ def scd2_history(
     key_cols: list[str],
     ts_col: str,
     attr_cols: list[str],
-    order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Versioned history from change events.
 
@@ -33,13 +32,13 @@ def scd2_history(
       the earlier version (no-op changes don't open new intervals);
     - ``valid_to`` is the next version's ``valid_from`` (NULL = still
       current, with ``is_current`` = 1);
-    - ``order_cols`` break ties within the same timestamp
-      deterministically (default: the attributes themselves).
+    - the attributes themselves break ties within the same timestamp
+      deterministically.
 
     Output: key_cols + attr_cols + (valid_from, valid_to, version,
     is_current).
     """
-    order = [F.col(ts_col)] + [F.col(c) for c in (order_cols or attr_cols)]
+    order = [F.col(ts_col)] + [F.col(c) for c in attr_cols]
     w = Window.partitionBy(*key_cols).orderBy(*order)
     attrs = F.struct(*[F.col(c) for c in attr_cols])
     changed = (

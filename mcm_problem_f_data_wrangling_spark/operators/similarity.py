@@ -30,31 +30,29 @@ def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector."""
     # one py4j round trip for the whole vector (see lit_doubles)
     q = lit_doubles(query_vec)
     return (
         df.select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), q).alias("cos_raw"),
+            F.col("vec_id"),
+            cosine_similarity(F.col("embedding"), q).alias("cos_raw"),
         )
-        .orderBy(F.desc("cos_raw"), id_col)
+        .orderBy(F.desc("cos_raw"), "vec_id")
         .limit(k)
-        .select(id_col, F.round("cos_raw", 6).alias("cos_sim"))
+        .select("vec_id", F.round("cos_raw", 6).alias("cos_sim"))
     )
 
 
-def centroids_by_cell(df: DataFrame, vec_col: str = "embedding", cell_col: str = "label") -> DataFrame:
+def centroids_by_cell(df: DataFrame, cell_col: str = "label") -> DataFrame:
     """Per-cell mean vector (the IVF coarse quantizer codebook).
 
     Computed by exploding positions and averaging per (cell, pos) —
     one shuffle keyed on (cell, pos), then regrouped to arrays.
     """
     exploded = df.select(
-        F.col(cell_col).alias("cell"), F.posexplode(F.col(vec_col)).alias("pos", "v")
+        F.col(cell_col).alias("cell"), F.posexplode(F.col("embedding")).alias("pos", "v")
     )
     per_pos = exploded.groupBy("cell", "pos").agg(F.avg(F.col("v").cast("double")).alias("c"))
     return per_pos.groupBy("cell").agg(
@@ -66,8 +64,6 @@ def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cell_col: str = "label",
     n_probe: int = 1,
     cents: DataFrame | None = None,
@@ -88,7 +84,7 @@ def ivf_topk(
     # one py4j round trip for the whole vector (see lit_doubles)
     q = lit_doubles(query_vec)
     if cents is None:
-        cents = centroids_by_cell(df, vec_col, cell_col)
+        cents = centroids_by_cell(df, cell_col=cell_col)
     probed = (
         cents.select("cell", cosine_similarity(F.col("centroid"), q).alias("qcos"))
         .orderBy(F.desc("qcos"), "cell")
@@ -97,20 +93,16 @@ def ivf_topk(
     )
     return (
         df.join(broadcast(probed), F.col(cell_col) == F.col("_probe_cell"))
-        .select(F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("cos_raw"))
-        .orderBy(F.desc("cos_raw"), id_col)
+        .select(F.col("vec_id"), cosine_similarity(F.col("embedding"), q).alias("cos_raw"))
+        .orderBy(F.desc("cos_raw"), "vec_id")
         .limit(k)
-        .select(id_col, F.round("cos_raw", 6).alias("cos_sim"))
+        .select("vec_id", F.round("cos_raw", 6).alias("cos_sim"))
     )
 
 
-def assign_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-) -> DataFrame:
-    """Assign each vector to its max-cosine centroid (JVM-side argmax).
+def assign_cells(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """Assign each ``embedding`` to its max-cosine centroid (JVM-side
+    argmax), as the ``cell`` column.
 
     Centroids arrive as driver-side literals (k × dim is tiny); the
     argmax is a lexicographic ``array_max`` over (cos, cell) structs —
@@ -124,7 +116,7 @@ def assign_cells(
     single code path at any k).
     """
     return df.withColumn(
-        out_col, F.array_max(_centroid_choices(vec_col, centroids))["cell"]
+        "cell", F.array_max(_centroid_choices("embedding", centroids))["cell"]
     )
 
 
@@ -179,9 +171,7 @@ def _centroid_choices(vec_col: str, centroids: list[list[float]]) -> F.Column:
     return bind1(l2_norm(F.col(vec_col)), body)
 
 
-def _collect_train_sample(
-    df: DataFrame, vec_col: str, id_col: str, sample_n: int
-) -> "list[list[float]]":
+def _collect_train_sample(df: DataFrame, vec_col: str, sample_n: int) -> "list[list[float]]":
     """Deterministic but content-UNIFORM bounded training sample.
 
     MEMBERSHIP is the ``sample_n`` vectors with the lowest md5-hash
@@ -205,8 +195,8 @@ def _collect_train_sample(
     from ..functions.textfn import portable_hash64
 
     rows = (
-        df.select(id_col, vec_col)
-        .orderBy(portable_hash64(F.col(id_col).cast("string")), id_col)
+        df.select("vec_id", vec_col)
+        .orderBy(portable_hash64(F.col("vec_id").cast("string")), "vec_id")
         .limit(sample_n)
         .collect()
     )
@@ -220,8 +210,6 @@ def train_ivf_cells(
     df: DataFrame,
     k: int = 10,
     iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     sample_n: int = 65536,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Spherical k-means coarse quantizer (Lloyd iterations on cosine).
@@ -250,7 +238,7 @@ def train_ivf_cells(
     import numpy as np
 
     X = np.asarray(
-        _collect_train_sample(df, vec_col, id_col, sample_n), dtype=np.float64
+        _collect_train_sample(df, "embedding", sample_n), dtype=np.float64
     )
     cent = X[:k].copy()
     for _ in range(iters):
@@ -267,7 +255,7 @@ def train_ivf_cells(
             if m.any():
                 cent[j] = X[m].mean(axis=0)
     centroids = [[float(v) for v in c] for c in cent]
-    return assign_cells(df, centroids, vec_col), centroids
+    return assign_cells(df, centroids), centroids
 
 
 # rows of a cell's Gram matrix that semantic_dedup computes at once
@@ -278,8 +266,6 @@ def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -305,12 +291,12 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    assigned = assign_cells(df, centroids, vec_col)
+    assigned = assign_cells(df, centroids)
     schema = assigned.schema
 
     def dedup_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
+        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         n = len(X)
         if n <= 1:
             return pdf
@@ -336,8 +322,6 @@ def _semantic_dedup_sql(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -359,7 +343,7 @@ def _semantic_dedup_sql(
     """
     from ..functions.vectors import dot_unrolled, l2_norm
 
-    assigned = materialize(assign_cells(df, centroids, vec_col))
+    assigned = materialize(assign_cells(df, centroids))
     # normalize ONCE per vector before the pair join: each of the
     # O(cell²) pair comparisons then costs a dot product alone instead
     # of dot + two norms (~3× less per-pair arithmetic; cos(a,b) ≡
@@ -369,16 +353,16 @@ def _semantic_dedup_sql(
     # norm 0 → keep the zero vector as-is (cos vs anything = 0, so it
     # never crosses the threshold), matching the BLAS path's guard.
     safe_norm = F.when(F.col("__norm") > 0, F.col("__norm")).otherwise(F.lit(1.0))
-    unit = assigned.withColumn("__norm", l2_norm(F.col(vec_col))).select(
-        id_col,
+    unit = assigned.withColumn("__norm", l2_norm(F.col("embedding"))).select(
+        "vec_id",
         "cell",
         F.transform(
-            F.col(vec_col), lambda v: v.cast("double") / safe_norm
+            F.col("embedding"), lambda v: v.cast("double") / safe_norm
         ).alias("__unit"),
     )
     a, b = unit.alias("a"), unit.alias("b")
     cond = (F.col("a.cell") == F.col("b.cell")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+        F.col("a.vec_id") < F.col("b.vec_id")
     )
     # the O(cell²) per-pair dot, unrolled into whole-stage codegen
     # (r13): the centroid dimension is the expected vector dimension;
@@ -389,36 +373,30 @@ def _semantic_dedup_sql(
             dot_unrolled("a.__unit", "b.__unit", len(centroids[0]))
             > threshold
         )
-        .select(F.col(f"b.{id_col}").alias(id_col))
+        .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )
-    return assigned.join(dropped, id_col, "left_anti")
+    return assigned.join(dropped, "vec_id", "left_anti")
 
 
-def _knn_candidate_frames(
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    cell_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """kNN-join candidate generation: queries tagged with their own
-    cell and the corpus tagged with its cell, both keyed on ``__qcell``
-    for the pair join."""
+def _knn_candidate_frames(queries: DataFrame, corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """kNN-join candidate generation: ``(vec_id, embedding, label)``
+    queries tagged with their own cell and the corpus tagged with its
+    cell, both keyed on ``__qcell`` for the pair join."""
     q = queries.select(
-        F.col(id_col).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-        F.col(cell_col).alias("__qcell"),
+        F.col("vec_id").alias("__qid"),
+        F.col("embedding").alias("__qvec"),
+        F.col("label").alias("__qcell"),
     )
     c = corpus.select(
-        F.col(id_col).alias("__nid"),
-        F.col(vec_col).alias("__nvec"),
-        F.col(cell_col).alias("__qcell"),
+        F.col("vec_id").alias("__nid"),
+        F.col("embedding").alias("__nvec"),
+        F.col("label").alias("__qcell"),
     )
     return q, c
 
 
-def _knn_topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
+def _knn_topk(cand: DataFrame, k: int) -> DataFrame:
     """kNN-join ranking/output contract: per-query row_number over
     (cos desc, neighbor id asc), rounded presentation.
 
@@ -435,7 +413,7 @@ def _knn_topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
         cand.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
         .select(
-            F.col("__qid").alias(id_col),
+            F.col("__qid").alias("vec_id"),
             F.col("__nid").alias("neighbor_id"),
             F.round("cos_raw", 6).alias("cos_sim"),
         )
@@ -446,9 +424,6 @@ def ivf_knn_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cell_col: str = "label",
     dim: int | None = None,
 ) -> DataFrame:
     """kNN JOIN: top-k cosine neighbors for EVERY query vector.
@@ -461,7 +436,7 @@ def ivf_knn_join(
     join — then ranked per query with a window top-k
     (:func:`_knn_candidate_frames` / :func:`_knn_topk`).
 
-    Each query probes its own ``cell_col`` cell (fully deterministic —
+    Each query probes its own ``label`` cell (fully deterministic —
     the cross-engine-oracle configuration).  Self-pairs (same id) are
     excluded, and so are zero-norm vectors: a zero-norm query emits no
     rows.
@@ -475,7 +450,7 @@ def ivf_knn_join(
     """
     from ..operators.skew import spread
 
-    q, c = _knn_candidate_frames(queries, corpus, vec_col, id_col, cell_col)
+    q, c = _knn_candidate_frames(queries, corpus)
     # The pair join's probe side inherits the query scan's width — on a
     # single-row-group input (the bench testdata) that is ONE task doing
     # the entire |cells|·avg_cell² pair scoring on one core.  spread()
@@ -534,34 +509,32 @@ def ivf_knn_join(
             pair_dot.alias("cos_raw"),
         )
     )
-    return _knn_topk(pairs, k, id_col)
+    return _knn_topk(pairs, k)
 
 
-def query_vector_of(df: DataFrame, vec_id: int, vec_col: str = "embedding", id_col: str = "vec_id") -> list[float]:
+def query_vector_of(df: DataFrame, vec_id: int) -> list[float]:
     """Driver-side fetch of one vector to use as a query literal."""
-    row: Row | None = df.filter(F.col(id_col) == vec_id).select(vec_col).head()
+    row: Row | None = df.filter(F.col("vec_id") == vec_id).select("embedding").head()
     if row is None:
-        raise KeyError(f"no vector with {id_col}={vec_id}")
+        raise KeyError(f"no vector with vec_id={vec_id}")
     return [float(v) for v in row[0]]
 
 
 def query_vectors_of(
     df: DataFrame,
     vec_ids: "list[int] | tuple[int, ...]",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> dict[int, list[float]]:
     """Driver-side fetch of SEVERAL query vectors in one job (an
     IN-filter scan instead of one job per id)."""
     rows = (
-        df.filter(F.col(id_col).isin(list(vec_ids)))
-        .select(id_col, vec_col)
+        df.filter(F.col("vec_id").isin(list(vec_ids)))
+        .select("vec_id", "embedding")
         .collect()
     )
     got = {int(r[0]): [float(v) for v in r[1]] for r in rows}
     missing = set(int(i) for i in vec_ids) - set(got)
     if missing:
-        raise KeyError(f"no vector with {id_col} in {sorted(missing)}")
+        raise KeyError(f"no vector with vec_id in {sorted(missing)}")
     return got
 
 
@@ -632,11 +605,10 @@ def encode_pq(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
-    out_col: str = "pq_code",
 ) -> DataFrame:
     """Attach the PQ code array (map-only; the compressed table keeps
     ids + codes and can DROP the raw vectors)."""
-    return df.withColumn(out_col, _pq_code_col(vec_col, codebooks))
+    return df.withColumn("pq_code", _pq_code_col(vec_col, codebooks))
 
 
 def train_pq(
@@ -645,7 +617,6 @@ def train_pq(
     k: int = 16,
     iters: int = 3,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
     sample_n: int = 65536,
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd k-means → codebooks[m][k][dim/m].
@@ -665,7 +636,7 @@ def train_pq(
     import numpy as np
 
     X = np.asarray(
-        _collect_train_sample(df, vec_col, id_col, sample_n), dtype=np.float64
+        _collect_train_sample(df, vec_col, sample_n), dtype=np.float64
     )
     dim = X.shape[1]
     if dim % m:
@@ -695,7 +666,6 @@ def train_pq(
 def _adc_dist_col(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
-    code_col: str = "pq_code",
 ) -> F.Column:
     """ADC squared-L2 column for one query: the per-query lookup table
     (m × k partial squared distances, computed driver-side — it is
@@ -716,7 +686,7 @@ def _adc_dist_col(
     parts = [
         F.element_at(
             lit_doubles(lut[s]),
-            F.element_at(code_col, s + 1) + 1,
+            F.element_at("pq_code", s + 1) + 1,
         )
         for s in range(m)
     ]
@@ -728,17 +698,15 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
     k: int = 10,
-    code_col: str = "pq_code",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes only (projection +
     TakeOrdered over the compressed table; see :func:`_adc_dist_col`)."""
-    dist = _adc_dist_col(codebooks, query_vec, code_col)
+    dist = _adc_dist_col(codebooks, query_vec)
     return (
-        codes.select(F.col(id_col), dist.alias("adc_raw"))
-        .orderBy("adc_raw", id_col)
+        codes.select(F.col("vec_id"), dist.alias("adc_raw"))
+        .orderBy("adc_raw", "vec_id")
         .limit(k)
-        .select(id_col, F.round("adc_raw", 6).alias("adc_dist"))
+        .select("vec_id", F.round("adc_raw", 6).alias("adc_dist"))
     )
 
 
@@ -749,9 +717,6 @@ def pq_search_rerank(
     query_vec: list[float],
     k: int = 10,
     shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
 ) -> DataFrame:
     """Production PQ pattern: ADC shortlist over the compressed table,
     then EXACT cosine re-rank of only the shortlist against raw
@@ -760,11 +725,9 @@ def pq_search_rerank(
     on ``shortlist`` ids — no corpus shuffle anywhere.  Measured here:
     m=16,k=32 codes (16x compression) lift recall@10 from 0.52
     (ADC-only) to 0.94 with a 50-deep shortlist."""
-    sl = pq_adc_topk(
-        codes, codebooks, query_vec, k=shortlist, code_col=code_col, id_col=id_col
-    ).select(id_col)
-    cand = df.join(broadcast(sl), on=id_col, how="inner")
-    return brute_force_topk(cand, query_vec, k=k, vec_col=vec_col, id_col=id_col)
+    sl = pq_adc_topk(codes, codebooks, query_vec, k=shortlist).select("vec_id")
+    cand = df.join(broadcast(sl), on="vec_id", how="inner")
+    return brute_force_topk(cand, query_vec, k=k)
 
 
 def ivfpq_build(
@@ -773,8 +736,6 @@ def ivfpq_build(
     m: int = 8,
     k_codes: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, list[list[list[float]]], list[list[float]]]:
     """IVF-PQ index build (the FAISS ``IVFx,PQy`` layout, Jegou et al.
     TPAMI'11 §V): coarse k-means cells for PRUNING + per-subspace PQ
@@ -790,20 +751,18 @@ def ivfpq_build(
     the codes table (one int cell + m small ints per vector) is the
     only thing the search fleet keeps hot; raw vectors stay cold until
     the final rerank's broadcast semi-join."""
-    assigned, cents = train_ivf_cells(
-        df, k=k_cells, iters=iters, vec_col=vec_col, id_col=id_col
-    )
+    assigned, cents = train_ivf_cells(df, k=k_cells, iters=iters)
     cent_arr = lit_double_matrix(cents)
     resid = assigned.withColumn(
         "_resid",
         F.zip_with(
-            F.col(vec_col),
+            F.col("embedding"),
             F.element_at(cent_arr, F.col("cell") + 1),
             lambda a, b: a.cast("double") - b,
         ),
     )
-    cb = train_pq(resid, m=m, k=k_codes, iters=iters, vec_col="_resid", id_col=id_col)
-    codes = encode_pq(resid, cb, vec_col="_resid").select(id_col, "cell", "pq_code")
+    cb = train_pq(resid, m=m, k=k_codes, iters=iters, vec_col="_resid")
+    codes = encode_pq(resid, cb, vec_col="_resid").select("vec_id", "cell", "pq_code")
     return codes, cb, cents
 
 
@@ -811,8 +770,6 @@ def ivfpq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Encode vectors against a FROZEN IVF-PQ index (coarse centroids
     + PQ codebooks from a prior :func:`ivfpq_build`) — the incremental
@@ -832,18 +789,18 @@ def ivfpq_encode(
     training sample — the standard FAISS operating regime (monitor
     recall, retrain on drift).
     """
-    assigned = assign_cells(df, centroids, vec_col)
+    assigned = assign_cells(df, centroids)
     cent_arr = lit_double_matrix(centroids)
     resid = assigned.withColumn(
         "_resid",
         F.zip_with(
-            F.col(vec_col),
+            F.col("embedding"),
             F.element_at(cent_arr, F.col("cell") + 1),
             lambda a, b: a.cast("double") - b,
         ),
     )
     return encode_pq(resid, codebooks, vec_col="_resid").select(
-        id_col, "cell", "pq_code"
+        "vec_id", "cell", "pq_code"
     )
 
 
@@ -856,8 +813,6 @@ def ivfpq_topk(
     k: int = 10,
     n_probe: int = 2,
     shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ search: probe the ``n_probe`` nearest cells, ADC-score
     ONLY their codes against the per-cell residual query
@@ -891,10 +846,10 @@ def ivfpq_topk(
         )
     sl = (
         codes.filter(F.col("cell").isin(probed))
-        .select(F.col(id_col), dist.alias("adc_raw"))
-        .orderBy("adc_raw", id_col)
+        .select(F.col("vec_id"), dist.alias("adc_raw"))
+        .orderBy("adc_raw", "vec_id")
         .limit(shortlist)
-        .select(id_col)
+        .select("vec_id")
     )
-    cand = df.join(broadcast(sl), on=id_col, how="inner")
-    return brute_force_topk(cand, query_vec, k=k, vec_col=vec_col, id_col=id_col)
+    cand = df.join(broadcast(sl), on="vec_id", how="inner")
+    return brute_force_topk(cand, query_vec, k=k)

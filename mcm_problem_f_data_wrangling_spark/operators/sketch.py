@@ -35,33 +35,31 @@ def approx_distinct_by(
 
 def rolling_distinct_exact(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
 ) -> DataFrame:
-    """Exact rolling N-day distinct actives (the WAU/MAU curve).
+    """Exact rolling 7-day distinct actives (the WAU curve) of
+    ``(user_id, ts)`` events.
 
     Rolling COUNT(DISTINCT) cannot be composed from daily distinct
     counts (overlap) and DISTINCT isn't allowed in window aggregates;
     the distributed-exact formulation instead explodes each distinct
-    (user, day) pair to the ``window_days`` report days it contributes
+    (user, day) pair to the 7 report days it contributes
     to, then counts distinct users per report day — one explode (×N)
     over the already-deduped pair table + one shuffle.  Report days
     are restricted to days observed in the data (broadcast semi-join
     on the day spine).  Output: (day, active_users).
     """
-    day = F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
-    pairs = events.select(F.col(user_col), day).dropDuplicates()
+    day = F.date_trunc("day", F.col("ts")).cast("date").alias("day")
+    pairs = events.select(F.col("user_id"), day).dropDuplicates()
     spine = pairs.select("day").dropDuplicates()
     contrib = pairs.select(
-        F.col(user_col),
-        F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias("off"),
+        F.col("user_id"),
+        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"),
         "day",
-    ).select(F.col(user_col), F.date_add("day", F.col("off")).alias("day"))
+    ).select(F.col("user_id"), F.date_add("day", F.col("off")).alias("day"))
     return (
         contrib.join(F.broadcast(spine), "day", "left_semi")
         .groupBy("day")
-        .agg(F.countDistinct(user_col).alias("active_users"))
+        .agg(F.countDistinct("user_id").alias("active_users"))
     )
 
 
@@ -70,12 +68,11 @@ def approx_quantiles_by(
     group_cols: list[str],
     value_col: str,
     quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    accuracy: int = 10000,
 ) -> DataFrame:
-    """Per-group approximate quantiles (Greenwald-Khanna style summary,
-    higher ``accuracy`` = tighter error = more state)."""
+    """Per-group approximate quantiles (Greenwald-Khanna style summary
+    at accuracy 10000)."""
     q = F.percentile_approx(
-        value_col, F.array(*[F.lit(x) for x in quantiles]), F.lit(accuracy)
+        value_col, F.array(*[F.lit(x) for x in quantiles]), F.lit(10000)
     )
     out = df.groupBy(*group_cols).agg(q.alias("qs"))
     return out.select(

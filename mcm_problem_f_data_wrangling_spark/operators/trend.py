@@ -28,13 +28,12 @@ def ols_trend(
     group_cols: list[str],
     x: Column,
     y: Column,
-    scale: int = 6,
-    round_to: int = 9,
 ) -> DataFrame:
-    """One row per group: (n, slope, intercept, r2), rounded."""
+    """One row per group: (n, slope, intercept, r2), rounded to 9
+    places; ``y`` sums as decimal with 6 places."""
     xd = x.cast("decimal(10,0)")
-    yd = y.cast(f"decimal(18,{scale})")
-    yw = y.cast(f"decimal(28,{scale})")
+    yd = y.cast("decimal(18,6)")
+    yw = y.cast("decimal(28,6)")
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(xd).cast("double").alias("__sx"),
@@ -55,7 +54,7 @@ def ols_trend(
     return agg.select(
         *group_cols,
         "n",
-        F.round(slope, round_to).alias("slope"),
-        F.round(intercept, round_to).alias("intercept"),
-        F.round(r2, round_to).alias("r2"),
+        F.round(slope, 9).alias("slope"),
+        F.round(intercept, 9).alias("intercept"),
+        F.round(r2, 9).alias("r2"),
     )

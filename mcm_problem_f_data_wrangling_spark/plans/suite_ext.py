@@ -273,8 +273,7 @@ def x_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hyperplanes feed the Spark plan and the DuckDB oracle; dim 64 is the
 # testdata embeddings contract (TESTDATA.md), n_bits=6 → 64 bands for
 # 500 vectors (band count is a knob that grows with n at scale).
-_SRP_BITS = 6
-_SRP_HP = srp_hyperplanes(64, n_bits=_SRP_BITS)
+_SRP_HP = srp_hyperplanes(64, n_bits=6)
 _SRP_HP_VALUES = ",\n  ".join(
     f"({hid}, {pos + 1}, {v!r})"
     for hid, row in enumerate(_SRP_HP)
@@ -325,9 +324,7 @@ QUALIFY row_number() OVER (PARTITION BY band ORDER BY dot / (na * nb) DESC, v1, 
     tags=("M4", "dedup"),
 )
 def x_embed_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_neardup_pairs(
-        table(spark, sf_dir, "embeddings"), hyperplanes=_SRP_HP, n_bits=_SRP_BITS
-    )
+    return embedding_neardup_pairs(table(spark, sf_dir, "embeddings"), _SRP_HP)
 
 
 # --------------------------------------------------------------------------
@@ -3410,16 +3407,16 @@ def s10_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _corr_oracle_sql(cols: list[str], scale: int = 6) -> str:
+def _corr_oracle_sql(cols: list[str]) -> str:
     from itertools import combinations
 
-    dec = f"DECIMAL(18,{scale})"
+    dec = "DECIMAL(18,6)"
     sums = [f"CAST(COUNT(*) AS DOUBLE) AS n"]
     for c in cols:
         sums.append(f"CAST(SUM(CAST({c} AS {dec})) AS DOUBLE) AS s_{c}")
     # product operands widened to DECIMAL(28,6): DuckDB multiplies
     # DECIMAL(18) in int64 and overflows; 28 forces int128, still exact
-    wide = f"DECIMAL(28,{scale})"
+    wide = "DECIMAL(28,6)"
     for a, b in list(combinations(cols, 2)) + [(c, c) for c in cols]:
         sums.append(
             f"CAST(SUM(CAST(CAST({a} AS {wide}) * CAST({b} AS {wide}) AS DECIMAL(38,12))) AS DOUBLE) AS p_{a}_{b}"
@@ -3429,7 +3426,7 @@ def _corr_oracle_sql(cols: list[str], scale: int = 6) -> str:
         sel.append(
             f"SELECT '{a}' AS col_a, '{b}' AS col_b, "
             f"ROUND((n * p_{a}_{b} - s_{a} * s_{b}) / "
-            f"NULLIF(sqrt((n * p_{a}_{a} - s_{a} * s_{a}) * (n * p_{b}_{b} - s_{b} * s_{b})), 0), {scale}) AS corr FROM agg"
+            f"NULLIF(sqrt((n * p_{a}_{a} - s_{a} * s_{a}) * (n * p_{b}_{b} - s_{b} * s_{b})), 0), 6) AS corr FROM agg"
         )
     return "WITH agg AS (\n  SELECT " + ",\n         ".join(sums) + "\n  FROM lineitem\n)\n" + "\nUNION ALL ".join(sel)
 
@@ -6495,12 +6492,12 @@ def x_profile_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _check_sql(name: str, vexpr: str, table_sql: str = "orders") -> str:
+def _check_sql(name: str, vexpr: str) -> str:
     return (
         f"SELECT '{name}' AS check_name, CAST(COUNT(*) AS BIGINT) AS n_rows, "
         f"CAST({vexpr} AS BIGINT) AS n_violations, "
         f"CAST(CASE WHEN {vexpr} = 0 THEN 1 ELSE 0 END AS BIGINT) AS passed "
-        f"FROM {table_sql}"
+        "FROM orders"
     )
 
 

@@ -1578,7 +1578,7 @@ def s28_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kcore_round_sql(i: int, k: int = 4) -> str:
+def _kcore_round_sql(i: int) -> str:
     # AS MATERIALIZED is load-bearing: each round references the
     # previous one 3x, and DuckDB's default CTE inlining would blow
     # the plan up 3^depth (observed as "Too many open files" from
@@ -1587,8 +1587,8 @@ def _kcore_round_sql(i: int, k: int = 4) -> str:
     return (
         f"kr{i} AS MATERIALIZED (\n"
         f"  SELECT e.a, e.b FROM {prev} e\n"
-        f"  JOIN (SELECT a FROM {prev} GROUP BY a HAVING COUNT(*) >= {k}) ka ON e.a = ka.a\n"
-        f"  JOIN (SELECT a FROM {prev} GROUP BY a HAVING COUNT(*) >= {k}) kb ON e.b = kb.a\n"
+        f"  JOIN (SELECT a FROM {prev} GROUP BY a HAVING COUNT(*) >= 4) ka ON e.a = ka.a\n"
+        f"  JOIN (SELECT a FROM {prev} GROUP BY a HAVING COUNT(*) >= 4) kb ON e.b = kb.a\n"
         f")"
     )
 

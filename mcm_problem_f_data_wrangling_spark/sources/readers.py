@@ -25,7 +25,6 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def normalize_columns(df: DataFrame, lower: bool = True) -> DataFrame:
@@ -54,42 +53,27 @@ def find_col(df: DataFrame, candidates: list[str]) -> str:
     raise KeyError(f"none of {candidates} found in columns {list(df.columns)}")
 
 
-def read_tsv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    sep: str = "\t",
-) -> DataFrame:
-    """S3: tab-delimited scan, all-string unless a schema is pinned.
+def read_tsv(spark: SparkSession, path: str) -> DataFrame:
+    """S3: tab-delimited scan, all-string.
 
-    All-string default matches ``dtype="string"`` at
-    ``bls_ces/load_CES_pandas.py:63``; explicit-schema path is the
-    scale-preferred variant (skips inference, enables pruning).
+    All-string matches ``dtype="string"`` at
+    ``bls_ces/load_CES_pandas.py:63``.
     """
-    reader = spark.read.option("sep", sep).option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.csv(path)
+    df = spark.read.option("sep", "\t").option("header", "true").csv(path)
     return normalize_columns(df, lower=False)
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    date_cols: list[str] | None = None,
+    spark: SparkSession, path: str, date_cols: list[str] | None = None
 ) -> DataFrame:
-    """S4: CSV scan with optional date parsing.
+    """S4: all-string CSV scan with optional date parsing.
 
     Mirrors ``pd.read_csv(parse_dates=["date"])`` at
-    ``bls_ces/check_ces_outputs.py:27``: without a pinned schema,
-    named ``date_cols`` are cast with ``to_date`` (NULL on garbage —
-    same as pandas ``errors="coerce"``).
+    ``bls_ces/check_ces_outputs.py:27``: named ``date_cols`` are cast
+    with ``to_date`` (NULL on garbage — same as pandas
+    ``errors="coerce"``).
     """
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = normalize_columns(reader.csv(path), lower=False)
+    df = normalize_columns(spark.read.option("header", "true").csv(path), lower=False)
     for c in date_cols or []:
         if c in df.columns:
             # try_to_date, not to_date: pandas errors="coerce" yields
@@ -119,10 +103,8 @@ def read_whitespace_tsv(spark: SparkSession, path: str, n_cols: int, names: list
     return body.select(*cols)
 
 
-def read_nanos_timestamp_parquet(
-    spark: SparkSession, path: str, ts_cols: tuple[str, ...] = ("ts",)
-) -> DataFrame:
-    """Parquet scan tolerant of TIMESTAMP(NANOS) columns.
+def read_nanos_timestamp_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan tolerant of a TIMESTAMP(NANOS) ``ts`` column.
 
     Spark has no nanosecond timestamp type and refuses TIMESTAMP(NANOS)
     parquet by default; with ``legacy.parquet.nanosAsLong`` the column
@@ -131,15 +113,14 @@ def read_nanos_timestamp_parquet(
     double-precision divide would lose exactness above 2^53 nanos).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return micros_from_nanos(spark.read.parquet(path), ts_cols)
+    return micros_from_nanos(spark.read.parquet(path))
 
 
-def micros_from_nanos(df: DataFrame, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
-    """Turn the raw-nanos (bigint) ``ts_cols`` of a ``nanosAsLong`` read
-    into microsecond timestamps; other columns pass through."""
-    for c in ts_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+def micros_from_nanos(df: DataFrame) -> DataFrame:
+    """Turn the raw-nanos (bigint) ``ts`` of a ``nanosAsLong`` read
+    into a microsecond timestamp; other columns pass through."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
 
@@ -167,24 +148,22 @@ def read_jsonl_permissive(
     spark: SparkSession,
     path: str,
     schema: str,
-    corrupt_col: str = "_corrupt_record",
 ) -> DataFrame:
     """JSONL scan that SURVIVES malformed lines — crawl-scale corpora
     always contain some.
 
     PERMISSIVE mode parses what it can and lands the raw text of
-    unparseable lines in ``corrupt_col`` (which must be declared in
-    the schema as string — Spark only populates it when the column
-    exists).  Callers split the result: ``filter(col(corrupt_col).
-    isNull())`` is the clean feed, the rest goes to a quarantine sink
+    unparseable lines in ``_corrupt_record`` (added to the schema as
+    string — Spark only populates it when the column exists).  Callers
+    split the result: ``filter(col("_corrupt_record").isNull())`` is
+    the clean feed, the rest goes to a quarantine sink
     for inspection — never silently dropped (FAILFAST would kill a
     100 TB job for one bad line; DROPMALFORMED loses data invisibly).
     """
-    full_schema = f"{schema}, {corrupt_col} string"
     return (
-        spark.read.schema(full_schema)
+        spark.read.schema(f"{schema}, _corrupt_record string")
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
 

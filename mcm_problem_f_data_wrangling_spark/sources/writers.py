@@ -21,17 +21,9 @@ import shutil
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Scale-path sink: columnar, splittable, partition-prunable."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Scale-path sink: columnar, splittable."""
+    df.write.mode(mode).parquet(path)
 
 
 def write_csv_single(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> str:
@@ -205,17 +197,14 @@ def _write_xlsx_minimal(pdfs: dict, path: str) -> str:
 
 
 def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """ORC sink (second columnar interchange format, built into
+    """ORC sink, overwriting (second columnar interchange format, built into
     Spark).  Same layout levers as parquet: splittable stripes,
     Hive-style partition directories, predicate pushdown via
     min/max + optional bloom filters on read.
     """
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)

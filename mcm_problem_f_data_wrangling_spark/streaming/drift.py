@@ -165,7 +165,6 @@ def cusum_stream(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    watermark_delay: str = "0 seconds",
     emit: str = "all",
 ) -> DataFrame:
     """Streaming CUSUM via ``applyInPandasWithState``.
@@ -180,7 +179,7 @@ def cusum_stream(
     scale (the final S⁺/S⁻ still depend on the entire path: S⁺_n =
     C_n − min_j C_j).  Rows sort by event time inside each
     micro-batch; cross-batch order is the arrival order, as for any
-    online detector.
+    online detector.  The event-time watermark trails by 0 seconds.
     """
     if emit not in ("all", "alarms", "final"):
         raise ValueError(f"unknown emit mode {emit!r}")
@@ -220,7 +219,7 @@ def cusum_stream(
         stream.select(
             F.col(key_col).cast("string").alias(key_col), ts_col, value_col
         )
-        .withWatermark(ts_col, watermark_delay)
+        .withWatermark(ts_col, "0 seconds")
         .groupBy(key_col)
         .applyInPandasWithState(
             update,

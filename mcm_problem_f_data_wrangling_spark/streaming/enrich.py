@@ -9,10 +9,11 @@ joins, which buffer).  Broadcasting the dimension keeps every micro-
 batch shuffle-free on the stream side: the only data movement is the
 one-time broadcast per batch, which AQE caches for the batch duration.
 
-Scale note: a dimension too large to broadcast falls back to a
-shuffled sort-merge join PER MICRO-BATCH — at that point pre-bucketing
-the dimension table on the join key (a ``bucketBy`` catalog table)
-keeps the dimension side's shuffle out of the steady-state cost.
+Scale note: the static side is always broadcast.  A dimension too
+large for that would need a shuffled sort-merge join PER MICRO-BATCH,
+where pre-bucketing the dimension table on the join key (a
+``bucketBy`` catalog table) keeps the dimension side's shuffle out of
+the steady-state cost.
 """
 
 from __future__ import annotations
@@ -26,9 +27,8 @@ def enrich_stream(
     dim: DataFrame,
     on: list[str],
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Join a streaming DataFrame to a static dimension.
+    """Join a streaming DataFrame to a broadcast static dimension.
 
     ``how`` may be ``inner`` or ``left`` (stream side preserved); other
     join types are restricted by Structured Streaming for stream-static
@@ -38,15 +38,13 @@ def enrich_stream(
         raise ValueError(
             f"stream-static join supports inner/left (stream side), got {how!r}"
         )
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on, how)
+    return stream.join(F.broadcast(dim), on, how)
 
 
 def decontaminate_stream(
     stream: DataFrame,
     blocklist: DataFrame,
     on: list[str],
-    broadcast_blocklist: bool = True,
 ) -> DataFrame:
     """Drop streaming rows whose key appears in a static blocklist —
     decontamination at INGEST (eval-set fingerprints, PII'd doc ids,
@@ -60,5 +58,6 @@ def decontaminate_stream(
     blocklist at 100 TB corpus scale is still only eval-set-sized, so
     the broadcast assumption holds where it matters.
     """
-    b = F.broadcast(blocklist) if broadcast_blocklist else blocklist
-    return stream.join(b.select(*on).dropDuplicates(), on, "left_anti")
+    return stream.join(
+        F.broadcast(blocklist).select(*on).dropDuplicates(), on, "left_anti"
+    )

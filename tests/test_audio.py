@@ -75,16 +75,6 @@ def test_spectral_frames_short_payload_yields_no_frames(spark):
     assert spectral_frames(media).count() == 0
 
 
-def test_spectral_frames_validates_params(spark):
-    media = spark.createDataFrame(
-        [(0, encode_wav_pcm16([0] * 256, 8000), "audio", "t://v")], MEDIA_SCHEMA
-    )
-    with pytest.raises(ValueError):
-        spectral_frames(media, frame_len=255)
-    with pytest.raises(ValueError):
-        spectral_frames(media, n_bands=7)
-
-
 def test_fingerprint_gain_invariant_bytes_differ(spark):
     loud = _tone_payload([4, 0, 6], amp=990.0)
     quiet = _tone_payload([4, 0, 6], amp=450.0)

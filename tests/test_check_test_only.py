@@ -1,10 +1,12 @@
 """Pre-snapshot gate 10 (tools/check_test_only.py) on a tiny tree: it
 reports every package name the program does not reach, follows import
 aliases, does not count an outside module's attribute as a reach, and
-rejects stale allowlist entries; its parameter pass reports a
-defaulted parameter only tests bind, counts every way the program can
-bind one, exempts allowlisted reference code and rejects stale
-parameter-allowlist entries."""
+rejects stale allowlist entries; its parameter pass reports every
+defaulted parameter no program call binds (a test's binding does not
+count), counts every way the program can bind one, exempts
+allowlisted reference code and parameters, rejects stale
+parameter-allowlist entries, and on a clean tree prints the number of
+defaulted parameters."""
 
 from __future__ import annotations
 
@@ -24,6 +26,7 @@ TREE = {
             alias_kw,
             as_value,
             by_position,
+            never_bound,
             splatted,
             test_only_kw,
             used,
@@ -31,6 +34,7 @@ TREE = {
 
         kw = {"opt": 2}
         print(used(), pd.shadowed, test_only_kw(0), alias_kw(0), by_position(0, 2))
+        print(never_bound(0))
         print(splatted(0, **kw), list(map(as_value, [0])))
     """,
     "mcm_problem_f_data_wrangling_spark/__init__.py": "",
@@ -60,6 +64,10 @@ TREE = {
 
 
         def test_only_kw(x, opt=1):
+            return x
+
+
+        def never_bound(x, opt=1):
             return x
 
 
@@ -128,11 +136,12 @@ TREE = {
 
 @pytest.fixture
 def gate_run(tmp_path, monkeypatch, capsys):
-    """Write ``TREE`` under ``tmp_path``, run the gate's ``main()`` there
-    with the given allowlists; returns (exit code, stdout)."""
+    """Write ``tree`` (default ``TREE``) under ``tmp_path``, run the
+    gate's ``main()`` there with the given allowlists; returns (exit
+    code, stdout)."""
 
-    def run(allowlist=frozenset(), param_allowlist=frozenset()) -> tuple[int, str]:
-        for rel, src in TREE.items():
+    def run(allowlist=frozenset(), param_allowlist=frozenset(), tree=TREE) -> tuple[int, str]:
+        for rel, src in tree.items():
             path = tmp_path / rel
             path.parent.mkdir(parents=True, exist_ok=True)
             path.write_text(textwrap.dedent(src).lstrip())
@@ -156,12 +165,12 @@ def _reported(out: str) -> set[str]:
     }
 
 
-def _test_only_params(out: str) -> set[str]:
-    """``function.parameter`` for each parameter reported as test-only."""
+def _unbound_params(out: str) -> set[str]:
+    """``function.parameter`` for each parameter reported as unbound."""
     return {
         line.split(": ")[1].split("(")[0] + "." + line.split("(")[1].split("=)")[0]
         for line in out.splitlines()
-        if "is bound by tests but by no program call" in line
+        if "is bound by no program call" in line
     }
 
 
@@ -203,41 +212,53 @@ def test_stale_allowlist_entry_is_reported(gate_run):
     assert "orphan" not in _reported(out) and "orphan'" not in out
 
 
+def test_default_no_call_binds_is_reported(gate_run):
+    rc, out = gate_run()
+    assert rc == 1
+    assert "never_bound.opt" in _unbound_params(out)
+
+
 def test_keyword_only_tests_bind_is_reported(gate_run):
     rc, out = gate_run()
     assert rc == 1
-    assert "test_only_kw.opt" in _test_only_params(out)
+    assert "test_only_kw.opt" in _unbound_params(out)
+
+
+def test_allowlisted_unbound_parameter_passes(gate_run):
+    _, out = gate_run(param_allowlist={"never_bound.opt"})
+    assert "never_bound.opt" not in _unbound_params(out)
+    assert "'never_bound.opt'" not in out
 
 
 def test_keyword_bound_in_query_body_passes(gate_run):
     _, out = gate_run()
-    assert "in_query.opt" not in _test_only_params(out)
+    assert "in_query.opt" not in _unbound_params(out)
 
 
 def test_keyword_bound_through_import_alias_passes(gate_run):
     _, out = gate_run()
-    assert "alias_kw.opt" not in _test_only_params(out)
+    assert "alias_kw.opt" not in _unbound_params(out)
 
 
 def test_positional_binding_passes(gate_run):
     _, out = gate_run()
-    assert "by_position.opt" not in _test_only_params(out)
+    assert "by_position.opt" not in _unbound_params(out)
 
 
 def test_kwargs_pass_through_binds_every_parameter(gate_run):
     _, out = gate_run()
-    assert "splatted.opt" not in _test_only_params(out)
+    assert "splatted.opt" not in _unbound_params(out)
 
 
 def test_function_passed_as_value_binds_every_parameter(gate_run):
     _, out = gate_run()
-    assert "as_value.opt" not in _test_only_params(out)
+    assert "as_value.opt" not in _unbound_params(out)
 
 
 def test_parameter_of_allowlisted_reference_is_exempt(gate_run):
     _, out = gate_run({"reference"})
     assert "reference" not in _reported(out)
-    assert "reference.opt" not in _test_only_params(out)
+    assert "reference.opt" not in _unbound_params(out)
 
 
 def test_stale_param_allowlist_entry_is_reported(gate_run):
@@ -245,6 +266,24 @@ def test_stale_param_allowlist_entry_is_reported(gate_run):
     assert rc == 1
     assert "PARAM_ALLOWLIST entry 'in_query.opt' is bound by the program" in out
     assert "PARAM_ALLOWLIST entry 'nowhere.opt'" in out
-    # an entry only tests bind is neither reported nor stale
-    assert "test_only_kw.opt" not in _test_only_params(out)
+    # an entry no program call binds is neither reported nor stale
+    assert "test_only_kw.opt" not in _unbound_params(out)
     assert "'test_only_kw.opt'" not in out
+
+
+def test_clean_tree_prints_the_defaulted_parameter_count(gate_run):
+    tree = {
+        "bench.py": """
+            from mcm_problem_f_data_wrangling_spark.mod import f
+
+            print(f(0), f(0, opt=2))
+        """,
+        "mcm_problem_f_data_wrangling_spark/__init__.py": "",
+        "mcm_problem_f_data_wrangling_spark/mod.py": """
+            def f(x, opt=1):
+                return x
+        """,
+    }
+    rc, out = gate_run(tree=tree)
+    assert rc == 0
+    assert "(1 defaulted parameters over the reached functions)" in out

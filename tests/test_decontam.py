@@ -96,5 +96,5 @@ def test_bloom_decontaminate_prunes_disjoint_corpus_before_verify(spark):
         "doc_id bigint, text string",
     )
     assert bloom_decontaminate(tr, ev, k=8).count() == 0
-    n_shingles = _shingle_pairs(tr, "text", "doc_id", 8).count()
+    n_shingles = _shingle_pairs(tr, 8).count()
     assert n_shingles == 50 * 5  # the stream the filter had to prune

@@ -15,6 +15,7 @@ from mcm_problem_f_data_wrangling_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash16_frame,
+    srp_hyperplanes,
 )
 from mcm_problem_f_data_wrangling_spark.operators.grid import (
     collapse_duplicate_months,
@@ -92,12 +93,12 @@ def vectors(spark):
 
 
 def test_embedding_neardup_detects_plant(vectors):
-    """SRP-LSH banding (the default) must catch the planted near-dup:
-    a 1e-4 perturbation flips no sign bit under the seeded
-    hyperplanes, so (0, 999) collide in their band; and the band
-    space must be finer than the 3 coarse labels (the round-1
-    fixed-cardinality banding weakness)."""
-    top = embedding_neardup_pairs(vectors, n_bits=4).collect()
+    """SRP-LSH banding must catch the planted near-dup: a 1e-4
+    perturbation flips no sign bit under the seeded hyperplanes, so
+    (0, 999) collide in their band; and the band space must be finer
+    than the 3 coarse labels (the round-1 fixed-cardinality banding
+    weakness)."""
+    top = embedding_neardup_pairs(vectors, srp_hyperplanes(8, n_bits=4)).collect()
     planted = [r for r in top if (r["vec_id_1"], r["vec_id_2"]) == (0, 999)]
     assert planted and planted[0]["cos_sim"] > 0.999
     assert len({r["band"] for r in top}) > 3
@@ -108,17 +109,13 @@ def test_srp_band_recall_on_near_identical(spark):
     band (sign bits are equal by construction), so SRP banding has
     recall 1.0 on exact duplicates regardless of n_bits; random other
     vectors spread over >1 band."""
-    import numpy as np
-
-    from mcm_problem_f_data_wrangling_spark.operators.dedup import srp_hyperplanes
-
     rng = np.random.RandomState(3)
     base = rng.normal(0, 1, 16)
     rows = [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(40)]
     rows += [(100, [float(x) for x in base]), (101, [float(x) for x in base])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     hp = srp_hyperplanes(16, n_bits=5, seed=5)
-    out = embedding_neardup_pairs(df, hyperplanes=hp, n_bits=5).collect()
+    out = embedding_neardup_pairs(df, hp).collect()
     dup_rows = [r for r in out if (r["vec_id_1"], r["vec_id_2"]) == (100, 101)]
     # identical vectors collide and top their band (cos=1)
     assert len(dup_rows) == 1

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""List the package names and parameters only tests reach.
+"""List the package names and parameters the program does not reach.
 
 Every function, class or constant defined at the top level of a module
 under ``mcm_problem_f_data_wrangling_spark/`` must be reached from the
@@ -31,19 +31,18 @@ stale.
 
 A second pass checks the defaulted parameters (positional or
 keyword-only) of every package function and method the roots reach
-without ``ALLOWLIST``.  A call binds a parameter by keyword, by
-position (after ``self``/``cls``), or all of them through a ``*args``
-or ``**kwargs`` splat; using a function as a value rather than calling
-it binds all of them too.  Calls resolve by name, through import
-aliases, as in the first pass.  A parameter that a test binds (by
-keyword or position: a test's splat or value use binds nothing) but
-no call in a reached statement does selects a branch only tests run,
-and the scan reports it.  Parameters nothing binds only ever take their
-default; the scan counts them but does not fail on them.
-``PARAM_ALLOWLIST`` holds the test-only ``function.parameter`` pairs
-that stay on purpose, each with its reason; an entry the program binds,
-or one that is not a defaulted parameter of a package function, fails
-as stale.
+without ``ALLOWLIST``.  A call in a reached statement binds a parameter
+by keyword, by position (after ``self``/``cls``), or all of them
+through a ``*args`` or ``**kwargs`` splat; using a function as a value
+rather than calling it binds all of them too.  Calls resolve by name,
+through import aliases, as in the first pass.  A parameter no such call
+binds only ever takes its default: it is a constant written as a
+parameter, and the scan reports it.  ``PARAM_ALLOWLIST`` holds the
+``function.parameter`` pairs that stay on purpose, each with its
+reason; an entry the program binds, or one that is not a defaulted
+parameter of a package function, fails as stale.  The last line counts
+the defaulted parameters of the reached functions: the values a caller
+can set.
 
 Usage: python tools/check_test_only.py   (from the repo root)
 """
@@ -98,6 +97,8 @@ PARAM_ALLOWLIST = {
     "connected_components.work_dir",
     # the round cap that turns a non-converging graph into an error
     "connected_components.max_iter",
+    # the same round cap for k-core peeling
+    "k_core.max_iter",
     # where k-core peeling keeps its durable per-round state
     "k_core.state",
     # the directory k-core peeling checkpoints its rounds into
@@ -110,6 +111,12 @@ PARAM_ALLOWLIST = {
     "global_running_sum.n_buckets",
     # the driver-side training sample, bounded for large corpora
     "train_ivf_cells.sample_n",
+    # the same driver-memory bound on the product-quantizer sample
+    "train_pq.sample_n",
+    # the cap on the word table collected to the driver
+    "corpus_word_counts.max_words",
+    # the cluster address; the program runs on a local master
+    "get_spark.master",
     # the Bloom filter size, which sets its false-positive rate
     "bloom_decontaminate.m_bits",
     # the cap on the broadcast boilerplate set, which bounds driver memory
@@ -252,14 +259,12 @@ def main() -> int:
     local: dict[str, set[str]] = {}  # package file -> names it defines
     funcs: dict[tuple[str, str], tuple[ast.AST, bool]] = {}
     uses: list[tuple[str, list[str], bool, tuple[set, set], ast.stmt, tuple]] = []
-    tests: list[tuple[str, ast.Module, tuple]] = []
     for path in _py_files():
+        if _is_test(path):
+            continue
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read(), path)
         imports = _imports(tree)
-        if _is_test(path):
-            tests.append((path, tree, imports))
-            continue
         in_package = path.split(os.sep)[0] == PACKAGE
         if in_package:
             funcs.update({(path, q): f for q, f in _functions(tree).items()})
@@ -273,8 +278,6 @@ def main() -> int:
     for path, names in local.items():
         for name in names:
             by_name.setdefault(name, set()).add((path, name))
-    for path, tree, _ in tests:  # a test's own definitions shadow the package's
-        local[path] = {n for stmt in tree.body for n in _defined(stmt)}
 
     def resolve(path: str, refs: tuple[set, set]) -> set:
         names, attrs = refs
@@ -313,12 +316,13 @@ def main() -> int:
         if "." in q:
             methods.setdefault(q.split(".")[1], set()).add((path, q))
 
-    def bind(path: str, node: ast.AST, imports: tuple, into: dict, test: bool) -> None:
-        for names, attr, bound in _loads(node, imports):
-            if test and bound is None:
-                continue
+    bound_by: dict = {}  # (path, qualname) -> its bound parameters, None = all
+    for path, names, root, _, stmt, imports in uses:
+        if not (root or any((path, n) in live for n in names)):
+            continue
+        for loaded, attr, bound in _loads(stmt, imports):
             if attr is None:
-                targets = resolve(path, (names, set()))
+                targets = resolve(path, (loaded, set()))
             else:
                 targets = resolve(path, (set(), {attr})) | methods.get(attr, set())
             for tp, tq in targets:
@@ -327,39 +331,27 @@ def main() -> int:
                     continue
                 fn, is_method = funcs[key]
                 if bound is None:
-                    into.setdefault(key, set()).add(None)
+                    bound_by.setdefault(key, set()).add(None)
                     continue
                 n_pos, keywords = bound
                 pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
                 skip = int(is_method and pos[:1] in (["self"], ["cls"]))
-                into.setdefault(key, set()).update(pos[skip:skip + n_pos], keywords)
-
-    program: dict = {}
-    for path, names, root, _, stmt, imports in uses:
-        if root or any((path, n) in live for n in names):
-            bind(path, stmt, imports, program, False)
-    by_tests: dict = {}
-    for path, tree, imports in tests:
-        bind(path, tree, imports, by_tests, True)
+                bound_by.setdefault(key, set()).update(pos[skip:skip + n_pos], keywords)
 
     defaulted = {
         (key, p): f"{key[1]}.{p}" for key, (fn, _) in funcs.items() for p in _defaulted(fn)
     }
-    unbound = 0
+    settable = 0
     param_stale = set(PARAM_ALLOWLIST) - set(defaulted.values())
     for (key, p), label in sorted(defaulted.items()):
         if (key[0], key[1].split(".")[0]) not in live:
             continue
-        if None in program.get(key, ()) or p in program.get(key, ()):
+        settable += 1
+        if None in bound_by.get(key, ()) or p in bound_by.get(key, ()):
             if label in PARAM_ALLOWLIST:
                 param_stale.add(label)
-        elif p in by_tests.get(key, ()):
-            if label not in PARAM_ALLOWLIST:
-                problems.append(
-                    f"{key[0]}: {key[1]}({p}=) is bound by tests but by no program call"
-                )
-        else:
-            unbound += 1
+        elif label not in PARAM_ALLOWLIST:
+            problems.append(f"{key[0]}: {key[1]}({p}=) is bound by no program call")
     problems += [
         f"PARAM_ALLOWLIST entry {e!r} is bound by the program"
         " or is not a defaulted parameter of a package function; remove it"
@@ -368,12 +360,11 @@ def main() -> int:
     print(
         "\n".join(problems)
         if problems
-        else "every package name is reached and every test-bound parameter"
-        f" is bound by the program ({unbound} defaulted parameters are bound"
-        " by no call)"
+        else "every package name is reached and every defaulted parameter"
+        f" is bound by a program call ({settable} defaulted parameters"
+        " over the reached functions)"
     )
     return 1 if problems else 0
-
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -349,7 +349,7 @@ def main() -> None:
                 ).alias("embedding"),
             )
             hp = srp_hyperplanes(16, n_bits=10, seed=7)
-            return embedding_neardup_pairs(vecs, hyperplanes=hp, n_bits=10).count()
+            return embedding_neardup_pairs(vecs, hp).count()
 
         def dup_spans_220k():
             # round-2 op: maximal duplicated spans.  Every 10th doc
